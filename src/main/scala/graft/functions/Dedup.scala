@@ -250,36 +250,48 @@ object Dedup {
   def removeDuplicatedSpans(df: DataFrame, idCol: String, textCol: String,
       k: Int, minDocs: Int): DataFrame = {
     val dup = duplicatedSpans(df, idCol, textCol, k, minDocs).select("sh")
-    val withToks = df.select(col(idCol), col(textCol),
-      split(col(textCol), " ").as("_toks"))
-    // positional grams: (doc, 0-based start index, gram text)
-    val grams = withToks
-      .select(col(idCol), col("_toks"),
-        explode(when(size(col("_toks")) >= k,
-            sequence(lit(0), size(col("_toks")) - k))
-          .otherwise(array().cast("array<int>"))).as("_i"))
-      .select(col(idCol), col("_i"),
-        concat_ws(" ", slice(col("_toks"), col("_i") + 1, lit(k))).as("sh"))
+    val grams = positionalWindows(df, idCol, textCol, k)
+      .select(col(idCol), col("_p"), concat_ws(" ", col("_w")).as("sh"))
     val covered = grams.join(dup, Seq("sh"), "left_semi")
-      .select(col(idCol), explode(sequence(col("_i"), col("_i") + lit(k - 1))).as("_j"))
+      .select(col(idCol), explode(sequence(col("_p"), col("_p") + lit(k - 1))).as("_j"))
       .groupBy(idCol).agg(collect_set(col("_j")).as("_cov"))
-    // rebuild: kept indices = all positions minus covered ones, then index
-    // back into the token array. array_except builds one hash set over
-    // _cov and streams the position sequence through it — O(n + |cov|) per
-    // document (and preserves the ascending order of its first argument),
-    // where the per-token array_contains scan it replaces was
-    // O(n × |cov|): a 100k-token doc that is mostly duplicated spans paid
-    // ~10¹⁰ comparisons in one row's evaluation
-    withToks.join(covered, Seq(idCol), "left")
+    rebuildUncovered(df, covered, idCol, textCol)
+  }
+
+  /** Every position's k-token window of the space-split text: (idCol, _p
+    * 1-based start, _w token array). A text shorter than k tokens (or
+    * null) has none. */
+  private[graft] def positionalWindows(df: DataFrame, idCol: String,
+      textCol: String, k: Int): DataFrame =
+    df.select(col(idCol), split(col(textCol), " ").as("_tk"))
+      .select(col(idCol), col("_tk"),
+        explode(when(size(col("_tk")) >= k,
+            sequence(lit(1), size(col("_tk")) - (k - 1)))
+          .otherwise(array().cast("array<int>"))).as("_p"))
+      .select(col(idCol), col("_p"), slice(col("_tk"), col("_p"), lit(k)).as("_w"))
+
+  /** The rebuild every span-removal form shares: `covered` is (idCol,
+    * _cov) with `_cov` the set of 1-based covered token indices of the
+    * space-split text; a document absent from it passes through verbatim.
+    * Kept indices = all positions minus covered ones, indexed back into
+    * the token array. array_except builds one hash set over _cov and
+    * streams the position sequence through it — O(n + |cov|) per document
+    * (and preserves the ascending order of its first argument), where a
+    * per-token array_contains scan would be O(n × |cov|): a 100k-token doc
+    * that is mostly duplicated spans would pay ~10¹⁰ comparisons in one
+    * row's evaluation. Returns (id, clean_text, n_removed). */
+  private[graft] def rebuildUncovered(df: DataFrame, covered: DataFrame,
+      idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol), col(textCol), split(col(textCol), " ").as("_toks"))
+      .join(covered, Seq(idCol), "left")
       .select(col(idCol),
         when(col("_cov").isNull, col(textCol)).otherwise(concat_ws(" ",
           transform(
-            array_except(sequence(lit(0), size(col("_toks")) - 1), col("_cov")),
-            j => element_at(col("_toks"), j + 1))))
+            array_except(sequence(lit(1), size(col("_toks"))), col("_cov")),
+            j => element_at(col("_toks"), j))))
           .as("clean_text"),
         when(col("_cov").isNull, lit(0))
           .otherwise(size(col("_cov"))).cast("int").as("n_removed"))
-  }
 
   // ---- MinHash + LSH ----
 

@@ -55,8 +55,11 @@ import org.apache.spark.sql.functions._
   * adjacent-rank repeat census ([[suffixRepeatsFrom]]), span REMOVAL
   * ([[suffixSpansRemoveFrom]]) — consumes the same (id, pos,
   * suffix_rank) frame, exactly the Lee et al. pipeline shape (one SA,
-  * many passes). The df-taking convenience forms rebuild internally and
-  * exist for one-shot use.
+  * many passes). The df-taking census and repeat forms rebuild the
+  * array internally and exist for one-shot use; the one-shot REMOVAL
+  * form ([[suffixSpansRemove]]) builds no array at all — removal needs
+  * only "is this minRun-window repeated", which one gram-keyed exchange
+  * answers exactly (see there).
   */
 object SuffixArray {
 
@@ -1692,15 +1695,17 @@ object SuffixArray {
     * max-neighbor-LCP `L ≥ minRun` (capped at `cap`) starts a duplicated
     * run, covering positions p .. p+L-1. Returns (id, clean_text,
     * n_removed) — the same surface as the k-gram approximation
-    * `Dedup.removeDuplicatedSpans`, but span boundaries are exact (up to
-    * the cap) instead of 3-gram-quantized.
+    * `Dedup.removeDuplicatedSpans`, but span boundaries are exact instead
+    * of 3-gram-quantized. The output does not depend on `cap` for any
+    * `cap >= minRun`: a run capped short is still covered to its end by
+    * the starts after p, which share the rest of it (the argument on
+    * [[suffixSpansRemove]]); the cap only bounds each start's explode.
     *
     * Plan at scale: rank-level LCP stats (see [[rankMaxLcp]]); the
     * position expansion explodes ≤ cap indices per qualifying START
     * (bounded amplification); covered indices aggregate per doc (bounded
-    * by the doc's own token count); the rebuild is the same
-    * O(n + |cov|) array_except/transform map as the k-gram form. Never
-    * text×text. */
+    * by the doc's own token count); the rebuild is the shared
+    * O(n + |cov|) [[Dedup.rebuildUncovered]]. Never text×text. */
   def suffixSpansRemoveFrom(ranks: DataFrame, df: DataFrame, idCol: String,
       textCol: String, minRun: Int = 8, cap: Int = 30): DataFrame = {
     val stats = rankMaxLcp(ranks, tokensOf(df, idCol, textCol), idCol, cap)
@@ -1717,33 +1722,50 @@ object SuffixArray {
       df: DataFrame, idCol: String, textCol: String,
       minRun: Int = 8, cap: Int = 30): DataFrame = {
     require(minRun >= 1 && cap >= minRun, "1 <= minRun <= cap")
-    val withToks = df.select(col(idCol), col(textCol),
-      split(col(textCol), " ").as("_toks"))
-    val maxLcp = stats
-    val covered = ranks.join(maxLcp.hint("shuffle_hash"), Seq("suffix_rank"))
+    val covered = ranks.join(stats.hint("shuffle_hash"), Seq("suffix_rank"))
       .filter(col("_maxl") >= minRun)
       .select(col(idCol),
         explode(sequence(col("pos"), col("pos") + col("_maxl") - 1)).as("_j"))
       .groupBy(idCol).agg(collect_set(col("_j")).as("_cov"))
-    // rebuild: kept 1-based positions = all minus covered (array_except
-    // preserves the ascending order of its first argument), indexed back
-    // into the token array — O(n + |cov|) per document
-    withToks.join(covered, Seq(idCol), "left")
-      .select(col(idCol),
-        when(col("_cov").isNull, col(textCol)).otherwise(concat_ws(" ",
-          transform(
-            array_except(sequence(lit(1), size(col("_toks"))), col("_cov")),
-            j => element_at(col("_toks"), j))))
-          .as("clean_text"),
-        when(col("_cov").isNull, lit(0))
-          .otherwise(size(col("_cov"))).cast("int").as("n_removed"))
+    Dedup.rebuildUncovered(df, covered, idCol, textCol)
   }
 
-  /** One-shot convenience form of [[suffixSpansRemoveFrom]]. */
+  /** One-shot REMOVAL with no suffix array: the same rows as
+    * [[suffixSpansRemoveFrom]] over `suffixRanks(df, ...)` for every
+    * `cap >= minRun`, from one gram-keyed pass. Split the text, explode
+    * each position's `minRun`-token window (keyed by the token array
+    * itself — exact, no hash), count each window's (doc, pos)
+    * occurrences in one exchange, and cover `[p, p+minRun-1]` for every
+    * window seen twice or more; the rebuild is [[Dedup.rebuildUncovered]].
+    *
+    * Equivalence. (1) LCP(p, q) >= minRun holds exactly when the
+    * minRun-windows at p and q are equal, so the SA form's qualifying
+    * starts are exactly the repeated windows' starts. (2) If p shares L
+    * >= minRun tokens with some q, then p+i shares L-i with q+i, so every
+    * window start p .. p+min(L,cap)-minRun repeats too; the union of
+    * their windows is `[p, p+min(L,cap)-1]`, the SA form's cover of p.
+    * The two covers are the same position sets, whatever the cap.
+    *
+    * Byte napkin (~6 B/token): each position ships its minRun-token
+    * window once through one exchange — ~6·minRun B/position, no
+    * round loop, no persisted frames. The array build ships ~3·maxLen
+    * B/position for its full-suffix seed (maxLen <= 128), or doubling
+    * rounds of ~80 B/position each past that, plus the four rank-keyed
+    * joins of [[rankMaxLcp]] and a job per round. Prefer the shared
+    * build only when the array is landed anyway (the catalog's
+    * `suffix_spans_remove` reads it from disk). `df` is read twice — the
+    * window pass and the rebuild — so persist an expensive input. */
   def suffixSpansRemove(df: DataFrame, idCol: String, textCol: String,
-      minRun: Int = 8, cap: Int = 30, nParts: Int = 32): DataFrame =
-    suffixSpansRemoveFrom(suffixRanks(df, idCol, textCol, nParts), df,
-      idCol, textCol, minRun, cap)
+      minRun: Int = 8): DataFrame = {
+    require(minRun >= 1, "minRun >= 1")
+    val covered = Dedup.positionalWindows(df, idCol, textCol, minRun)
+      .withColumn("_n", count(lit(1)).over(Window.partitionBy("_w")))
+      .filter(col("_n") >= 2)
+      .select(col(idCol),
+        explode(sequence(col("_p"), col("_p") + (minRun - 1))).as("_j"))
+      .groupBy(idCol).agg(collect_set(col("_j")).as("_cov"))
+    Dedup.rebuildUncovered(df, covered, idCol, textCol)
+  }
 
   /** Adjacent-rank longest-common-prefix census over a PREBUILT suffix
     * array — the repeated-substring detector exact-substring dedup

@@ -1263,8 +1263,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (2L, s"d $run e f"),
       (3L, "u1 u2 u3 u4 u5 u6 u7 u8 u9 u10 u11 u12"))
       .toDF("doc_id", "text")
-    val out = SuffixArray.suffixSpansRemove(docs, "doc_id", "text",
-        minRun = 8, cap = 30, nParts = 4)
+    val out = SuffixArray.suffixSpansRemove(docs, "doc_id", "text", minRun = 8)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getInt(2)))).toMap
     // doc 3: nothing duplicated >= 8 tokens — text passes through verbatim
     assert(out(3L) == (("u1 u2 u3 u4 u5 u6 u7 u8 u9 u10 u11 u12", 0)))
@@ -1283,6 +1282,50 @@ class DedupSimilaritySpec extends AnyFunSuite {
         spark.read.parquet(tmp), docs, "doc_id", "text", minRun = 8, cap = 30)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getInt(2)))).toMap
     assert(viaBuild == out)
+  }
+
+  test("suffixSpansRemove (no array) == suffixSpansRemoveFrom(suffixRanks) on edge corpora, every (minRun, cap)") {
+    import graft.functions.SuffixArray
+    val rnd = new scala.util.Random(11)
+    def words(n: Int, vocab: Int) = Seq.fill(n)("w" + rnd.nextInt(vocab)).mkString(" ")
+    val run45 = (1 to 45).map("s" + _).mkString(" ")
+    val rep9 = (1 to 9).map("x" + _).mkString(" ")
+    val short: Seq[(Long, String)] = Seq(
+      (1L, s"$rep9 y $rep9 z"),                       // within-document repeat
+      (2L, "e1 e2 e3 e4 e5 e6 e7 e8 e9 e10"),         // exact-duplicate docs
+      (3L, "e1 e2 e3 e4 e5 e6 e7 e8 e9 e10"),
+      (4L, null),                                     // null text
+      (5L, ""), (6L, ""),                             // empty text
+      (7L, "p  q r  s t  u"),                         // double spaces
+      (8L, "p  q r  s t  u v"),
+      (9L, "hi there"), (10L, "hi there"),            // shorter than minRun
+      (11L, s"a b $run45 c"), (12L, s"d $run45 e f"), // shared run longer than cap
+      (13L, Seq.fill(12)("a").mkString(" "))) ++      // self-overlapping repeat
+      (14L to 30L).map(i => (i, words(rnd.nextInt(40), 6)))
+    // past 128 tokens, so suffixRanks runs its prefix-doubling loop
+    val planted = (1 to 60).map("t" + _).mkString(" ")
+    val first = words(150, 40)
+    val long: Seq[(Long, String)] =
+      (1L to 6L).map(i => (i, words(130 + rnd.nextInt(100), 40))) ++ Seq(
+        (7L, s"${words(80, 40)} $planted ${words(70, 40)}"),
+        (8L, s"${words(90, 40)} $planted ${words(50, 40)}"),
+        (9L, s"$planted ${words(20, 40)} $planted"),
+        (10L, first), (11L, first), (12L, null))
+    assert(long.flatMap(r => Option(r._2)).map(_.split(" ").length).max > 128)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq.sortBy(_._1)
+    for ((name, corpus) <- Seq("short" -> short, "long" -> long)) {
+      val df = corpus.toDF("doc_id", "text")
+      val ranks = SuffixArray.suffixRanks(df, "doc_id", "text", nParts = 4)
+      for ((minRun, cap) <- Seq((8, 30), (3, 3), (1, 5), (5, 40))) {
+        val want = rows(SuffixArray.suffixSpansRemoveFrom(ranks, df, "doc_id", "text",
+          minRun = minRun, cap = cap))
+        val got = rows(SuffixArray.suffixSpansRemove(df, "doc_id", "text", minRun = minRun))
+        assert(got == want, s"$name minRun=$minRun cap=$cap: got-only ${got.diff(want)}, " +
+          s"want-only ${want.diff(got)}")
+        assert(want.size == corpus.size && want.exists(_._3 > 0), s"$name minRun=$minRun")
+      }
+    }
   }
 
   test("suffixRanks: reliable-checkpoint seat (spark.graft.checkpointDir) — same ranks, files on disk") {
