@@ -343,66 +343,14 @@ object Bench {
         graft.sources.Tables.table(spark, sfDir, t).count()
       }
       SparkEntry.queries("q1_agg")(spark, sfDir).count()
-      // index build is offline work (a real deployment trains the coarse
-      // quantizer once and persists it — IVF.writeIndexed); the timed
-      // ann_ivf_topk entry measures probe search, not training
-      graft.queries.PipelineQueries.ivfModel(spark, sfDir)
-      // same stance for the near-dup band index: built once, offline
-      // (Dedup.writeBandIndex); the timed dedup_incremental_near entry
-      // measures the incremental probe, not the corpus indexing
-      graft.queries.PipelineQueries.bandIndexPath(spark, sfDir)
-      // PNG/WAV payload tables are staged data (bytes-in-parquet), not
-      // operator work — built once; the timed multimodal_decode_* entries
-      // measure the codec passes over stored bytes
-      graft.queries.PipelineQueries.pngFixturePath(spark, sfDir)
-      graft.queries.PipelineQueries.wavFixturePath(spark, sfDir)
-      // corpus dHash signature index: offline decode+hash build; the
-      // timed image_dhash_incremental entry measures the batch probe
-      graft.queries.PipelineQueries.dhashIndexPath(spark, sfDir)
-      // PQ codebooks (raw + residual): trained once offline, like the
-      // IVF quantizer
-      graft.queries.PipelineQueries.pqModel(spark, sfDir)
-      graft.queries.PipelineQueries.pqResModel(spark, sfDir)
-      // residual-encoded index layout: offline build, probes read codes
-      graft.queries.PipelineQueries.pqResEncodedPath(spark, sfDir)
-      graft.queries.PipelineQueries.pqRawEncodedPath(spark, sfDir)
-      // point-lookup bucketed table: staged layout, not operator work
-      graft.queries.PipelineQueries.lookupTable(spark, sfDir)
-      // BPE vocabulary: learned once offline like the IVF/PQ codebooks;
-      // the timed bpe_learn entry still measures the learner itself, but
-      // the census/fertility CONSUMERS apply the cached merges
-      graft.queries.PipelineQueries.bpeMerges(spark, sfDir)
-      // daily rollup layout: incremental view maintenance is the nightly
-      // append job, not query work — the timed rollup entries measure the
-      // pruned partial-state merge over the landed partials
-      graft.queries.PipelineQueries.rollupPath(spark, sfDir)
-      // HLL sub-sketch layout: same nightly-append stance; the timed
-      // hll_rollup_range entry measures the pruned sketch merge
-      graft.queries.PipelineQueries.hllRollupPath(spark, sfDir)
-      // log-histogram sub-sketch layout: same stance; the timed
-      // quantile_rollup_range entry measures the pruned bucket-sum merge
-      graft.queries.PipelineQueries.logHistRollupPath(spark, sfDir)
-      // shared suffix-array build: the derived gates (suffix_repeats /
-      // suffix_dup_spans / suffix_spans_remove) read this one offline
-      // build; the CONSTRUCTION cost itself stays on the clock in the
-      // suffix_ranks entry, which runs the doubling loop live
-      graft.queries.PipelineQueries.suffixRanksPath(spark, sfDir)
-      // landed LCP stats (SA + LCP index pair): the removal gate consumes
-      // the detector's findings; the detector computation itself stays on
-      // the clock in suffix_dup_spans, which derives the stats live
-      graft.queries.PipelineQueries.suffixLcpPath(spark, sfDir)
-      // merge sidecar (rank reps + seed prefixes): derived at build time
-      // with the SA; the timed suffix_ranks_incremental entry measures
-      // the delta MERGE, not the index derivation
-      graft.queries.PipelineQueries.suffixMergeRepsPath(spark, sfDir)
-      // pretrained KN LMs (bigram + trigram): trained once offline like
-      // bpeMerges/ivfModel — the timed text_perplexity_pretrained*
-      // entries measure APPLY only, the per-crawl CCNet cost
-      graft.queries.PipelineQueries.knModelPath(spark, sfDir)
-      graft.queries.PipelineQueries.kn3ModelPath(spark, sfDir)
-      graft.queries.PipelineQueries.knDomainModelPath(spark, sfDir)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
+    // offline artifacts (models, landed indexes, staged fixtures) are
+    // built here, each timed on its own and kept off every query's clock
+    val artifactBuilds =
+      graft.queries.Artifacts.ensureAll(spark, sfDir)
+    artifactBuilds.foreach { case (n, t) => t.failed.foreach(e =>
+      System.err.println(s"[bench] artifact $n failed: ${e.getMessage}")) }
 
     // median-of-N per query: single-run timings at this scale carry ±20%
     // noise, which makes round-over-round per-query deltas unactionable
@@ -865,7 +813,16 @@ object Bench {
     val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$failedJson,$env,"sf":"$sfDir","runs_per_query":$runs,"stat":"median"}"""
     val full = resultsFinal.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$full$failedJson,$env,"sf":"$sfDir","runs_per_query":$runs,"stat":"median"}"""
+    // offline artifact builds: a layer of their own, in the results file
+    // only — never in _all, the stdout line or the compact line
+    val artifactsFailed = artifactBuilds.collect {
+      case (k, scala.util.Failure(_)) => "\"" + k + "\"" }
+    val artifactsJson =
+      artifactBuilds.collect { case (k, scala.util.Success(v)) =>
+        "\"" + k + "\":" + fmt(v) }.mkString(""","artifact_build_s":{""", ",", "}") +
+        (if (artifactsFailed.isEmpty) ""
+         else artifactsFailed.mkString(""","artifact_build_failed":[""", ",", "]"))
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$full$failedJson,$env$artifactsJson,"sf":"$sfDir","runs_per_query":$runs,"stat":"median"}"""
     val out = outPath
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(out),

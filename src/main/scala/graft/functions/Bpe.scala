@@ -250,8 +250,7 @@ object Bpe {
     merges.foldLeft(
       wordHistogram(df, textCol).withColumn("syms", charSyms(col("word")))) {
       case (acc, (a, b)) =>
-        acc.withColumn("syms", applyMerge(col("syms"), a, b))
-          .localCheckpoint(true)
+        Checkpoints.eager(acc.withColumn("syms", applyMerge(col("syms"), a, b)))
     }
 
   private def sqlStr(s: String): String = "'" + s.replace("'", "''") + "'"

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
 /** Pluggable eager checkpointing for the iterative drivers (the
@@ -45,8 +46,12 @@ object Checkpoints {
     case Some(dir) =>
       val sc = df.sparkSession.sparkContext
       // setCheckpointDir creates a fresh random subdir per call — set it
-      // once per context, not per round
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+      // once per configured dir, not per round (the conf may change
+      // between calls, and must then take effect)
+      val want = new Path(dir)
+      val qualified = want.getFileSystem(sc.hadoopConfiguration).makeQualified(want)
+      if (!sc.getCheckpointDir.exists(d => new Path(d).getParent == qualified))
+        sc.setCheckpointDir(dir)
       df.checkpoint(eager = true)
     case None => df.localCheckpoint(eager = true)
   }

@@ -522,9 +522,10 @@ object Dedup {
     * component), so the jump join is always well-keyed.
     *
     * Each round is two id-keyed joins + one aggregate; the frame persists
-    * per round is `localCheckpoint`ed so the plan lineage stays bounded
-    * no matter how many rounds a pathological graph needs. The driver sees only a per-round label-sum
-    * (one decimal), never data.
+    * per round is checkpointed ([[Checkpoints.eager]]) so the plan
+    * lineage stays bounded no matter how many rounds a pathological graph
+    * needs. The driver sees only a per-round label-sum (one decimal),
+    * never data.
     *
     * Two working-set optimizations, both exact:
     *  - the loop runs over the ACTIVE subgraph only — nodes that appear in
@@ -629,7 +630,7 @@ object Dedup {
         .select(col("id"),
           least(col("cluster_id"), coalesce(col("_pl"), col("cluster_id")))
             .as("cluster_id"))
-      // localCheckpoint EVERY round: `labels` is referenced three times per
+      // checkpoint EVERY round: `labels` is referenced three times per
       // round (edge join, neighborhood union, pointer jump), so the logical
       // plan grows ~3x per round if only persist()ed — persist caches DATA
       // but Catalyst still re-analyzes the full lineage, and round N's
@@ -638,8 +639,9 @@ object Dedup {
       // AND truncates the plan; each round is materialized anyway for the
       // convergence sum, so the only extra cost is the block write — the
       // same trade GraphX/GraphFrames iterative algorithms make. Blocks are
-      // reclaimed by the ContextCleaner once unreferenced.
-      val next = jumped.localCheckpoint(true)
+      // reclaimed by the ContextCleaner once unreferenced; under
+      // `spark.graft.checkpointDir` the round lands as reliable files.
+      val next = Checkpoints.eager(jumped)
       val curSum = labelSum(next)
       labels = next
       converged = curSum.compareTo(prevSum) == 0

@@ -1129,7 +1129,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // both index artifacts LANDED, as in production: the sidecar's own
     // derivation shuffles the index once at build time (offline); the
     // merge under test must then only SCAN the files
-    val dir = s"target/tmp/probe-census-pid${ProcessHandle.current.pid}"
+    val dir = graft.queries.Artifacts.scratchPath("probe-census", "spec")
     SuffixArray.suffixRanks(oldDocs, "doc_id", "text", nParts = 4)
       .write.mode("overwrite").parquet(s"$dir/base")
     val base = spark.read.parquet(s"$dir/base")
@@ -1349,6 +1349,28 @@ class DedupSimilaritySpec extends AnyFunSuite {
         .count()
       assert(found > 0, s"no reliable checkpoint files under $dir")
     } finally spark.conf.unset(Checkpoints.DirKey)
+  }
+
+  test("connectedComponents: reliable-checkpoint seat (spark.graft.checkpointDir) — same clusters, files on disk") {
+    import graft.functions.Checkpoints
+    val nodes = (0L until 40L).toDF("id")
+    val pairs = ((0L until 20L).map(i => (i, i + 1)) ++
+      Seq((25L, 26L), (26L, 27L), (30L, 31L))).toDF("id_a", "id_b")
+    // driverMaxEdges = 0: the distributed label-propagation loop, the
+    // path whose rounds go through Checkpoints.eager
+    def clusters() = Dedup.connectedComponents(nodes, "id", pairs,
+      driverMaxEdges = 0L).as[(Long, Long)].collect().toMap
+    val expected = clusters()
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-cc").toString
+    spark.conf.set(Checkpoints.DirKey, dir)
+    try {
+      assert(clusters() == expected)
+      val found = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(p => p.getFileName.toString.startsWith("rdd-"))
+        .count()
+      assert(found > 0, s"no reliable checkpoint files under $dir")
+    } finally spark.conf.unset(Checkpoints.DirKey)
+    assert(expected(20L) == 0L && expected(27L) == 25L && expected(39L) == 39L)
   }
 
   test("winnow_select: array<int> input fails at analysis time with a clear error") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.Catalog
+import graft.queries.{Artifacts, Catalog}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression tests: the scale properties README claims
@@ -324,6 +324,12 @@ class PlanSpec extends AnyFunSuite {
     val names = Catalog.all.map(_.name)
     assert(names.distinct.size == names.size,
       s"duplicate names: ${names.diff(names.distinct)}")
+    // warmup drift: once Artifacts.ensureAll has run (Bench's warmup),
+    // constructing any query or dynamic oracle must build nothing more —
+    // an artifact ensureAll missed would be built inside a timed run
+    Artifacts.ensureAll(spark, GraftTestSpark.Sf0001).foreach { case (n, t) =>
+      assert(t.isSuccess, s"artifact $n: $t") }
+    val builds = Artifacts.builds.get()
     // the driver's compare sorts columns BY NAME before hashing — an
     // aliased Spark column missing from the oracle text is the classic
     // silent schema-mismatch; catch it before the gate does
@@ -336,6 +342,8 @@ class PlanSpec extends AnyFunSuite {
         cols.foreach(c => assert(lower.contains(c.toLowerCase),
           s"${d.name}: oracle SQL never mentions output column '$c'"))
       }
+      assert(Artifacts.builds.get() == builds,
+        s"${d.name}: built an artifact after Artifacts.ensureAll")
     }
   }
 
