@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.Try
+
+import graft.functions.Caches
+import graft.observability.{Json, QueryProfile}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line the driver records as BENCH_r{N}.json. */
@@ -214,22 +219,10 @@ object Bench {
       queriesFile: String, sfDir: String, runs: Int,
       perQuery: Seq[(String, Double)] = Nil,
       maxLen: Int = 1800): String = {
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // the two interpolated strings are externally controlled paths —
-    // JSON-escape them (round-17 advice fix: a quote or backslash in
-    // the path previously yielded invalid JSON on this line, the exact
-    // failure class the compact line exists to prevent)
-    def esc(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < 0x20 =>
-        String.format(java.util.Locale.ROOT, "\\u%04x", Int.box(c.toInt))
-      case c => c.toString
-    }
+    import Json.{num => fmt, str}
     // a pathological SPARK_GRAFT_BENCH_OUT path is the one externally
     // controlled length — cap it (the full path is still in stderr/env)
-    val qf = esc(
+    val qf = str(
       if (queriesFile.length <= 200) queriesFile
       else "..." + queriesFile.takeRight(197))
     // PER-QUERY SIGNAL UNDER A HARD LENGTH BUDGET (round-18, r17 verdict
@@ -249,15 +242,15 @@ object Bench {
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
         s""""queries":{"_all":${fmt(total)}$qsBody},"n_queries":$nQueries,""" +
         s""""n_failed":$nFailed,"n_skipped":$nSkipped,""" +
-        s""""queries_file":"$qf",""" +
+        s""""queries_file":$qf,""" +
         s""""loadavg_start":${fmt(loadavgStart)},"loadavg_end":${fmt(loadavgEnd)},""" +
         s""""sentinel_first":${fmt(sentinelFirst)},"sentinel_last":${fmt(sentinelLast)},""" +
         s""""contended":$contended,"total_normalized":${fmt(totalNormalized)},""" +
-        s""""sf":"${esc(sfDir)}","runs_per_query":$runs,"stat":"median"}"""
+        s""""sf":${str(sfDir)},"runs_per_query":$runs,"stat":"median"}"""
     var budget = maxLen - render("").length
     val sb = new StringBuilder
     perQuery.sortBy { case (n, t) => (-t, n) }.foreach { case (n, t) =>
-      val entry = ",\"" + esc(n) + "\":" + fmt(t)
+      val entry = "," + str(n) + ":" + fmt(t)
       if (entry.length <= budget) { sb.append(entry); budget -= entry.length }
     }
     render(sb.toString)
@@ -266,31 +259,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // size input splits so scan tasks ~ cores: the local dataset is
-      // ~2-11 MB per table, where the 128 MB default yields 1-3 scan tasks
-      // on a 32-thread runner. Same principle at 100 TB: the default
-      // already gives >> cores tasks there, so this knob is a no-op at scale.
-      .config("spark.sql.files.maxPartitionBytes", "2097152")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // CUMULATIVE-STATE CAPS (round-14, the r13 idle-close tail hunt):
-      // even with the UI off, the app-status stores RETAIN per-execution
-      // state — 1000 SQL executions each holding its full plan graph +
-      // metric tables, 1000 jobs, 1000 stages — and a 329-query x 3-run
-      // sweep banks all of it on the 8g driver heap, taxing exactly the
-      // allocation-heavy tail entries the registry sweep already freed.
-      // Nothing reads this state here (no UI, no history server), so cap
-      // it near zero.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus)
+    import Json.{num => fmt}
 
     // External-load reading taken BEFORE the warmup block: warmup itself
     // saturates the box for minutes on big inputs (index builds, fixture
@@ -334,23 +304,8 @@ object Bench {
         f"(loadavg now ${loadavgRead()}%.2f)")
     val loadavgStart = loadavgRead()
 
-    // JVM/codegen warmup outside the timed region: touch each table family
-    // and run one cheap query so the first timed entry doesn't absorb JIT.
-    // Best-effort: a missing table must not stop the run before the timed
-    // loop (which has per-query error handling and always emits the JSON).
-    try {
-      graft.sources.Tables.All.foreach { t =>
-        graft.sources.Tables.table(spark, sfDir, t).count()
-      }
-      SparkEntry.queries("q1_agg")(spark, sfDir).count()
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
-    // offline artifacts (models, landed indexes, staged fixtures) are
-    // built here, each timed on its own and kept off every query's clock
-    val artifactBuilds =
-      graft.queries.Artifacts.ensureAll(spark, sfDir)
-    artifactBuilds.foreach { case (n, t) => t.failed.foreach(e =>
-      System.err.println(s"[bench] artifact $n failed: ${e.getMessage}")) }
+    val artifactBuilds = warmup(spark, sfDir)
+    val profile = QueryProfile.install(spark)
 
     // median-of-N per query: single-run timings at this scale carry ±20%
     // noise, which makes round-over-round per-query deltas unactionable
@@ -369,35 +324,14 @@ object Bench {
     val queryList = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Headline)
-    // MATERIALIZE is the default action since round 9: count() lets
-    // Catalyst join-eliminate or prune the work a query's OUTPUT columns
-    // carry (the round-8 pagerank lesson: the "fast" r6/r7 numbers
-    // measured a node scan because count() folded the whole left-outer
-    // rank chain away), so every timed query hash-reduces ALL its
-    // output columns server-side (nothing but one xor collected) — a
-    // shape that cannot fold, catalog-wide, by construction (made
-    // actually true in round 11, see the fix note below). The count-only
-    // mode remains for plan-level comparisons via SPARK_GRAFT_BENCH_COUNT
-    // =1; the catalog-wide A/B between the two modes is in SCALING.md.
-    val materialize =
+    // MATERIALIZE (see `materialize`) is the default action since round
+    // 9. The count-only mode remains for plan-level comparisons via
+    // SPARK_GRAFT_BENCH_COUNT=1; the catalog-wide A/B between the two
+    // modes is in SCALING.md.
+    val hashAll =
       !sys.env.get("SPARK_GRAFT_BENCH_COUNT").contains("1") ||
         sys.env.get("SPARK_GRAFT_BENCH_MATERIALIZE").contains("1")
-    // ROUND-11 HONESTY FIX: the r9/r10 form ended in `.agg(sum("h"))
-    // .count()` — but count() over an ungrouped aggregate lets Catalyst
-    // prune the sum AND the xxhash projection entirely (the optimized
-    // plan is `Aggregate[count(1)] <- Aggregate[] <- Project[] <- query`,
-    // verified), so output-column work (levenshtein in
-    // dedup_edit_verify, rank values, decode payloads) was silently
-    // skipped — the mode measured row production, not column evaluation.
-    // Reading the aggregate VALUE (head, not count) makes the hash
-    // unprunable; bit_xor replaces sum because summing uniform 64-bit
-    // hashes overflows long ~immediately under ANSI mode (and xor is the
-    // standard order-independent hash combiner anyway).
-    def run(df: org.apache.spark.sql.DataFrame): Unit =
-      if (materialize)
-        df.select(org.apache.spark.sql.functions.xxhash64(df.columns.map(df.col): _*).as("h"))
-          .agg(org.apache.spark.sql.functions.bit_xor(org.apache.spark.sql.functions.col("h"))).head()
-      else df.count()
+    def run(df: DataFrame): Unit = if (hashAll) materialize(df) else df.count()
     // ENVIRONMENT SELF-EVIDENCE (round-8 verdict #1): a contended box made
     // ~38 s of phantom cost indistinguishable from a regression until a
     // judge re-ran on idle hardware. Record (a) /proc/loadavg before and
@@ -426,28 +360,36 @@ object Bench {
     // masked four hash-mismatching oracles). Failed queries are excluded
     // from the queries map and the total, and listed under "failed" so the
     // JSON stays schema-compatible for the driver's numeric parse.
-    def timeQuery(name: String): (String, Double, Boolean) = {
-      // per-query cache hygiene: several operators persist() an
-      // intermediate their returned frame still references (so they cannot
-      // unpersist internally) — sweep what each query left behind before
-      // the next one runs. Sequential execution makes the set-diff safe
-      // HERE (the in-operator global diff was not, under parallel suites).
-      // NOTE the registry sweep below clears the WHOLE operator-cache
-      // registry, warmup entries included — currently fine because
-      // warmup lands parquet (paths, not operator caches), and always
-      // SAFE because persist never severs lineage (a swept frame
-      // recomputes); but warmup must never come to rely on a registered
-      // shared cache surviving the sweep.
-      val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    // per query: the profile record of the run whose seconds timeQuery
+    // reported, with those seconds — a retry pass replaces it only when
+    // its run is the one the min-heal keeps (a tail-fresh child's own
+    // runs are not profiled here)
+    val profiles =
+      scala.collection.mutable.Map.empty[String, (Double, QueryProfile.Record)]
+    // per-query cache hygiene: several operators persist() an
+    // intermediate their returned frame still references (so they cannot
+    // unpersist internally) — sweep what each query left behind before
+    // the next one runs; the registry sweep also drops the strong plan
+    // references that kept the 8g driver heap near-full by sweep end
+    // (round 13: classifier_train_apply 15.3 s in the 210-query sweep vs
+    // 3.6 s in a 30-query one). It clears the WHOLE operator-cache
+    // registry, warmup entries included — fine because warmup lands
+    // parquet (paths, not operator caches), and always SAFE because
+    // persist never severs lineage; but warmup must never come to rely on
+    // a registered shared cache surviving the sweep.
+    def timeQuery(name: String): (String, Double, Boolean) = Caches.sweepingNew(spark) {
       var failed = false
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { run(SparkEntry.queries(name)(spark, sfDir)) }
-        catch { case e: Throwable =>
-          failed = true
-          System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-        (System.nanoTime() - t0) / 1e9
-      }
+      // each run in its own profile window; the window's listener-bus
+      // drains sit outside the timed interval
+      def once(): (Double, QueryProfile.Record) =
+        profile.window {
+          val t0 = System.nanoTime()
+          try { run(SparkEntry.queries(name)(spark, sfDir)) }
+          catch { case e: Throwable =>
+            failed = true
+            System.err.println(s"[bench] $name failed: ${e.getMessage}") }
+          (System.nanoTime() - t0) / 1e9
+        }
       // HEAVY-TAIL RUN TRIMMING (round-15, the r14 driver-timeout fix):
       // a first run at/above the cutoff gets ONE confirming run and
       // records min-of-2 instead of median-of-3 — the heavy entries are
@@ -457,39 +399,30 @@ object Bench {
       // same discipline the self-healing and tail-fresh merges already
       // apply. Cheap queries keep the full median-of-N contract.
       // Disable with SPARK_GRAFT_BENCH_HEAVY_CUTOFF=0.
-      val t1 = once()
+      val first = once()
+      val t1 = first._1
       val trimmed = !failed && heavyCutoff > 0 && t1 >= heavyCutoff &&
         runs > 2
-      val times: Seq[Double] =
-        if (failed) Seq(t1) // a throwing query needs no repeat timings
+      val timed: Seq[(Double, QueryProfile.Record)] =
+        if (failed) Seq(first) // a throwing query needs no repeat timings
         else if (trimmed) {
           heavyTrimmed += name
-          val t2 = once()
+          val second = once()
           // round-16 (r15 verdict #4): keep BOTH runs, not just the min —
           // the retry protocol commits first_pass alongside its healed
           // numbers, and the trim must be auditable the same way (the
           // min-of-2's downward bias per entry is |t1-t2|, visible only
           // if both land in the artifact)
-          heavyPairs += ((name, t1, t2))
-          Seq(t1, t2).sorted
+          heavyPairs += ((name, t1, second._1))
+          Seq(first, second).sortBy(_._1)
         }
-        else (Seq(t1) ++ (2 to runs).map(_ => once())).sorted
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => cachedBefore.contains(id) }
-        .values.foreach(_.unpersist(blocking = false))
-      // ALSO drain the operator-cache REGISTRY (round-13): the RDD-id
-      // diff above frees the storage blocks, but the registry held a
-      // STRONG reference to every registered DataFrame — hundreds of
-      // full analyzed/optimized/physical plan trees by sweep end, which
-      // kept the 8g driver heap near-full and quadrupled the
-      // allocation-heavy interpreted-HOF gates at the tail of the run
-      // (classifier_train_apply measured 15.3 s in the 210-query sweep
-      // vs 3.6 s in a 30-query one, same HEAD). Always safe: persist
-      // never severs lineage, so a frame swept mid-flight recomputes.
-      graft.functions.Caches.sweepOperatorCaches()
-      // trimmed entries record min-of-2 (times is sorted); the rest keep
+        else (first +: (2 to runs).map(_ => once())).sortBy(_._1)
+      // trimmed entries record min-of-2 (timed is sorted); the rest keep
       // the median-of-N contract
-      (name, if (trimmed) times.head else times(times.size / 2), failed)
+      val kept = if (trimmed) timed.head else timed(timed.size / 2)
+      if (!failed && profiles.get(name).forall(_._1 > kept._1))
+        profiles(name) = kept
+      (name, kept._1, failed)
     }
     // MID-SWEEP SENTINEL SERIES (round-12 verdict #7): the first/last
     // sentinel bracket is blind to a transient that starts AND ends
@@ -507,8 +440,6 @@ object Bench {
     // complete parseable JSON if the process dies mid-sweep. Partial
     // records carry "partial":true so no reader mistakes one for a
     // finished sweep.
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val outPath =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_results.json")
     val partialEvery = sys.env
@@ -523,23 +454,6 @@ object Bench {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     val nPlanned = queryList.count(SparkEntry.queries.contains)
-    def partialJson(done: Seq[(String, Double, Boolean)],
-        compact: Boolean): String = {
-      val ok = done.collect { case (n, t, false) => n -> t }
-      val bad = done.collect { case (n, _, true) => n }
-      val tot = ok.map(_._2).sum
-      val qsJ =
-        if (compact) s"""{"_all":${fmt(tot)}}"""
-        else ok.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-          .mkString("{", ",", "}")
-      val badJ =
-        if (bad.isEmpty) ""
-        else bad.map("\"" + _ + "\"").mkString(",\"failed\":[", ",", "]")
-      s"""{"metric":"total","value":${fmt(tot)},"unit":"sec",""" +
-        s""""partial":true,"n_done":${done.size},"n_planned":$nPlanned,""" +
-        s""""queries":$qsJ$badJ,"sf":"$sfDir","runs_per_query":$runs,""" +
-        s""""stat":"median"}"""
-    }
     // optional wall-budget backstop: stop the sweep (recording the
     // remainder as "skipped") once the loop has spent this many seconds
     // — off by default so the default artifact never silently caps
@@ -557,13 +471,14 @@ object Bench {
         else {
           if (i > 0 && i % 50 == 0) sentinelSeries += timeSentinel()
           rawBuf += timeQuery(n)
-          try writeAtomic(outPath, partialJson(rawBuf.toSeq,
-            compact = false) + "\n")
+          try writeAtomic(outPath, partialLine(rawBuf.toSeq, nPlanned,
+            sfDir, runs, compact = false) + "\n")
           catch { case e: Throwable => System.err.println(
             s"[bench] partial flush failed: ${e.getMessage}") }
           if (partialEvery > 0 && (i + 1) % partialEvery == 0 &&
               i + 1 < nPlanned)
-            println(partialJson(rawBuf.toSeq, compact = true))
+            println(partialLine(rawBuf.toSeq, nPlanned, sfDir, runs,
+              compact = true))
         }
       }
     if (skippedBuf.nonEmpty) System.err.println(
@@ -709,18 +624,6 @@ object Bench {
           results.collect { case (n, t) if fresh.contains(n) => n -> t }
             .toMap)
       }
-    // stdout line is tail-captured by the driver with a bounded buffer; at
-    // 115+ queries full-precision doubles overflowed it (round-6 BENCH was
-    // unparseable). Millisecond precision keeps the line ~40% shorter, and
-    // the full-precision copy always lands in a file next to the repo.
-    // Locale.ROOT: the f"" interpolator is locale-sensitive — on a
-    // comma-decimal default locale the stdout JSON would be unparseable
-    // (fmt is defined above the sweep loop; the partial flush shares it)
-    val failedJson =
-      if (failedQueries.isEmpty) ""
-      else failedQueries.map("\"" + _ + "\"").mkString(",\"failed\":[", ",", "]")
-    val qs = resultsFinal.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
     val total = resultsFinal.map(_._2).sum
     // SENTINEL-NORMALIZED TOTAL (round-10 verdict #6, re-calibrated by
     // round-11 verdict #1): on a contended box the healed total still
@@ -773,10 +676,8 @@ object Bench {
     val retryJson =
       if (retried.isEmpty) ""
       else
-        retried.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-          .mkString(""","first_pass":{""", ",", "}") +
-          calibration.map { case (n, _, sec) => "\"" + n + "\":" + fmt(sec) }
-            .mkString(""","cal_second":{""", ",", "}") +
+        s""","first_pass":${secondsJson(retried)}""" +
+          s""","cal_second":${secondsJson(calibration.map { case (n, _, sec) => n -> sec })}""" +
           s""","cal_factor":${fmt(calFactor)}""" +
           s""","sentinel_retry":${fmt(sentinelRetry)}"""
     val seriesJson =
@@ -786,43 +687,36 @@ object Bench {
     val tailJson =
       if (tailFresh.isEmpty) ""
       else
-        tailSweep.toSeq.sortBy(_._1)
-          .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-          .mkString(""","tail_sweep":{""", ",", "}") +
-          tailFresh.toSeq.sortBy(_._1)
-            .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-            .mkString(""","tail_fresh":{""", ",", "}")
-    val skippedJson =
-      if (skippedBuf.isEmpty) ""
-      else skippedBuf.map("\"" + _ + "\"")
-        .mkString(""","skipped":[""", ",", "]")
+        s""","tail_sweep":${secondsJson(tailSweep.toSeq.sortBy(_._1))}""" +
+          s""","tail_fresh":${secondsJson(tailFresh.toSeq.sortBy(_._1))}"""
     // one pair per name (first-seen = the sweep's): a query trimmed in
     // BOTH the sweep and a retry pass would otherwise emit duplicate
     // JSON keys (observed in the round-16 A/B artifacts) — the retry
     // pass's own evidence already lands in first_pass
-    val heavyPairs1 = heavyPairs.distinctBy(_._1)
+    val heavyPairs1 = heavyPairs.distinctBy(_._1).toSeq
     val heavyJson =
       if (heavyTrimmed.isEmpty) ""
-      else heavyTrimmed.distinct.map("\"" + _ + "\"")
-        .mkString(""","heavy_min2":[""", ",", "]") +
-        heavyPairs1.map { case (k, t1, _) => "\"" + k + "\":" + fmt(t1) }
-          .mkString(""","heavy_first":{""", ",", "}") +
-        heavyPairs1.map { case (k, _, t2) => "\"" + k + "\":" + fmt(t2) }
-          .mkString(""","heavy_second":{""", ",", "}")
-    val env = s""""loadavg_start":${fmt(loadavgStart)},"loadavg_end":${fmt(loadavgEnd)},"quiet_wait_sec":$quietWaited,"sentinel_first":${fmt(sentinelFirst)},"sentinel_last":${fmt(sentinelLast)}$seriesJson,"contended":$contended,"total_normalized":${fmt(totalNormalized)}$sentinelFailed$retryJson$tailJson$skippedJson$heavyJson"""
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$failedJson,$env,"sf":"$sfDir","runs_per_query":$runs,"stat":"median"}"""
-    val full = resultsFinal.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // offline artifact builds: a layer of their own, in the results file
-    // only — never in _all, the stdout line or the compact line
+      else namesJson("heavy_min2", heavyTrimmed.distinct.toSeq) +
+        s""","heavy_first":${secondsJson(heavyPairs1.map { case (k, t1, _) => k -> t1 })}""" +
+        s""","heavy_second":${secondsJson(heavyPairs1.map { case (k, _, t2) => k -> t2 })}"""
+    val env = s""""loadavg_start":${fmt(loadavgStart)},"loadavg_end":${fmt(loadavgEnd)},"quiet_wait_sec":$quietWaited,"sentinel_first":${fmt(sentinelFirst)},"sentinel_last":${fmt(sentinelLast)}$seriesJson,"contended":$contended,"total_normalized":${fmt(totalNormalized)}$sentinelFailed$retryJson$tailJson${namesJson("skipped", skippedBuf.toSeq)}$heavyJson"""
+    // stdout is read back through a bounded tail capture: at 115+
+    // queries full-precision doubles overflowed it (round-6 BENCH was
+    // unparseable), so stdout carries ms precision and the full-precision
+    // copy lands in the results file
+    val line = resultsLine(total, resultsFinal, failedQueries, env, sfDir, runs)
+    // file-only layers, never in _all, the stdout line or the compact
+    // line: offline artifact builds, and the per-query profile record
     val artifactsFailed = artifactBuilds.collect {
-      case (k, scala.util.Failure(_)) => "\"" + k + "\"" }
-    val artifactsJson =
-      artifactBuilds.collect { case (k, scala.util.Success(v)) =>
-        "\"" + k + "\":" + fmt(v) }.mkString(""","artifact_build_s":{""", ",", "}") +
-        (if (artifactsFailed.isEmpty) ""
-         else artifactsFailed.mkString(""","artifact_build_failed":[""", ",", "]"))
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$full$failedJson,$env$artifactsJson,"sf":"$sfDir","runs_per_query":$runs,"stat":"median"}"""
+      case (k, scala.util.Failure(_)) => k }
+    val fileOnly =
+      s""","artifact_build_s":${secondsJson(artifactBuilds.collect {
+        case (k, scala.util.Success(v)) => k -> v })}""" +
+        namesJson("artifact_build_failed", artifactsFailed) +
+        s""","query_profile":${Json.obj(resultsFinal.flatMap { case (n, _) =>
+          profiles.get(n).map(p => n -> p._2.json) })}"""
+    val fullLine = resultsLine(total, resultsFinal, failedQueries, env, sfDir,
+      runs, precise = true, fileOnly = fileOnly)
     val out = outPath
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(out),
@@ -850,5 +744,112 @@ object Bench {
         sentinelFirst, sentinelLast, contended, out, sfDir, runs,
         perQuery = resultsFinal))
     spark.stop()
+  }
+
+  /** `{"name":seconds,...}` at ms precision, or `precise` full doubles. */
+  private def secondsJson(kvs: Seq[(String, Double)],
+      precise: Boolean = false): String =
+    Json.obj(kvs.map { case (k, v) => k -> (if (precise) v.toString else Json.num(v)) })
+
+  /** `,"field":["a","b"]`, or nothing for an empty list. */
+  private def namesJson(field: String, names: Seq[String]): String =
+    if (names.isEmpty) ""
+    else names.map(Json.str(_)).mkString(s""","$field":[""", ",", "]")
+
+  /** The cumulative partial record flushed after every query; `compact`
+    * keeps only `_all` (the periodic stdout line). */
+  def partialLine(done: Seq[(String, Double, Boolean)], nPlanned: Int,
+      sfDir: String, runs: Int, compact: Boolean): String = {
+    val ok = done.collect { case (n, t, false) => n -> t }
+    val tot = ok.map(_._2).sum
+    val qs = if (compact) secondsJson(Seq("_all" -> tot)) else secondsJson(ok)
+    s"""{"metric":"total","value":${Json.num(tot)},"unit":"sec",""" +
+      s""""partial":true,"n_done":${done.size},"n_planned":$nPlanned,""" +
+      s""""queries":$qs${namesJson("failed", done.collect { case (n, _, true) => n })},""" +
+      s""""sf":${Json.str(sfDir)},"runs_per_query":$runs,"stat":"median"}"""
+  }
+
+  /** The finished sweep's line: on stdout at ms precision; in the results
+    * file `precise`, with the file-only blocks in `fileOnly`. `env` is the
+    * rendered environment-evidence fields. */
+  def resultsLine(total: Double, results: Seq[(String, Double)],
+      failed: Seq[String], env: String, sfDir: String, runs: Int,
+      precise: Boolean = false, fileOnly: String = ""): String = {
+    val value = if (precise) total.toString else Json.num(total)
+    s"""{"metric":"total","value":$value,"unit":"sec",""" +
+      s""""queries":${secondsJson(results, precise)}${namesJson("failed", failed)},""" +
+      s"""$env$fileOnly,"sf":${Json.str(sfDir)},"runs_per_query":$runs,"stat":"median"}"""
+  }
+
+  /** The bench session shape — the one every tool that reports bench
+    * numbers or plans must share (ProfileQuery, PlanDump, ExplainAll). */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      // size input splits so scan tasks ~ cores: the local dataset is
+      // ~2-11 MB per table, where the 128 MB default yields 1-3 scan tasks
+      // on a 32-thread runner. Same principle at 100 TB: the default
+      // already gives >> cores tasks there, so this knob is a no-op at scale.
+      .config("spark.sql.files.maxPartitionBytes", "2097152")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // CUMULATIVE-STATE CAPS (round-14, the r13 idle-close tail hunt):
+      // even with the UI off, the app-status stores RETAIN per-execution
+      // state — 1000 SQL executions each holding its full plan graph +
+      // metric tables, 1000 jobs, 1000 stages — and a 329-query x 3-run
+      // sweep banks all of it on the 8g driver heap, taxing exactly the
+      // allocation-heavy tail entries the registry sweep already freed.
+      // Nothing reads this state here (no UI, no history server), so cap
+      // it near zero.
+      .config("spark.sql.ui.retainedExecutions", "8")
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "50")
+      .config("spark.ui.retainedTasks", "500")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** JVM/codegen warmup outside any timed region: touch each table family
+    * and run one cheap query so the first timed entry doesn't absorb JIT,
+    * then build every offline artifact (models, landed indexes, staged
+    * fixtures), each timed on its own and kept off every query's clock.
+    * Best-effort: a missing table must not stop the run before the timed
+    * loop (which has per-query error handling and always emits the JSON).
+    * Returns each artifact's build seconds or failure. */
+  def warmup(spark: SparkSession, sfDir: String): Seq[(String, Try[Double])] = {
+    try {
+      graft.sources.Tables.All.foreach { t =>
+        graft.sources.Tables.table(spark, sfDir, t).count()
+      }
+      SparkEntry.queries("q1_agg")(spark, sfDir).count()
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
+    val builds = graft.queries.Artifacts.ensureAll(spark, sfDir)
+    builds.foreach { case (n, t) => t.failed.foreach(e =>
+      System.err.println(s"[bench] artifact $n failed: ${e.getMessage}")) }
+    builds
+  }
+
+  /** The bench's timed action: hash-reduce ALL output columns server-side,
+    * collecting one xor. count() lets Catalyst join-eliminate or prune the
+    * work a query's OUTPUT columns carry (the round-8 pagerank lesson: the
+    * "fast" r6/r7 numbers measured a node scan because count() folded the
+    * whole left-outer rank chain away); this shape cannot fold,
+    * catalog-wide, by construction. ROUND-11 HONESTY FIX: the r9/r10 form
+    * ended in `.agg(sum("h")).count()` — but count() over an ungrouped
+    * aggregate lets Catalyst prune the sum AND the xxhash projection
+    * entirely, so output-column work (levenshtein in dedup_edit_verify,
+    * rank values, decode payloads) was silently skipped. Reading the
+    * aggregate VALUE (head, not count) makes the hash unprunable; bit_xor
+    * replaces sum because summing uniform 64-bit hashes overflows long
+    * ~immediately under ANSI mode (and xor is the standard
+    * order-independent hash combiner anyway). */
+  def materialize(df: DataFrame): Unit = {
+    df.select(xxhash64(df.columns.map(df.col): _*).as("h"))
+      .agg(bit_xor(col("h"))).head()
+    ()
   }
 }

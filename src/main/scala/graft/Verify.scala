@@ -34,35 +34,20 @@ object Verify {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None => SparkEntry.queries
     }
+    // per-query cache hygiene (safe here: Verify is sequential)
     selected.foreach { case (name, fn) =>
-      // per-query cache hygiene (safe here: Verify is sequential) — see
-      // the matching sweep in Bench for the rationale
-      val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      graft.functions.Caches.sweepingNew(spark) {
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
       }
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => cachedBefore.contains(id) }
-        .values.foreach(_.unpersist(blocking = false))
-      // drain the operator-cache registry too — it strong-refs every
-      // registered frame's plan tree (driver-heap growth across a
-      // 327-query run; see the matching sweep in Bench)
-      graft.functions.Caches.sweepOperatorCaches()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // a tab or CR left unescaped in an oracle's SQL would make the
+    // compare's json.load fail and silently zero the correctness check
+    def q(s: String): String =
+      graft.observability.Json.str(s, shortControls = true)
     // dynamic oracles (data-dependent literals, e.g. IVF centroids) are
     // rendered against the actual sf dir; a failure there must not zero the
     // whole round, so each is best-effort

@@ -169,8 +169,8 @@ object Bpe {
     * counts drop strictly across the window. [[BpeSpec]] pins batched ==
     * sequential (including the self-pair regression), the
     * `bpe_learn_batched` gate row replays the same unrolled DuckDB oracle
-    * as `bpe_learn`, and `tools.BpeDeep` replays both learners to
-    * exhaustion depth and requires bit-parity. */
+    * as `bpe_learn`, and `tools.BpeDeep` (last at commit 0ec9a06) replayed
+    * both learners to exhaustion depth with bit-parity. */
   def learnBatched(df: DataFrame, textCol: String, steps: Int,
       maxBatch: Int = 16,
       onRound: (Int, Int) => Unit = (_, _) => ()): DataFrame = {

@@ -82,6 +82,23 @@ object Caches {
     df
   }
 
+  /** Run `body`, then unpersist every RDD it left persisted (checkpoint
+    * blocks included) and drain the operator-cache registry — the
+    * per-unit sweep a long-lived session runs between queries (Bench,
+    * Verify, the tools, stream micro-batches). The RDD-id diff is only
+    * safe when nothing else runs on the context meanwhile: callers run
+    * their units sequentially. */
+  def sweepingNew[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try body
+    finally {
+      spark.sparkContext.getPersistentRDDs
+        .filterNot { case (id, _) => before.contains(id) }
+        .values.foreach(_.unpersist(blocking = false))
+      sweepOperatorCaches()
+    }
+  }
+
   /** Unpersist every registered operator cache still materialized and
     * clear the registry; returns how many were released. ALWAYS safe,
     * any time: persist does not sever lineage (unlike localCheckpoint),

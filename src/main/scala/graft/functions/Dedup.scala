@@ -73,7 +73,11 @@ object Dedup {
     * [[exactDedup]] on the survivors to also dedup within the batch. */
   def dedupAgainstCorpus(incoming: DataFrame, corpus: DataFrame,
       textCol: String): DataFrame = {
-    val seen = corpus.select(md5(col(textCol)).as("_seen_h")).distinct()
+    // a non-nullable key gives the optimizer no IsNotNull guard to infer
+    // and push into the corpus scan as a second md5 per row; "" never
+    // equals a 32-char digest, so a NULL text still matches nothing
+    val seen = corpus.select(coalesce(md5(col(textCol)), lit("")).as("_seen_h"))
+      .distinct()
     incoming.join(seen, md5(col(textCol)) === col("_seen_h"), "left_anti")
   }
 
@@ -782,8 +786,9 @@ object Dedup {
     * that exact combination collides. With keep=3, maxDist=3: 6 blocks,
     * C(6,3)=20 keys of ~32 bits — 20·n²/2³³ random collisions, ~3 orders
     * of magnitude fewer than the 16-bit form for 5× the (narrow, pre-join)
-    * explode. Measured at 10×-sf0.1 (tools.ProfileSimhash): 196M candidate
-    * pairs (narrow) -> 52M (multi-block) at 50k docs.
+    * explode. Measured at 10×-sf0.1 (tools.ProfileSimhash, last at commit
+    * 0ec9a06): 196M candidate pairs (narrow) -> 52M (multi-block) at 50k
+    * docs.
     *
     * Second structural choice: LSH runs over DISTINCT SIGNATURE VALUES,
     * not documents. Exact-duplicate cliques (the LSH degenerate case — an
@@ -863,9 +868,9 @@ object Dedup {
   }
 
   /** Candidate pairs of the multi-block scheme BEFORE verification —
-    * exposed so the collision behavior is measurable
-    * ([[graft.tools.ProfileSimhash]] compares this count against the
-    * legacy narrow-chunk scheme at scale). */
+    * exposed so the collision behavior is measurable (the count against
+    * the legacy narrow-chunk scheme came from `tools.ProfileSimhash`,
+    * last at commit 0ec9a06). */
   private[graft] def simhashCandidates(df: DataFrame, idCol: String,
       textCol: String, maxDist: Int = 3): DataFrame = {
     val chunked = simhash(df, idCol, textCol)
@@ -874,25 +879,6 @@ object Dedup {
     val a = chunked.select(col("combo"), col("ckey"), col("id").as("id_a"))
     val b = chunked.select(col("combo"), col("ckey"), col("id").as("id_b"))
     a.join(b, Seq("combo", "ckey")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-  }
-
-  /** The legacy narrow-chunk candidate scheme (maxDist+1 chunks of
-    * 64/(maxDist+1) bits) — kept ONLY as the measurement baseline for
-    * [[graft.tools.ProfileSimhash]]; [[simhashPairs]] no longer uses it. */
-  private[graft] def simhashCandidatesNarrow(df: DataFrame, idCol: String,
-      textCol: String, maxDist: Int = 3): DataFrame = {
-    val nChunks = maxDist + 1
-    val chunkBits = 64 / nChunks
-    val chunked = simhash(df, idCol, textCol)
-      .select(col(idCol).as("id"),
-        posexplode(array((0 until nChunks).map { c =>
-          shiftrightunsigned(col("simhash"), c * chunkBits)
-            .bitwiseAND(lit((1L << chunkBits) - 1))
-        }: _*)).as(Seq("chunk", "ckey")))
-    val a = chunked.select(col("chunk"), col("ckey"), col("id").as("id_a"))
-    val b = chunked.select(col("chunk"), col("ckey"), col("id").as("id_b"))
-    a.join(b, Seq("chunk", "ckey")).filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
   }
 

@@ -380,9 +380,15 @@ object Sketches {
   // pre-checks a suspected key explosion before paying for it.
   // --------------------------------------------------------------------
 
-  /** m-bucket key histogram: (bucket, cnt) per side. */
+  /** m-bucket key histogram: (bucket, cnt) per side. NULL keys join
+    * nothing, so they are not counted — which also makes `bucket`
+    * non-nullable (the coalesce never fires on a non-null key): a
+    * nullable bucket lets the optimizer infer an IsNotNull guard for the
+    * join and push it below the aggregate, where it re-runs the md5 per
+    * row. */
   def keyHistogram(df: DataFrame, key: Column, m: Int = HllM): DataFrame =
-    df.select((hashSlice52(key) % m).as("bucket"))
+    df.filter(key.isNotNull)
+      .select(coalesce(hashSlice52(key) % m, lit(-1L)).as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("cnt"))
 
   /** One-row estimate: Σ cntA·cntB over shared buckets, plus the two

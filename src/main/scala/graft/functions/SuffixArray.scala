@@ -209,9 +209,13 @@ object SuffixArray {
       // exchanges per doubling round (the per-doc window hash and the
       // range exchange) plus the members expansion; binary halves its
       // footprint with identical equality semantics (only grouping/join
-      // equality is ever used on _g).
-      val g = df.select(col(idCol).as("_doc"),
-        unhex(md5(col(textCol))).as("_g"), col(textCol).as("_t"))
+      // equality is ever used on _g). NULL texts have no suffixes; dropping
+      // them first leaves the coalesce inert and _g non-nullable, so the
+      // optimizer infers no IsNotNull(_g) guard for the members join —
+      // pushed into the scan, that guard re-ran the md5 per row.
+      val g = df.filter(col(textCol).isNotNull).select(col(idCol).as("_doc"),
+        coalesce(unhex(md5(col(textCol))), lit(Array.emptyByteArray)).as("_g"),
+        col(textCol).as("_t"))
       val members = g.select("_doc", "_g").persist()
       pinned += members
       // min() is exact (all texts under a key are equal) and partial-

@@ -1900,10 +1900,11 @@ object TextAnalysis {
       collapseCliques)
 
   /** Duplication factor above which the clique-collapsed plan wins.
-    * Measured crossover bounds (ProfileWinnow, materialize action): at
-    * dup factor 1.0 the collapse machinery costs ~2-3x constant (extra
-    * md5 grouping, reps aggregate, expansion joins); at 10x it wins ~5x
-    * and the advantage is quadratic-in-clique beyond. 1.3 is
+    * Measured crossover bounds (`tools.ProfileWinnow`, last at commit
+    * 0ec9a06, materialize action): at dup factor 1.0 the collapse
+    * machinery costs ~2-3x constant (extra md5 grouping, reps aggregate,
+    * expansion joins); at 10x it wins ~5x and the advantage is
+    * quadratic-in-clique beyond. 1.3 is
     * deliberately LOW: mispicking collapse costs a small constant,
     * mispicking raw on a dup-heavy crawl costs c² join blowup. */
   private val CliqueCollapseMinDup = 1.3
@@ -1984,8 +1985,8 @@ object TextAnalysis {
     * [[CliqueCollapseMinDup]]): winnow every doc, fp-keyed inverted-index
     * self-join, optional Levenshtein over doc prefixes. Row-identical to
     * the clique-collapsed form (identical texts share entire fp sets and
-    * have distance 0 under the DP) — ProfileWinnow asserts output-hash
-    * equality of the two plans. */
+    * have distance 0 under the DP) — DedupSimilaritySpec pins row equality
+    * of the two plans. */
   private def winnowRawPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int, w: Int, minShared: Long, prefixLen: Int): DataFrame = {
     val withEdit = prefixLen > 0

@@ -475,8 +475,7 @@ object Incremental {
       // in parquet, so nothing may stay pinned across batches: a
       // daily-crawl stream would otherwise accumulate a corpus-scale
       // block set per micro-batch until executors fill)
-      val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      try {
+      graft.functions.Caches.sweepingNew(spark) {
         val delta = batch.select(col(idCol), col(textCol))
         // corpus as of batches STRICTLY before this one — the
         // replay-safe read: a re-delivered batch never sees its own
@@ -510,11 +509,6 @@ object Incremental {
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("_batch").parquet(docsDir)
-      } finally {
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => cachedBefore.contains(id) }
-          .values.foreach(_.unpersist(blocking = false))
-        graft.functions.Caches.sweepOperatorCaches()
       }
   }
 

@@ -1,21 +1,19 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
-/** Print formatted physical plans for selected queries (dev tool). */
+/** Print formatted physical plans for selected queries (dev tool), under
+  * the bench session so the plan is the one the bench times. */
 object ExplainAll {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = if (args.nonEmpty) args.toSeq else graft.Bench.Headline
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     names.foreach { n =>
       println(s"\n===================== $n =====================")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      graft.functions.Caches.sweepingNew(spark) {
+        SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      }
     }
     spark.stop()
   }

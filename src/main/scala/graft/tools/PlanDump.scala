@@ -1,15 +1,14 @@
 package graft.tools
 
 import graft.queries.Catalog
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Round-17 evidence tool: write each named catalog query's
   * `.explain("formatted")` output to `<outDir>/<query>_<tag>.txt` —
   * the before/after plan artifacts the optimization rounds commit under
-  * plans/rN/. Runs under the BENCH session shape (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions = cpus, AQE on) so the dumped plan is the plan the
-  * bench actually times, not a dev-shell variant.
+  * plans/rN/. Runs under the bench session ([[graft.Bench.session]]) so
+  * the dumped plan is the plan the bench actually times, not a dev-shell
+  * variant.
   *
   *   runMain graft.tools.PlanDump <sfDir> <outDir> <tag> <query> [query...]
   */
@@ -28,24 +27,19 @@ object PlanDump {
         s"unknown queries: ${unknown.mkString(", ")} (see Catalog.queries)")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "2097152")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     val Array(sfDir, outDir, tag) = args.take(3)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     args.drop(3).foreach { q =>
-      val df = Catalog.queries(q)(spark, sfDir)
-      val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val txt = graft.functions.Caches.sweepingNew(spark) {
+        Catalog.queries(q)(spark, sfDir).queryExecution
+          .explainString(ExplainMode.fromString("formatted"))
+      }
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"${q}_$tag.txt"),
         txt.getBytes("UTF-8"))
       println(s"[plandump] wrote $outDir/${q}_$tag.txt (${txt.length} chars)")
-      graft.functions.Caches.sweepOperatorCaches()
     }
     spark.stop()
   }

@@ -1,16 +1,16 @@
 package graft.tools
 
+import graft.Bench
+import graft.functions.Caches
+import graft.observability.QueryProfile
 import graft.queries.Catalog
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Round-18 measurement tool: per-Spark-job / per-stage census of ANY
-  * catalog query under the BENCH session shape and the bench's exact
-  * materialize action (xxhash64 over all output columns, bit_xor
-  * reduce, head) — so the profile bills the same work the bench times.
-  * Prints, per pass: wall, job count, job wall, stage task-time split
-  * (run / deser / GC); on the last pass the per-job timeline and the
-  * top stages by task run time.
+/** Per-pass [[QueryProfile]] of ANY catalog query under the bench's
+  * session, warmup (artifacts included) and materialize action, so the
+  * profile bills the same work the bench times. Prints, per pass: wall,
+  * job count, job wall, stage task-time split (run / deser / GC); on the
+  * last pass the per-job timeline, the top stages by task run time and
+  * the whole record as JSON.
   *
   *   runMain graft.tools.ProfileQuery <sfDir> <passes> <query> [query...]
   *   (extra "k=v" args after queries become session confs)
@@ -30,119 +30,35 @@ object ProfileQuery {
       System.err.println(s"unknown queries: ${unknown.mkString(", ")}")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "2097152")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     confs.foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k, v)
       println(s"PROFILE conf $k=$v")
     }
-
-    final case class J(id: Int, submitted: Long, var completed: Long,
-      desc: String)
-    val jobs = scala.collection.mutable.ArrayBuffer.empty[J]
-    final case class St(id: Int, name: String, var tasks: Int,
-      var runMs: Long, var deserMs: Long, var gcMs: Long,
-      var submitted: Long, var completed: Long)
-    val stages = scala.collection.mutable.LinkedHashMap.empty[Int, St]
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.synchronized {
-            jobs += J(s.jobId, s.time, -1L,
-              Option(s.properties)
-                .flatMap(p => Option(p.getProperty(
-                  "spark.job.description"))).getOrElse("")
-                .take(80))
-          }
-        override def onJobEnd(
-            e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          jobs.synchronized {
-            jobs.find(_.id == e.jobId).foreach(_.completed = e.time)
-          }
-        override def onStageSubmitted(
-            s: org.apache.spark.scheduler.SparkListenerStageSubmitted)
-            : Unit = stages.synchronized {
-          val i = s.stageInfo
-          stages(i.stageId) = St(i.stageId, i.name.take(60), 0, 0, 0, 0,
-            System.currentTimeMillis(), -1)
-        }
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = stages.synchronized {
-          stages.get(s.stageInfo.stageId)
-            .foreach(_.completed = System.currentTimeMillis())
-        }
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          stages.synchronized {
-            stages.get(e.stageId).foreach { st =>
-              st.tasks += 1
-              val m = e.taskMetrics
-              if (m != null) {
-                st.runMs += m.executorRunTime
-                st.deserMs += m.executorDeserializeTime
-                st.gcMs += m.jvmGCTime
-              }
-            }
-          }
-      })
-
-    // the bench's warmup stance: touch each table family once
-    try graft.sources.Tables.All.foreach { t =>
-      graft.sources.Tables.table(spark, dir, t).count()
-    } catch { case e: Throwable =>
-      System.err.println(s"[profile] warmup: ${e.getMessage}") }
-
-    def run(df: org.apache.spark.sql.DataFrame): Unit =
-      df.select(xxhash64(df.columns.map(df.col): _*).as("h"))
-        .agg(bit_xor(col("h"))).head()
+    Bench.warmup(spark, dir)
+    val profile = QueryProfile.install(spark)
 
     queries.foreach { q =>
       (0 until passes).foreach { p =>
-        jobs.synchronized(jobs.clear())
-        stages.synchronized(stages.clear())
-        val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-        val t0 = System.nanoTime()
-        run(Catalog.queries(q)(spark, dir))
-        val wall = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => cachedBefore.contains(id) }
-          .values.foreach(_.unpersist(blocking = false))
-        graft.functions.Caches.sweepOperatorCaches()
-        val snap = jobs.synchronized(jobs.toVector)
-        val jw = snap.filter(_.completed > 0)
-          .map(j => (j.completed - j.submitted) / 1e3).sum
-        val ss = stages.synchronized(stages.values.toVector)
-        println(f"PROFILE $q pass$p wall=$wall%.2f s " +
-          f"jobs=${snap.size} jobwall=$jw%.2f s stages=${ss.size} " +
-          f"taskrun=${ss.map(_.runMs).sum / 1e3}%.2f s " +
-          f"deser=${ss.map(_.deserMs).sum / 1e3}%.2f s " +
-          f"gc=${ss.map(_.gcMs).sum / 1e3}%.2f s")
+        val (_, r) = Caches.sweepingNew(spark) {
+          profile.window(Bench.materialize(Catalog.queries(q)(spark, dir)))
+        }
+        println(f"PROFILE $q pass$p wall=${r.wallS}%.2f s " +
+          f"jobs=${r.jobs.size} jobwall=${r.jobWallS}%.2f s " +
+          f"stages=${r.stages.size} taskrun=${r.taskRunS}%.2f s " +
+          f"deser=${r.deserializeS}%.2f s gc=${r.gcS}%.2f s")
         if (p == passes - 1) {
-          if (snap.nonEmpty) {
-            val base = snap.map(_.submitted).min
-            snap.foreach { j =>
-              val e = if (j.completed > 0)
-                f"${(j.completed - base) / 1e3}%7.2f" else "      ?"
-              println(f"  job ${j.id}%4d ${(j.submitted - base) / 1e3}%7.2f" +
-                f" -> $e s  ${j.desc}")
-            }
+          r.jobs.foreach { j =>
+            val e = if (j.wallS >= 0) f"${j.startS + j.wallS}%7.2f" else "      ?"
+            println(f"  job ${j.id}%4d ${j.startS}%7.2f -> $e s  ${j.description}")
           }
-          ss.sortBy(s => -s.runMs).take(12).foreach { s =>
-            val w = if (s.completed > 0)
-              f"${(s.completed - s.submitted) / 1e3}%.3f" else "?"
-            println(f"  stage ${s.id}%4d wall=$w%8s tasks=${s.tasks}%3d " +
-              f"run=${s.runMs / 1e3}%.2f deser=${s.deserMs / 1e3}%.2f " +
-              f"gc=${s.gcMs / 1e3}%.2f | ${s.name}")
+          r.stages.sortBy(-_.runS).take(12).foreach { s =>
+            println(f"  stage ${s.id}%4d wall=${s.wallS}%8.3f tasks=${s.tasks}%3d " +
+              f"run=${s.runS}%.2f deser=${s.deserializeS}%.2f " +
+              f"gc=${s.gcS}%.2f | ${s.name}")
           }
+          println(s"PROFILE $q record ${r.json}")
         }
       }
     }

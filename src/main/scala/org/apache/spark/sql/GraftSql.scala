@@ -25,6 +25,11 @@ object GraftSql {
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
 
+  /** Block until every event posted so far has reached every listener
+    * (`private[spark]`; listener delivery is asynchronous). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Register a SQL function on an ALREADY-RUNNING session (the
     * `SparkSessionExtensions` path in [[graft.plans.GraftExtensions]] only
     * applies at session build time). */

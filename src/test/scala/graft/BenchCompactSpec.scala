@@ -94,24 +94,36 @@ class BenchCompactSpec extends AnyFunSuite {
     // the interpolated strings carry escaped forms, never raw specials
     assert(line.contains("we\\\"ird\\\\dir\\u000a"), line)
     assert(line.contains("test\\\"data"), line)
+    // the partial and results lines interpolate the same sf dir
+    val sf = "/data/te\"st\\sf\t0.01"
+    val partial = Bench.partialLine(Seq(("q1_agg", 0.5, false),
+      ("boom", 0.1, true)), nPlanned = 3, sfDir = sf, runs = 2,
+      compact = false)
+    val results = Bench.resultsLine(1.0, Seq("q1_agg" -> 0.5), Seq("boom"),
+      "\"loadavg_start\":0.100", sf, runs = 2, precise = true,
+      fileOnly = ",\"query_profile\":{}")
+    for (l <- Seq(partial, results))
+      assert(l.contains("te\\\"st\\\\sf\\u00090.01"), l)
     // parse with the same class of parser the driver uses: unescape and
     // verify no unescaped quote terminates a string early — done by a
     // strict structural walk over the rendered line
-    var i = 0; var inStr = false; var depth = 0
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1
-        else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '{' => depth += 1
-        case '}' => depth -= 1
-        case '\n' | '\r' => fail("raw newline on the compact line")
-        case _ => ()
+    for (line <- Seq(line, partial, results)) {
+      var i = 0; var inStr = false; var depth = 0
+      while (i < line.length) {
+        val c = line.charAt(i)
+        if (inStr) {
+          if (c == '\\') i += 1
+          else if (c == '"') inStr = false
+        } else c match {
+          case '"' => inStr = true
+          case '{' => depth += 1
+          case '}' => depth -= 1
+          case '\n' | '\r' => fail("raw newline on the compact line")
+          case _ => ()
+        }
+        i += 1
       }
-      i += 1
+      assert(!inStr && depth == 0, s"structurally invalid JSON: $line")
     }
-    assert(!inStr && depth == 0, s"structurally invalid JSON: $line")
   }
 }

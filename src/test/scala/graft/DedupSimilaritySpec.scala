@@ -1115,7 +1115,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // The probe path's defining property — the billion-rank claim rests
     // on it: the landed index is SCANNED and probed against broadcast
     // delta frames, never ranked or exchanged. Pin it behaviorally: a
-    // SparkListener sums shuffle-write records per stage across the
+    // QueryProfile window records shuffle-write records per stage across the
     // whole forced-probe merge (consumed with the bench's no-sort hash
     // action); no stage may shuffle even half the index's row count,
     // while the forced-UNION contrast run must (its round 1 range-ranks
@@ -1138,16 +1138,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/reps")
     val reps = spark.read.parquet(s"$dir/reps")
     val indexRows = base.count() // == suffix positions == rank rows upper bound
-    val maxShuffle = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted)
-          : Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) maxShuffle.getAndUpdate(
-          _ max m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
     def consume(df: org.apache.spark.sql.DataFrame): Unit = {
       df.select(xxhash64(col("doc_id"), col("pos"), col("suffix_rank"))
         .as("h")).agg(bit_xor(col("h"))).head()
@@ -1159,25 +1149,14 @@ class DedupSimilaritySpec extends AnyFunSuite {
       if (path != "probe")
         spark.conf.set("spark.graft.saIncr.probeMinIndex",
           Long.MaxValue.toString)
-      maxShuffle.set(0L)
-      spark.sparkContext.addSparkListener(listener)
+      val profile = graft.observability.QueryProfile.install(spark)
       try {
-        consume(SuffixArray.suffixRanksIncrementalFrom(reps, base,
-          oldDocs, delta, "doc_id", "text", nParts = 4))
-        // listener events drain asynchronously after the action; the
-        // bus has no public drain hook, so poll briefly for quiescence
-        // (the census only grows — a late event can only help the
-        // union contrast and only hurt by making probe FAIL loudly)
-        var last = -1L
-        var same = 0
-        while (same < 3) {
-          Thread.sleep(50)
-          val v = maxShuffle.get()
-          if (v == last) same += 1 else { same = 0; last = v }
-        }
-        maxShuffle.get()
+        val (_, record) = profile.window(consume(
+          SuffixArray.suffixRanksIncrementalFrom(reps, base,
+            oldDocs, delta, "doc_id", "text", nParts = 4)))
+        record.stages.map(_.shuffleRecordsWritten).maxOption.getOrElse(0L)
       } finally {
-        spark.sparkContext.removeSparkListener(listener)
+        profile.close()
         spark.conf.unset("spark.graft.saIncr.probeRatio")
         spark.conf.unset("spark.graft.saIncr.probeMinIndex")
       }

@@ -571,19 +571,51 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Join"), p)
   }
 
+  /** Queries whose optimized plans keep a Filter that evaluates a hash
+    * (md5) or higher-order function, each one a DELIBERATE hash
+    * predicate: the per-row md5-slice keep draw of the samplers
+    * (`Sampling.hashSlice32(key) < rate * 2^32`), which the DuckDB oracles
+    * replay bit for bit. Anything else such a Filter
+    * carries is the InferFiltersFromGenerate / inferred-IsNotNull trap —
+    * an optimizer-synthesized guard with the key's whole expression
+    * inlined, re-run per row (SCALING.md round-10) — and is fixed in the
+    * program, not listed here. */
+  private val HashFilterQueries = Map(
+    "sample_stratified" -> "per-language keep-fraction md5 draw",
+    "sample_epochs" -> "per-epoch md5 draw for the fractional epoch",
+    "sample_weighted" -> "quality-weighted keep-fraction md5 draw",
+    "corpus_pipeline" -> "the recipe's stratified-sampling stage draw",
+    "corpus_pipeline_temperature" -> "the recipe's temperature-mix draw",
+    "corpus_mix" -> "per-language mixture-weight md5 draw",
+    "mixture_temperature" -> "temperature-scaled per-language md5 draw")
+
   test("no single-partition WindowExec outside the documented parity set") {
     // collected from the optimized logical plan: AQE wraps the physical one
     // in AdaptiveSparkPlanExec, which hides its subtree from collect
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val offenders = Catalog.all.flatMap { d =>
-      val plan = d.fn(spark, GraftTestSpark.Sf0001).queryExecution.optimizedPlan
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, Md5}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, Window => LWindow}
+    val plans = Catalog.all.map { d =>
+      d.name -> d.fn(spark, GraftTestSpark.Sf0001).queryExecution.optimizedPlan
+    }
+    val offenders = plans.flatMap { case (name, plan) =>
       val global = plan.collect {
         case w: LWindow if w.partitionSpec.isEmpty => w
       }
-      if (global.nonEmpty) Some(d.name) else None
+      if (global.nonEmpty) Some(name) else None
     }.toSet
     assert(offenders == GlobalWindowParityQueries,
       s"unexpected global-window queries: ${offenders -- GlobalWindowParityQueries}; " +
         s"missing expected: ${GlobalWindowParityQueries -- offenders}")
+    // the same pass audits filters for a per-row hash or lambda
+    val hashFilters = plans.flatMap { case (name, plan) =>
+      val heavy = plan.collect { case f: LFilter
+        if f.condition.exists(e => e.isInstanceOf[HigherOrderFunction] ||
+          e.isInstanceOf[Md5]) => f.condition.sql }
+      if (heavy.nonEmpty) Some(name -> heavy) else None
+    }.toMap
+    assert(hashFilters.keySet == HashFilterQueries.keySet,
+      s"unexpected hash/lambda filters: " +
+        s"${hashFilters -- HashFilterQueries.keySet}; " +
+        s"pinned but clean: ${HashFilterQueries.keySet -- hashFilters.keySet}")
   }
 }
