@@ -200,21 +200,22 @@ object Bench {
   /** COMPACT FALLBACK LINE (round-16, the r15 parsed:null fix — the
     * THIRD round the driver bench signal was the judge's top item).
     * The r15 "compact" line interpolated the full env block, which by
-    * then carried the contended-run `first_pass`/`cal_second` maps and
-    * the 68-entry `heavy_min2` list — ~2.5 KB before its own fields,
+    * then carried sweep-sized maps — ~2.5 KB before its own fields,
     * over the driver's 2000-char stdout tail, so the ONLY
     * self-contained JSON line in the tail had its head truncated and
     * the parse died (BENCH_r15: rc 0, parsed null). The fix is
     * restraint, structurally enforced: this function takes only
     * FIXED-ARITY SCALARS — no maps, no lists, nothing that grows with
     * the sweep — so the line's length is bounded by construction.
-    * Full per-query data, retry/calibration maps, tail maps and heavy
-    * evidence all live in the `queries_file` artifact and the long
-    * stdout line above it. BenchCompactSpec pins the worst-case length
-    * under 1200 chars so growth can never silently re-break the parse.
+    * Full per-query data and heavy-trim evidence live in the
+    * `queries_file` artifact and the long stdout line above it.
+    * BenchCompactSpec pins the worst-case length under 1200 chars so
+    * growth can never silently re-break the parse. `total_normalized`
+    * (always `value` since the discount was removed) and `n_skipped`
+    * (always 0) keep the line's field set unchanged for its parsers.
     */
-  def compactLine(total: Double, totalNormalized: Double, nQueries: Int,
-      nFailed: Int, nSkipped: Int, loadavgStart: Double, loadavgEnd: Double,
+  def compactLine(total: Double, nQueries: Int, nFailed: Int,
+      loadavgStart: Double, loadavgEnd: Double,
       sentinelFirst: Double, sentinelLast: Double, contended: Boolean,
       queriesFile: String, sfDir: String, runs: Int,
       perQuery: Seq[(String, Double)] = Nil,
@@ -241,11 +242,11 @@ object Bench {
     def render(qsBody: String): String =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
         s""""queries":{"_all":${fmt(total)}$qsBody},"n_queries":$nQueries,""" +
-        s""""n_failed":$nFailed,"n_skipped":$nSkipped,""" +
+        s""""n_failed":$nFailed,"n_skipped":0,""" +
         s""""queries_file":$qf,""" +
         s""""loadavg_start":${fmt(loadavgStart)},"loadavg_end":${fmt(loadavgEnd)},""" +
         s""""sentinel_first":${fmt(sentinelFirst)},"sentinel_last":${fmt(sentinelLast)},""" +
-        s""""contended":$contended,"total_normalized":${fmt(totalNormalized)},""" +
+        s""""contended":$contended,"total_normalized":${fmt(total)},""" +
         s""""sf":${str(sfDir)},"runs_per_query":$runs,"stat":"median"}"""
     var budget = maxLen - render("").length
     val sb = new StringBuilder
@@ -254,6 +255,49 @@ object Bench {
       if (entry.length <= budget) { sb.append(entry); budget -= entry.length }
     }
     render(sb.toString)
+  }
+
+  /** Timed runs per query: single-run timings at this scale carry ±20%
+    * noise, which makes round-over-round per-query deltas unactionable. */
+  val Runs = 3
+  /** A compact partial line goes to stdout every this many queries. */
+  private val PartialEvery = 25
+  /** The pre-launch quiet gate waits for 1-min loadavg under this. */
+  private val QuietLoadavg = 1.5
+
+  /** One timed run: its seconds, whether the query threw, and the profile
+    * record taken around it. */
+  final case class Run[P](seconds: Double, failed: Boolean, profile: P)
+
+  /** A query's reported timing: the kept run, whether any run threw, and
+    * (first, confirming) seconds when the heavy trim applied. */
+  final case class Timed[P](kept: Run[P], failed: Boolean,
+      heavyPair: Option[(Double, Double)])
+
+  /** The per-query timing contract over `once` (one timed run):
+    *  - median of [[Runs]] runs;
+    *  - HEAVY-TAIL TRIM (round-15, the r14 sweep-timeout fix): a first
+    *    run at or above `heavyCutoff` (> 0) gets exactly ONE confirming
+    *    run and reports min-of-2 — the heavy entries are where the
+    *    sweep's wall clock goes, and their RELATIVE noise is the
+    *    smallest (the ±20% that motivated median-of-3 is a small-query
+    *    phenomenon). Both runs are reported so the trim's downward bias
+    *    (|t1 - t2| per entry) stays auditable;
+    *  - FAILURE-HONEST: a throwing first run is not repeated, and a query
+    *    any of whose runs threw is reported `failed` (round-6's
+    *    events-family "fast" entries were fast-FAILs that masked four
+    *    hash-mismatching oracles). */
+  def timeRuns[P](heavyCutoff: Double)(once: () => Run[P]): Timed[P] = {
+    val first = once()
+    if (first.failed) Timed(first, failed = true, None)
+    else if (heavyCutoff > 0 && first.seconds >= heavyCutoff) {
+      val second = once()
+      Timed(Seq(first, second).minBy(_.seconds), second.failed,
+        Some((first.seconds, second.seconds)))
+    } else {
+      val all = first +: Seq.fill(Runs - 1)(once())
+      Timed(all.sortBy(_.seconds).apply(Runs / 2), all.exists(_.failed), None)
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -265,36 +309,25 @@ object Bench {
     // External-load reading taken BEFORE the warmup block: warmup itself
     // saturates the box for minutes on big inputs (index builds, fixture
     // staging), so a post-warmup loadavg reads the bench's OWN work as
-    // contention and trips the self-healing retry on every large run
-    // (observed on the first ~sf1 full-headline sweep: loadavg_start 4.78
-    // from warmup, sentinels flat). The sentinel pair still brackets the
-    // timed region itself.
+    // contention. The sentinel pair brackets the timed region itself.
     def loadavgRead(): Double =
       try java.nio.file.Files.readString(
         java.nio.file.Paths.get("/proc/loadavg")).split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
-    // PRE-LAUNCH QUIET-WINDOW WAIT (round 17, r16 verdict #2): the
-    // driver invokes graft.Bench directly — without the close_sweep.py
-    // wrapper — so BENCH_r16 launched into a loadavg-4.4 box and the
-    // retry protocol had to heal 125 s first-pass spikes after the
-    // fact. Cheaper to not start: wait (bounded) for 1-min loadavg to
-    // fall under the same threshold close_sweep.py uses before taking
-    // loadavgStart or running warmup. Wall cost on a quiet box is zero
-    // (first read passes); on a loaded box the wait is capped.
-    //   SPARK_GRAFT_BENCH_WAIT_QUIET   max seconds to wait (default
-    //                                  600; 0 disables the wait)
-    //   SPARK_GRAFT_BENCH_QUIET_LOADAVG  threshold (default 1.5)
+    // PRE-LAUNCH QUIET GATE (round 17, r16 verdict #2): graft.Bench is
+    // also run without the close_sweep.py wrapper, and BENCH_r16
+    // launched into a loadavg-4.4 box. Cheaper to not start: wait (bounded, at most
+    // SPARK_GRAFT_BENCH_WAIT_QUIET seconds, default 600, 0 disables) for
+    // 1-min loadavg to fall under QuietLoadavg before taking loadavgStart
+    // or running warmup. Wall cost on a quiet box is zero.
     val quietWaitMax =
       sys.env.get("SPARK_GRAFT_BENCH_WAIT_QUIET").map(_.toInt)
         .getOrElse(600)
-    val quietLoadavg =
-      sys.env.get("SPARK_GRAFT_BENCH_QUIET_LOADAVG").map(_.toDouble)
-        .getOrElse(1.5)
     var quietWaited = 0
     while (quietWaitMax > 0 && quietWaited < quietWaitMax && {
-        val la = loadavgRead(); la > quietLoadavg && la >= 0 }) {
+        val la = loadavgRead(); la > QuietLoadavg && la >= 0 }) {
       System.err.println(f"[bench] loadavg ${loadavgRead()}%.2f > " +
-        f"$quietLoadavg%.1f; waiting for a quiet window " +
+        f"$QuietLoadavg%.1f; waiting for a quiet window " +
         s"($quietWaited/${quietWaitMax}s)")
       Thread.sleep(15000)
       quietWaited += 15
@@ -307,43 +340,25 @@ object Bench {
     val artifactBuilds = warmup(spark, sfDir)
     val profile = QueryProfile.install(spark)
 
-    // median-of-N per query: single-run timings at this scale carry ±20%
-    // noise, which makes round-over-round per-query deltas unactionable
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    // first-run-at-or-above-this gets min-of-2 instead of median-of-N
-    // (see the trimming note in timeQuery); 0 disables
+    // first-run-at-or-above-this gets min-of-2 (see timeRuns); 0 disables
     val heavyCutoff = sys.env
       .getOrElse("SPARK_GRAFT_BENCH_HEAVY_CUTOFF", "2.5").toDouble
-    val heavyTrimmed = scala.collection.mutable.ArrayBuffer.empty[String]
-    // (name, first run, confirming run) for every trimmed entry — both
-    // runs land in the artifact (r15 verdict #4)
-    val heavyPairs =
-      scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double)]
     // comma-separated override for targeted measurements (e.g. SCALING.md's
     // 10x runs over a subset)
     val queryList = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Headline)
-    // MATERIALIZE (see `materialize`) is the default action since round
-    // 9. The count-only mode remains for plan-level comparisons via
-    // SPARK_GRAFT_BENCH_COUNT=1; the catalog-wide A/B between the two
-    // modes is in SCALING.md.
-    val hashAll =
-      !sys.env.get("SPARK_GRAFT_BENCH_COUNT").contains("1") ||
-        sys.env.get("SPARK_GRAFT_BENCH_MATERIALIZE").contains("1")
-    def run(df: DataFrame): Unit = if (hashAll) materialize(df) else df.count()
     // ENVIRONMENT SELF-EVIDENCE (round-8 verdict #1): a contended box made
     // ~38 s of phantom cost indistinguishable from a regression until a
     // judge re-ran on idle hardware. Record (a) /proc/loadavg before and
     // after the sweep and (b) a fixed sentinel query timed FIRST and LAST
     // (same binary, same plan) — a contended run shows loadavg >~ 2 or
     // sentinel drift >~ 2x, and the reader can discount it mechanically
-    // (discount rule documented in SCALING.md).
+    // (tools/close_sweep.py re-runs such sweeps whole).
     // A failing sentinel must NOT look like a fast idle-box sentinel (the
     // same failure-honesty rule the per-query loop follows): on any
     // throw the recorded value is -1.0 and the JSON carries
-    // "sentinel_failed":true, so a broken scan_full can't masquerade as
-    // a clean environment reading (round-9 advice).
+    // "sentinel_failed":true.
     def timeSentinel(): Double = {
       val t0 = System.nanoTime()
       try {
@@ -355,17 +370,6 @@ object Bench {
       }
     }
     val sentinelFirst = timeSentinel()
-    // failure-honest timing: a query that throws must NOT emit a plausible
-    // number (round-6's events-family "fast" entries were fast-FAILs that
-    // masked four hash-mismatching oracles). Failed queries are excluded
-    // from the queries map and the total, and listed under "failed" so the
-    // JSON stays schema-compatible for the driver's numeric parse.
-    // per query: the profile record of the run whose seconds timeQuery
-    // reported, with those seconds — a retry pass replaces it only when
-    // its run is the one the min-heal keeps (a tail-fresh child's own
-    // runs are not profiled here)
-    val profiles =
-      scala.collection.mutable.Map.empty[String, (Double, QueryProfile.Record)]
     // per-query cache hygiene: several operators persist() an
     // intermediate their returned frame still references (so they cannot
     // unpersist internally) — sweep what each query left behind before
@@ -377,73 +381,40 @@ object Bench {
     // parquet (paths, not operator caches), and always SAFE because
     // persist never severs lineage; but warmup must never come to rely on
     // a registered shared cache surviving the sweep.
-    def timeQuery(name: String): (String, Double, Boolean) = Caches.sweepingNew(spark) {
-      var failed = false
-      // each run in its own profile window; the window's listener-bus
-      // drains sit outside the timed interval
-      def once(): (Double, QueryProfile.Record) =
-        profile.window {
-          val t0 = System.nanoTime()
-          try { run(SparkEntry.queries(name)(spark, sfDir)) }
-          catch { case e: Throwable =>
-            failed = true
-            System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-          (System.nanoTime() - t0) / 1e9
+    // Each run sits in its own profile window, whose listener-bus drains
+    // are outside the timed interval.
+    def timeQuery(name: String): Timed[QueryProfile.Record] =
+      Caches.sweepingNew(spark) {
+        timeRuns(heavyCutoff) { () =>
+          var failed = false
+          val (t, rec) = profile.window {
+            val t0 = System.nanoTime()
+            try materialize(SparkEntry.queries(name)(spark, sfDir))
+            catch { case e: Throwable =>
+              failed = true
+              System.err.println(s"[bench] $name failed: ${e.getMessage}") }
+            (System.nanoTime() - t0) / 1e9
+          }
+          Run(t, failed, rec)
         }
-      // HEAVY-TAIL RUN TRIMMING (round-15, the r14 driver-timeout fix):
-      // a first run at/above the cutoff gets ONE confirming run and
-      // records min-of-2 instead of median-of-3 — the heavy entries are
-      // where the sweep's wall clock goes (3 x ~60 s of >2.5 s entries),
-      // their RELATIVE noise is the smallest (the +-20% that motivated
-      // median-of-3 is a small-query phenomenon), and min-of-2 is the
-      // same discipline the self-healing and tail-fresh merges already
-      // apply. Cheap queries keep the full median-of-N contract.
-      // Disable with SPARK_GRAFT_BENCH_HEAVY_CUTOFF=0.
-      val first = once()
-      val t1 = first._1
-      val trimmed = !failed && heavyCutoff > 0 && t1 >= heavyCutoff &&
-        runs > 2
-      val timed: Seq[(Double, QueryProfile.Record)] =
-        if (failed) Seq(first) // a throwing query needs no repeat timings
-        else if (trimmed) {
-          heavyTrimmed += name
-          val second = once()
-          // round-16 (r15 verdict #4): keep BOTH runs, not just the min —
-          // the retry protocol commits first_pass alongside its healed
-          // numbers, and the trim must be auditable the same way (the
-          // min-of-2's downward bias per entry is |t1-t2|, visible only
-          // if both land in the artifact)
-          heavyPairs += ((name, t1, second._1))
-          Seq(first, second).sortBy(_._1)
-        }
-        else (first +: (2 to runs).map(_ => once())).sortBy(_._1)
-      // trimmed entries record min-of-2 (timed is sorted); the rest keep
-      // the median-of-N contract
-      val kept = if (trimmed) timed.head else timed(timed.size / 2)
-      if (!failed && profiles.get(name).forall(_._1 > kept._1))
-        profiles(name) = kept
-      (name, kept._1, failed)
-    }
+      }
     // MID-SWEEP SENTINEL SERIES (round-12 verdict #7): the first/last
     // sentinel bracket is blind to a transient that starts AND ends
     // mid-sweep — time the same sentinel every ~50 queries so a spike is
-    // at least VISIBLE in the artifact (the conservative no-discount
-    // rule is unchanged; the series is evidence, not an estimator input)
+    // at least VISIBLE in the artifact (evidence, not an estimator input)
     val sentinelSeries = scala.collection.mutable.ArrayBuffer.empty[Double]
     // FAIL-SAFE PARTIAL ARTIFACT (round-15, the rc-124 fix): BENCH_r14
     // timed out and — because the JSON was written only at the end —
     // left NO per-query data at all. Now every completed query flushes a
     // cumulative partial JSON to $SPARK_GRAFT_BENCH_OUT via
     // write-temp + atomic-rename (a kill can never leave a torn file),
-    // and every `partialEvery` queries a compact partial line goes to
+    // and every PartialEvery queries a compact partial line goes to
     // stdout so the driver's bounded tail capture also ends with one
     // complete parseable JSON if the process dies mid-sweep. Partial
     // records carry "partial":true so no reader mistakes one for a
     // finished sweep.
     val outPath =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_results.json")
-    val partialEvery = sys.env
-      .getOrElse("SPARK_GRAFT_BENCH_PARTIAL_EVERY", "25").toInt
     def writeAtomic(path: String, content: String): Unit = {
       val p = java.nio.file.Paths.get(path).toAbsolutePath
       val tmp = java.nio.file.Files.createTempFile(
@@ -453,296 +424,80 @@ object Bench {
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-    val nPlanned = queryList.count(SparkEntry.queries.contains)
-    // optional wall-budget backstop: stop the sweep (recording the
-    // remainder as "skipped") once the loop has spent this many seconds
-    // — off by default so the default artifact never silently caps
-    // coverage; the partial flush above is the primary kill protection
-    val deadlineSec = sys.env
-      .getOrElse("SPARK_GRAFT_BENCH_DEADLINE_SEC", "0").toLong
-    val loopStart = System.nanoTime()
-    val rawBuf =
-      scala.collection.mutable.ArrayBuffer.empty[(String, Double, Boolean)]
-    val skippedBuf = scala.collection.mutable.ArrayBuffer.empty[String]
-    queryList.filter(SparkEntry.queries.contains)
-      .zipWithIndex.foreach { case (n, i) =>
-        val elapsed = (System.nanoTime() - loopStart) / 1e9
-        if (deadlineSec > 0 && elapsed > deadlineSec) skippedBuf += n
-        else {
-          if (i > 0 && i % 50 == 0) sentinelSeries += timeSentinel()
-          rawBuf += timeQuery(n)
-          try writeAtomic(outPath, partialLine(rawBuf.toSeq, nPlanned,
-            sfDir, runs, compact = false) + "\n")
-          catch { case e: Throwable => System.err.println(
-            s"[bench] partial flush failed: ${e.getMessage}") }
-          if (partialEvery > 0 && (i + 1) % partialEvery == 0 &&
-              i + 1 < nPlanned)
-            println(partialLine(rawBuf.toSeq, nPlanned, sfDir, runs,
-              compact = true))
-        }
-      }
-    if (skippedBuf.nonEmpty) System.err.println(
-      s"[bench] deadline ${deadlineSec}s hit; skipped ${skippedBuf.size}: " +
-        skippedBuf.mkString(","))
-    val rawResults = rawBuf.toSeq
+    val planned = queryList.filter(SparkEntry.queries.contains)
+    val timedBuf =
+      scala.collection.mutable.ArrayBuffer.empty[(String, Timed[QueryProfile.Record])]
+    def done = timedBuf.map { case (n, t) => (n, t.kept.seconds, t.failed) }.toSeq
+    planned.zipWithIndex.foreach { case (n, i) =>
+      if (i > 0 && i % 50 == 0) sentinelSeries += timeSentinel()
+      timedBuf += n -> timeQuery(n)
+      try writeAtomic(outPath, partialLine(done, planned.size, sfDir, Runs,
+        compact = false) + "\n")
+      catch { case e: Throwable => System.err.println(
+        s"[bench] partial flush failed: ${e.getMessage}") }
+      if ((i + 1) % PartialEvery == 0 && i + 1 < planned.size)
+        println(partialLine(done, planned.size, sfDir, Runs, compact = true))
+    }
     val sentinelLast = timeSentinel()
     val loadavgEnd = loadavgRead()
-    val failedQueries = rawResults.collect { case (n, _, true) => n }
-    val firstPass = rawResults.collect { case (n, t, false) => n -> t }
-    // SELF-HEALING (round-9 verdict #1): self-evidence correctly FLAGGED the
-    // contended round-9 driver run, but the bad number still became the
-    // committed artifact. Now, when the run's own env evidence says the box
-    // was contended — start load > 2 or sentinel drift outside the
-    // documented [0.5, 2] rule — re-run the slowest queries once more and
-    // take min-of-medians (transient load inflates medians; the min across
-    // two well-separated passes recovers the uncontended cost). Both passes
-    // land in the JSON ("first_pass" carries the superseded numbers) plus
-    // "contended":true, so the artifact is right the first time AND the
-    // evidence trail survives.
+    val (results, failedQueries) = report(done)
+    val total = results.map(_._2).sum
+    // the run's own contention verdict: start load > 2 or sentinel drift
+    // outside [0.5, 2]. Evidence only — whether a contended sweep is
+    // usable is tools/close_sweep.py's call, not a remedy applied here
     val sentinelOk = sentinelFirst > 0 && sentinelLast > 0
     val drift = if (sentinelOk) sentinelLast / sentinelFirst else -1.0
     val contended = loadavgStart > 2.0 ||
       (sentinelOk && (drift < 0.5 || drift > 2.0))
-    val retryN = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRY_N", "15").toInt
-    // CALIBRATION SAMPLE (round-11 verdict #1): the healing pass retries
-    // the top-N SLOWEST queries — exactly the ones whose medians inflate
-    // most under transient load — so their first/healed ratio OVER-states
-    // the inflation of the other ~187 entries (r11 artifact: factor 1.70
-    // -> total_normalized 73.1 s vs 109.2 s measured idle at the same
-    // HEAD, a ~33% flattering error). The discount factor must come from
-    // an UNBIASED sample: stratify the non-slowest queries by first-pass
-    // time (inflation correlates with query size) and draw one per
-    // stratum with a FIXED-seed RNG (deterministic artifact, no
-    // position-in-stratum bias). Those calibration retries also min-heal
-    // their own entries for free.
-    val calN = sys.env.getOrElse("SPARK_GRAFT_BENCH_CAL_N", "8").toInt
-    val (results, retried, calibration, sentinelRetry) =
-      if (!contended || firstPass.isEmpty)
-        (firstPass, Seq.empty[(String, Double)],
-          Seq.empty[(String, Double, Double)], -1.0)
-      else {
-        val slowest = firstPass.sortBy(-_._2).take(retryN).map(_._1).toSet
-        val rest = firstPass.filterNot(p => slowest.contains(p._1)).sortBy(_._2)
-        val rng = new scala.util.Random(0x67726166L) // fixed seed: deterministic sample
-        val calSample =
-          if (rest.isEmpty) Seq.empty[String]
-          else (0 until math.min(calN, rest.size)).map { s =>
-            val lo = s * rest.size / math.min(calN, rest.size)
-            val hi = (s + 1) * rest.size / math.min(calN, rest.size)
-            rest(lo + rng.nextInt(math.max(hi - lo, 1)))._1
-          }
-        val toRetry = slowest ++ calSample
-        System.err.println(s"[bench] contended run detected (loadavg_start=$loadavgStart, drift=$drift); re-running ${slowest.size} slowest + ${calSample.size} calibration queries")
-        val second = firstPass.collect { case (n, _) if toRetry.contains(n) => timeQuery(n) }
-          .collect { case (n, t, false) => n -> t }.toMap
-        val healed = firstPass.map { case (n, t) =>
-          n -> math.min(t, second.getOrElse(n, t)) }
-        // calibration keeps the RAW second pass next to the first: the
-        // inflation ratio must be first/second, NOT first/min(first,
-        // second) — a min is below either measurement under pure noise,
-        // so ratios against it exceed 1 by construction (measured: a
-        // persistent-load A/B over-discounted 10% that way, r12)
-        val calPairs = firstPass.collect {
-          case (n, t) if calSample.contains(n) && second.contains(n) =>
-            (n, t, second(n))
-        }
-        (healed, firstPass.filter(p => toRetry.contains(p._1)),
-          calPairs, timeSentinel())
-      }
-    // FRESH-JVM TAIL PROTOCOL (round-14 verdict #1): the r13 idle close
-    // recorded a heavy tail 35-45% above isolated runs of the same HEAD
-    // — residual cumulative JVM state (now also capped above) that no
-    // in-JVM retry can rule out. With SPARK_GRAFT_BENCH_TAIL_FRESH=K set
-    // (the idle-close protocol; the driver's default run is unchanged),
-    // the K heaviest entries re-run in a CHILD JVM — cold caches, fresh
-    // heap, same data — and each entry records min(sweep, fresh), the
-    // self-healing min-of-medians discipline. Both raw maps land in the
-    // JSON ("tail_sweep" / "tail_fresh") so the merge is auditable.
-    def runTailFresh(names: Seq[String]): Map[String, Double] = {
-      try {
-        def urlsOf(cl: ClassLoader): Seq[java.net.URL] = cl match {
-          case null => Nil
-          case u: java.net.URLClassLoader =>
-            u.getURLs.toSeq ++ urlsOf(u.getParent)
-          case other => urlsOf(other.getParent)
-        }
-        // under sbt runMain java.class.path is only the launcher jar —
-        // the real application classpath lives in the classloader chain
-        val urls = urlsOf(getClass.getClassLoader)
-        val cp =
-          if (urls.nonEmpty)
-            urls.map(u => new java.io.File(u.toURI).getAbsolutePath)
-              .mkString(java.io.File.pathSeparator)
-          else System.getProperty("java.class.path")
-        val javaBin = new java.io.File(new java.io.File(
-          System.getProperty("java.home"), "bin"), "java").getAbsolutePath
-        val outFile = java.nio.file.Files
-          .createTempFile("bench-tail", ".json").toFile
-        val xmx = s"-Xmx${Runtime.getRuntime.maxMemory / (1L << 20)}m"
-        val pb = new ProcessBuilder(javaBin, xmx, "-cp", cp, "graft.Bench")
-        val env = pb.environment()
-        env.put("SPARK_GRAFT_BENCH_QUERIES", names.mkString(","))
-        env.put("SPARK_GRAFT_BENCH_TAIL_FRESH", "0")
-        env.put("SPARK_GRAFT_BENCH_OUT", outFile.getAbsolutePath)
-        env.put("SPARK_GRAFT_SF_DIR", sfDir)
-        env.put("SPARK_GRAFT_CPUS", cpus)
-        // child stdout must not pollute the parent's driver-parsed
-        // stdout; its stderr rides the parent's (evidence trail)
-        pb.redirectOutput(java.lang.ProcessBuilder.Redirect.DISCARD)
-        pb.redirectError(java.lang.ProcessBuilder.Redirect.INHERIT)
-        System.err.println(
-          s"[bench] fresh-JVM tail re-run of ${names.size} heaviest: " +
-            names.mkString(","))
-        val p = pb.start()
-        if (!p.waitFor(30, java.util.concurrent.TimeUnit.MINUTES)) {
-          p.destroyForcibly()
-          System.err.println("[bench] tail child timed out; keeping sweep numbers")
-          return Map.empty
-        }
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          outFile.toPath), "UTF-8")
-        names.flatMap { n =>
-          val re = ("\"" + n + "\":([0-9.eE+-]+)").r
-          re.findFirstMatchIn(txt).map(m => n -> m.group(1).toDouble)
-        }.toMap
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] tail child failed: ${e.getMessage}")
-        Map.empty
-      }
-    }
-    val tailFreshN =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_TAIL_FRESH", "0").toInt
-    val (resultsFinal, tailFresh, tailSweep) =
-      if (tailFreshN <= 0 || results.isEmpty)
-        (results, Map.empty[String, Double], Map.empty[String, Double])
-      else {
-        val heavy = results.sortBy(-_._2).take(tailFreshN).map(_._1)
-        val fresh = runTailFresh(heavy)
-        val merged = results.map { case (n, t) =>
-          n -> math.min(t, fresh.getOrElse(n, t)) }
-        (merged, fresh,
-          results.collect { case (n, t) if fresh.contains(n) => n -> t }
-            .toMap)
-      }
-    val total = resultsFinal.map(_._2).sum
-    // SENTINEL-NORMALIZED TOTAL (round-10 verdict #6, re-calibrated by
-    // round-11 verdict #1): on a contended box the healed total still
-    // carries the inflation of every NON-retried entry. The discount
-    // factor is the median first-pass/healed ratio of the STRATIFIED
-    // RANDOM calibration sample — NOT of the top-N slowest (whose
-    // medians inflate most under load; using them over-discounted the
-    // r11 artifact by ~33% vs the idle close at the same HEAD). Retried
-    // entries (slowest + calibration) keep their min-healed measurement;
-    // only never-retried entries are discounted. An estimate, clearly
-    // labeled as one — on an uncontended run total_normalized == total.
-    // The discount factor is the AGREEMENT of two independent pieces of
-    // evidence (r12 A/B series, SCALING.md): (a) the stratified random
-    // calibration sample's median first/second ratio — per-query-shaped,
-    // but it conflates contention with retry-phase warmth (retries run
-    // after the sweep's own heavy queries stop: a deliberately-loaded
-    // A/B measured median 1.21 while the healed total matched the idle
-    // close within 2.4%); (b) the sentinel bracket sentinelLast /
-    // sentinelRetry — scan_full timed at sweep end vs after the
-    // retries, i.e. exactly the window between the non-retried
-    // measurements and the retry measurements: if the box did not get
-    // faster across that window, the calibration ratio is warmth/noise
-    // and nothing should be discounted. min() of the two, floored at 1.
-    def calFactor: Double = {
-      val ratios = calibration.map { case (_, first, sec) =>
-        first / math.max(sec, 1e-9)
-      }.sorted
-      if (ratios.isEmpty) 1.0
-      else {
-        val calMedian = ratios(ratios.size / 2)
-        val sentinelBound =
-          if (sentinelLast > 0 && sentinelRetry > 0)
-            sentinelLast / sentinelRetry
-          else calMedian
-        math.max(1.0, math.min(calMedian, sentinelBound))
-      }
-    }
-    val totalNormalized =
-      if (retried.isEmpty) total
-      else {
-        val factor = calFactor
-        // tail-fresh entries are clean measurements too — never discount
-        val noDiscount = retried.map(_._1).toSet ++ tailFresh.keySet
-        resultsFinal.map { case (n, t) =>
-          if (noDiscount.contains(n)) t else t / factor
-        }.sum
-      }
     val sentinelFailed =
       if (sentinelOk) "" else ""","sentinel_failed":true"""
-    val retryJson =
-      if (retried.isEmpty) ""
-      else
-        s""","first_pass":${secondsJson(retried)}""" +
-          s""","cal_second":${secondsJson(calibration.map { case (n, _, sec) => n -> sec })}""" +
-          s""","cal_factor":${fmt(calFactor)}""" +
-          s""","sentinel_retry":${fmt(sentinelRetry)}"""
     val seriesJson =
       if (sentinelSeries.isEmpty) ""
       else sentinelSeries.map(fmt)
         .mkString(""","sentinel_series":[""", ",", "]")
-    val tailJson =
-      if (tailFresh.isEmpty) ""
-      else
-        s""","tail_sweep":${secondsJson(tailSweep.toSeq.sortBy(_._1))}""" +
-          s""","tail_fresh":${secondsJson(tailFresh.toSeq.sortBy(_._1))}"""
-    // one pair per name (first-seen = the sweep's): a query trimmed in
-    // BOTH the sweep and a retry pass would otherwise emit duplicate
-    // JSON keys (observed in the round-16 A/B artifacts) — the retry
-    // pass's own evidence already lands in first_pass
-    val heavyPairs1 = heavyPairs.distinctBy(_._1).toSeq
+    // one pair per name: the headline lists quality_filter_chain twice
+    val heavyPairs = timedBuf.collect { case (n, Timed(_, _, Some((t1, t2)))) =>
+      (n, t1, t2) }.distinctBy(_._1).toSeq
     val heavyJson =
-      if (heavyTrimmed.isEmpty) ""
-      else namesJson("heavy_min2", heavyTrimmed.distinct.toSeq) +
-        s""","heavy_first":${secondsJson(heavyPairs1.map { case (k, t1, _) => k -> t1 })}""" +
-        s""","heavy_second":${secondsJson(heavyPairs1.map { case (k, _, t2) => k -> t2 })}"""
-    val env = s""""loadavg_start":${fmt(loadavgStart)},"loadavg_end":${fmt(loadavgEnd)},"quiet_wait_sec":$quietWaited,"sentinel_first":${fmt(sentinelFirst)},"sentinel_last":${fmt(sentinelLast)}$seriesJson,"contended":$contended,"total_normalized":${fmt(totalNormalized)}$sentinelFailed$retryJson$tailJson${namesJson("skipped", skippedBuf.toSeq)}$heavyJson"""
+      if (heavyPairs.isEmpty) ""
+      else namesJson("heavy_min2", heavyPairs.map(_._1)) +
+        s""","heavy_first":${secondsJson(heavyPairs.map { case (k, t1, _) => k -> t1 })}""" +
+        s""","heavy_second":${secondsJson(heavyPairs.map { case (k, _, t2) => k -> t2 })}"""
+    val env = s""""loadavg_start":${fmt(loadavgStart)},"loadavg_end":${fmt(loadavgEnd)},"quiet_wait_sec":$quietWaited,"sentinel_first":${fmt(sentinelFirst)},"sentinel_last":${fmt(sentinelLast)}$seriesJson,"contended":$contended,"total_normalized":${fmt(total)}$sentinelFailed$heavyJson"""
     // stdout is read back through a bounded tail capture: at 115+
     // queries full-precision doubles overflowed it (round-6 BENCH was
     // unparseable), so stdout carries ms precision and the full-precision
     // copy lands in the results file
-    val line = resultsLine(total, resultsFinal, failedQueries, env, sfDir, runs)
+    val line = resultsLine(total, results, failedQueries, env, sfDir, Runs)
     // file-only layers, never in _all, the stdout line or the compact
-    // line: offline artifact builds, and the per-query profile record
+    // line: offline artifact builds, and the reported run's profile record
     val artifactsFailed = artifactBuilds.collect {
       case (k, scala.util.Failure(_)) => k }
     val fileOnly =
       s""","artifact_build_s":${secondsJson(artifactBuilds.collect {
         case (k, scala.util.Success(v)) => k -> v })}""" +
         namesJson("artifact_build_failed", artifactsFailed) +
-        s""","query_profile":${Json.obj(resultsFinal.flatMap { case (n, _) =>
-          profiles.get(n).map(p => n -> p._2.json) })}"""
-    val fullLine = resultsLine(total, resultsFinal, failedQueries, env, sfDir,
-      runs, precise = true, fileOnly = fileOnly)
-    val out = outPath
+        s""","query_profile":${Json.obj(timedBuf.collect {
+          case (n, t) if !t.failed => n -> t.kept.profile.json }.toSeq)}"""
+    val fullLine = resultsLine(total, results, failedQueries, env, sfDir,
+      Runs, precise = true, fileOnly = fileOnly)
     try {
-      java.nio.file.Files.write(java.nio.file.Paths.get(out),
+      java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (fullLine + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $out: ${e.getMessage}") }
+      System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
     println(line)
     // the driver tail-captures stdout with a bounded buffer; at 150+
     // queries the full per-query line can be truncated at its HEAD
     // (round-7 BENCH parsed:null). When the line is long enough to risk
-    // that, ALSO emit a compact self-contained line last, so the tail
+    // that, ALSO emit the fixed-arity compactLine last, so the tail
     // always ends with one complete parseable JSON — full per-query
-    // numbers live in `line` above and in the $out file. Short targeted
-    // runs keep the single-line contract unchanged.
-    // ROUND-16 FIX (r15 verdict #1, the parsed:null root cause): the
-    // compact line previously interpolated $env, which under the retry
-    // and trim protocols carried first_pass/cal_second/heavy_min2 maps —
-    // ~2.5 KB, over the driver's 2000-char tail, head truncated, parse
-    // dead (two rounds running). The compact line is now built by
-    // compactLine() from fixed-arity scalars ONLY — its length cannot
-    // grow with the sweep, and BenchCompactSpec pins the worst case.
+    // numbers live in `line` above and in the results file. Short
+    // targeted runs keep the single-line contract unchanged.
     if (line.length > 3500)
-      println(compactLine(total, totalNormalized, resultsFinal.size,
-        failedQueries.size, skippedBuf.size, loadavgStart, loadavgEnd,
-        sentinelFirst, sentinelLast, contended, out, sfDir, runs,
-        perQuery = resultsFinal))
+      println(compactLine(total, results.size, failedQueries.size,
+        loadavgStart, loadavgEnd, sentinelFirst, sentinelLast, contended,
+        outPath, sfDir, Runs, perQuery = results))
     spark.stop()
   }
 
@@ -756,16 +511,24 @@ object Bench {
     if (names.isEmpty) ""
     else names.map(Json.str(_)).mkString(s""","$field":[""", ",", "]")
 
+  /** Splits (name, seconds, failed) entries into the reported seconds —
+    * the entries `_all` sums — and the failed names, which carry no
+    * number anywhere. */
+  def report(done: Seq[(String, Double, Boolean)])
+      : (Seq[(String, Double)], Seq[String]) =
+    (done.collect { case (n, t, false) => n -> t },
+      done.collect { case (n, _, true) => n })
+
   /** The cumulative partial record flushed after every query; `compact`
     * keeps only `_all` (the periodic stdout line). */
   def partialLine(done: Seq[(String, Double, Boolean)], nPlanned: Int,
       sfDir: String, runs: Int, compact: Boolean): String = {
-    val ok = done.collect { case (n, t, false) => n -> t }
+    val (ok, failed) = report(done)
     val tot = ok.map(_._2).sum
     val qs = if (compact) secondsJson(Seq("_all" -> tot)) else secondsJson(ok)
     s"""{"metric":"total","value":${Json.num(tot)},"unit":"sec",""" +
       s""""partial":true,"n_done":${done.size},"n_planned":$nPlanned,""" +
-      s""""queries":$qs${namesJson("failed", done.collect { case (n, _, true) => n })},""" +
+      s""""queries":$qs${namesJson("failed", failed)},""" +
       s""""sf":${Json.str(sfDir)},"runs_per_query":$runs,"stat":"median"}"""
   }
 

@@ -5,7 +5,8 @@ import org.apache.spark.sql.DataFrame
 
 /** Pluggable eager checkpointing for the iterative drivers (the
   * suffix-array doubling loop, BPE merge rounds, connected-components
-  * label propagation, MMR selection).
+  * label propagation, PageRank rounds, MMR selection) and the CCNet
+  * bucket scores' lineage cut.
   *
   * `localCheckpoint` materializes to EXECUTOR storage: fast (no DFS
   * round-trip) but not fault-tolerant — the blocks die with their

@@ -1455,7 +1455,7 @@ object TextAnalysis {
       langCol: String): DataFrame = {
     val ppl = perplexity(df, idCol, textCol)
       .select(col(idCol), col("n_tokens"), col("logprob_micronats"))
-    // EAGER localCheckpoint, not persist (round 18 — the SA-builder
+    // EAGER checkpoint, not persist (round 18 — the SA-builder
     // "flat task closures" lesson applied here after ProfileQuery showed
     // task DESERIALIZATION dominating compute 15.8 s vs 6.8 s at sf0.1):
     // consumed twice (tercile-cutoff pass + bucket assignment), and a
@@ -1464,11 +1464,10 @@ object TextAnalysis {
     // task binary; the checkpoint truncates lineage so the percentile
     // and bucket stages deserialize a flat scan. Per-doc metadata rows
     // only (id, lang, two longs) — spill-safe, recompute never needed.
-    val scored = df.select(col(idCol), col(langCol))
+    val scored = Checkpoints.eager(df.select(col(idCol), col(langCol))
       .join(ppl.hint("shuffle_hash"), Seq(idCol))
       .withColumn("surprisal_micronats",
-        expr(s"(-logprob_micronats) div n_tokens"))
-      .localCheckpoint(true)
+        expr(s"(-logprob_micronats) div n_tokens")))
     val (f1, f2) = (1.0 / 3, 2.0 / 3)
     val cuts = Stats.groupedExactPercentiles(scored, langCol,
       "surprisal_micronats", Seq(f1, f2))

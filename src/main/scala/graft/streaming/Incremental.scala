@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** The reference's incremental/streaming semantics, Spark-native.
@@ -163,17 +163,26 @@ object Incremental {
         .write.mode("append").partitionBy("event_date").parquet(rollupDir)
   }
 
+  /** Run `sink` over every micro-batch of `df` as an AvailableNow stream
+    * (drain what is there, then stop) with restart state in
+    * `checkpointDir` — the wiring every `start*` seat shares. */
+  private def availableNow(df: DataFrame, checkpointDir: String,
+      outputMode: String = "append")(
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(outputMode)
+      .foreachBatch(sink)
+      .trigger(Trigger.AvailableNow())
+      .start()
+
   /** Start [[hllRollupMaintenance]] as an AvailableNow stream. */
   def startHllRollupMaintenance(df: DataFrame, rollupDir: String,
       checkpointDir: String, tsCol: String = "ts",
       groupCol: String = "event_type",
       valueCol: String = "user_id"): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch(hllRollupMaintenance(rollupDir, tsCol, groupCol, valueCol))
-      .trigger(Trigger.AvailableNow())
-      .start()
+    availableNow(df, checkpointDir)(
+      hllRollupMaintenance(rollupDir, tsCol, groupCol, valueCol))
 
   /** Streaming seat of the log-histogram quantile sketch
     * ([[graft.functions.Sketches.logHistSketch]]). Bucket COUNTS are
@@ -260,13 +269,8 @@ object Incremental {
   def startNearDupGate(df: DataFrame, indexDir: String, acceptedDir: String,
       checkpointDir: String, idCol: String, textCol: String,
       threshold: Double = 0.5): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch(nearDupGate(indexDir, acceptedDir, idCol, textCol,
-        threshold = threshold))
-      .trigger(Trigger.AvailableNow())
-      .start()
+    availableNow(df, checkpointDir)(nearDupGate(indexDir, acceptedDir,
+      idCol, textCol, threshold = threshold))
 
   /** Streaming rollup maintenance — the continuous form of
     * [[graft.sources.Layout.writeDailyRollup]]: each micro-batch lands its
@@ -299,12 +303,8 @@ object Incremental {
       checkpointDir: String, tsCol: String = "ts",
       groupCol: String = "event_type",
       valueCol: String = "value"): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch(rollupMaintenance(rollupDir, tsCol, groupCol, valueCol))
-      .trigger(Trigger.AvailableNow())
-      .start()
+    availableNow(df, checkpointDir)(
+      rollupMaintenance(rollupDir, tsCol, groupCol, valueCol))
 
   /** Streaming CDC log — the write side of
     * [[graft.functions.Merge.readMergeOnRead]]: each micro-batch of change
@@ -323,12 +323,7 @@ object Incremental {
 
   def startCdcLog(df: DataFrame, changesDir: String,
       checkpointDir: String): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch(cdcLog(changesDir))
-      .trigger(Trigger.AvailableNow())
-      .start()
+    availableNow(df, checkpointDir)(cdcLog(changesDir))
 
   /** Streaming quality gate with a DEAD-LETTER lane: each micro-batch is
     * split by the row-local expectation predicate
@@ -342,34 +337,24 @@ object Incremental {
   def qualityGate(acceptedDir: String, quarantineDir: String,
       rules: Seq[graft.functions.Expectations.Rule]): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        val bad = graft.functions.Expectations.rowViolation(rules)
-        val marked = batch.withColumn("_bad", bad)
-          .withColumn("batch_id", lit(batchId))
-        marked.filter(!col("_bad")).drop("_bad")
-          .write.mode("overwrite").partitionBy("batch_id").parquet(acceptedDir)
-        marked.filter(col("_bad")).drop("_bad")
-          .write.mode("overwrite").partitionBy("batch_id").parquet(quarantineDir)
-      } finally prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      val bad = graft.functions.Expectations.rowViolation(rules)
+      val marked = batch.withColumn("_bad", bad)
+        .withColumn("batch_id", lit(batchId))
+      // writer-scoped overwrite mode (see rollupMaintenance)
+      def land(lane: Column, dir: String): Unit =
+        marked.filter(lane).drop("_bad")
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batch_id").parquet(dir)
+      land(!col("_bad"), acceptedDir)
+      land(col("_bad"), quarantineDir)
   }
 
   def startQualityGate(df: DataFrame, acceptedDir: String,
       quarantineDir: String, checkpointDir: String,
       rules: Seq[graft.functions.Expectations.Rule]): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch(qualityGate(acceptedDir, quarantineDir, rules))
-      .trigger(Trigger.AvailableNow())
-      .start()
+    availableNow(df, checkpointDir)(
+      qualityGate(acceptedDir, quarantineDir, rules))
 
   /** Streaming SEMANTIC near-dup gate — the embedding-space sibling of
     * [[nearDupGate]]: each micro-batch of vectors is (1) near-deduped
@@ -413,12 +398,8 @@ object Incremental {
   def startSemanticGate(df: DataFrame, indexDir: String,
       checkpointDir: String, model: graft.functions.IVF.Model,
       idCol: String, vecCol: String, threshold: Double): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch(semanticGate(indexDir, model, idCol, vecCol, threshold))
-      .trigger(Trigger.AvailableNow())
-      .start()
+    availableNow(df, checkpointDir)(
+      semanticGate(indexDir, model, idCol, vecCol, threshold))
 
   /** Streaming SUFFIX-ARRAY maintenance — the streaming seat of
     * [[graft.functions.SuffixArray.suffixRanksIncrementalFrom]], closing
@@ -525,12 +506,7 @@ object Incremental {
     * replayed batches rebuild their own version dirs verbatim. */
   def startSaMaintenance(df: DataFrame, stateDir: String,
       checkpointDir: String, idCol: String, textCol: String): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch(saMaintenance(stateDir, idCol, textCol))
-      .trigger(Trigger.AvailableNow())
-      .start()
+    availableNow(df, checkpointDir)(saMaintenance(stateDir, idCol, textCol))
 
   /** Idempotent per-batch sink: one output dir per batchId, skipped if it
     * already committed — the `foreachBatch` replay-suppression analogue of
@@ -551,10 +527,5 @@ object Incremental {
     * batch WAL), the Spark-native replacement for Redis page state. */
   def startToIdempotentSink(df: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("update")
-      .foreachBatch(idempotentBatchWriter(outDir))
-      .trigger(Trigger.AvailableNow())
-      .start()
+    availableNow(df, checkpointDir, "update")(idempotentBatchWriter(outDir))
 }

@@ -17,8 +17,8 @@ class BenchCompactSpec extends AnyFunSuite {
 
   private def worstCase(path: String): String =
     Bench.compactLine(
-      total = 999999.999, totalNormalized = 999999.999,
-      nQueries = 99999, nFailed = 99999, nSkipped = 99999,
+      total = 999999.999,
+      nQueries = 99999, nFailed = 99999,
       loadavgStart = 9999.999, loadavgEnd = 9999.999,
       sentinelFirst = 9999.999, sentinelLast = 9999.999,
       contended = true, queriesFile = path,
@@ -38,8 +38,8 @@ class BenchCompactSpec extends AnyFunSuite {
   test("per-query packing never exceeds the 1800 budget and keeps _all first") {
     val sweep = (1 to 500).map(i => (f"query_with_a_long_name_$i%03d", i * 0.37))
     val line = Bench.compactLine(
-      total = 999999.999, totalNormalized = 999999.999,
-      nQueries = 500, nFailed = 0, nSkipped = 0,
+      total = 999999.999,
+      nQueries = 500, nFailed = 0,
       loadavgStart = 9999.999, loadavgEnd = 9999.999,
       sentinelFirst = 9999.999, sentinelLast = 9999.999,
       contended = true, queriesFile = "/very/long/" + ("x" * 300) + "/b.json",
@@ -84,8 +84,8 @@ class BenchCompactSpec extends AnyFunSuite {
 
   test("paths with quotes/backslashes/control chars are JSON-escaped (r16 advice)") {
     val line = Bench.compactLine(
-      total = 1.0, totalNormalized = 1.0, nQueries = 1, nFailed = 0,
-      nSkipped = 0, loadavgStart = 0.1, loadavgEnd = 0.1,
+      total = 1.0, nQueries = 1, nFailed = 0,
+      loadavgStart = 0.1, loadavgEnd = 0.1,
       sentinelFirst = 0.2, sentinelLast = 0.2, contended = false,
       queriesFile = "/tmp/we\"ird\\dir\n/bench.json",
       sfDir = "/root/test\"data/sf0.01", runs = 2)

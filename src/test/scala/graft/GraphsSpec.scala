@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.Graphs
+import graft.functions.{Checkpoints, Graphs}
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraphsSpec extends AnyFunSuite {
@@ -42,5 +42,22 @@ class GraphsSpec extends AnyFunSuite {
       Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 5L), (3L, 4L)))
     val total = r.values.sum
     assert(total <= 1000000000000L && total > 1000000000000L - 1000L)
+  }
+
+  test("pageRank: reliable-checkpoint seat (spark.graft.checkpointDir) — same ranks, files on disk") {
+    // 9 iterations: the mid-loop lineage cuts (rounds 4 and 8) and the
+    // final materialization all go through Checkpoints.eager
+    val nodes = (1L to 12L)
+    val pairs = (1L to 11L).map(i => (i, i + 1)) ++ Seq((1L, 6L), (3L, 9L))
+    val expected = ranks(nodes, pairs, iters = 9)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-pr").toString
+    spark.conf.set(Checkpoints.DirKey, dir)
+    try {
+      assert(ranks(nodes, pairs, iters = 9) == expected)
+      val found = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(p => p.getFileName.toString.startsWith("rdd-"))
+        .count()
+      assert(found > 0, s"no reliable checkpoint files under $dir")
+    } finally spark.conf.unset(Checkpoints.DirKey)
   }
 }

@@ -2,9 +2,11 @@
 """Health-gated close-sweep driver (round 16, r15 verdict #3).
 
 Three rounds of cross-round idle comparisons were dominated by box
-drift, and r15's fresh-JVM tail child ran on a box that had degraded
-3.5x MID-sweep — honest labeling wasn't enough. This driver adds the
-missing control loop around `graft.Bench`:
+drift, and r15's sweep ran on a box that had degraded 3.5x MID-sweep —
+honest labeling wasn't enough. `graft.Bench` measures each sweep once
+and records evidence (loadavg bracket, sentinel series, `contended`);
+whether a whole sweep is usable is decided HERE, the one sweep-health
+policy, which adds the missing control loop around it:
 
   - run the sweep; read the artifact's own env evidence
     (loadavg_start, sentinel series, contended flag);
@@ -21,8 +23,7 @@ ROBUST SPREAD (round 17, r16 verdict #1): the r16 gate used raw
 max/min over the series, so a single FAST sentinel dip (0.146 in a
 ~0.20 series) inflated the ratio to 2.38 and a genuinely quiet box
 read as sick — the gate exited 3 on every sweep it ever ran. A lone
-dip or spike is a transient (and Bench's own retry protocol already
-heals individual queries); box HEALTH is about the bulk of the series
+dip or spike is a transient; box HEALTH is about the bulk of the series
 and about where it ENDS. Hence two robust checks replacing the one
 brittle one:
   - trimmed spread: drop exactly one min and one max (n >= 5), then
@@ -32,7 +33,7 @@ brittle one:
   - tail drift: last reading vs the trimmed median. Drift that only
     sets in at the END of the sweep is exactly what the trim would
     hide, so the final reading is gated separately (2.0 = the bench's
-    own sentinel-drift heal threshold).
+    own sentinel-drift `contended` threshold).
 `--selftest` runs the synthetic-series pins (observed r16 dip shape,
 r15 monotone drift, tail-onset drift, lone spike, flat) and exits 0
 iff the gate classifies all of them correctly — wired into sbt test
@@ -41,13 +42,12 @@ via CloseSweepGateSpec.
 Usage:
   python3 tools/close_sweep.py --sf /root/testdata/sf0.1 \
       --out bench_idle_r16.json [--attempts 3] [--spread 1.5] \
-      [--last-max 2.0] [--tail-fresh 15] [--queries a,b,c] \
-      [--loadavg-max 1.5]
+      [--last-max 2.0] [--queries a,b,c]
   python3 tools/close_sweep.py --selftest
 
 Never run concurrently with another sbt/Spark JVM (the round-6/7
-lesson); the driver itself checks loadavg BEFORE launching and waits
-for a quiet window (bounded) so a doomed attempt isn't even started.
+lesson). Each attempt's Bench waits for a quiet window (bounded) before
+it starts, so a doomed attempt isn't even started.
 """
 import argparse
 import json
@@ -56,11 +56,6 @@ import shutil
 import subprocess
 import sys
 import time
-
-
-def loadavg1():
-    with open("/proc/loadavg") as f:
-        return float(f.read().split()[0])
 
 
 def series_of(art):
@@ -129,7 +124,7 @@ def selftest():
         ("tail-onset-drift", [0.20, 0.20, 0.21, 0.20, 0.20, 0.55],
          False),
         # a lone mid-sweep spike with flat neighbors is a transient —
-        # healthy by design (bench's retry protocol heals the queries)
+        # healthy by design
         ("lone-spike", [0.20, 0.20, 0.90, 0.21, 0.20, 0.20], True),
         # a sustained contention plateau (several slow readings) fails
         ("plateau", [0.20, 0.20, 0.50, 0.55, 0.60, 0.20], False),
@@ -170,8 +165,6 @@ def run_attempt(args, k):
     env["SPARK_GRAFT_SF_DIR"] = args.sf
     env["SPARK_GRAFT_CPUS"] = str(args.cpus)
     env["SPARK_GRAFT_BENCH_OUT"] = os.path.abspath(out)
-    if args.tail_fresh:
-        env["SPARK_GRAFT_BENCH_TAIL_FRESH"] = str(args.tail_fresh)
     if args.queries:
         env["SPARK_GRAFT_BENCH_QUERIES"] = args.queries
     t0 = time.time()
@@ -196,9 +189,6 @@ def main():
     p.add_argument("--attempts", type=int, default=3)
     p.add_argument("--spread", type=float, default=1.5)
     p.add_argument("--last-max", type=float, default=2.0)
-    p.add_argument("--loadavg-max", type=float, default=1.5)
-    p.add_argument("--quiet-wait-sec", type=int, default=600)
-    p.add_argument("--tail-fresh", type=int, default=15)
     p.add_argument("--cpus", type=int, default=32)
     p.add_argument("--queries", default="")
     args = p.parse_args()
@@ -209,16 +199,7 @@ def main():
 
     results = []  # (out, art, wall)
     for k in range(1, args.attempts + 1):
-        # pre-launch gate: don't start a sweep into a visibly-loaded box
-        waited = 0
-        while loadavg1() > args.loadavg_max and waited < args.quiet_wait_sec:
-            print(f"[close] loadavg {loadavg1():.2f} > {args.loadavg_max}; "
-                  f"waiting ({waited}s)")
-            time.sleep(30)
-            waited += 30
-        la = loadavg1()
-        print(f"[close] attempt {k}/{args.attempts} starting "
-              f"(loadavg {la:.2f})")
+        print(f"[close] attempt {k}/{args.attempts} starting")
         out, art, wall = run_attempt(args, k)
         if art is None:
             continue
