@@ -321,21 +321,9 @@ object Dedup {
     df.select(col(idCol).as("id"),
       graft.plans.MinHashSig(col(textCol), k, numHashes).as("sig"))
 
-  /** Aggregation form of [[minhashSignatures]] for inputs that arrive
-    * already exploded to (id, shingle) rows: ONE custom sketch aggregate
-    * ([[graft.plans.MinHashAgg]]) that hashes each shingle once and updates
-    * all numHashes minima in a single buffer — one shuffle keyed by doc id
-    * with map-side partial merge (vs numHashes separate `min()`s each
-    * rehashing). Bit-identical to the expression form; pinned by test. */
-  def minhashSignaturesAgg(df: DataFrame, idCol: String, textCol: String,
-      k: Int, numHashes: Int): DataFrame =
-    df.select(col(idCol).as("id"), explode(shingles(col(textCol), k)).as("_sh"))
-      .groupBy(col("id"))
-      .agg(graft.plans.MinHashAgg(col("_sh"), numHashes).as("sig"))
-
   /** Relational formulation of [[minhashSignatures]] (numHashes separate
     * min() aggregates packed to an array) — kept as the cross-check for the
-    * custom aggregate; must be bit-identical (pinned by test). */
+    * native expression; must be bit-identical (pinned by test). */
   def minhashSignaturesRelational(df: DataFrame, idCol: String, textCol: String,
       k: Int, numHashes: Int): DataFrame = {
     val coeffs = minhashCoeffs(numHashes)

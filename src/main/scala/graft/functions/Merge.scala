@@ -41,7 +41,7 @@ object Merge {
 
   /** Merge-on-read: resolve the current table state from an immutable base
     * snapshot plus an append-only change LOG directory (as landed by
-    * [[graft.streaming.Incremental.startCdcLog]]) — the Hudi/Iceberg MOR
+    * [[graft.streaming.Incremental.cdcLog]]) — the Hudi/Iceberg MOR
     * trade: writes stay append-only (no read-modify-write, replay-safe),
     * readers pay one [[applyChanges]] join. Identical output to eagerly
     * applying every change; compact by materializing this view as the new

@@ -39,8 +39,6 @@ final class GraftMetrics(val instanceId: String) {
     inc(s"${name}_sum", seconds)
   }
 
-  def setGauge(name: String, v: Double): Unit = counters.put(name, v)
-
   def value(name: String): Double = counters.getOrElse(name, 0.0)
 
   def markEnd(): Unit = endMs.set(System.currentTimeMillis())

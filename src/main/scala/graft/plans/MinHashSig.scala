@@ -15,11 +15,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * seat is a map fused into the scan — shuffling NOTHING — rather than the
   * explode -> aggregate pipeline (which moves every (doc, shingle) pair into
   * aggregation machinery, even though partial aggregation keeps the
-  * exchange itself small). [[MinHashAgg]] remains the aggregation form for
-  * inputs that arrive already exploded; this expression is bit-identical to
-  * it by construction: same WordShingles tokenization (`split(' ', -1)`,
-  * short docs contribute the full text), same xxhash64 seed 42, same
-  * pmod-prime affine family ([[Dedup.minhashCoeffs]]). Pinned by test.
+  * exchange itself small). This expression is bit-identical to the
+  * relational form (`Dedup.minhashSignaturesRelational`) by construction:
+  * same WordShingles tokenization (`split(' ', -1)`, short docs
+  * contribute the full text), same xxhash64 seed 42, same pmod-prime
+  * affine family ([[Dedup.minhashCoeffs]]). Pinned by test.
   */
 case class MinHashSig(child: Expression, k: Int, numHashes: Int)
   extends UnaryExpression {

@@ -23,7 +23,7 @@ object ReferenceQueries {
   def defs: Seq[QueryDef] = Seq(
 
     // ---- §2.1 scans ----
-    QueryDef("scan_full",
+    QueryDef.headline("scan_full",
       (s, dir) => Tables.events(s, dir)
         .select(col("event_id"), unix_millis(col("ts")).as("ts_ms"),
           col("user_id"), col("event_type"), col("value"), col("props"))
@@ -55,7 +55,7 @@ object ReferenceQueries {
              |  AND NOT (CAST(floor((rn-1)/1000) AS BIGINT) = 2 AND rn - 2000 <= 500)
              |ORDER BY event_id""".stripMargin)),
 
-    QueryDef("scan_page_scalable",
+    QueryDef.headline("scan_page_scalable",
       // SCALE-PATH page numbering: same page semantics as the global-window
       // parity form, computed via range buckets + per-bucket ranking — no
       // single-partition window anywhere (the oracle IS the global form, so
@@ -74,7 +74,7 @@ object ReferenceQueries {
         Seq("event_id", "event_type", "value")).orderBy("event_id"),
       Some("SELECT event_id, event_type, value FROM events ORDER BY event_id")),
 
-    QueryDef("filter_solr",
+    QueryDef.headline("filter_solr",
       (s, dir) => Filters.solr(Tables.events(s, dir),
           "event_type:click AND value:[10 TO 100]")
         .select("event_id", "event_type", "value").orderBy("event_id"),
@@ -247,7 +247,7 @@ object ReferenceQueries {
              |FROM r CROSS JOIN (VALUES ('pfx-t1'), ('pfx-t2')) AS t(topic)
              |ORDER BY topic, key, value""".stripMargin)),
 
-    QueryDef("sink_kafka_shape_hash",
+    QueryDef.headline("sink_kafka_shape_hash",
       // SCALE-PATH kafka shape: partition = stateless weighted key hash
       // (no WRR row counter, no global window); oracle recomputes the md5
       // slice, the weight-expanded lookup, and the full rendered layout

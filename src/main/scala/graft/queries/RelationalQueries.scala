@@ -25,7 +25,7 @@ object RelationalQueries {
     // TPC-H Q1-style pricing summary: the canonical partial-agg + merge
     // shape. Money math on scaled longs (exact, associative, ~2x faster
     // than decimal — see graft.functions.Money).
-    QueryDef("q1_agg",
+    QueryDef.headline("q1_agg",
       (s, dir) => Tables.lineitem(s, dir)
         .filter(col("l_shipdate") <= lit("1998-09-01").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -58,7 +58,7 @@ object RelationalQueries {
     // ~1.4s for the unordered original. The groupBy key equals the join
     // key, so the aggregation reuses the join's partitioning (no third
     // shuffle).
-    QueryDef("q3_join",
+    QueryDef.headline("q3_join",
       (s, dir) => {
         val cust = Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
         val ord = Tables.orders(s, dir)
@@ -85,7 +85,7 @@ object RelationalQueries {
     // without it, sf0.1 stats broadcast the orders FACT, a plan that dies at
     // 100 TB; the partitioned-hash shape holds at any scale and the dims
     // stay explicit broadcasts.
-    QueryDef("q5_join_agg",
+    QueryDef.headline("q5_join_agg",
       (s, dir) => {
         val li = Tables.lineitem(s, dir)
         val ord = Tables.orders(s, dir)
@@ -217,7 +217,7 @@ object RelationalQueries {
     // Ordered 3-stage funnel (click -> view -> purchase): stage k's
     // timestamp is the earliest matching event strictly after stage k-1 —
     // three per-user aggregations, each one shuffle keyed by user.
-    QueryDef("events_anomalous_days",
+    QueryDef.headline("events_anomalous_days",
       // ingest-volume anomaly flags: days > 2 population-sigma from their
       // event type's mean daily count — the z-score test rearranged into
       // integer cross-multiplied form ((x*n - S)^2 > k^2*(n*Q - S^2)), so
@@ -238,7 +238,7 @@ object RelationalQueries {
              |FROM d JOIN t ON d.event_type = t.event_type
              |ORDER BY day, d.event_type""".stripMargin)),
 
-    QueryDef("events_decayed_counts",
+    QueryDef.headline("events_decayed_counts",
       // exponentially time-decayed event counts per type (tau = 7 days at
       // the corpus horizon): per-event weights micronat-quantized right
       // after the exp, so totals are associative long sums; the oracle
@@ -257,7 +257,7 @@ object RelationalQueries {
              |FROM e CROSS JOIN t GROUP BY event_type
              |ORDER BY event_type""".stripMargin)),
 
-    QueryDef("events_psi_drift",
+    QueryDef.headline("events_psi_drift",
       // population stability index: value distribution of the first half-
       // month vs the second, 10 fixed-width bins with edge clamping and
       // add-one smoothing; per-bin (p−q)·ln(p/q) quantized to micronats
@@ -292,7 +292,7 @@ object RelationalQueries {
              |    * 1e6 + 0.5) AS BIGINT) AS psi_micronat
              |FROM j ORDER BY bucket""".stripMargin)),
 
-    QueryDef("event_retention",
+    QueryDef.headline("event_retention",
       // weekly retention triangle: cohort = a user's first active epoch
       // week, one row per (cohort, week offset) with distinct active
       // users — all integer arithmetic (epoch-second div 604800), so the
@@ -380,7 +380,7 @@ object RelationalQueries {
              |ORDER BY n_nationkey""".stripMargin)),
 
     // Window functions: rank-per-group (top-3 orders per customer).
-    QueryDef("window_rank",
+    QueryDef.headline("window_rank",
       (s, dir) => {
         val w = Window.partitionBy("o_custkey")
           .orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -398,7 +398,7 @@ object RelationalQueries {
 
     // Same result as window_rank, via the custom TopKPerKey operator
     // (LogicalPlan + Strategy + heap-based SparkPlan — no per-group sort).
-    QueryDef("topk_per_key",
+    QueryDef.headline("topk_per_key",
       (s, dir) => graft.plans.TopKPerKey.perKey(
           Tables.orders(s, dir),
           keyNames = Seq("o_custkey"),
@@ -443,7 +443,7 @@ object RelationalQueries {
              |  coalesce(lead(event_type, 1) OVER (PARTITION BY user_id ORDER BY event_id), '(none)') AS next_type
              |FROM events ORDER BY user_id, event_id""".stripMargin)),
 
-    QueryDef("event_transitions",
+    QueryDef.headline("event_transitions",
       // first-order Markov transition census over each user's event
       // stream (session-flow analysis): lag over (user, event_id), then
       // one (from, to)-keyed aggregate — partial-aggregable, one shuffle
@@ -466,7 +466,7 @@ object RelationalQueries {
              |FROM t WHERE prev_type IS NOT NULL
              |GROUP BY 1, 2 ORDER BY from_type, to_type""".stripMargin)),
 
-    QueryDef("window_moving_avg",
+    QueryDef.headline("window_moving_avg",
       // bounded sliding-frame aggregate (ROWS BETWEEN 4 PRECEDING AND
       // CURRENT): per-user 5-event moving totals in integer cents — the
       // frame is row-bounded so state per key is O(frame), never the
@@ -634,7 +634,7 @@ object RelationalQueries {
              |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin)),
 
     // Distinct aggregation.
-    QueryDef("distinct_agg",
+    QueryDef.headline("distinct_agg",
       (s, dir) => Tables.lineitem(s, dir)
         .groupBy("l_returnflag")
         .agg(countDistinct(col("l_partkey")).as("n_parts"),
@@ -707,7 +707,7 @@ object RelationalQueries {
     // over lineitem⨝supplier⨝nation. Exact integer money; the threshold
     // compare is cross-multiplied (value·1000 > total) in DECIMAL, and
     // the total rides a scalar subquery (no cross join in the plan).
-    QueryDef("q11_important_stock",
+    QueryDef.headline("q11_important_stock",
       (s, dir) => {
         Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_v")
         Tables.supplier(s, dir).createOrReplaceTempView("supplier_v")
@@ -770,7 +770,7 @@ object RelationalQueries {
     // TPC-H Q4-shaped: priority census of orders with at least one
     // late-shipped line — EXISTS decorrelated to a semi-join keyed by
     // orderkey; the count runs on the reduced order set
-    QueryDef("q4_order_priority",
+    QueryDef.headline("q4_order_priority",
       (s, dir) => {
         val o = Tables.orders(s, dir)
           .filter(col("o_orderdate") >= lit("1996-01-01") &&
@@ -819,7 +819,7 @@ object RelationalQueries {
     // year. One fact-fact shuffle (lineitem x orders on orderkey); every
     // dimension — supplier, customer, both nation aliases — broadcasts, so
     // the nation-pair label attaches without re-shuffling the fact rows.
-    QueryDef("q7_nation_flows",
+    QueryDef.headline("q7_nation_flows",
       (s, dir) => {
         val li = Tables.lineitem(s, dir)
         val ord = Tables.orders(s, dir)
@@ -891,7 +891,7 @@ object RelationalQueries {
     // nation and order year (no partsupp table in this corpus, so profit is
     // gross revenue rather than revenue minus supplycost — same plan shape:
     // selective part filter broadcast into the fact, one fact-fact shuffle).
-    QueryDef("q9_product_profit",
+    QueryDef.headline("q9_product_profit",
       (s, dir) => {
         val li = Tables.lineitem(s, dir)
         val widget = Tables.part(s, dir)
@@ -945,7 +945,7 @@ object RelationalQueries {
     // TPC-H Q13-shaped customer distribution: orders-per-customer histogram
     // through a LEFT OUTER join (zero-order customers must appear), then a
     // second tiny aggregation over the counts.
-    QueryDef("q13_custdist",
+    QueryDef.headline("q13_custdist",
       (s, dir) => {
         val c = Tables.customer(s, dir)
         val o = Tables.orders(s, dir)
@@ -1001,7 +1001,7 @@ object RelationalQueries {
     // via an anti-join (NOT IN with non-nullable keys). Part filter and
     // exclusion list both broadcast; the countDistinct shuffles once keyed
     // by (brand, size).
-    QueryDef("q16_supplier_census",
+    QueryDef.headline("q16_supplier_census",
       (s, dir) => {
         val bad = Tables.supplier(s, dir)
           .filter(col("s_acctbal") < 0).select("s_suppkey")
@@ -1025,7 +1025,7 @@ object RelationalQueries {
     // TPC-H Q19-shaped disjunctive predicate: three OR'd brand/size/
     // quantity windows collapse to one scan + one broadcast join — the
     // filter stays a single codegen'd predicate, no union of three scans.
-    QueryDef("q19_disjunctive",
+    QueryDef.headline("q19_disjunctive",
       (s, dir) => {
         val li = Tables.lineitem(s, dir)
         val p = Tables.part(s, dir)
@@ -1210,7 +1210,7 @@ object RelationalQueries {
              |ORDER BY doc_id, pos""".stripMargin)),
 
     // Top-k: planned as TakeOrderedAndProject (no global sort at scale).
-    QueryDef("topk",
+    QueryDef.headline("topk",
       (s, dir) => Tables.orders(s, dir)
         .select("o_orderkey", "o_totalprice")
         .orderBy(col("o_totalprice").desc, col("o_orderkey")).limit(15),
@@ -1267,7 +1267,7 @@ object RelationalQueries {
     // Hopping (sliding) windows: 2-hour windows every hour — each event
     // lands in exactly two windows; the oracle materializes both window
     // starts per event with integer epoch arithmetic.
-    QueryDef("window_hopping",
+    QueryDef.headline("window_hopping",
       (s, dir) => Tables.events(s, dir)
         .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"),
           col("event_type"))
@@ -1406,7 +1406,7 @@ object RelationalQueries {
     // Bloom semi-join reduction: the fact side is prefiltered by a sketch
     // of the reduced dim keys before the join — row-identical to the plain
     // join (the equi-join verifies every probabilistic hit exactly).
-    QueryDef("join_bloom_reduce",
+    QueryDef.headline("join_bloom_reduce",
       (s, dir) => graft.operators.Joins.bloomReducedJoin(
           Tables.lineitem(s, dir).select("l_orderkey", "l_extendedprice",
             "l_discount"),
@@ -1431,7 +1431,7 @@ object RelationalQueries {
     // aggregate, which at 100 TB beats four separate scans by the scan
     // cost x3. grouping_id disambiguates rolled-up NULLs from data NULLs;
     // keys are coalesced to '(all)' so the output is join/sort-stable.
-    QueryDef("agg_cube_lang_source",
+    QueryDef.headline("agg_cube_lang_source",
       (s, dir) => Tables.documents(s, dir)
         .cube(col("lang"), col("source"))
         .agg(grouping_id().cast("long").as("gid"),
@@ -1456,7 +1456,7 @@ object RelationalQueries {
     // partial-aggregable shuffle on day; the pivot itself is just a
     // CASE-WHEN fan-out inside the aggregate, exactly how the oracle
     // spells it.
-    QueryDef("events_pivot_daily",
+    QueryDef.headline("events_pivot_daily",
       (s, dir) => {
         val types = Seq("click", "error", "purchase", "signup", "view")
         val p = Tables.events(s, dir)
@@ -1482,7 +1482,7 @@ object RelationalQueries {
     // cardinality equals the measure count. Exactness: values pass through
     // unchanged; the sum goes through DECIMAL(18,2) like every
     // double-sum gate.
-    QueryDef("unpivot_metrics",
+    QueryDef.headline("unpivot_metrics",
       (s, dir) => Tables.lineitem(s, dir)
         .unpivot(
           Array(col("l_orderkey")),
@@ -1511,7 +1511,7 @@ object RelationalQueries {
     // the interval spelled in micros; one user-keyed shuffle, the frame
     // scan is linear per partition (sliding sum over a sorted run). Money
     // in cents so the sliding sum is exact under any evaluation order.
-    QueryDef("events_range_frame_sum",
+    QueryDef.headline("events_range_frame_sum",
       (s, dir) => {
         val w = Window.partitionBy("user_id").orderBy(col("_us"))
           .rangeBetween(-1800L * 1000000L, 0L)
@@ -1542,7 +1542,7 @@ object RelationalQueries {
     // percent_rank/cume_dist are then the same exact integer ratios
     // ((rank-1)/(n-1), n_leq/n) evaluated in IEEE doubles — bit-equal.
     // One user-partition-keyed shuffle; frames are whole-partition.
-    QueryDef("window_distribution_funcs",
+    QueryDef.headline("window_distribution_funcs",
       (s, dir) => {
         val w = Window.partitionBy("event_type")
           .orderBy(col("cents"), col("event_id"))

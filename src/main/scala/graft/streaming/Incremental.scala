@@ -165,8 +165,11 @@ object Incremental {
 
   /** Run `sink` over every micro-batch of `df` as an AvailableNow stream
     * (drain what is there, then stop) with restart state in
-    * `checkpointDir` — the wiring every `start*` seat shares. */
-  private def availableNow(df: DataFrame, checkpointDir: String,
+    * `checkpointDir` — the one streaming wiring every per-batch sink in
+    * this object plugs into (`availableNow(df, ckpt)(nearDupGate(...))`).
+    * Resume state lives entirely in the checkpoint (file-source offsets +
+    * batch WAL), the Spark-native replacement for Redis page state. */
+  def availableNow(df: DataFrame, checkpointDir: String,
       outputMode: String = "append")(
       sink: (DataFrame, Long) => Unit): StreamingQuery =
     df.writeStream
@@ -175,14 +178,6 @@ object Incremental {
       .foreachBatch(sink)
       .trigger(Trigger.AvailableNow())
       .start()
-
-  /** Start [[hllRollupMaintenance]] as an AvailableNow stream. */
-  def startHllRollupMaintenance(df: DataFrame, rollupDir: String,
-      checkpointDir: String, tsCol: String = "ts",
-      groupCol: String = "event_type",
-      valueCol: String = "user_id"): StreamingQuery =
-    availableNow(df, checkpointDir)(
-      hllRollupMaintenance(rollupDir, tsCol, groupCol, valueCol))
 
   /** Streaming seat of the log-histogram quantile sketch
     * ([[graft.functions.Sketches.logHistSketch]]). Bucket COUNTS are
@@ -263,15 +258,6 @@ object Incremental {
       } finally survivors.unpersist()
   }
 
-  /** Wire [[nearDupGate]] into a streaming query: file-source batches flow
-    * through the gate, survivors land in `acceptedDir`, and the band index
-    * grows in `indexDir`; restart resume comes from the checkpoint. */
-  def startNearDupGate(df: DataFrame, indexDir: String, acceptedDir: String,
-      checkpointDir: String, idCol: String, textCol: String,
-      threshold: Double = 0.5): StreamingQuery =
-    availableNow(df, checkpointDir)(nearDupGate(indexDir, acceptedDir,
-      idCol, textCol, threshold = threshold))
-
   /** Streaming rollup maintenance — the continuous form of
     * [[graft.sources.Layout.writeDailyRollup]]: each micro-batch lands its
     * OWN partial-aggregate states under `(event_date, batch_id)`
@@ -299,13 +285,6 @@ object Incremental {
         .parquet(rollupDir)
   }
 
-  def startRollupMaintenance(df: DataFrame, rollupDir: String,
-      checkpointDir: String, tsCol: String = "ts",
-      groupCol: String = "event_type",
-      valueCol: String = "value"): StreamingQuery =
-    availableNow(df, checkpointDir)(
-      rollupMaintenance(rollupDir, tsCol, groupCol, valueCol))
-
   /** Streaming CDC log — the write side of
     * [[graft.functions.Merge.readMergeOnRead]]: each micro-batch of change
     * rows (op/seq/payload) appends under its own `batch_id` partition, so
@@ -320,10 +299,6 @@ object Incremental {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id").parquet(changesDir)
   }
-
-  def startCdcLog(df: DataFrame, changesDir: String,
-      checkpointDir: String): StreamingQuery =
-    availableNow(df, checkpointDir)(cdcLog(changesDir))
 
   /** Streaming quality gate with a DEAD-LETTER lane: each micro-batch is
     * split by the row-local expectation predicate
@@ -349,12 +324,6 @@ object Incremental {
       land(!col("_bad"), acceptedDir)
       land(col("_bad"), quarantineDir)
   }
-
-  def startQualityGate(df: DataFrame, acceptedDir: String,
-      quarantineDir: String, checkpointDir: String,
-      rules: Seq[graft.functions.Expectations.Rule]): StreamingQuery =
-    availableNow(df, checkpointDir)(
-      qualityGate(acceptedDir, quarantineDir, rules))
 
   /** Streaming SEMANTIC near-dup gate — the embedding-space sibling of
     * [[nearDupGate]]: each micro-batch of vectors is (1) near-deduped
@@ -393,13 +362,24 @@ object Incremental {
       } finally survivors.unpersist()
   }
 
-  /** Wire [[semanticGate]] into a streaming query (file-source batches,
-    * checkpointed restart — same wiring as [[startNearDupGate]]). */
-  def startSemanticGate(df: DataFrame, indexDir: String,
-      checkpointDir: String, model: graft.functions.IVF.Model,
-      idCol: String, vecCol: String, threshold: Double): StreamingQuery =
-    availableNow(df, checkpointDir)(
-      semanticGate(indexDir, model, idCol, vecCol, threshold))
+  /** Committed-version numbers under a state dir (the Files.list stream
+    * is CLOSED — it holds a directory fd until then, and a long-running
+    * stream calls this every batch). */
+  private def saVersions(stateDir: String, marker: Long => Boolean)
+      : Seq[Long] = {
+    val d = Paths.get(stateDir)
+    if (!Files.exists(d)) Seq.empty
+    else {
+      val s = Files.list(d)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.matches("b\\d+")).map(_.drop(1).toLong)
+          .filter(marker).toSeq
+      } finally s.close()
+    }
+  }
+
 
   /** Streaming SUFFIX-ARRAY maintenance — the streaming seat of
     * [[graft.functions.SuffixArray.suffixRanksIncrementalFrom]], closing
@@ -422,24 +402,6 @@ object Incremental {
     * restart adds nothing (pinned by StreamingSpec). Superseded version
     * dirs are left for a TTL sweep in production (bounded: one ranks +
     * reps pair per batch, never rewritten). */
-  /** Committed-version numbers under a state dir (the Files.list stream
-    * is CLOSED — it holds a directory fd until then, and a long-running
-    * stream calls this every batch). */
-  private def saVersions(stateDir: String, marker: Long => Boolean)
-      : Seq[Long] = {
-    val d = Paths.get(stateDir)
-    if (!Files.exists(d)) Seq.empty
-    else {
-      val s = Files.list(d)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.matches("b\\d+")).map(_.drop(1).toLong)
-          .filter(marker).toSeq
-      } finally s.close()
-    }
-  }
-
   def saMaintenance(stateDir: String, idCol: String, textCol: String,
       nParts: Int = 32): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
@@ -501,13 +463,6 @@ object Incremental {
     spark.read.parquet(s"$stateDir/b${vs.max}/ranks")
   }
 
-  /** Wire [[saMaintenance]] into a streaming query: file-source batches
-    * merge into the landed SA; restart resume comes from the checkpoint,
-    * replayed batches rebuild their own version dirs verbatim. */
-  def startSaMaintenance(df: DataFrame, stateDir: String,
-      checkpointDir: String, idCol: String, textCol: String): StreamingQuery =
-    availableNow(df, checkpointDir)(saMaintenance(stateDir, idCol, textCol))
-
   /** Idempotent per-batch sink: one output dir per batchId, skipped if it
     * already committed — the `foreachBatch` replay-suppression analogue of
     * the reference's page-DONE state (`worker.py:164-188`). */
@@ -521,11 +476,4 @@ object Incremental {
         Files.writeString(marker, "done")
       }
   }
-
-  /** Wire a streaming frame to the idempotent sink with a checkpoint dir —
-    * resume state lives entirely in the checkpoint (file-source offsets +
-    * batch WAL), the Spark-native replacement for Redis page state. */
-  def startToIdempotentSink(df: DataFrame, outDir: String,
-      checkpointDir: String): StreamingQuery =
-    availableNow(df, checkpointDir, "update")(idempotentBatchWriter(outDir))
 }

@@ -55,10 +55,10 @@ object IncrementalDemo {
     val outDir = Files.createTempDirectory("stream-out").toString
     val ckpt = Files.createTempDirectory("stream-ckpt").toString
     def runOnce(): Unit = {
-      val q = Incremental.startToIdempotentSink(
+      val q = Incremental.availableNow(
         Incremental.windowedCounts(
           Incremental.readEventsStream(spark, src, schema, maxFilesPerTrigger = 2)),
-        outDir, ckpt)
+        ckpt, "update")(Incremental.idempotentBatchWriter(outDir))
       q.awaitTermination(120000)
     }
     runOnce()

@@ -7,7 +7,7 @@ import graft.SparkEntry
 object ExplainAll {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val names = if (args.nonEmpty) args.toSeq else graft.Bench.Headline
+    val names = if (args.nonEmpty) args.toSeq else graft.queries.Catalog.headline
     val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     names.foreach { n =>
       println(s"\n===================== $n =====================")

@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Catalog-shape invariants: the count the docs cite, and the
-  * queries/oracle key containment the driver's gate relies on. */
+/** Catalog-shape invariants: the count the docs cite, the queries/oracle
+  * key containment the driver's gate relies on, and the bench headline
+  * the catalog flags. */
 class CatalogSpec extends AnyFunSuite {
 
   test("catalog size matches the declared CatalogCount the docs cite") {
@@ -20,6 +21,22 @@ class CatalogSpec extends AnyFunSuite {
     assert(staticOrphans.isEmpty, s"oracleSql keys without a query: $staticOrphans")
     assert(dynamicOrphans.isEmpty,
       s"dynamicOracleSql keys without a query: $dynamicOrphans")
+  }
+
+  test("catalog names are unique (a repeated name would shadow an entry)") {
+    val names = graft.queries.Catalog.all.map(_.name)
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, s"catalog names defined more than once: $dups")
+  }
+
+  test("Bench's default sweep is the catalog headline: distinct catalog entries") {
+    val swept = Bench.queries(None)
+    assert(swept == graft.queries.Catalog.headline)
+    assert(swept.nonEmpty)
+    val dups = swept.diff(swept.distinct)
+    assert(dups.isEmpty, s"headline entries flagged more than once: $dups")
+    val missing = swept.filterNot(SparkEntry.queries.contains)
+    assert(missing.isEmpty, s"headline names without a catalog entry: $missing")
   }
 
   test("no query carries both a static and a dynamic oracle") {

@@ -303,8 +303,8 @@ class StreamingSpec extends AnyFunSuite {
     val schema = spark.read.parquet(src.toString).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(src.toString)
-    val q = Incremental.startRollupMaintenance(stream, dir,
-      tmp("rollup-ck").toString)
+    val q = Incremental.availableNow(stream, tmp("rollup-ck").toString)(
+      Incremental.rollupMaintenance(dir, "ts", "event_type", "value"))
     q.awaitTermination(60000)
     val merged = graft.sources.Layout
       .readRollupRange(spark, dir, "2024-01-01", "2024-01-30")
@@ -501,7 +501,8 @@ class StreamingSpec extends AnyFunSuite {
     val stream = Incremental.readEventsStream(spark, srcDir.toString, schema,
       maxFilesPerTrigger = 2)
     val agg = Incremental.windowedCounts(stream)
-    val q = Incremental.startToIdempotentSink(agg, outDir.toString, ckpt1.toString)
+    val q = Incremental.availableNow(agg, ckpt1.toString, "update")(
+      Incremental.idempotentBatchWriter(outDir.toString))
     q.awaitTermination(120000)
 
     val batches = Files.list(outDir).filter(_.getFileName.toString.startsWith("batch-"))
@@ -514,10 +515,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(n > 0 && n <= 1000)
 
     // restart from the same checkpoint: no new batches (offsets committed)
-    val q2 = Incremental.startToIdempotentSink(
+    val q2 = Incremental.availableNow(
       Incremental.windowedCounts(
         Incremental.readEventsStream(spark, srcDir.toString, schema, 2)),
-      outDir.toString, ckpt1.toString)
+      ckpt1.toString, "update")(
+      Incremental.idempotentBatchWriter(outDir.toString))
     q2.awaitTermination(60000)
     val batches2 = Files.list(outDir).filter(_.getFileName.toString.startsWith("batch-"))
       .filter(p => !p.getFileName.toString.endsWith("._done")).count()
@@ -605,9 +607,10 @@ class StreamingSpec extends AnyFunSuite {
     c1.coalesce(1).write.mode("append").parquet(srcDir.toString)
     c2.coalesce(1).write.mode("append").parquet(srcDir.toString)
     val schema = spark.read.parquet(srcDir.toString).schema
-    val q = Incremental.startHllRollupMaintenance(
+    val q = Incremental.availableNow(
       Incremental.readEventsStream(spark, srcDir.toString, schema, 1),
-      rollDir, tmp("hllroll-ckpt").toString)
+      tmp("hllroll-ckpt").toString)(
+      Incremental.hllRollupMaintenance(rollDir))
     q.processAllAvailable(); q.stop()
     // replay a batch: duplicate sub-sketch rows appended — the read-side
     // bucket-max must absorb them (max is idempotent; no write-path
