@@ -187,6 +187,10 @@ object Bench {
         -1.0
       }
     }
+    // one untimed sentinel run first: the first scan_full after warmup
+    // reads 1.5-2x a warm one, which would make the drift bracket
+    // measure warm-up instead of interference
+    timeSentinel()
     val sentinelFirst = timeSentinel()
     // per-query cache hygiene: several operators persist() an
     // intermediate their returned frame still references (so they cannot

@@ -3,12 +3,15 @@ package graft
 import graft.queries.Catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * The catalog lives in `graft.queries.{Reference,Relational,Pipeline}Queries`
-  * — one `QueryDef(name, fn, oracle)` per operator from SURVEY.md §2 plus the
-  * training-data-pipeline extensions, keeping each Spark query and its DuckDB
-  * oracle side by side.
+  * The catalog lives in `graft.queries`: `ReferenceQueries`,
+  * `RelationalQueries` and one object per family (`TextQueries`,
+  * `QualityQueries`, `DedupQueries`, `EmbeddingQueries`, `SketchQueries`,
+  * `SamplingQueries`, `MultimodalLayoutQueries`), concatenated by
+  * `Catalog.all` — one `QueryDef(name, fn, oracle)` per operator from
+  * SURVEY.md §2 plus the training-data-pipeline extensions, keeping each
+  * Spark query and its DuckDB oracle side by side.
   */
 object SparkEntry {
 

@@ -346,10 +346,6 @@ object SuffixArray {
         // both numberings are dense in the same order — so the refined
         // ranks would reproduce the EXACT same values; skip the round
         fixed = nd == nDistinct
-        if (df.sparkSession.conf.getOption("spark.graft.debugTiming")
-            .contains("true"))
-          System.err.println(s"[sa-build] round $round k=$k nd=$nd " +
-            s"prev=$nDistinct fixed=$fixed maxLen=$maxLen")
         if (!fixed) {
           ranks = ckpt(ranked.select(col("_g"), col("_pos"), col("_rank")))
           nDistinct = nd
@@ -464,8 +460,8 @@ object SuffixArray {
     *   - groups = equal round-1 rank (_kr); escalated groups order
     *     members by the remaining suffix, compared as UTF-8 bytes of
     *     the space-joined token stream from `pos` (Spark's UTF8String
-    *     binary order, NOT java.lang.String UTF-16 order — the same
-    *     divergence the probe seat's boundary table documents);
+    *     binary order, NOT java.lang.String UTF-16 order, which
+    *     diverges on supplementary-plane text);
     *     equal-byte runs are one CLASS. Non-escalated groups froze as
     *     full ties: one class, no content needed.
     *   - an anchored class (holds an old rep — at most one: landed
@@ -634,7 +630,23 @@ object SuffixArray {
     * a plain scan of the sidecar. `seedK` must match the sidecar's. */
   def suffixRanksIncrementalFrom(mergeReps: DataFrame, ranks: DataFrame,
       oldDf: DataFrame, newDf: DataFrame, idCol: String, textCol: String,
-      nParts: Int = 32, seedK: Int = 8, maxRounds: Int = 64): DataFrame = {
+      nParts: Int = 32, seedK: Int = 8, maxRounds: Int = 64): DataFrame =
+    mergeFrom(mergeReps, ranks, oldDf, newDf, idCol, textCol, nParts, seedK,
+      maxRounds)
+
+  /** The delta-local seat's engagement budget: round 1's observed
+    * affected-row count and its escalator sources' UTF-8 text bytes. */
+  private[graft] val LocalMaxRows: Long = 1L << 20
+  private[graft] val LocalMaxBytes: Long = 64L << 20
+
+  /** [[suffixRanksIncrementalFrom]] with the delta-local seat's budget
+    * as parameters: specs force the distributed rounds
+    * (`localMaxRows = 0`) and the byte-budget decline through it. */
+  private[graft] def mergeFrom(mergeReps: DataFrame, ranks: DataFrame,
+      oldDf: DataFrame, newDf: DataFrame, idCol: String, textCol: String,
+      nParts: Int = 32, seedK: Int = 8, maxRounds: Int = 64,
+      localMaxRows: Long = LocalMaxRows,
+      localMaxBytes: Long = LocalMaxBytes): DataFrame = {
     require(seedK >= 1, "seedK >= 1")
     // sidecar seedK validation (the sidecar carries it since round 13):
     // a cap mismatch between old `_seg` and new-row prefixes would put
@@ -695,22 +707,14 @@ object SuffixArray {
       val newKeys = newG.groupBy(col("_g")).agg(min(col("_t")).as("_t"))
         .persist()
       pinned += newKeys
-      // ONE (rows, text bytes) measurement of the distinct delta drives
-      // every delta-derived placement below — the md5-key probe (keys
-      // are exactly 32 chars), the prefix-frame probes (seg payload is
-      // bounded by ~seedK x the text bytes: each token lands in at most
-      // seedK prefixes), and the round-1 path choice (estimated suffix
-      // rows ~ text bytes / 6 B per token). The former form re-measured
-      // each probe frame with its own agg job — at gate scale those
-      // serial driver jobs were the merge's bill, not the data.
-      val kRow = newKeys.agg(count(lit(1)).as("_n"), coalesce(
-          sum(length(col("_t")).cast("long")), lit(0L)).as("_b")).head()
-      val (nTexts, textBytes) = (kRow.getLong(0), kRow.getLong(1))
+      // delta-derived placements ESTIMATE their bytes from row counts
+      // (here ONE count of the distinct delta texts, whose md5 keys are
+      // exactly 32 chars) instead of measuring each probe frame with its
+      // own agg job — at gate scale those serial driver jobs were the
+      // merge's bill, not the data
       def estProbe(estBytes: Long)(df: DataFrame): DataFrame =
         if (estBytes <= probeBudgetBytes) broadcast(df)
         else df.hint("shuffle_hash")
-      val keysProbe = estProbe(nTexts * 80L) _
-      val segProbe = estProbe(textBytes * (seedK + 9L)) _
       // ONE corpus pass serves both md5 fast-path consumers: the old
       // anchor per duplicated delta text (dupOut) and the fresh-text
       // anti-join — the corpus is SCANNED and probed against the
@@ -722,7 +726,8 @@ object SuffixArray {
       // stays recomputable, and the standalone materialization job
       // disappears; the harness sweeps the registry per query.
       val oldDupDocs = Caches.operatorPersist(
-        oldG.join(keysProbe(newKeys.select("_g")), Seq("_g"))
+        oldG.join(estProbe(newKeys.count() * 80L)(newKeys.select("_g")),
+            Seq("_g"))
           .groupBy(col("_g")).agg(min(col("_doc")).as("_odoc")))
       // fresh = delta texts the old corpus has never seen
       val newFresh = newKeys
@@ -779,48 +784,15 @@ object SuffixArray {
           lit(seedK.toLong).as("_cov"),
           concat_ws(" ", slice(col("_tk"), col("_pos"),
             lit(seedK))).as("_seg"))
-      // ---- ADAPTIVE ROUND 1 (round 14). Two forms, chosen by the
-      // index-to-delta ratio, sharing everything from the ranking on:
-      //
-      // UNION-RANK (index <= probeRatio x estimated delta suffix rows):
-      // the whole sidecar enters the round-1 ranking. Right when the
-      // index is small relative to the delta — one range exchange of
-      // old+new is within a constant of ranking the delta alone, and it
-      // needs the FEWEST driver jobs (at gate scale the merge is
-      // job-latency-bound, not data-bound — measured).
-      //
-      // PROBE (index >> delta — the production maintenance regime: a
-      // small crawl delta into a huge landed index): the index is never
-      // ranked OR exchanged, only SCANNED. The sidecar is already in
-      // landed-rank order, so round 1 needs exactly two things:
-      //   (a) the old rows whose seedK prefix collides with a delta
-      //       prefix — an EQUI-JOIN on _seg (index scanned once, probed
-      //       against the adaptively-broadcast delta prefixes);
-      //   (b) every delta prefix's insertion point among the landed
-      //       ranks (_nor). Dup groups read it off their own matched
-      //       run IN the ranking (equal-prefix old rows are CONSECUTIVE
-      //       dense ranks, so _nor = group max(_or) + 1 is a window);
-      //       fresh prefixes binary-search a fixed-size BOUNDARY TABLE
-      //       (the seg at every ceil(R/8192)th rank, collected once —
-      //       <= 8192 rows of bounded metadata, re-entered as ONE plan
-      //       literal; seg order == rank order) for their bucket, then
-      //       count strictly-smaller segs inside that single bucket
-      //       (bucket rows = R/8192, only affected buckets move —
-      //       selected by a broadcast semi-join).
-      // The probe round-1 ranking then covers AFFECTED rows only, keyed
-      // by _seg alone — order-consistent with the full index (the seg
-      // comparison IS the index's comparator).
-      val debugTiming = oldDf.sparkSession.conf
-        .getOption("spark.graft.debugTiming").contains("true")
-      var tPrep = System.nanoTime()
-      def prepMark(label: String): Unit = if (debugTiming) {
-        System.err.println(
-          f"[sa-incr] prep:$label ${(System.nanoTime() - tPrep) / 1e9}%.2f s")
-        tPrep = System.nanoTime()
-      }
-      // R = highest landed rank (dense, so also the rank count) — one
-      // sidecar scan, both paths (the insertion arithmetic needs it);
-      // computed on the overlapped thread above, consumed here
+      // ---- ROUND 1 ranks the WHOLE sidecar with the delta's suffixes in
+      // one range exchange (old reps + new rows). At gate scale the merge
+      // is job-latency-bound, not data-bound, and this form needs the
+      // fewest driver jobs; the one pass over the index is the price of
+      // reading the index order (see the cost note on
+      // [[suffixRanksIncremental]]).
+      // R = highest landed rank (dense, so also the rank count; the
+      // insertion arithmetic needs it) — computed on the overlapped
+      // thread above, consumed here
       val rRow = scala.concurrent.Await.result(sidecarStatsF,
         scala.concurrent.duration.Duration.Inf)
       if (hasSeedCol && !rRow.isNullAt(1)) {
@@ -829,138 +801,14 @@ object SuffixArray {
             s"passed $seedK — rebuild the sidecar or pass its seedK")
       }
       val rMax = if (rRow.isNullAt(0)) 0L else rRow.getLong(0)
-      prepMark("rmax")
-      val probeRatio = oldDf.sparkSession.conf
-        .getOption("spark.graft.saIncr.probeRatio").map(_.toLong)
-        .getOrElse(32L)
-      // absolute floor as well as a ratio. Round 15 MOVED the floor
-      // inside the measurable range: after the job-collapse work
-      // (observe-driven termination, fused final ranking, filter-based
-      // class table) the probe seat WINS the forced A/B at the x30
-      // vintage's 8.4M ranks — two independent runs, small delta:
-      // probe 15.8 / 21.0 s vs forced-union 20.9 / 38.7 s — while the
-      // sf0.1 gate's 260k-rank index still favors union (probe 19.7 vs
-      // union 14.5 s: at tiny indices the probe's extra serial driver
-      // jobs cost more than the skipped index sort). The 4M default
-      // sits between the two measured points on the union side; the
-      // billion-rank regime — where an index-wide range-sort per small
-      // delta is the one unaffordable thing — now extrapolates from a
-      // measured WIN, not prose, and the seat stays spec-pinned to the
-      // rebuild oracle plus the shuffle-record census
-      // (DedupSimilaritySpec) either way.
-      val probeMinIndex = oldDf.sparkSession.conf
-        .getOption("spark.graft.saIncr.probeMinIndex").map(_.toLong)
-        .getOrElse(4000000L)
-      val estDeltaRows = math.max(1L, textBytes / 6L)
-      // ratio compared via DIVISION, never `probeRatio * estDeltaRows`:
-      // the multiply overflows Long when a forced-union run sets
-      // probeRatio = Long.MaxValue (wraps negative for estDeltaRows >= 2
-      // and would silently satisfy the clause on a large index)
-      val useProbe =
-        if (probeRatio == 0L) rMax > 0L // forced-probe escape hatch
-        else rMax / estDeltaRows > probeRatio && rMax > probeMinIndex
-      if (debugTiming) System.err.println(
-        s"[sa-incr] path=${if (useProbe) "probe" else "union"} " +
-          s"rMax=$rMax estDeltaRows=$estDeltaRows")
       val newWithKr = newBase.select(col("_new"), col("_or"), col("_src"),
         col("_pos"), col("_slen"), col("_path"), lit(0L).as("_kr"),
         col("_cov"), col("_seg"))
-      var freshNor: DataFrame = null
-      var freshNorWarm: scala.concurrent.Future[Long] = null
-      val oldBase =
-        if (!useProbe)
-          reps0.select(lit(0).as("_new"), col("_or"),
-            concat(lit("d:"), col("_doc").cast("string")).as("_src"),
-            col("_pos"), col("_slen"),
-            array().cast("array<bigint>").as("_path"),
-            lit(0L).as("_kr"), lit(seedK.toLong).as("_cov"), col("_seg"))
-        else {
-          val newSegs = newBase.select("_seg").distinct().persist()
-          pinned += newSegs
-          val matchedOld = reps0.join(segProbe(newSegs), Seq("_seg"))
-            .persist()
-          pinned += matchedOld
-          val step = math.max(1L, (rMax + 8191L) / 8192L)
-          // boundary segs COLLECTED to the driver (<= 8192 rows —
-          // bounded metadata, the offsets/tailMin discipline) and
-          // re-entered as ONE array literal: the draft attached them via
-          // crossJoin(broadcast(one-row-array-frame)), which copies the
-          // whole ~400 KB array into EVERY probe row's UnsafeRow —
-          // gigabytes of pure copy at a few thousand fresh segs
-          // (measured: round 1 9-90 s). A plan literal is referenced,
-          // never per-row copied.
-          // sorted by _or, NOT by the seg strings: the ranks were minted
-          // under Spark's binary UTF-8 comparison, while a driver-side
-          // .sorted would use Java's UTF-16 code-unit order — the two
-          // disagree for supplementary-plane chars (emoji) mixed with
-          // U+E000..U+FFFF, which would send fresh prefixes to wrong
-          // buckets exactly in the non-ASCII crawl regime the probe seat
-          // is built for. Rank order IS the engine's seg order, exact.
-          val bsSegs = reps0.filter(((col("_or") - 1L) % lit(step)) === 0L)
-            .select(col("_or"), col("_seg")).collect()
-            .sortBy(_.getLong(0)).map(_.getString(1))
-          val bsArr = typedLit(bsSegs.toSeq)
-          prepMark("boundaries")
-          // count of boundaries <= s via a log2-depth fold (14 halvings
-          // cover the <= 8192 boundaries); bucket = count - 1, or -1
-          // when s precedes rank 1 (its successor is then rank 1)
-          def bucketOf(s: Column, arr: Column): Column =
-            aggregate(sequence(lit(1), lit(14)),
-              struct(lit(0).as("lo"), size(arr).as("hi")),
-              (acc, _) => {
-                val lo = acc.getField("lo")
-                val hi = acc.getField("hi")
-                val mid = ((lo + hi + 1) / 2).cast("int")
-                when(lo >= hi, acc).otherwise(
-                  when(element_at(arr, mid) <= s,
-                    struct(mid.as("lo"), hi.as("hi")))
-                    .otherwise(struct(lo.as("lo"), (mid - 1).as("hi"))))
-              },
-              acc => (acc.getField("lo") - 1).cast("long"))
-          // fresh-prefix successor table, warmed on a SECOND DRIVER
-          // THREAD (the dupProbeF discipline): its chain — anti-join
-          // against the matched prefixes, row-local binary search,
-          // affected-bucket semi-join, bucket-local count — is
-          // independent of the round-1 ranking, so its index scans
-          // overlap the ranking's exchange instead of serializing in
-          // front of it. Dup groups don't need it at all: their _nor
-          // rides the ranking's own group window (max(_or) + 1). Both
-          // sides are persisted, so a racing fill at worst computes a
-          // block twice.
-          freshNor = {
-            val freshB = newSegs
-              .join(segProbe(matchedOld.select("_seg").distinct()),
-                Seq("_seg"), "left_anti")
-              .select(col("_seg"), bucketOf(col("_seg"), bsArr).as("_bk"))
-              .persist()
-            pinned += freshB
-            val oldBuck = reps0
-              .select(col("_seg").as("_oseg"),
-                expr(s"(_or - 1) div $step").as("_bk"))
-              .join(broadcast(freshB.select("_bk").distinct()
-                .filter(col("_bk") >= 0)), Seq("_bk"), "left_semi")
-            freshB.filter(col("_bk") >= 0)
-              .join(oldBuck, Seq("_bk"))
-              .groupBy(col("_seg"), col("_bk"))
-              .agg(sum(when(col("_oseg") < col("_seg"), 1L).otherwise(0L))
-                .as("_c"))
-              .select(col("_seg"),
-                (col("_bk") * step + col("_c") + 1L).as("_norF"))
-              .unionAll(freshB.filter(col("_bk") < 0)
-                .select(col("_seg"), lit(1L).as("_norF")))
-              .persist()
-          }
-          pinned += freshNor
-          freshNorWarm = scala.concurrent.Future(freshNor.count())(
-            scala.concurrent.ExecutionContext.global)
-          matchedOld
-            .select(lit(0).as("_new"), col("_or"),
-              concat(lit("d:"), col("_doc").cast("string")).as("_src"),
-              col("_pos"), col("_slen"),
-              array().cast("array<bigint>").as("_path"),
-              lit(0L).as("_kr"), lit(seedK.toLong).as("_cov"),
-              col("_seg"))
-        }
+      val oldBase = reps0.select(lit(0).as("_new"), col("_or"),
+        concat(lit("d:"), col("_doc").cast("string")).as("_src"),
+        col("_pos"), col("_slen"),
+        array().cast("array<bigint>").as("_path"),
+        lit(0L).as("_kr"), lit(seedK.toLong).as("_cov"), col("_seg"))
       // ROUND KEYS (rewritten for the round-15 fused passenger ranking):
       // round 1 ranks on the SCALAR (prev rank, next segment) pair — a
       // round's dense rank completely encodes the row's group path, so
@@ -1009,30 +857,22 @@ object SuffixArray {
       // round, class-table window, and cross-partition stitch still
       // pays distributed plan+schedule latency. When round 1's OWN
       // observation shows the affected neighborhood is driver-sized
-      // (row count under `spark.graft.saIncr.localMaxRows`, escalator
-      // text bytes under `...localMaxBytes`, both measured not guessed),
-      // the remaining refinement runs ON THE DRIVER over the collected
-      // neighborhood: suffixes compare as UTF-8 bytes of the
-      // space-joined token stream (exactly the engine's comparator —
-      // java.lang.String order is UTF-16 and diverges on
-      // supplementary-plane text, see the boundary-table note above),
-      // classes and insertion offsets fold in one pass, and only two
-      // driver-sized frames re-enter the plan (the jump table and the
-      // fresh-row ranks). The distributed rounds >= 2 remain the 100-TB
-      // seat past the budget and stay oracle-pinned by the localMaxRows
-      // =0 spec variants. 0 disables the seat entirely.
-      val localMaxRows = oldDf.sparkSession.conf
-        .getOption("spark.graft.saIncr.localMaxRows").map(_.toLong)
-        .getOrElse(1L << 20)
-      val localMaxBytes = oldDf.sparkSession.conf
-        .getOption("spark.graft.saIncr.localMaxBytes").map(_.toLong)
-        .getOrElse(64L << 20)
+      // (row count under `localMaxRows`, escalator text bytes under
+      // `localMaxBytes`, both measured not guessed), the remaining
+      // refinement runs ON THE DRIVER over the collected neighborhood:
+      // suffixes compare as UTF-8 bytes of the space-joined token stream
+      // (exactly the engine's comparator — java.lang.String order is
+      // UTF-16 and diverges on supplementary-plane text), classes and
+      // insertion offsets fold in one pass, and only two driver-sized
+      // frames re-enter the plan (the jump table and the fresh-row
+      // ranks). The distributed rounds >= 2 remain the 100-TB seat past
+      // the budget and stay oracle-pinned by the localMaxRows = 0 spec
+      // variants. 0 disables the seat entirely.
       // (fresh-row final ranks (g, pos, rank), jump table (t, ins, tn))
       var localResolved
           : Option[(Seq[(String, Long, Long)], Seq[(Long, Long, Long)])] =
         None
       while (!done && round < maxRounds) {
-        val t0 = System.nanoTime()
         // rounds >= 2 rank (padded path keys, passenger sort key last);
         // round 1 ranks the scalar (_kr, _seg) pair as before
         val p = round // active rows' current path length
@@ -1057,11 +897,11 @@ object SuffixArray {
                   .as(s"_rk$i")): _*)
             (keyed, (1 to p).map(i => s"_rk$i") :+ "_sk")
           }
-        // union-path round 1 reads its per-pid old-row counts off the
-        // ranking job's own stats collect (the running-count _nor)
+        // round 1 reads its per-pid old-row counts off the ranking job's
+        // own stats collect (the running-count _nor)
         val (ranked, nRows, parted, statRows) = rankedInlineRows(rankInput,
           rankKeys, nParts,
-          if (round == 0 && !useProbe)
+          if (round == 0)
             Seq(sum(when(col("_or").isNotNull, 1L).otherwise(0L)).as("_c"))
           else Nil)
         if (nRows == 0) { done = true; parted.unpersist(blocking = false) }
@@ -1077,27 +917,8 @@ object SuffixArray {
             max(col("_new")).over(wg).as("_hasNew"),
             max(col("_slen")).over(wg).as("_maxLen"))
           val stepped =
-            if (round == 1 && useProbe) {
-              // probe path: input is already affected-only, so what
-              // remains round-1-specific is attaching _nor — a dup
-              // group's matched old run IS its group, so _nor =
-              // max(_or) + 1 rides the group-stats window for free;
-              // fresh groups LEFT-join the concurrently-built successor
-              // table — after the windows, so the (pid, _rank)
-              // partitioning still feeds the stats exchange-free
-              val grpMax = max(col("_or")).over(wg)
-              ranked.select(Seq(col("_new"), col("_or"), col("_src"),
-                  col("_pos"), col("_slen"), col("_cov"), col("_seg"),
-                  col("_psg"), col("_sk"), col("_pid"),
-                  concat(col("_path"), array(col("_rank"))).as("_path"),
-                  col("_rank").as("_kr"), grpMax.as("_gom"))
-                  ++ statCols: _*)
-                .join(segProbe(freshNor), Seq("_seg"), "left")
-                .withColumn("_nor",
-                  coalesce(col("_gom") + 1L, col("_norF")))
-                .drop("_seg", "_gom", "_norF")
-            } else if (round == 1) {
-              // union path: the one pass that sees the whole index.
+            if (round == 1) {
+              // the one pass that sees the whole index.
               // _nor — the next OLD rank strictly after my round-1
               // group in index order — is a partition-local RUNNING
               // COUNT of old rows (ties included; old reps' round-1
@@ -1211,14 +1032,11 @@ object SuffixArray {
             }
           done = escStats match {
             case Some((ne, _, _)) => ne == 0L
-            case None =>
-              if (debugTiming) System.err.println(
-                "[sa-incr] observation missed; isEmpty fallback")
-              landed.filter(col("_esc")).isEmpty
+            case None => landed.filter(col("_esc")).isEmpty
           }
-          // the observed checkpoint row count is affected-only on every
-          // path (the union path filtered _hasNew above); nRows is the
-          // safe-direction fallback when the observation was missed
+          // the observed checkpoint row count is affected-only (round 1
+          // filtered _hasNew above); nRows is the safe-direction
+          // fallback when the observation was missed
           if (done) {
             fusedLocal = landed
             nAffectedBound = escStats.map(_._3).getOrElse(nRows)
@@ -1237,12 +1055,6 @@ object SuffixArray {
           // therefore a FINAL decline: rounds >= 2 are distributed.
           if (!done && round == 1 && localMaxRows > 0 &&
               escStats.exists(_._3 <= localMaxRows)) {
-            var tSeat = System.nanoTime()
-            def seatMark(label: String): Unit = if (debugTiming) {
-              System.err.println(f"[sa-incr] seat:$label " +
-                f"${(System.nanoTime() - tSeat) / 1e9}%.2f s")
-              tSeat = System.nanoTime()
-            }
             // text fetch + byte-budget agg on a SECOND DRIVER THREAD,
             // overlapping the affected-row collect (the sidecar-stats
             // overlap discipline): the corpus is scanned ONCE, probed
@@ -1268,28 +1080,16 @@ object SuffixArray {
             val aRows = landed.select(col("_new"), col("_or"),
               col("_src"), col("_pos"), col("_kr"), col("_nor"),
               col("_esc")).collect()
-            seatMark("collect-rows")
             val (tf, tBytes) = scala.concurrent.Await.result(tfF,
               scala.concurrent.duration.Duration.Inf)
-            seatMark("text-budget")
             if (tBytes <= localMaxBytes) {
               val texts = tf.collect().iterator.map(r => r.getString(0) ->
                 r.getString(1).getBytes(
                   java.nio.charset.StandardCharsets.UTF_8)).toMap
               tf.unpersist(blocking = false)
-              seatMark("collect-texts")
               localResolved = Some(resolveDeltaLocal(aRows, texts, rMax))
-              seatMark("resolve")
               done = true
-              if (debugTiming) System.err.println(
-                s"[sa-incr] delta-local seat: rows=${aRows.length} " +
-                  s"textBytes=$tBytes")
-            } else {
-              tf.unpersist(blocking = false)
-              if (debugTiming) System.err.println(
-                s"[sa-incr] delta-local seat declined: textBytes=" +
-                  s"$tBytes > $localMaxBytes")
-            }
+            } else tf.unpersist(blocking = false)
           }
           if (!done && tokTable == null)
             tokTable = buildTokTable(
@@ -1326,24 +1126,10 @@ object SuffixArray {
                   (col("_pos") + col("_cov")).cast("int"),
                   segLen.cast("int"))).as("_seg"))
           parted.unpersist(blocking = false)
-          if (debugTiming) System.err.println(
-            f"[sa-incr] round $round rows=$nRows " +
-              f"${(System.nanoTime() - t0) / 1e9}%.2f s done=$done")
         }
       }
       require(done,
         s"suffixRanksIncremental: ties unresolved after $maxRounds rounds")
-      // the successor-table warmer has surely finished by now; joining
-      // it here keeps the `finally` sweep from racing a live job
-      if (freshNorWarm != null)
-        scala.concurrent.Await.result(freshNorWarm,
-          scala.concurrent.duration.Duration.Inf)
-      var tMark = System.nanoTime()
-      def mark(label: String): Unit = if (debugTiming) {
-        System.err.println(
-          f"[sa-incr] $label ${(System.nanoTime() - tMark) / 1e9}%.2f s")
-        tMark = System.nanoTime()
-      }
       // dup-output probe placement is INDEPENDENT of the class-table
       // stitches below — its one agg job (and the newMembers cache fill
       // it triggers) overlaps them on a second driver thread instead of
@@ -1365,8 +1151,8 @@ object SuffixArray {
       // rank order IS content order). Classes with any new member never
       // share a rank with a split (group stats are group-uniform), so
       // _ls = 0 for them and every downstream join on _lr alone stays
-      // exact. When NO round ever landed (an empty delta through the
-      // probe seat) there are no affected rows at all — an empty frame
+      // exact. When NO round ever landed (an empty delta into an empty
+      // index) there are no affected rows at all — an empty frame
       // of the right shape feeds the class machinery, and every derived
       // table is empty by construction.
       // earlier rounds' frozen checkpoints were re-ranked INTO the
@@ -1418,7 +1204,6 @@ object SuffixArray {
           col("_src"), col("_pos"), lit(0L).as("_nor"),
           lit(0L).as("_lr"), lit(0L).as("_ls"),
           lit(0).as("_pid"), lit(1).as("_first"), lit(0).as("_hasN"))
-      mark("fused-local")
       // ---- class table: one row per affected CLASS (equal terminal
       // (_lr, _ls) = rows tied forever = one dense-rank class). A class
       // holds at most one old rank (landed ranks are dense over distinct
@@ -1447,7 +1232,6 @@ object SuffixArray {
         .collect()
         .map(r => (r.getInt(0),
           if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getLong(2)))
-      mark("cstats")
       val naTails = (0 until nParts).map { p =>
         cstats.filter(_._1 > p).flatMap(_._2)
           .reduceOption(_ min _).getOrElse(rMax + 1)
@@ -1493,7 +1277,6 @@ object SuffixArray {
       val jump2 = jparted.withColumn("_tn",
         coalesce(lead(col("_t"), 1).over(wLead),
           tailMinExpr(jparted, "_t", nParts, rMax + 1)))
-      mark("tailmin")
       // persisted: consumed by both the anchored-class join below and
       // the corpus-sized shift in the shared output phase
       val mapping = Caches.operatorPersist(expandMapping(jump2))
@@ -1554,7 +1337,6 @@ object SuffixArray {
           val live = jumps.filter(_._1 <= rMax)
           val ts = live.map(_._1).toArray
           val ins = live.map(_._2).toArray
-          mark("delta-local-frames")
           val f = (df: DataFrame) => df.select(col(idCol), col("pos"),
             (col("suffix_rank") + graft.plans.StepLookup(
               col("suffix_rank"), ts, ins)).as("suffix_rank"))
@@ -1579,7 +1361,6 @@ object SuffixArray {
       // itself.
       val dupProbe = scala.concurrent.Await.result(dupProbeF,
         scala.concurrent.duration.Duration.Inf)
-      mark("dup-probe")
       val dupSel = ranks.withColumnRenamed(idCol, "_odoc")
         .join(dupProbe, Seq("_odoc"))
         .select(col("_doc").as(idCol), col("pos"), col("suffix_rank"))

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * Seat (round 17, r16 verdict #3): the incremental-SA output shift. When
   * the delta-local seat engaged, the insertion-offset jump table is
   * already a driver array bounded by the seat's own engagement budget
-  * (<= one jump per new-only class <= `saIncr.localMaxRows`), yet the
+  * (<= one jump per new-only class <= `SuffixArray.LocalMaxRows`), yet the
   * round-16 output phase re-entered it as a DataFrame, expanded it to one
   * row PER OLD RANK (rMax rows — corpus-index-sized, 2.9M at the 10x
   * vintage) and shuffled/broadcast that against the corpus-sized output.

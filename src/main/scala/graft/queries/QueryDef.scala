@@ -31,8 +31,11 @@ object QueryDef {
     QueryDef(name, fn, oracle, dynOracle, headline = true)
 }
 
+/** Built once per JVM: every lookup (Bench resolves each query by name
+  * inside its timed interval) reads the same maps instead of rebuilding
+  * all entries and rendering every static oracle string. */
 object Catalog {
-  def all: Seq[QueryDef] =
+  lazy val all: Seq[QueryDef] =
     ReferenceQueries.defs ++ RelationalQueries.defs ++ TextQueries.defs ++
       QualityQueries.defs ++ DedupQueries.defs ++ EmbeddingQueries.defs ++
       SketchQueries.defs ++ SamplingQueries.defs ++
@@ -41,12 +44,12 @@ object Catalog {
   /** The entries `graft.Bench` times by default, in catalog order. */
   def headline: Seq[String] = all.filter(_.headline).map(_.name)
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(d => d.name -> d.fn).toMap
 
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     all.flatMap(d => d.oracle.map(d.name -> _)).toMap
 
-  def dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  lazy val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     all.flatMap(d => d.dynOracle.map(d.name -> _)).toMap
 }

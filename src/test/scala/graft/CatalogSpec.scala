@@ -39,6 +39,29 @@ class CatalogSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"headline names without a catalog entry: $missing")
   }
 
+  test("the library reads no spark.graft.* session conf key but the checkpoint dir") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
+    // any string literal naming a key, interpolated or concatenated forms
+    // included ("spark.graft." + k, s"spark.graft.$k")
+    val literal = "\"spark\\.graft\\.[^\"]*\"".r
+    val walk = Files.walk(root)
+    val found =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .flatMap { f =>
+          val src = new String(Files.readAllBytes(f),
+            java.nio.charset.StandardCharsets.UTF_8)
+          literal.findAllIn(src).map(root.relativize(f).toString -> _)
+        }.toList
+      finally walk.close()
+    val dirKey = "\"" + graft.functions.Checkpoints.DirKey + "\""
+    assert(found.exists(_._2 == dirKey), s"scanner missed $dirKey: $found")
+    val others = found.filterNot(_._2 == dirKey)
+    assert(others.isEmpty, s"spark.graft.* keys besides the checkpoint dir: $others")
+  }
+
   test("no query carries both a static and a dynamic oracle") {
     val both = SparkEntry.oracleSql.keySet
       .intersect(SparkEntry.dynamicOracleSql.keySet)

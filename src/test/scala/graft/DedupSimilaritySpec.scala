@@ -947,6 +947,34 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
   }
 
+  /** (doc_id, pos) -> suffix_rank of a suffix-array frame. */
+  private def rankMap(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
+
+  /** The incremental merge of `delta` into a fresh build over `old`,
+    * under the delta-local seat budget (rows, UTF-8 text bytes). */
+  private def merged(old: org.apache.spark.sql.DataFrame,
+      delta: org.apache.spark.sql.DataFrame, budget: (Long, Long)) = {
+    import graft.functions.SuffixArray
+    val base = SuffixArray.suffixRanks(old, "doc_id", "text", nParts = 4)
+    rankMap(SuffixArray.mergeFrom(
+      SuffixArray.suffixMergeReps(base, old, "doc_id", "text"), base, old,
+      delta, "doc_id", "text", nParts = 4, localMaxRows = budget._1,
+      localMaxBytes = budget._2))
+  }
+
+  /** The merge's three terminal paths: the default (delta-local seat —
+    * every fixture below is driver-sized, so it engages), the forced
+    * DISTRIBUTED rounds (the 100-TB path past the driver budget must not
+    * rot behind small fixtures), and the round-1 byte-budget DECLINE
+    * (the seat measures, declines, and falls through mid-loop). */
+  private def mergePaths = {
+    import graft.functions.SuffixArray.{LocalMaxBytes, LocalMaxRows}
+    Seq("default" -> (LocalMaxRows, LocalMaxBytes),
+      "distributed" -> (0L, LocalMaxBytes),
+      "decline" -> (LocalMaxRows, 0L))
+  }
+
   test("suffixRanksIncremental: merge == full rebuild across every delta shape") {
     import graft.functions.SuffixArray
     val oldDocs = Seq(
@@ -963,26 +991,36 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (15L, "n a b"),             // proper prefix of an old text
       (16L, "A a n")).toDF("doc_id", "text") // 'A' < 'a': suffixes
       // inserting BEFORE every old rank (the t=1 / offset-at-origin seat)
-    val base = SuffixArray.suffixRanks(oldDocs, "doc_id", "text", nParts = 4)
-    val want = SuffixArray.suffixRanks(oldDocs.unionAll(delta),
-        "doc_id", "text", nParts = 4)
-      .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-    // three seats against ONE rebuild oracle (round 16): the default
-    // (delta-local — this fixture is driver-sized, so the seat engages),
-    // the forced-DISTRIBUTED rounds (localMaxRows=0 — the 100-TB seat
-    // must not rot behind small-fixture tests), and the byte-budget
-    // DECLINE path (localMaxBytes=0: the seat measures, declines, and
-    // falls through to the distributed rounds mid-loop)
-    for ((conf, v) <- Seq("spark.graft.saIncr.localMaxRows" -> "0",
-        "spark.graft.saIncr.localMaxBytes" -> "0", "" -> "")) {
-      if (conf.nonEmpty) spark.conf.set(conf, v)
-      try {
-        val got = SuffixArray.suffixRanksIncremental(base, oldDocs, delta,
-            "doc_id", "text", nParts = 4)
-          .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2))
-          .toMap
-        assert(got == want, s"seat variant [$conf=$v]")
-      } finally if (conf.nonEmpty) spark.conf.unset(conf)
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    // non-BMP pin: supplementary-plane U+1F600 (UTF-8 F0..) and U+E000
+    // (UTF-8 EE..) sort DIFFERENTLY under Java's UTF-16 code-unit order
+    // (surrogate 0xD83D < 0xE000) vs Spark's binary UTF-8 (F0 > EE) —
+    // the delta-local seat's driver comparator must follow the engine
+    val emo = "\uD83D\uDE00" // U+1F600 as a surrogate pair
+    val pua = "\uE000"         // private-use BMP, 3-byte UTF-8
+    val uniOld = Seq(
+      (1L, s"$pua a b"), (2L, s"$emo a b"), (3L, s"z $pua $emo"),
+      (4L, s"a $emo $pua b")).toDF("doc_id", "text")
+    val uniDelta = Seq(
+      (10L, s"$emo z"), (11L, s"$pua $emo q"), (12L, s"$emo a b"),
+      (13L, s"$pua$pua c")).toDF("doc_id", "text")
+    // null texts have no suffixes; an empty text is one empty suffix
+    val nullOld = Seq[(Long, String)]((1L, "a b c"), (2L, null), (3L, ""),
+      (4L, "b c")).toDF("doc_id", "text")
+    val nullDelta = Seq[(Long, String)]((10L, null), (11L, ""),
+      (12L, "a b d"), (13L, "c")).toDF("doc_id", "text")
+    val shapes = Seq(
+      ("mixed delta", oldDocs, delta),
+      ("empty delta", oldDocs, empty),
+      ("non-BMP", uniOld, uniDelta),
+      ("empty old corpus", empty, delta),
+      ("empty old corpus, empty delta", empty, empty),
+      ("null and empty texts", nullOld, nullDelta))
+    for ((shape, old, d) <- shapes) {
+      val want = rankMap(SuffixArray.suffixRanks(old.unionAll(d),
+        "doc_id", "text", nParts = 4))
+      for ((path, budget) <- mergePaths)
+        assert(merged(old, d, budget) == want, s"[$shape] via $path")
     }
   }
 
@@ -991,181 +1029,37 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // = next old rank after the round-1 group). After a round-2+ split,
     // anchored sibling subgroups of the same round-1 group can rank
     // between a new-only class and _nor — only the distributed seat's
-    // global window sees them — so an engagement at round >= 2 would be
-    // silently wrong. The fix guards the attempt with round == 1; this
-    // fixture makes the guard observable: a 200-token repeated prefix
-    // forces a >= 3-round merge (full need 193 > 16x the seedK-8
-    // coverage, so round 2 takes the geometric fetch and still
-    // escalates), and localMaxBytes=10 declines round 1 on bytes while
-    // round 2's shrunken escalator set would fit a naive re-attempt.
+    // global window sees them — so an engagement at round >= 2 returns
+    // wrong ranks, and the seat is attempted at round 1 only. This
+    // fixture makes a round-2 engagement possible and wrong:
+    //   - the 200-token repeated prefix forces a >= 3-round merge (full
+    //     need 193 > 16x the seedK-8 coverage, so round 2 takes the
+    //     geometric fetch and still escalates), and round 2 splits the
+    //     "a" group so that new-only "a^k z" classes sit right before
+    //     old "a^(k-1) x" anchors in OTHER round-2 groups;
+    //   - the "h" pair escalates in round 1 only, and its ~3 KB old text
+    //     puts round 1's escalator bytes (~4.3 KB) over the 2 KB budget
+    //     while round 2's (~1.2 KB, the three "a" texts) fit under it.
     import graft.functions.SuffixArray
     val prefix = Seq.fill(200)("a").mkString(" ")
+    val h8 = Seq.fill(8)("h").mkString(" ")
+    val longTail = (1 to 20).map(i => s"w$i" + "q" * 148).mkString(" ")
     val oldDocs = Seq(
       (1L, s"$prefix x"),
       (2L, s"$prefix y"),
-      (3L, "b c d")).toDF("doc_id", "text")
+      (3L, s"$h8 $longTail"),
+      (4L, "b c d")).toDF("doc_id", "text")
     val delta = Seq(
       (10L, s"$prefix z"),
-      (11L, "b c q")).toDF("doc_id", "text")
-    val base = SuffixArray.suffixRanks(oldDocs, "doc_id", "text", nParts = 4)
-    val want = SuffixArray.suffixRanks(oldDocs.unionAll(delta),
-        "doc_id", "text", nParts = 4)
-      .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val errBuf = new java.io.ByteArrayOutputStream()
-    val oldErr = System.err
-    spark.conf.set("spark.graft.saIncr.localMaxBytes", "10")
-    spark.conf.set("spark.graft.debugTiming", "true")
-    System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
-    try {
-      val got = SuffixArray.suffixRanksIncremental(base, oldDocs, delta,
-          "doc_id", "text", nParts = 4)
-        .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2))
-        .toMap
-      assert(got == want)
-    } finally {
-      System.setErr(oldErr)
-      spark.conf.unset("spark.graft.saIncr.localMaxBytes")
-      spark.conf.unset("spark.graft.debugTiming")
-    }
-    val err = errBuf.toString("UTF-8")
-    // the attempt ran exactly once (round 1) and declined on bytes
-    val declines = "delta-local seat declined".r.findAllIn(err).size
-    assert(declines == 1, s"expected one round-1 decline, saw $declines")
-    // and the seat never engaged afterwards
-    assert(!err.contains("delta-local seat: rows="),
-      "seat engaged after a round-1 decline — the round guard is gone")
-  }
-
-  test("suffixRanksIncremental: PROBE round-1 == union round-1 == rebuild on the same fixtures") {
-    // the adaptive switch picks union-rank on these tiny fixtures
-    // (index ~ delta); force the probe seat so both round-1 forms stay
-    // pinned to the same rebuild oracle
-    import graft.functions.SuffixArray
-    val oldDocs = Seq(
-      (1L, "b a n a n a"),
-      (2L, "a n a b"),
-      (3L, "b a n a n a"),
-      (4L, "n a b a")).toDF("doc_id", "text")
-    val delta = Seq(
-      (10L, "b a n a n a"),
-      (11L, "b a n a n a q"),
-      (12L, "a n a b"),
-      (13L, "c c c"),
-      (14L, "b a n a n a q"),
-      (15L, "n a b"),
-      (16L, "A a n")).toDF("doc_id", "text")
-    val base = SuffixArray.suffixRanks(oldDocs, "doc_id", "text", nParts = 4)
-    val want = SuffixArray.suffixRanks(oldDocs.unionAll(delta),
-        "doc_id", "text", nParts = 4)
-      .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-    spark.conf.set("spark.graft.saIncr.probeRatio", "0")
-    try {
-      val got = SuffixArray.suffixRanksIncremental(base, oldDocs, delta,
-          "doc_id", "text", nParts = 4)
-        .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-      assert(got == want)
-      // degenerate deltas through the probe seat too
-      val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-      val gotEmpty = SuffixArray.suffixRanksIncremental(base, oldDocs,
-          empty, "doc_id", "text", nParts = 4).count()
-      assert(gotEmpty == base.count())
-      // non-BMP pin: supplementary-plane U+1F600 (UTF-8 F0..) and
-      // U+E000 (UTF-8 EE..) sort DIFFERENTLY under Java's UTF-16
-      // code-unit order (surrogate 0xD83D < 0xE000) vs Spark's binary
-      // UTF-8 (F0 > EE) — the probe's boundary table must follow the
-      // engine's rank order or fresh prefixes land in wrong buckets.
-      // step=1 on this fixture, so EVERY old rank is a boundary.
-      val emo = "\uD83D\uDE00" // U+1F600 as a surrogate pair
-      val pua = "\uE000"         // private-use BMP, 3-byte UTF-8
-      val uniOld = Seq(
-        (1L, s"$pua a b"), (2L, s"$emo a b"), (3L, s"z $pua $emo"),
-        (4L, s"a $emo $pua b")).toDF("doc_id", "text")
-      val uniDelta = Seq(
-        (10L, s"$emo z"), (11L, s"$pua $emo q"), (12L, s"$emo a b"),
-        (13L, s"$pua$pua c")).toDF("doc_id", "text")
-      val uniBase = SuffixArray.suffixRanks(uniOld, "doc_id", "text",
-        nParts = 4)
-      val uniWant = SuffixArray.suffixRanks(uniOld.unionAll(uniDelta),
-          "doc_id", "text", nParts = 4)
-        .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2))
-        .toMap
-      // the non-BMP pin runs through BOTH terminal seats: the default
-      // delta-local (its driver comparator must use UTF-8 byte order,
-      // not java.lang.String UTF-16 order — exactly this fixture's
-      // divergence) and the forced-distributed rounds
-      for (localRows <- Seq(None, Some("0"))) {
-        localRows.foreach(v =>
-          spark.conf.set("spark.graft.saIncr.localMaxRows", v))
-        try {
-          val uniGot = SuffixArray.suffixRanksIncremental(uniBase, uniOld,
-              uniDelta, "doc_id", "text", nParts = 4)
-            .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2))
-            .toMap
-          assert(uniGot == uniWant, s"localMaxRows=$localRows")
-        } finally if (localRows.isDefined)
-          spark.conf.unset("spark.graft.saIncr.localMaxRows")
-      }
-    } finally spark.conf.unset("spark.graft.saIncr.probeRatio")
-  }
-
-  test("suffixRanksIncremental: PROBE seat never exchanges index-sized rows (shuffle-record census)") {
-    // The probe path's defining property — the billion-rank claim rests
-    // on it: the landed index is SCANNED and probed against broadcast
-    // delta frames, never ranked or exchanged. Pin it behaviorally: a
-    // QueryProfile window records shuffle-write records per stage across the
-    // whole forced-probe merge (consumed with the bench's no-sort hash
-    // action); no stage may shuffle even half the index's row count,
-    // while the forced-UNION contrast run must (its round 1 range-ranks
-    // the sidecar) — so the assertion fails loudly if the census were
-    // measuring nothing.
-    import graft.functions.SuffixArray
-    val oldDocs = (1L to 60L).map(d => (d,
-      (0 until 30).map(i => s"t${(d * 31 + i * 7) % 97}x$i")
-        .mkString(" "))).toDF("doc_id", "text")
-    val delta = Seq((1000L, "t11x0 t18x1 fresh tail")).toDF("doc_id", "text")
-    // both index artifacts LANDED, as in production: the sidecar's own
-    // derivation shuffles the index once at build time (offline); the
-    // merge under test must then only SCAN the files
-    val dir = graft.queries.Artifacts.scratchPath("probe-census", "spec")
-    SuffixArray.suffixRanks(oldDocs, "doc_id", "text", nParts = 4)
-      .write.mode("overwrite").parquet(s"$dir/base")
-    val base = spark.read.parquet(s"$dir/base")
-    SuffixArray.suffixMergeReps(base, oldDocs, "doc_id", "text")
-      .drop("_seedk")
-      .write.mode("overwrite").parquet(s"$dir/reps")
-    val reps = spark.read.parquet(s"$dir/reps")
-    val indexRows = base.count() // == suffix positions == rank rows upper bound
-    def consume(df: org.apache.spark.sql.DataFrame): Unit = {
-      df.select(xxhash64(col("doc_id"), col("pos"), col("suffix_rank"))
-        .as("h")).agg(bit_xor(col("h"))).head()
-      ()
-    }
-    def censusOf(path: String): Long = {
-      spark.conf.set("spark.graft.saIncr.probeRatio",
-        if (path == "probe") "0" else Long.MaxValue.toString)
-      if (path != "probe")
-        spark.conf.set("spark.graft.saIncr.probeMinIndex",
-          Long.MaxValue.toString)
-      val profile = graft.observability.QueryProfile.install(spark)
-      try {
-        val (_, record) = profile.window(consume(
-          SuffixArray.suffixRanksIncrementalFrom(reps, base,
-            oldDocs, delta, "doc_id", "text", nParts = 4)))
-        record.stages.map(_.shuffleRecordsWritten).maxOption.getOrElse(0L)
-      } finally {
-        profile.close()
-        spark.conf.unset("spark.graft.saIncr.probeRatio")
-        spark.conf.unset("spark.graft.saIncr.probeMinIndex")
-      }
-    }
-    val probeMax = censusOf("probe")
-    val unionMax = censusOf("union")
-    assert(unionMax >= indexRows,
-      s"census sanity: forced-union must shuffle the index " +
-        s"(union=$unionMax index=$indexRows)")
-    assert(probeMax < indexRows / 2,
-      s"probe seat exchanged index-sized rows: probe=$probeMax " +
-        s"index=$indexRows (union contrast=$unionMax)")
+      (11L, s"$h8 k"),
+      (12L, "b c q")).toDF("doc_id", "text")
+    val want = rankMap(SuffixArray.suffixRanks(oldDocs.unionAll(delta),
+      "doc_id", "text", nParts = 4))
+    assert(merged(oldDocs, delta, (SuffixArray.LocalMaxRows, 2000L)) == want,
+      "a round-1 decline re-attempted the delta-local seat in round >= 2")
+    // the same fixture through the other two paths
+    for ((path, budget) <- mergePaths)
+      assert(merged(oldDocs, delta, budget) == want, path)
   }
 
   test("suffixRanksIncremental: degenerate deltas — empty delta, all-dup delta") {
