@@ -404,10 +404,11 @@ object Stats {
       (g, f, b, rem)
     }
     val boundary = targets.map(t => (t._1, t._3)).toSet
+    // no rows means no groups and no boundary: the fine pass selects nothing
     val fine = base
       .filter(boundary.map { case (g, b) =>
         col("_g") === lit(g) && bucket === lit(b)
-      }.reduce(_ || _))
+      }.reduceOption(_ || _).getOrElse(lit(false)))
       .groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c"))
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))

@@ -226,11 +226,17 @@ object TextAnalysis {
     * single-row totals aggregate (broadcast — two longs), and a final
     * groupBy doc. */
   def perplexity(df: DataFrame, idCol: String, textCol: String,
-      headPct: Int = 100, tailPct: Int = 102): DataFrame = {
+      headPct: Int = 100, tailPct: Int = 102): DataFrame =
+    pplBuckets(unigramScores(df, idCol, textCol), "n_tokens", headPct, tailPct)
+
+  /** The scoring half of [[perplexity]]: (id, n_tokens, logprob_micronats)
+    * per document with at least one token, no bucket. */
+  private def unigramScores(df: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
     // persisted: toks feeds the LM count aggregate AND the score join;
     // uncached the corpus explode runs twice
-    val toks = df.select(col(idCol), explode(split(col(textCol), " ")).as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = Caches.operatorPersist(
+      df.select(col(idCol), explode(split(col(textCol), " ")).as("t")))
     val cnt = toks.groupBy(col("t")).agg(count(lit(1)).as("c"))
     val tot = cnt.agg(sum(col("c")).cast("long").as("n_total"),
       count(lit(1)).as("v"))
@@ -239,27 +245,80 @@ object TextAnalysis {
       .withColumn("m",
         floor(log((col("c") + 1).cast("double") / (col("n_total") + col("v")))
           * 1e6 + 0.5).cast("long"))
-    // persisted: the cutoff computation below materializes agg with an
-    // action, and the returned frame re-reads it — uncached, the whole LM
-    // pipeline (train + score join) would run twice end-to-end
-    val agg = scored.groupBy(col(idCol))
+    scored.groupBy(col(idCol))
       .agg(count(lit(1)).cast("int").as("n_tokens"),
         sum(col("m")).as("logprob_micronats"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // corpus mean surprisal: a single two-long aggregate (metadata-sized);
-    // exact integer floor division keeps the cutoffs engine-reproducible
+  }
+
+  /** The corpus-relative head/middle/tail cut of the self-trained scorers
+    * ([[perplexity]] and the bigram / KN / KN3 forms): a row is `head`
+    * when its mean surprisal -logprob_micronats / `nCol` is <= headPct% of
+    * the corpus mean, `middle` up to tailPct%, else `tail`. The corpus mean
+    * is ONE two-long aggregate (a driver action, so `scored` is persisted:
+    * the returned frame re-reads it), floored in exact integer arithmetic
+    * so any engine reproduces the cuts bit-for-bit; per row the test is the
+    * integer form -logprob <= n × cut. A corpus with no rows, or with
+    * `nCol` summing to 0, has no mean: both cuts are NULL — what the
+    * oracle's `//` by zero gives — so every row is `tail`. */
+  private def pplBuckets(scored: DataFrame, nCol: String, headPct: Int,
+      tailPct: Int): DataFrame = {
+    val agg = Caches.operatorPersist(scored)
     val row = agg.agg(
       sum(lit(0L) - col("logprob_micronats")).as("slp"),
-      sum(col("n_tokens").cast("long")).as("sn")).head()
-    val (slpNeg, sn) = (row.getLong(0), row.getLong(1))
-    val headCut = (BigInt(headPct) * slpNeg / (BigInt(100) * sn)).toLong
-    val tailCut = (BigInt(tailPct) * slpNeg / (BigInt(100) * sn)).toLong
+      sum(col(nCol).cast("long")).as("sn")).head()
+    def cut(pct: Int): Column =
+      if (row.isNullAt(1) || row.getLong(1) == 0L) lit(null).cast("long")
+      else lit((BigInt(pct) * row.getLong(0) /
+        (BigInt(100) * row.getLong(1))).toLong)
+    val nlp = lit(0L) - col("logprob_micronats")
     agg.withColumn("ppl_bucket",
-      when((lit(0L) - col("logprob_micronats")) <=
-          col("n_tokens") * lit(headCut), lit("head"))
-        .when((lit(0L) - col("logprob_micronats")) <=
-          col("n_tokens") * lit(tailCut), lit("middle"))
+      when(nlp <= col(nCol) * cut(headPct), lit("head"))
+        .when(nlp <= col(nCol) * cut(tailPct), lit("middle"))
         .otherwise(lit("tail")))
+  }
+
+  /** Every n-gram of each document's whitespace tokens — n = 2 as (prev,
+    * cur), n = 3 as (w1, w2, w3) — with `keyCols` riding along, and the
+    * 1-based start index `_i` when `keepIndex`. The one transitions
+    * extractor of the LM family. The text is split ONCE per document and
+    * the token array rides through the explode, so each n-gram is n
+    * element_at reads (re-splitting per emitted row would be quadratic in
+    * the document length). Documents shorter than n emit no row. */
+  private def ngramTransitions(df: DataFrame, textCol: String, n: Int,
+      keyCols: Seq[String], keepIndex: Boolean = false): DataFrame = {
+    require(n == 2 || n == 3, "ngramTransitions: n in {2, 3}")
+    val keys = keyCols.map(col)
+    val names = if (n == 2) Seq("prev", "cur") else Seq("w1", "w2", "w3")
+    df.select(keys :+ split(col(textCol), " ").as("_toks"): _*)
+      .select(keys ++ Seq(
+        explode(when(size(col("_toks")) >= n,
+            sequence(lit(1), size(col("_toks")) - (n - 1)))
+          .otherwise(array().cast("array<int>"))).as("_i"),
+        col("_toks")): _*)
+      .select(keys ++ (if (keepIndex) Seq(col("_i")) else Nil) ++
+        names.zipWithIndex.map { case (w, k) =>
+          element_at(col("_toks"), if (k == 0) col("_i") else col("_i") + k)
+            .as(w)
+        }: _*)
+  }
+
+  /** The per-document fold every transition scorer ends with: aggregate
+    * `scored` by `idCol`, then LEFT JOIN it from `docs` so a document with
+    * no transitions keeps its row, every column coalesced to 0 — `counts`
+    * as INT, `sums` as BIGINT, in that order. The aggregate is
+    * per-document, i.e. corpus-sized, so the join stays partitioned
+    * (toy-scale stats would broadcast it). */
+  private def perDocFold(scored: DataFrame, docs: DataFrame, idCol: String,
+      counts: Seq[(String, Column)], sums: Seq[(String, Column)]): DataFrame = {
+    val aggs = (counts ++ sums).map { case (name, c) => c.as(name) }
+    val agg0 = scored.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
+    docs.select(col(idCol))
+      .join(agg0.hint("shuffle_hash"), Seq(idCol), "left")
+      .select(col(idCol) +: (
+        counts.map { case (name, _) =>
+          coalesce(col(name), lit(0L)).cast("int").as(name) } ++
+        sums.map { case (name, _) =>
+          coalesce(col(name), lit(0L)).as(name) }): _*)
   }
 
   /** Bigram counterpart of [[perplexity]]: per-document log-probability of
@@ -274,24 +333,18 @@ object TextAnalysis {
     * cutoffs from one two-long aggregate, vocabulary-sized count sides
     * shuffle-hash-joined (never broadcast; only the single-row V total
     * broadcasts). Documents with fewer than 2 tokens have no transitions:
-    * they carry (0, 0) and land in `head` (0 <= 0). */
+    * they carry (0, 0) and land in `head` (0 <= 0), or in `tail` when
+    * no document has a transition ([[pplBuckets]]). */
   def perplexityBigram(df: DataFrame, idCol: String, textCol: String,
       headPct: Int = 100, tailPct: Int = 102): DataFrame = {
-    val withT = df.select(col(idCol), split(col(textCol), " ").as("_toks"))
-    val trans = withT
-      .select(col(idCol),
-        explode(when(size(col("_toks")) >= 2,
-            sequence(lit(1), size(col("_toks")) - 1))
-          .otherwise(array().cast("array<int>"))).as("_i"),
-        col("_toks"))
-      .select(col(idCol), element_at(col("_toks"), col("_i")).as("prev"),
-        element_at(col("_toks"), col("_i") + 1).as("cur"))
-      // persisted: trans feeds the bigram counts, the context counts, AND
-      // the score join — three corpus-explode evaluations uncached
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // persisted: trans feeds the bigram counts, the context counts, AND
+    // the score join — three corpus-explode evaluations uncached
+    val trans = Caches.operatorPersist(
+      ngramTransitions(df, textCol, 2, Seq(idCol)))
     val bcnt = trans.groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("bc"))
     val ccnt = trans.groupBy(col("prev")).agg(count(lit(1)).as("cc"))
-    val vocab = withT.select(explode(col("_toks")).as("t"))
+    val vocab = df.select(split(col(textCol), " ").as("_toks"))
+      .select(explode(col("_toks")).as("t"))
       .agg(countDistinct(col("t")).as("v"))
     val scored = trans
       .join(bcnt.hint("shuffle_hash"), Seq("prev", "cur"))
@@ -300,28 +353,10 @@ object TextAnalysis {
       .withColumn("m",
         floor(log((col("bc") + 1).cast("double") / (col("cc") + col("v")))
           * 1e6 + 0.5).cast("long"))
-    val agg0 = scored.groupBy(col(idCol))
-      .agg(count(lit(1)).as("_nt"), sum(col("m")).as("_lp"))
-    // agg0 is PER-DOCUMENT — corpus-sized, so the docs x agg0 left join
-    // must stay partitioned too (toy-scale stats would broadcast it)
-    val agg = df.select(col(idCol)).join(agg0.hint("shuffle_hash"), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("_nt"), lit(0L)).cast("int").as("n_transitions"),
-        coalesce(col("_lp"), lit(0L)).as("logprob_micronats"))
-      // persisted: materialized for the cutoffs, re-read by the caller
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val row = agg.agg(
-      sum(lit(0L) - col("logprob_micronats")).as("slp"),
-      sum(col("n_transitions").cast("long")).as("sn")).head()
-    val (slpNeg, sn) = (row.getLong(0), row.getLong(1))
-    val headCut = (BigInt(headPct) * slpNeg / (BigInt(100) * sn)).toLong
-    val tailCut = (BigInt(tailPct) * slpNeg / (BigInt(100) * sn)).toLong
-    agg.withColumn("ppl_bucket",
-      when((lit(0L) - col("logprob_micronats")) <=
-          col("n_transitions") * lit(headCut), lit("head"))
-        .when((lit(0L) - col("logprob_micronats")) <=
-          col("n_transitions") * lit(tailCut), lit("middle"))
-        .otherwise(lit("tail")))
+    pplBuckets(perDocFold(scored, df, idCol,
+        Seq("n_transitions" -> count(lit(1))),
+        Seq("logprob_micronats" -> sum(col("m")))),
+      "n_transitions", headPct, tailPct)
   }
 
   /** Interpolated Kneser-Ney counterpart of [[perplexityBigram]] — the
@@ -348,34 +383,17 @@ object TextAnalysis {
     * broadcasts behind the persisted score frame. */
   def perplexityKneserNey(df: DataFrame, idCol: String, textCol: String,
       headPct: Int = 100, tailPct: Int = 102): DataFrame = {
-    val withT = df.select(col(idCol), split(col(textCol), " ").as("_toks"))
-    val trans = withT
-      .select(col(idCol),
-        explode(when(size(col("_toks")) >= 2,
-            sequence(lit(1), size(col("_toks")) - 1))
-          .otherwise(array().cast("array<int>"))).as("_i"),
-        col("_toks"))
-      .select(col(idCol), element_at(col("_toks"), col("_i")).as("prev"),
-        element_at(col("_toks"), col("_i") + 1).as("cur"))
-      .transform(Caches.operatorPersist)
-    // bigram TYPE table — the single occurrence-level shuffle; everything
-    // KN needs beyond it aggregates this (much smaller) frame. Persisted:
-    // it feeds the score join, both continuation aggregates, and nb.
-    val bcnt = Caches.operatorPersist(
-      trans.groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("bc")))
-    // per-context: total occurrences c(prev·) and distinct followers
-    // N1+(prev,·) in ONE pass over the type table (sum(bc) == the
-    // occurrence count, count(*) == the type count)
-    val ctx = bcnt.groupBy(col("prev"))
-      .agg(sum(col("bc")).as("cc"), count(lit(1)).as("fol"))
-    val pred = bcnt.groupBy(col("cur")).agg(count(lit(1)).as("pre"))
-    val nb = bcnt.agg(count(lit(1)).as("nb"))
+    val trans = Caches.operatorPersist(
+      ngramTransitions(df, textCol, 2, Seq(idCol)))
+    // the type tables [[knBigramTrain]] lands; only nb of the totals is
+    // read (the self-trained form is closed-vocabulary)
+    val lm = knBigramTables(trans)
     val dec = "decimal(38,0)"
     val scored = trans
-      .join(bcnt.hint("shuffle_hash"), Seq("prev", "cur"))
-      .join(ctx.hint("shuffle_hash"), Seq("prev"))
-      .join(pred.hint("shuffle_hash"), Seq("cur"))
-      .crossJoin(broadcast(nb))
+      .join(lm.bigrams.hint("shuffle_hash"), Seq("prev", "cur"))
+      .join(lm.ctx.hint("shuffle_hash"), Seq("prev"))
+      .join(lm.pre.hint("shuffle_hash"), Seq("cur"))
+      .crossJoin(broadcast(lm.tot.select(col("nb"))))
       .withColumn("_num",
         (col("bc").cast(dec) * 4 - 3) * col("nb").cast(dec) +
           col("fol").cast(dec) * col("pre").cast(dec) * 3)
@@ -383,27 +401,91 @@ object TextAnalysis {
       .withColumn("m",
         floor(log(col("_num").cast("double") / col("_den").cast("double"))
           * 1e6 + 0.5).cast("long"))
-    val agg0 = scored.groupBy(col(idCol))
-      .agg(count(lit(1)).as("_nt"), sum(col("m")).as("_lp"))
-    // agg0 is PER-DOCUMENT — corpus-sized, the left join stays partitioned
-    val agg = df.select(col(idCol))
-      .join(agg0.hint("shuffle_hash"), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("_nt"), lit(0L)).cast("int").as("n_transitions"),
-        coalesce(col("_lp"), lit(0L)).as("logprob_micronats"))
-      .transform(Caches.operatorPersist)
-    val row = agg.agg(
-      sum(lit(0L) - col("logprob_micronats")).as("slp"),
-      sum(col("n_transitions").cast("long")).as("sn")).head()
-    val (slpNeg, sn) = (row.getLong(0), row.getLong(1))
-    val headCut = (BigInt(headPct) * slpNeg / (BigInt(100) * sn)).toLong
-    val tailCut = (BigInt(tailPct) * slpNeg / (BigInt(100) * sn)).toLong
-    agg.withColumn("ppl_bucket",
-      when((lit(0L) - col("logprob_micronats")) <=
-          col("n_transitions") * lit(headCut), lit("head"))
-        .when((lit(0L) - col("logprob_micronats")) <=
-          col("n_transitions") * lit(tailCut), lit("middle"))
-        .otherwise(lit("tail")))
+    pplBuckets(perDocFold(scored, df, idCol,
+        Seq("n_transitions" -> count(lit(1))),
+        Seq("logprob_micronats" -> sum(col("m")))),
+      "n_transitions", headPct, tailPct)
+  }
+
+  /** The LANDED form of the KN bigram LM — the four type tables
+    * [[knBigramTrain]] builds, as plain DataFrames a deployment writes
+    * ONCE ([[knBigramModelWrite]]) and every scoring run reads back
+    * ([[knBigramModelRead]]): the CCNet production shape, where the LM is
+    * a build artifact (KenLM binary in the paper; a parquet quadruple
+    * here) and the per-crawl cost is apply only
+    * ([[perplexityKneserNeyApplyModel]]).
+    * `bigrams` is the type table (prev, cur, bc); `ctx` (prev, cc, fol);
+    * `pre` (cur, pre); `tot` one row (nb, vc). */
+  final case class KnBigramModel(bigrams: DataFrame, ctx: DataFrame,
+      pre: DataFrame, tot: DataFrame)
+
+  /** Train the open-vocabulary KN bigram LM: one occurrence-level
+    * shuffle over TRAIN (the bigram type aggregate), three derived
+    * aggregates over the TYPE table. See [[perplexityKneserNeyApplyModel]]
+    * for the smoothing the tables parameterize. */
+  def knBigramTrain(train: DataFrame, textCol: String): KnBigramModel =
+    knBigramTables(ngramTransitions(train, textCol, 2, Nil))
+
+  /** The KN bigram type tables over a (prev, cur) transitions frame. The
+    * bigram TYPE table is the single occurrence-level shuffle; everything
+    * else aggregates it (much smaller). Persisted: it feeds the score
+    * join, both continuation aggregates and the totals. Per context, the
+    * occurrences c(prev·) and distinct followers N1+(prev,·) come in ONE
+    * pass over the type table (sum(bc) == the occurrence count, count(*)
+    * == the type count). */
+  private def knBigramTables(trans: DataFrame): KnBigramModel = {
+    val bcnt = Caches.operatorPersist(
+      trans.groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("bc")))
+    val ctx = bcnt.groupBy(col("prev"))
+      .agg(sum(col("bc")).as("cc"), count(lit(1)).as("fol"))
+    val pre = bcnt.groupBy(col("cur")).agg(count(lit(1)).as("pre"))
+    val tot = bcnt.agg(count(lit(1)).as("nb"),
+      countDistinct(col("cur")).as("vc"))
+    KnBigramModel(bcnt, ctx, pre, tot)
+  }
+
+  /** On-disk layout of the landed models: table `name` at `$path/name`. */
+  private val KnBigramLayout = Seq("bigrams", "ctx", "pre", "tot")
+  private val Kn3Layout = Seq("trigrams", "ctx2", "cont", "mid", "pre3", "tot")
+
+  private def writeTables(path: String, layout: Seq[String],
+      tables: Seq[DataFrame]): Unit =
+    layout.zip(tables).foreach { case (name, t) =>
+      t.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$path/$name")
+    }
+
+  private def readTables(spark: org.apache.spark.sql.SparkSession,
+      path: String, layout: Seq[String]): Seq[DataFrame] =
+    layout.map(name => spark.read.parquet(s"$path/$name"))
+
+  def knBigramModelWrite(m: KnBigramModel, path: String): Unit =
+    writeTables(path, KnBigramLayout, Seq(m.bigrams, m.ctx, m.pre, m.tot))
+
+  def knBigramModelRead(spark: org.apache.spark.sql.SparkSession,
+      path: String): KnBigramModel = {
+    val Seq(bigrams, ctx, pre, tot) = readTables(spark, path, KnBigramLayout)
+    KnBigramModel(bigrams, ctx, pre, tot)
+  }
+
+  /** The open-vocabulary KN bigram micronat logprob as ONE shared column
+    * expression — the single definition every consumer folds
+    * ([[perplexityKneserNeyApplyModel]] via [[knScoreTransitions]],
+    * [[mooreLewisSelect]] over suffixed columns, the Min-K% audit): a
+    * smoothing change lands once or nowhere. Inputs are the COALESCED
+    * count columns plus the one-row totals. */
+  private def knLogprobMicros(bc: Column, cc: Column, fol: Column,
+      pre: Column, nb: Column, vc: Column): Column = {
+    val dec = "decimal(38,0)"
+    val nbv = (nb + vc + 1).cast(dec)
+    val num = greatest(bc.cast(dec) * 4 - 3, lit(0).cast(dec)) * nbv +
+      fol.cast(dec) * 3 * (pre.cast(dec) + 1)
+    val den = cc.cast(dec) * 4 * nbv
+    when(cc > 0,
+      floor(log(num.cast("double") / den.cast("double")) * 1e6 + 0.5)
+        .cast("long"))
+      .otherwise(floor(log((pre.cast("double") + 1.0) /
+        nbv.cast("double")) * 1e6 + 0.5).cast("long"))
   }
 
   /** TRAIN/APPLY Kneser-Ney bigram scoring — the production CCNet shape
@@ -429,112 +511,21 @@ object TextAnalysis {
     * filtering run reads next to the score.
     *
     * Scale shape: ONE occurrence-level shuffle over the TRAIN corpus
-    * (the bigram type aggregate — the offline LM build), one over the
-    * APPLY corpus (its transitions); all model-side joins are
-    * vocabulary-sized LEFT shuffle-hash joins (never broadcast — the
-    * vocabulary is unbounded on a web corpus); the single-row totals
-    * broadcast. */
-  def perplexityKneserNeyApply(train: DataFrame, apply: DataFrame,
-      idCol: String, textCol: String): DataFrame =
-    perplexityKneserNeyApplyModel(knBigramTrain(train, textCol), apply,
-      idCol, textCol)
-
-  /** The LANDED form of the KN bigram LM — the four type tables
-    * [[perplexityKneserNeyApply]] trains, as plain DataFrames a
-    * deployment writes ONCE ([[knBigramModelWrite]]) and every scoring
-    * run reads back ([[knBigramModelRead]]): the CCNet production shape,
-    * where the LM is a build artifact (KenLM binary in the paper; a
-    * parquet quadruple here) and the per-crawl cost is apply only.
-    * `bigrams` is the type table (prev, cur, bc); `ctx` (prev, cc, fol);
-    * `pre` (cur, pre); `tot` one row (nb, vc). */
-  final case class KnBigramModel(bigrams: DataFrame, ctx: DataFrame,
-      pre: DataFrame, tot: DataFrame)
-
-  /** Train the open-vocabulary KN bigram LM: one occurrence-level
-    * shuffle over TRAIN (the bigram type aggregate), three derived
-    * aggregates over the TYPE table. See [[perplexityKneserNeyApply]]
-    * for the smoothing the tables parameterize. */
-  def knBigramTrain(train: DataFrame, textCol: String): KnBigramModel = {
-    val bcnt = Caches.operatorPersist(
-      bigramTransitions(train, textCol, idCol = None)
-        .groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("bc")))
-    val ctx = bcnt.groupBy(col("prev"))
-      .agg(sum(col("bc")).as("cc"), count(lit(1)).as("fol"))
-    val pre = bcnt.groupBy(col("cur")).agg(count(lit(1)).as("pre"))
-    val tot = bcnt.agg(count(lit(1)).as("nb"),
-      countDistinct(col("cur")).as("vc"))
-    KnBigramModel(bcnt, ctx, pre, tot)
-  }
-
-  def knBigramModelWrite(m: KnBigramModel, path: String): Unit = {
-    val mode = org.apache.spark.sql.SaveMode.Overwrite
-    m.bigrams.write.mode(mode).parquet(s"$path/bigrams")
-    m.ctx.write.mode(mode).parquet(s"$path/ctx")
-    m.pre.write.mode(mode).parquet(s"$path/pre")
-    m.tot.write.mode(mode).parquet(s"$path/tot")
-  }
-
-  def knBigramModelRead(spark: org.apache.spark.sql.SparkSession,
-      path: String): KnBigramModel =
-    KnBigramModel(spark.read.parquet(s"$path/bigrams"),
-      spark.read.parquet(s"$path/ctx"), spark.read.parquet(s"$path/pre"),
-      spark.read.parquet(s"$path/tot"))
-
-  private def bigramTransitions(df: DataFrame, textCol: String,
-      idCol: Option[String], keepIndex: Boolean = false): DataFrame = {
-    val idCols = idCol.map(col).toSeq
-    val idxCols = if (keepIndex) Seq(col("_i")) else Seq.empty
-    df.select(idCols ++ Seq(
-        explode(when(size(split(col(textCol), " ")) >= 2,
-            sequence(lit(1), size(split(col(textCol), " ")) - 1))
-          .otherwise(array().cast("array<int>"))).as("_i"),
-        split(col(textCol), " ").as("_toks")): _*)
-      .select(idCols ++ idxCols ++ Seq(
-        element_at(col("_toks"), col("_i")).as("prev"),
-        element_at(col("_toks"), col("_i") + 1).as("cur")): _*)
-  }
-
-  /** The open-vocabulary KN bigram micronat logprob as ONE shared column
-    * expression — the single definition every consumer folds
-    * ([[perplexityKneserNeyApplyModel]] via [[knScoreTransitions]],
-    * [[mooreLewisSelect]] over suffixed columns, the Min-K% audit): a
-    * smoothing change lands once or nowhere. Inputs are the COALESCED
-    * count columns plus the one-row totals. */
-  private def knLogprobMicros(bc: Column, cc: Column, fol: Column,
-      pre: Column, nb: Column, vc: Column): Column = {
-    val dec = "decimal(38,0)"
-    val nbv = (nb + vc + 1).cast(dec)
-    val num = greatest(bc.cast(dec) * 4 - 3, lit(0).cast(dec)) * nbv +
-      fol.cast(dec) * 3 * (pre.cast(dec) + 1)
-    val den = cc.cast(dec) * 4 * nbv
-    when(cc > 0,
-      floor(log(num.cast("double") / den.cast("double")) * 1e6 + 0.5)
-        .cast("long"))
-      .otherwise(floor(log((pre.cast("double") + 1.0) /
-        nbv.cast("double")) * 1e6 + 0.5).cast("long"))
-  }
-
-  /** Score an APPLY corpus against a trained (usually landed) bigram
-    * model — the timed half of the train/apply split. One shuffle over
-    * the APPLY transitions; the model sides are vocabulary-sized LEFT
-    * shuffle-hash joins; only the one-row total broadcasts. */
+    * (the bigram type aggregate — the offline LM build,
+    * [[knBigramTrain]]), one over the APPLY corpus (its transitions); all
+    * model-side joins are vocabulary-sized LEFT shuffle-hash joins (never
+    * broadcast — the vocabulary is unbounded on a web corpus); the
+    * single-row totals broadcast. */
   def perplexityKneserNeyApplyModel(model: KnBigramModel, apply: DataFrame,
       idCol: String, textCol: String): DataFrame = {
     // no outer persist: knScoreTransitions registers its own (its types
     // pass + join-back are the frame's two consumers since round 18)
-    val transA = bigramTransitions(apply, textCol, Some(idCol))
-    val scored = knScoreTransitions(model, transA)
-    val agg0 = scored.groupBy(col(idCol))
-      .agg(count(lit(1)).as("_nt"),
-        sum(when(col("_bc") === 0, 1).otherwise(0)).as("_nu"),
-        sum(col("m")).as("_lp"))
-    // agg0 is per-APPLY-document — corpus-sized, the join stays partitioned
-    apply.select(col(idCol))
-      .join(agg0.hint("shuffle_hash"), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("_nt"), lit(0L)).cast("int").as("n_transitions"),
-        coalesce(col("_nu"), lit(0L)).cast("int").as("n_unseen_bigrams"),
-        coalesce(col("_lp"), lit(0L)).as("logprob_micronats"))
+    val scored = knScoreTransitions(model,
+      ngramTransitions(apply, textCol, 2, Seq(idCol)))
+    perDocFold(scored, apply, idCol,
+      Seq("n_transitions" -> count(lit(1)),
+        "n_unseen_bigrams" -> sum(when(col("_bc") === 0, 1).otherwise(0))),
+      Seq("logprob_micronats" -> sum(col("m"))))
   }
 
   /** Interpolated trigram Kneser-Ney — the next rung of
@@ -578,49 +569,23 @@ object TextAnalysis {
     * the single-row nbp total broadcasts. */
   def perplexityKneserNey3(df: DataFrame, idCol: String, textCol: String,
       headPct: Int = 100, tailPct: Int = 102): DataFrame = {
-    val withT = df.select(col(idCol), split(col(textCol), " ").as("_toks"))
-    val trans = withT
-      .select(col(idCol),
-        explode(when(size(col("_toks")) >= 3,
-            sequence(lit(1), size(col("_toks")) - 2))
-          .otherwise(array().cast("array<int>"))).as("_i"),
-        col("_toks"))
-      .select(col(idCol), element_at(col("_toks"), col("_i")).as("w1"),
-        element_at(col("_toks"), col("_i") + 1).as("w2"),
-        element_at(col("_toks"), col("_i") + 2).as("w3"))
-      .transform(Caches.operatorPersist)
-    // trigram TYPE table — the single occurrence-level shuffle; persisted:
-    // feeds the score join, the context aggregate, and the continuation
-    // table
-    val tcnt = Caches.operatorPersist(trans
-      .groupBy(col("w1"), col("w2"), col("w3")).agg(count(lit(1)).as("tc")))
-    // highest order: context occurrences c(w1w2·) + distinct followers
-    // N1+(w1w2·), one pass over the type table
-    val ctx2 = tcnt.groupBy(col("w1"), col("w2"))
-      .agg(sum(col("tc")).as("cc2"), count(lit(1)).as("f12"))
-    // continuation-bigram table: N1+(·w2w3) = distinct predecessors =
-    // the type count per (w2,w3) (types are distinct by construction).
-    // Persisted: feeds the score join, the middle normalizers, and both
-    // unigram-continuation aggregates
-    val cont = Caches.operatorPersist(tcnt
-      .groupBy(col("w2"), col("w3")).agg(count(lit(1)).as("n1")))
-    val mid = cont.groupBy(col("w2"))
-      .agg(sum(col("n1")).as("m2"), count(lit(1)).as("f2"))
-    val pre3 = cont.groupBy(col("w3")).agg(count(lit(1)).as("pre3"))
-    val nbp = cont.agg(count(lit(1)).as("nbp"))
+    val trans = Caches.operatorPersist(
+      ngramTransitions(df, textCol, 3, Seq(idCol)))
+    // the type tables [[kn3Train]] lands; only nbp of the totals is read
+    val lm = kn3Tables(trans)
     val dec = "decimal(38,0)"
     // TYPE-LEVEL SCORING (round 18 — the knScoreTransitions treatment):
     // the continuation joins and the decimal/log ladder run on the TYPE
-    // table (tcnt is already the distinct-trigram frame), not the
+    // table (trigrams is already the distinct-trigram frame), not the
     // occurrence stream, which formerly re-exchanged per join key; the
     // stream re-attaches with one inner join-back (same-corpus training
     // ⇒ every occurrence's type exists; split() tokens are never null).
-    val scoredTypes = tcnt
-      .join(ctx2.hint("shuffle_hash"), Seq("w1", "w2"))
-      .join(cont.hint("shuffle_hash"), Seq("w2", "w3"))
-      .join(mid.hint("shuffle_hash"), Seq("w2"))
-      .join(pre3.hint("shuffle_hash"), Seq("w3"))
-      .crossJoin(broadcast(nbp))
+    val scoredTypes = lm.trigrams
+      .join(lm.ctx2.hint("shuffle_hash"), Seq("w1", "w2"))
+      .join(lm.cont.hint("shuffle_hash"), Seq("w2", "w3"))
+      .join(lm.mid.hint("shuffle_hash"), Seq("w2"))
+      .join(lm.pre3.hint("shuffle_hash"), Seq("w3"))
+      .crossJoin(broadcast(lm.tot.select(col("nbp"))))
       .withColumn("_num",
         (col("tc").cast(dec) * 4 - 3) * col("m2").cast(dec) * 4 *
           col("nbp").cast(dec) +
@@ -636,35 +601,18 @@ object TextAnalysis {
     val scored = trans.join(scoredTypes
       .select(col("w1"), col("w2"), col("w3"), col("m"))
       .hint("shuffle_hash"), Seq("w1", "w2", "w3"))
-    val agg0 = scored.groupBy(col(idCol))
-      .agg(count(lit(1)).as("_nt"), sum(col("m")).as("_lp"))
-    // agg0 is PER-DOCUMENT — corpus-sized, the left join stays partitioned
-    val agg = df.select(col(idCol))
-      .join(agg0.hint("shuffle_hash"), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("_nt"), lit(0L)).cast("int").as("n_transitions"),
-        coalesce(col("_lp"), lit(0L)).as("logprob_micronats"))
-      .transform(Caches.operatorPersist)
-    val row = agg.agg(
-      sum(lit(0L) - col("logprob_micronats")).as("slp"),
-      sum(col("n_transitions").cast("long")).as("sn")).head()
-    val (slpNeg, sn) = (row.getLong(0), row.getLong(1))
-    val headCut = (BigInt(headPct) * slpNeg / (BigInt(100) * sn)).toLong
-    val tailCut = (BigInt(tailPct) * slpNeg / (BigInt(100) * sn)).toLong
-    agg.withColumn("ppl_bucket",
-      when((lit(0L) - col("logprob_micronats")) <=
-          col("n_transitions") * lit(headCut), lit("head"))
-        .when((lit(0L) - col("logprob_micronats")) <=
-          col("n_transitions") * lit(tailCut), lit("middle"))
-        .otherwise(lit("tail")))
+    pplBuckets(perDocFold(scored, df, idCol,
+        Seq("n_transitions" -> count(lit(1))),
+        Seq("logprob_micronats" -> sum(col("m")))),
+      "n_transitions", headPct, tailPct)
   }
 
   /** Landed interpolated-trigram KN LM — the [[KnBigramModel]] contract
     * one order up, composing the [[perplexityKneserNey3]] continuation
     * ladder with the open-vocabulary smoothing of
-    * [[perplexityKneserNeyApply]] (KenLM-style filters run at order ≥ 3;
-    * the repo had both halves, round 11 verdict asked for them
-    * together). Tables: `trigrams` (w1, w2, w3, tc); `ctx2` (w1, w2,
+    * [[perplexityKneserNeyApplyModel]] (KenLM-style filters run at
+    * order ≥ 3; the repo had both halves, round 11 verdict asked for
+    * them together). Tables: `trigrams` (w1, w2, w3, tc); `ctx2` (w1, w2,
     * cc2, f12); `cont` (w2, w3, n1); `mid` (w2, m2, f2); `pre3`
     * (w3, pre3); `tot` one row (nbp, vc3 = distinct continuation
     * words, the Laplace class count). */
@@ -674,11 +622,21 @@ object TextAnalysis {
   /** Train the open-vocabulary trigram KN LM: ONE occurrence-level
     * shuffle over TRAIN (the trigram type aggregate); every other table
     * derives from type tables (shuffling types, not occurrences). */
-  def kn3Train(train: DataFrame, textCol: String): Kn3Model = {
-    val tcnt = Caches.operatorPersist(
-      trigramTransitions(train, textCol, idCol = None)
-        .groupBy(col("w1"), col("w2"), col("w3"))
-        .agg(count(lit(1)).as("tc")))
+  def kn3Train(train: DataFrame, textCol: String): Kn3Model =
+    kn3Tables(ngramTransitions(train, textCol, 3, Nil))
+
+  /** The trigram KN type tables over a (w1, w2, w3) transitions frame.
+    * The trigram TYPE table is the single occurrence-level shuffle;
+    * persisted: it feeds the score join, the context aggregate and the
+    * continuation table. Highest order: context occurrences c(w1w2·) and
+    * distinct followers N1+(w1w2·) in one pass over the type table. The
+    * continuation-bigram table N1+(·w2w3) = distinct predecessors = the
+    * type count per (w2,w3) (types are distinct by construction);
+    * persisted: it feeds the score join, the middle normalizers and both
+    * unigram-continuation aggregates. */
+  private def kn3Tables(trans: DataFrame): Kn3Model = {
+    val tcnt = Caches.operatorPersist(trans
+      .groupBy(col("w1"), col("w2"), col("w3")).agg(count(lit(1)).as("tc")))
     val ctx2 = tcnt.groupBy(col("w1"), col("w2"))
       .agg(sum(col("tc")).as("cc2"), count(lit(1)).as("f12"))
     val cont = Caches.operatorPersist(tcnt
@@ -691,38 +649,18 @@ object TextAnalysis {
     Kn3Model(tcnt, ctx2, cont, mid, pre3, tot)
   }
 
-  def kn3ModelWrite(m: Kn3Model, path: String): Unit = {
-    val mode = org.apache.spark.sql.SaveMode.Overwrite
-    m.trigrams.write.mode(mode).parquet(s"$path/trigrams")
-    m.ctx2.write.mode(mode).parquet(s"$path/ctx2")
-    m.cont.write.mode(mode).parquet(s"$path/cont")
-    m.mid.write.mode(mode).parquet(s"$path/mid")
-    m.pre3.write.mode(mode).parquet(s"$path/pre3")
-    m.tot.write.mode(mode).parquet(s"$path/tot")
-  }
+  def kn3ModelWrite(m: Kn3Model, path: String): Unit =
+    writeTables(path, Kn3Layout,
+      Seq(m.trigrams, m.ctx2, m.cont, m.mid, m.pre3, m.tot))
 
   def kn3ModelRead(spark: org.apache.spark.sql.SparkSession,
-      path: String): Kn3Model =
-    Kn3Model(spark.read.parquet(s"$path/trigrams"),
-      spark.read.parquet(s"$path/ctx2"), spark.read.parquet(s"$path/cont"),
-      spark.read.parquet(s"$path/mid"), spark.read.parquet(s"$path/pre3"),
-      spark.read.parquet(s"$path/tot"))
-
-  private def trigramTransitions(df: DataFrame, textCol: String,
-      idCol: Option[String]): DataFrame = {
-    val idCols = idCol.map(col).toSeq
-    df.select(idCols ++ Seq(
-        explode(when(size(split(col(textCol), " ")) >= 3,
-            sequence(lit(1), size(split(col(textCol), " ")) - 2))
-          .otherwise(array().cast("array<int>"))).as("_i"),
-        split(col(textCol), " ").as("_toks")): _*)
-      .select(idCols ++ Seq(
-        element_at(col("_toks"), col("_i")).as("w1"),
-        element_at(col("_toks"), col("_i") + 1).as("w2"),
-        element_at(col("_toks"), col("_i") + 2).as("w3")): _*)
+      path: String): Kn3Model = {
+    val Seq(trigrams, ctx2, cont, mid, pre3, tot) =
+      readTables(spark, path, Kn3Layout)
+    Kn3Model(trigrams, ctx2, cont, mid, pre3, tot)
   }
 
-  /** TRAIN/APPLY trigram Kneser-Ney — the [[perplexityKneserNeyApply]]
+  /** TRAIN/APPLY trigram Kneser-Ney — the [[perplexityKneserNeyApplyModel]]
     * open-vocabulary smoothing lifted to the [[perplexityKneserNey3]]
     * ladder. Discount D = 3/4 at both discounted levels, every
     * discounted term FLOORED at 0 (apply-side counts may be unseen),
@@ -756,8 +694,8 @@ object TextAnalysis {
     * only the one-row total broadcasts. */
   def perplexityKneserNey3ApplyModel(model: Kn3Model, apply: DataFrame,
       idCol: String, textCol: String): DataFrame = {
-    val transA = trigramTransitions(apply, textCol, Some(idCol))
-      .transform(Caches.operatorPersist)
+    val transA = Caches.operatorPersist(
+      ngramTransitions(apply, textCol, 3, Seq(idCol)))
     val dec = "decimal(38,0)"
     // TYPE-LEVEL SCORING (round 18 — the knScoreTransitions treatment at
     // order 3): the former form re-exchanged the corpus-sized APPLY
@@ -799,29 +737,13 @@ object TextAnalysis {
         .otherwise(
           floor(log(col("_p1n").cast("double") /
             col("_nbv").cast("double")) * 1e6 + 0.5).cast("long")))
-    val agg0 = transA
-      .join(scored.select(col("w1"), col("w2"), col("w3"), col("_tc"),
-        col("m")).hint("shuffle_hash"), Seq("w1", "w2", "w3"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("_nt"),
-        sum(when(col("_tc") === 0, 1).otherwise(0)).as("_nu"),
-        sum(col("m")).as("_lp"))
-    // agg0 is per-APPLY-document — corpus-sized, the join stays partitioned
-    apply.select(col(idCol))
-      .join(agg0.hint("shuffle_hash"), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("_nt"), lit(0L)).cast("int").as("n_transitions"),
-        coalesce(col("_nu"), lit(0L)).cast("int").as("n_unseen_trigrams"),
-        coalesce(col("_lp"), lit(0L)).as("logprob_micronats"))
+    perDocFold(transA.join(scored.select(col("w1"), col("w2"), col("w3"),
+        col("_tc"), col("m")).hint("shuffle_hash"), Seq("w1", "w2", "w3")),
+      apply, idCol,
+      Seq("n_transitions" -> count(lit(1)),
+        "n_unseen_trigrams" -> sum(when(col("_tc") === 0, 1).otherwise(0))),
+      Seq("logprob_micronats" -> sum(col("m"))))
   }
-
-  /** One-shot convenience: train on `train`, score `apply`. Production
-    * uses the landed-model split ([[kn3ModelWrite]] offline,
-    * [[perplexityKneserNey3ApplyModel]] per crawl). */
-  def perplexityKneserNey3Apply(train: DataFrame, apply: DataFrame,
-      idCol: String, textCol: String): DataFrame =
-    perplexityKneserNey3ApplyModel(kn3Train(train, textCol), apply,
-      idCol, textCol)
 
   /** Moore–Lewis contrastive data selection (Moore & Lewis 2010, the
     * intelligent-selection method behind most domain-adapted pretraining
@@ -860,7 +782,7 @@ object TextAnalysis {
       generalModel: KnBigramModel, apply: DataFrame,
       idCol: String, textCol: String): DataFrame = {
     val transP = Caches.operatorPersist(
-      bigramTransitions(apply, textCol, Some(idCol))
+      ngramTransitions(apply, textCol, 2, Seq(idCol))
         .repartition(col("prev"), col("cur")))
     val types = transP.select(col("prev"), col("cur")).distinct()
     // suffix every model-side column so both models ride one joined frame
@@ -893,18 +815,12 @@ object TextAnalysis {
         mExpr("_d").as("_md"), mExpr("_g").as("_mg"))
     // join-back is type-sized on the build side; the stream side is the
     // co-partitioned transition frame (every type exists there — inner)
-    val agg0 = transP
-      .join(scoredTypes.hint("shuffle_hash"), Seq("prev", "cur"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("_nt"), sum(col("_md")).as("_lpd"),
-        sum(col("_mg")).as("_lpg"))
-    // agg0 is per-APPLY-document — corpus-sized, the join stays partitioned
-    apply.select(col(idCol))
-      .join(agg0.hint("shuffle_hash"), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("_nt"), lit(0L)).cast("int").as("n_transitions"),
-        coalesce(col("_lpd"), lit(0L)).as("lp_domain_micronats"),
-        coalesce(col("_lpg"), lit(0L)).as("lp_general_micronats"))
+    perDocFold(
+        transP.join(scoredTypes.hint("shuffle_hash"), Seq("prev", "cur")),
+        apply, idCol,
+        Seq("n_transitions" -> count(lit(1))),
+        Seq("lp_domain_micronats" -> sum(col("_md")),
+          "lp_general_micronats" -> sum(col("_mg"))))
       .withColumn("ml_score_micronats",
         col("lp_domain_micronats") - col("lp_general_micronats"))
       .withColumn("selected",
@@ -976,7 +892,7 @@ object TextAnalysis {
     require(kPct >= 1 && kPct <= 100, "kPct in [1, 100]")
     // transitions WITH their position index — the deterministic
     // tie-break for boundary selection
-    val transA = bigramTransitions(apply, textCol, Some(idCol),
+    val transA = ngramTransitions(apply, textCol, 2, Seq(idCol),
       keepIndex = true)
     val scored = knScoreTransitions(model, transA)
     val w = Window.partitionBy(col(idCol))
@@ -985,20 +901,33 @@ object TextAnalysis {
       row_number().over(wOrd).as("_rn"),
       count(lit(1)).over(w).as("_n"))
       .withColumn("_nl", expr(s"(_n * $kPct + 99) div 100"))
-    val agg0 = ranked.groupBy(col(idCol))
-      .agg(count(lit(1)).as("_nt"), max(col("_nl")).as("_nlo"),
-        sum(when(col("_rn") <= col("_nl"), lit(0L) - col("m"))
-          .otherwise(0L)).as("_s"))
-    apply.select(col(idCol))
-      .join(agg0.hint("shuffle_hash"), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("_nt"), lit(0L)).cast("int").as("n_transitions"),
-        coalesce(col("_nlo"), lit(0L)).cast("int").as("n_lowest"),
-        coalesce(col("_s"), lit(0L)).as("mink_nll_micronats"))
+    perDocFold(ranked, apply, idCol,
+        Seq("n_transitions" -> count(lit(1)), "n_lowest" -> max(col("_nl"))),
+        Seq("mink_nll_micronats" -> sum(when(col("_rn") <= col("_nl"),
+          lit(0L) - col("m")).otherwise(0L))))
       .withColumn("mink_avg_nll_micronats",
         when(col("n_lowest") > 0,
           expr("mink_nll_micronats div n_lowest")).otherwise(0L))
   }
+
+  /** Per-domain (domain, n_transitions, _nll) under the landed bigram LM —
+    * the one corpus pass both DoReMi forms share. AGGREGATE BEFORE THE
+    * SCORER (round 18, guide §2.3 — aggregate before you shuffle): the
+    * per-domain NLL sum only needs each (domain, prev, cur) TYPE's
+    * multiplicity, so the corpus transitions collapse to counted types in
+    * ONE map-side-combined exchange before any scoring join touches them;
+    * sum(-m) over transitions == sum(-m * count) over counted types,
+    * exactly (long arithmetic, |m| <= ~30e6 micronats x corpus counts fits
+    * far inside Long). */
+  private def domainNll(model: KnBigramModel, corpus: DataFrame,
+      domainCol: String, textCol: String): DataFrame =
+    knScoreTransitions(model,
+        ngramTransitions(corpus, textCol, 2, Seq(domainCol))
+          .groupBy(col(domainCol), col("prev"), col("cur"))
+          .agg(count(lit(1)).as("_tc")))
+      .groupBy(col(domainCol))
+      .agg(sum(col("_tc")).as("n_transitions"),
+        sum(col("_tc") * (lit(0L) - col("m"))).as("_nll"))
 
   /** DoReMi-style domain reweighting (Xie et al. 2023, "DoReMi:
     * Optimizing Data Mixtures Speeds Up Language Model Pretraining" —
@@ -1022,21 +951,8 @@ object TextAnalysis {
     * (corpus mean, normalizer). */
   def doremiDomainWeights(model: KnBigramModel, corpus: DataFrame,
       domainCol: String, textCol: String): DataFrame = {
-    // AGGREGATE BEFORE THE SCORER (round 18, guide §2.3 — aggregate before
-    // you shuffle): the per-domain NLL sum only needs each (domain, prev,
-    // cur) TYPE's multiplicity, so the corpus transitions collapse to
-    // counted types in ONE map-side-combined exchange before any scoring
-    // join touches them; sum(-m) over transitions == sum(-m * count) over
-    // counted types, exactly (long arithmetic, |m| <= ~30e6 micronats x
-    // corpus counts fits far inside Long).
-    val trans = bigramTransitions(corpus, textCol, Some(domainCol))
-      .groupBy(col(domainCol), col("prev"), col("cur"))
-      .agg(count(lit(1)).as("_tc"))
-    val scored = knScoreTransitions(model, trans)
-    val byDom = scored.groupBy(col(domainCol))
-      .agg(sum(col("_tc")).as("n_transitions"),
-        sum(col("_tc") * (lit(0L) - col("m"))).as("_nll"))
-      .transform(Caches.operatorPersist)
+    val byDom = Caches.operatorPersist(
+      domainNll(model, corpus, domainCol, textCol))
     val tot = byDom.agg(sum(col("_nll")).as("_tn"),
       sum(col("n_transitions")).as("_tc"))
     val exc = byDom.crossJoin(broadcast(tot))
@@ -1083,15 +999,7 @@ object TextAnalysis {
     require(steps >= 1, "steps >= 1")
     val spark = corpus.sparkSession
     import spark.implicits._
-    // counted-type pre-aggregation before the scorer — see
-    // [[doremiDomainWeights]] (identical arithmetic, exact)
-    val trans = bigramTransitions(corpus, textCol, Some(domainCol))
-      .groupBy(col(domainCol), col("prev"), col("cur"))
-      .agg(count(lit(1)).as("_tc"))
-    val scored = knScoreTransitions(model, trans)
-    val byDom = scored.groupBy(col(domainCol))
-      .agg(sum(col("_tc")).as("n_transitions"),
-        sum(col("_tc") * (lit(0L) - col("m"))).as("_nll"))
+    val byDom = domainNll(model, corpus, domainCol, textCol)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1)
@@ -1453,8 +1361,9 @@ object TextAnalysis {
     * documents never straddle a cut. */
   def ccnetBuckets(df: DataFrame, idCol: String, textCol: String,
       langCol: String): DataFrame = {
-    val ppl = perplexity(df, idCol, textCol)
-      .select(col(idCol), col("n_tokens"), col("logprob_micronats"))
+    // the scoring half only: the corpus-mean bucket's cutoff action
+    // would be one more job whose result this rank-based cut ignores
+    val ppl = unigramScores(df, idCol, textCol)
     // EAGER checkpoint, not persist (round 18 — the SA-builder
     // "flat task closures" lesson applied here after ProfileQuery showed
     // task DESERIALIZATION dominating compute 15.8 s vs 6.8 s at sf0.1):

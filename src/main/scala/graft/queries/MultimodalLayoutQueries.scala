@@ -364,9 +364,11 @@ object MultimodalLayoutQueries {
           .select(col("doc_id"), col("lang"), col("n_chars"))
           .write.format("graft.sources.v2.ManifestSink")
           .option("path", path).mode("overwrite").save()
-        s.read.option("sep", "\t")
+        // the directory plus a name filter: a glob path makes
+        // FileStreamSink.hasMetadata stat the glob as a literal file
+        s.read.option("sep", "\t").option("pathGlobFilter", "part-*.tsv")
           .schema("doc_id LONG, lang STRING, n_chars LONG")
-          .csv(path + "/part-*.tsv")
+          .csv(path)
           .groupBy(col("lang"))
           .agg(count(lit(1)).as("n"),
             sum(col("n_chars")).as("sum_chars"),

@@ -229,7 +229,8 @@ class SamplingSpec extends AnyFunSuite {
     // APPLY "e": sub-bigram -> zeros.
     val train = Seq((0L, "a b"), (2L, "a b"), (4L, "a c")).toDF("doc_id", "text")
     val app = Seq((1L, "a b d"), (3L, "e")).toDF("doc_id", "text")
-    val out = TextAnalysis.perplexityKneserNeyApply(train, app, "doc_id", "text")
+    val out = TextAnalysis.perplexityKneserNeyApplyModel(
+        TextAnalysis.knBigramTrain(train, "text"), app, "doc_id", "text")
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), r.getInt(2), r.getLong(3)))).toMap
     def m(num: Double, den: Double) =
@@ -340,7 +341,8 @@ class SamplingSpec extends AnyFunSuite {
     // unseen trigrams: 3.  APPLY "q r": sub-trigram -> zeros.
     val train = Seq((0L, "a b c"), (2L, "a b d")).toDF("doc_id", "text")
     val app = Seq((1L, "a b c x b c"), (3L, "q r")).toDF("doc_id", "text")
-    val out = TextAnalysis.perplexityKneserNey3Apply(train, app, "doc_id", "text")
+    val out = TextAnalysis.perplexityKneserNey3ApplyModel(
+        TextAnalysis.kn3Train(train, "text"), app, "doc_id", "text")
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), r.getInt(2), r.getLong(3)))).toMap
     def m(num: Double, den: Double) =
@@ -348,6 +350,34 @@ class SamplingSpec extends AnyFunSuite {
     assert(out(1L) == ((4, 3, m(71, 160) + 2 * m(1, 5) + m(17, 40))),
       out(1L).toString)
     assert(out(3L) == ((0, 0, 0L)), out(3L).toString)
+  }
+
+  test("landed KN models: write + read back scores equal the in-memory model") {
+    import graft.functions.TextAnalysis
+    // the perplexityKneserNey3ApplyModel fixture: every smoothing branch
+    // of both orders is exercised by the apply docs
+    val train = Seq((0L, "a b c"), (2L, "a b d"), (4L, "a c")).toDF("doc_id", "text")
+    val app = Seq((1L, "a b c x b c"), (3L, "a b d"), (5L, "q")).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("kn-landed").toString
+    def scores(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSet
+    val bi = TextAnalysis.knBigramTrain(train, "text")
+    TextAnalysis.knBigramModelWrite(bi, s"$dir/bigram")
+    val biBack = TextAnalysis.knBigramModelRead(spark, s"$dir/bigram")
+    val biWant = scores(TextAnalysis.perplexityKneserNeyApplyModel(
+      bi, app, "doc_id", "text"))
+    assert(biWant.size == 3)
+    assert(scores(TextAnalysis.perplexityKneserNeyApplyModel(
+      biBack, app, "doc_id", "text")) == biWant)
+    val tri = TextAnalysis.kn3Train(train, "text")
+    TextAnalysis.kn3ModelWrite(tri, s"$dir/trigram")
+    val triBack = TextAnalysis.kn3ModelRead(spark, s"$dir/trigram")
+    val triWant = scores(TextAnalysis.perplexityKneserNey3ApplyModel(
+      tri, app, "doc_id", "text"))
+    assert(triWant.size == 3)
+    assert(scores(TextAnalysis.perplexityKneserNey3ApplyModel(
+      triBack, app, "doc_id", "text")) == triWant)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("unimaxBudgets: water-filling — caps bind smallest-first, slack flows upward") {
@@ -582,6 +612,27 @@ class SamplingSpec extends AnyFunSuite {
     val cc = Dedup.connectedComponents(nodes, "doc_id", noPairs)
       .as[(Long, Long)].collect().toSet
     assert(cc == Set((1L, 1L), (2L, 2L), (3L, 3L)))
+    // the self-trained LM scorers on no rows, and on corpora with no
+    // transitions (every doc shorter than the order, or NULL text): there
+    // is no corpus mean, so the cuts are NULL — the oracle's `//` by zero
+    // — and every doc is (0 transitions, 0 micronats, 'tail')
+    assert(TextAnalysis.perplexity(empty, "doc_id", "text").count() == 0)
+    assert(TextAnalysis.perplexityBigram(empty, "doc_id", "text").count() == 0)
+    assert(TextAnalysis.perplexityKneserNey(empty, "doc_id", "text").count() == 0)
+    assert(TextAnalysis.perplexityKneserNey3(empty, "doc_id", "text").count() == 0)
+    val emptyL = Seq.empty[(Long, String, String)].toDF("doc_id", "text", "lang")
+    assert(TextAnalysis.ccnetBuckets(emptyL, "doc_id", "text", "lang").count() == 0)
+    val allNull = Seq((1L, null: String), (2L, null: String)).toDF("doc_id", "text")
+    assert(TextAnalysis.perplexity(allNull, "doc_id", "text").count() == 0)
+    val noBigrams = Seq((1L, "a"), (2L, null: String)).toDF("doc_id", "text")
+    val noTrigrams = Seq((1L, "a b"), (2L, null: String)).toDF("doc_id", "text")
+    def rows(out: org.apache.spark.sql.DataFrame) = out
+      .select("doc_id", "n_transitions", "logprob_micronats", "ppl_bucket")
+      .as[(Long, Int, Long, String)].collect().toSet
+    val allTail = Set((1L, 0, 0L, "tail"), (2L, 0, 0L, "tail"))
+    assert(rows(TextAnalysis.perplexityBigram(noBigrams, "doc_id", "text")) == allTail)
+    assert(rows(TextAnalysis.perplexityKneserNey(noBigrams, "doc_id", "text")) == allTail)
+    assert(rows(TextAnalysis.perplexityKneserNey3(noTrigrams, "doc_id", "text")) == allTail)
   }
 
   test("per-stratum rates apply to the right strata, deterministically") {
