@@ -192,22 +192,24 @@ object Bench {
     // measure warm-up instead of interference
     timeSentinel()
     val sentinelFirst = timeSentinel()
-    // per-query cache hygiene: several operators persist() an
+    // per-run cache hygiene: several operators persist() an
     // intermediate their returned frame still references (so they cannot
-    // unpersist internally) — sweep what each query left behind before
-    // the next one runs; the registry sweep also drops the strong plan
+    // unpersist internally) — sweep what each run left behind before
+    // the next one starts; the registry sweep also drops the strong plan
     // references that kept the 8g driver heap near-full by sweep end
     // (round 13: classifier_train_apply 15.3 s in the 210-query sweep vs
     // 3.6 s in a 30-query one). It clears the WHOLE operator-cache
     // registry, warmup entries included — fine because warmup lands
     // parquet (paths, not operator caches), and always SAFE because
     // persist never severs lineage; but warmup must never come to rely on
-    // a registered shared cache surviving the sweep.
+    // a registered shared cache surviving the sweep. The sweep is per
+    // RUN, not per query: one sweep around all runs let runs 2-3 read
+    // the caches run 1 persisted, so the median timed a cache hit.
     // Each run sits in its own profile window, whose listener-bus drains
     // are outside the timed interval.
     def timeQuery(name: String): Timed[QueryProfile.Record] =
-      Caches.sweepingNew(spark) {
-        timeRuns(heavyCutoff) { () =>
+      timeRuns(heavyCutoff) { () =>
+        Caches.sweepingNew(spark) {
           var failed = false
           val (t, rec) = profile.window {
             val t0 = System.nanoTime()

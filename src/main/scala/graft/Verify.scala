@@ -42,8 +42,12 @@ object Verify {
       t.failed.foreach(e =>
         System.err.println(s"[verify] artifact $n failed: ${e.getMessage}"))
     }
-    // per-query cache hygiene (safe here: Verify is sequential)
-    selected.foreach { case (name, fn) =>
+    // per-query cache hygiene (safe here: Verify is sequential); what a
+    // query's sweep leaves behind is reported on stderr
+    def cacheState() = (org.apache.spark.sql.GraftSql.cachedEntries(spark),
+      spark.sparkContext.getPersistentRDDs.keySet.toSet)
+    val leaks = selected.toSeq.map { case (name, fn) =>
+      val (entries0, rdds0) = cacheState()
       graft.functions.Caches.sweepingNew(spark) {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -51,7 +55,14 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
       }
+      val (entries1, rdds1) = cacheState()
+      val (n, m) = (math.max(0, entries1 - entries0), (rdds1 -- rdds0).size)
+      if (n + m > 0)
+        System.err.println(s"[verify] $name left $n cache entries / $m RDDs")
+      (n, m)
     }
+    System.err.println(s"[verify] cache leaks total: ${leaks.map(_._1).sum} " +
+      s"cache entries / ${leaks.map(_._2).sum} RDDs over ${leaks.size} queries")
     // a tab or CR left unescaped in an oracle's SQL would make the
     // compare's json.load fail and silently zero the correctness check
     def q(s: String): String =

@@ -71,8 +71,8 @@ object Bpe {
     require(steps >= 1)
     val spark = df.sparkSession
     import spark.implicits._
-    Caches.releasingShortLivedCaches { cp =>
-    // localCheckpoint: the histogram is reused every round, and each round
+    Caches.scoped { cp =>
+    // checkpoint: the histogram is reused every round, and each round
     // rewrites `syms` — checkpointing keeps the plan one round deep
     var words = cp.checkpoint(wordHistogram(df, textCol)
       .withColumn("syms", charSyms(col("word"))))
@@ -177,7 +177,7 @@ object Bpe {
     require(steps >= 1 && maxBatch >= 1)
     val spark = df.sparkSession
     import spark.implicits._
-    Caches.releasingShortLivedCaches { cp =>
+    Caches.scoped { cp =>
     var words = cp.checkpoint(wordHistogram(df, textCol)
       .withColumn("syms", charSyms(col("word"))))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]

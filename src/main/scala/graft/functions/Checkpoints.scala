@@ -36,9 +36,9 @@ object Checkpoints {
 
   /** Eager checkpoint of `df`: reliable when [[DirKey]] is configured,
     * local otherwise. Both paths return a frame whose analyzed plan is a
-    * `LogicalRDD` leaf, so the scope-tracked release in
-    * [[Caches.CheckpointScope]] / the suffix-array rolling checkpoint
-    * keeps working unchanged. Releasing (unpersisting) the tracked RDD of
+    * `LogicalRDD` leaf, so the scope-tracked release in [[Caches.Scope]]
+    * (and its leaf tracker, the one copy there is) keeps working
+    * unchanged. Releasing (unpersisting) the tracked RDD of
     * a RELIABLE checkpoint is a no-op on storage blocks — the data lives
     * in files; file cleanup follows Spark's
     * `spark.cleaner.referenceTracking.cleanCheckpoints` contract (or a

@@ -155,15 +155,17 @@ object Classifier {
     // keyless width could differ between the two caches and silently
     // reinsert the join exchanges this exists to remove
     val nP = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    // every cache dies with the call: the weights return as driver rows
+    Caches.scoped { scope =>
     // persist barrier before the Generate (the cdc_chunks discipline)
-    val withFs = Caches.operatorPersist(df
+    val withFs = scope.persist(df
       .select(col(idCol).as("_d"), label.cast("boolean").as("_y"),
         col(textCol).as("_t"))
       .repartition(nP, col("_d"))
       .select(col("_d"), col("_y"),
         featuresExpr(split(col("_t"), " ")).as("_fs")))
-    val docs = Caches.operatorPersist(withFs.select("_d", "_y"))
-    val feat = Caches.operatorPersist(withFs
+    val docs = scope.persist(withFs.select("_d", "_y"))
+    val feat = scope.persist(withFs
       .select(col("_d"), col("_y"), explode(col("_fs")).as("_f"))
       .select(col("_d"), col("_y"), bucket(col("_f"), dim).as("_b"))
       .groupBy(col("_d"), col("_y"), col("_b"))
@@ -175,7 +177,7 @@ object Classifier {
     var bias = 0L
     for (_ <- 1 to iters) {
       val margins = marginsOf(feat, w)
-      val resid = Caches.operatorPersist(docs
+      val resid = scope.persist(docs
         .join(margins.hint("shuffle_hash"), Seq("_d"), "left")
         .select(col("_d"),
           (floor(lit(1e6) /
@@ -194,7 +196,7 @@ object Classifier {
           .select(lit(-1).as("_b"), col("_g")))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       val biasGrad = grads(-1)
-      resid.unpersist(blocking = false)
+      scope.release(resid)
       def delta(g: Long): Long = {
         val mag = (BigInt(g).abs * lrNum) / (BigInt(lrDen) * nDocs)
         (if (g < 0) -mag else mag).toLong
@@ -204,6 +206,7 @@ object Classifier {
     }
     ((-1, bias) +: (0 until dim).map(b => (b, w(b))))
       .toDF("bucket", "weight_micronats")
+    }
   }
 
   /** One training iteration's per-doc margin frame: driver-held weights

@@ -111,7 +111,7 @@ object Dedup {
     require(threshold > 0, "inverted-index jaccard needs threshold > 0")
     // persisted: both posting-list sides of the self-join read the index
     val ex = shingleIndex(df, idCol, textCol, blockCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Caches.operatorPersist)
     val a = ex.select(col("blk"), col("_gid").as("id_a"), col("n_sh").as("n_a"), col("g"))
     val b = ex.select(col("blk"), col("_gid").as("id_b"), col("n_sh").as("n_b"), col("g"))
     a.join(b, Seq("blk", "g")).filter(col("id_a") < col("id_b"))
@@ -134,7 +134,7 @@ object Dedup {
     require(threshold > 0, "inverted-index containment needs threshold > 0")
     // persisted: both posting-list sides of the self-join read the index
     val ex = shingleIndex(df, idCol, textCol, blockCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Caches.operatorPersist)
     val a = ex.select(col("blk"), col("_gid").as("id_a"), col("n_sh").as("n_a"), col("g"))
     val b = ex.select(col("blk"), col("_gid").as("id_b"), col("g"))
     a.join(b, Seq("blk", "g")).filter(col("id_a") =!= col("id_b"))
@@ -159,7 +159,7 @@ object Dedup {
     val sg = df.select(col(groupCol).as("grp"),
         explode(shingles(col(textCol), k)).as("g"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Caches.operatorPersist)
     val sizes = sg.groupBy("grp").agg(count(lit(1)).as("n"))
     val a = sg.select(col("grp").as("grp_a"), col("g"))
     val b = sg.select(col("grp").as("grp_b"), col("g"))
@@ -373,7 +373,7 @@ object Dedup {
     // persisted: both sides of the band-key self-join read the index, and
     // uncached the one-pass signature aggregation runs twice per doc
     val bands = bandIndex(df, idCol, textCol, k, numHashes, bandRows)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Caches.operatorPersist)
     val a = bands.select(col("band"), col("bkey"), col("id").as("id_a"))
     val b = bands.select(col("band"), col("bkey"), col("id").as("id_b"))
     a.join(b, Seq("band", "bkey")).filter(col("id_a") < col("id_b"))
@@ -457,7 +457,7 @@ object Dedup {
     // persisted: consumed by the candidate-id reduction AND the verify
     // join chain
     val cands = minhashCandidates(df, idCol, textCol, k, numHashes, bandRows)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Caches.operatorPersist)
     // verify-side shingles are computed ONLY for docs that appear in some
     // candidate pair (semi-join reduction) — at corpus scale candidates
     // are a sliver of the corpus, so the expensive shingle arrays never
@@ -467,7 +467,7 @@ object Dedup {
       .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
     val sh = df.select(col(idCol).as("id"), shingles(col(textCol), k).as("sh"))
       .join(candIds, Seq("id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Caches.operatorPersist)
     cands
       .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
@@ -487,15 +487,12 @@ object Dedup {
     * Returns near-dup pairs between representatives. */
   def nearDupPairsAfterExact(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, numHashes: Int = 16, threshold: Double = 0.5,
-      bandRows: Int = 2, cacheReps: Boolean = true): DataFrame = {
+      bandRows: Int = 2): DataFrame = {
     // the near-dup stage references the representative set three times
     // (banding + two verify joins); between pipeline stages a deployment
-    // lands it in a staging table — locally, persist plays that role
-    // (caller unpersists via the returned frame's lineage when done)
-    val reps0 = exactDedup(df, textCol, idCol)
-    val reps = if (cacheReps)
-      reps0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else reps0
+    // lands it in a staging table — locally, a registered persist plays
+    // that role
+    val reps = Caches.operatorPersist(exactDedup(df, textCol, idCol))
     minhashDedupPairs(reps, idCol, textCol, k, numHashes, threshold, bandRows)
   }
 
@@ -536,13 +533,13 @@ object Dedup {
     * per-round shuffle overhead. Larger graphs take the loop unchanged. */
   def connectedComponents(nodes: DataFrame, idCol: String,
       pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
-      maxIters: Int = 50, driverMaxEdges: Long = 1000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      maxIters: Int = 50, driverMaxEdges: Long = 1000000L): DataFrame =
+    Caches.scoped { scope =>
     // persist the PAIR list (half the rows of the doubled edge list): it
     // feeds the size decision, the fast-path collect, and both direction
     // legs of the edge union — one evaluation of the upstream pair
     // pipeline (often an expensive LSH/jaccard rebuild) total
-    val p = pairs.persist(lvl)
+    val p = scope.persist(pairs)
     // undirected edge list, both directions
     val edges = p.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionAll(p.select(col(bCol).as("src"), col(aCol).as("dst")))
@@ -584,22 +581,22 @@ object Dedup {
           // union by min id: the root IS the component's min label
           if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
         }
-      p.unpersist()
       val spark = nodes.sparkSession
       import spark.implicits._
       val labelDf = parent.keysIterator.map(id => (id, find(id))).toSeq
         .toDF("id", "_cc")
         .select(col("id").cast(nodes.schema(idCol).dataType),
           col("_cc").cast(nodes.schema(idCol).dataType))
-      return nodes.select(col(idCol).as("id"))
+      nodes.select(col(idCol).as("id"))
         .join(labelDf, Seq("id"), "left")
         .select(col("id"), coalesce(col("_cc"), col("id")).as("cluster_id"))
-    }
+    } else {
     // active subgraph: both directions are present, so `src` alone covers
-    // every node incident to an edge
+    // every node incident to an edge (registered: read by the output when
+    // no round runs)
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("cluster_id", col("id"))
-      .persist(lvl)
+      .transform(Caches.operatorPersist)
     // sum over DECIMAL(38,0): exact at any id range / node count
     def labelSum(df: DataFrame): java.math.BigDecimal = {
       val d = df.agg(sum(col("cluster_id").cast("decimal(38,0)"))).head.getDecimal(0)
@@ -627,7 +624,7 @@ object Dedup {
       // plan grows ~3x per round if only persist()ed — persist caches DATA
       // but Catalyst still re-analyzes the full lineage, and round N's
       // planning cost is O(3^N) (measured: rounds 0-4 at 1.0/1.3/3.2/16/30 s
-      // on a 287-edge graph before this fix). localCheckpoint materializes
+      // on a 287-edge graph before this fix). A checkpoint materializes
       // AND truncates the plan; each round is materialized anyway for the
       // convergence sum, so the only extra cost is the block write — the
       // same trade GraphX/GraphFrames iterative algorithms make. Blocks are
@@ -640,12 +637,12 @@ object Dedup {
       prevSum = curSum
       iter += 1
     }
-    p.unpersist()
     // singletons (no incident edge) rejoin as their own cluster
     nodes.select(col(idCol).as("id"))
       .join(labels.withColumnRenamed("cluster_id", "_cc"), Seq("id"), "left")
       .select(col("id"), coalesce(col("_cc"), col("id")).as("cluster_id"))
-  }
+    }
+    }
 
   /** The surviving corpus after near-dup removal: greedy keep-lowest-id —
     * a document is dropped iff it appears as the HIGHER id of some
@@ -797,7 +794,7 @@ object Dedup {
     // member-expansion joins
     val sigs = simhash(df, idCol, textCol)
       .select(col(idCol).as("id"), col("simhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Caches.operatorPersist)
     // hamming-0 pairs: equi-join keyed by the full 64-bit signature
     val zero = sigs.select(col("simhash"), col("id").as("id_a"))
       .join(sigs.select(col("simhash"), col("id").as("id_b")), Seq("simhash"))

@@ -42,10 +42,10 @@ object Entity {
     // join) — uncached that is five scans + explodes per side
     val ag = a.select(col(aId).as("id_a"),
         explode(charGrams(aName, k)).as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Caches.operatorPersist)
     val bg = b.select(col(bId).as("id_b"),
         explode(charGrams(bName, k)).as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Caches.operatorPersist)
     // global gram document frequency across BOTH sides — the prefix order
     val df = ag.select(col("g")).unionAll(bg.select(col("g")))
       .groupBy("g").agg(count(lit(1)).as("_df"))

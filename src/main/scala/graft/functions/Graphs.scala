@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * the textbook distributed PageRank data flow (rank joins degree, the
   * per-node contribution joins the edge list, contributions aggregate at
   * the destination). Ranks are one long per node; the graph never
-  * replicates. Each round materializes (persist + count) so the lineage is
-  * bounded by the iteration count, the same discipline as
+  * replicates. Every 4th round is checkpointed so the lineage stays
+  * bounded however many rounds run, the same discipline as
   * [[Dedup.connectedComponents]].
   *
   * Exactness: all arithmetic is INTEGER — ranks live in units of
@@ -37,6 +37,7 @@ object Graphs {
       iterations: Int = 3, dampingPct: Int = 85,
       scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1 && dampingPct >= 0 && dampingPct <= 100)
+    Caches.scoped { scope =>
     // CO-PARTITIONED ITERATION (round-18, r17 verdict #4; guide §2.4 —
     // share one exchange across same-keyed operations): the loop-invariant
     // frames are persisted PRE-PARTITIONED on their join keys — edgesDeg
@@ -70,22 +71,22 @@ object Graphs {
     // broadcast of the rank table would be refused
     val coPartition = bcThreshold >= 0 && n * 32L > bcThreshold
     val ids = if (coPartition)
-      idsRaw.repartition(nP, col("id")).persist()
+      scope.persist(idsRaw.repartition(nP, col("id")))
     else idsRaw
     val base = scale / n
     val teleport = ((100L - dampingPct) * base) / 100L
     // pairs feeds both direction legs of the union — persist so an
     // expensive upstream pair graph (e.g. the jaccard rebuild) runs once
-    val p = pairs.persist()
+    val p = scope.persist(pairs)
     val edges = p.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(p.select(col(bCol).as("src"), col(aCol).as("dst")))
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     // (src, dst, deg) is loop-invariant — join it ONCE outside the
     // iteration instead of re-joining deg every round (one join + one
     // aggregate per round instead of two joins + one aggregate)
-    val edgesDeg = (if (coPartition)
+    val edgesDeg = scope.persist(if (coPartition)
       edges.join(deg, Seq("src")).repartition(nP, col("src"))
-    else edges.join(deg, Seq("src"))).persist()
+    else edges.join(deg, Seq("src")))
     var ranks = ids.select(col("id"), lit(base).as("rank"))
     for (i <- 1 to iterations) {
       val inSums = edgesDeg
@@ -103,18 +104,15 @@ object Graphs {
       // materialization needed. Lineage grows linearly (one join + one agg
       // per round); truncate it every 4th round so a long power iteration
       // never accretes an unplannable tree.
-      ranks = if (i % 4 == 0 && i < iterations) Checkpoints.eager(next)
+      ranks = if (i % 4 == 0 && i < iterations) scope.checkpoint(next)
               else next
     }
-    // materialize the final (node-sized) ranks, then release the cached
-    // pair/edge blocks — repeated calls in one JVM (bench median-of-3)
-    // must not accumulate cached frames
-    val out = Checkpoints.eager(
+    // materialize the final (node-sized) ranks — untracked, the unit's
+    // sweep frees them; the scope releases the pair/edge caches and round
+    // checkpoints, so repeated calls in one JVM accumulate nothing
+    Checkpoints.eager(
       ranks.select(col("id").as(idCol), col("rank").as("rank_nano")))
-    p.unpersist()
-    edgesDeg.unpersist()
-    if (coPartition) ids.unpersist()
-    out
+    }
   }
 
   /** DuckDB SQL for the SAME integer power iteration, parameterized by the

@@ -61,7 +61,8 @@ object Recipe {
         min(when(col("_surv_q"), col("doc_id"))).over(wDigest))
       .withColumn("_surv_d",
         col("_surv_q") && col("doc_id") === col("_min_surv"))
-      .persist() // read twice: contamination probe + final aggregate
+      // read twice: contamination probe + final aggregate
+      .transform(Caches.operatorPersist)
     // stage 4: drop survivors sharing any 5-gram with the bench slice;
     // grams explode for survivors only, bench set is broadcast
     val benchGrams = docs.filter(col("doc_id") % benchMod === 0)

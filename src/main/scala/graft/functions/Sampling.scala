@@ -418,7 +418,6 @@ object Sampling {
     // PERSISTED: building it costs a full histogram pass over both corpora,
     // and without the pin each downstream action (the mean fold, the final
     // output) would re-run those scans to rebuild 64 rows
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val spark = raw.sparkSession
     val weights = spark.range(dim).select(col("id").cast("int").as("_b"))
       .join(tgtC, Seq("_b"), "left")
@@ -429,14 +428,14 @@ object Sampling {
             / (col("tt") + dim)) * 1e6 + 0.5).cast("long")
           - floor(log((coalesce(col("cr"), lit(0L)) + 1).cast("double")
             / (col("rt") + dim)) * 1e6 + 0.5).cast("long")).as("w_micronat"))
-      .persist(lvl)
+      .transform(Caches.operatorPersist)
     // per-doc score table — three longs per doc, spillable; persisted so
     // the mean fold and the returned frame share ONE scoring pass
     val perDoc = rawF.join(broadcast(weights), Seq("_b"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_features"),
         sum(col("w_micronat")).as("logweight_micronats"))
-      .persist(lvl)
+      .transform(Caches.operatorPersist)
     // corpus mean as exact cross-multiplication: lw * n_docs >= sum(lw)
     val row = perDoc.agg(
       sum(col("logweight_micronats").cast("decimal(38,0)")).as("s"),

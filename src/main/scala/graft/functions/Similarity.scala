@@ -163,12 +163,12 @@ object Similarity {
     require(k >= 1)
     val spark = df.sparkSession
     import spark.implicits._
-    Caches.releasingShortLivedCaches { cp =>
+    Caches.scoped { cp =>
     val q = array(query.map(v => lit(v)): _*)
     val poolC = if (pool > 0) pool else 100 * k
     // one corpus pass: rel scan + TakeOrdered down to the pool. From here
     // on every frame is pool-sized — the greedy loop never re-touches the
-    // input. localCheckpoint per round: each round's collect() re-evaluates
+    // input. Checkpoint per round: each round's collect() re-evaluates
     // the frame, so an unmaterialized chain would recompute every prior
     // round's cosines (O(k²) dots); checkpointing keeps it O(k), and each
     // checkpoint is pool-sized, not corpus-sized.
@@ -272,7 +272,7 @@ object Similarity {
     val celled = df.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("_cell", IVF.assign(col("v"), model))
       .withColumn("_nrm", norm(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Caches.operatorPersist)
     val a = celled.select(col("_cell"), col("id").as("id_a"),
       col("v").as("v_a"), col("_nrm").as("nrm_a"))
     val b = celled.select(col("_cell"), col("id").as("id_b"),

@@ -70,33 +70,21 @@ object SuffixArray {
     * orders), with no global window: range-partition the frame itself
     * (equal keys land in one partition by range-partitioner contract),
     * per-partition DISTINCT-key counts to the driver (numPartitions
-    * longs), offsets + partition-local dense_rank. The returned frame
-    * must be consumed while the returned `parted` handle stays persisted
-    * (range boundaries are sampled; the persist pins them) — the caller
-    * unpersists it as soon as its round's checkpoint lands. */
-  private def denseRanksInline(frame: DataFrame, keyCols: Seq[String],
-      nParts: Int): (DataFrame, Long, DataFrame) =
-    denseRanksInlineCounted(frame, keyCols, nParts) match {
-      case (df, nDistinct, _, parted) => (df, nDistinct, parted)
-    }
-
-  /** [[denseRanksInline]] also returning the frame's ROW count — read off
-    * the same per-partition collect, so emptiness/size checks cost no
-    * extra job. (The incremental merge loop uses the cheaper
-    * [[rankedInlineRows]] since round 13 — this counted form remains the
-    * builder's, whose fixed-point test needs the DISTINCT total.) */
-  private def denseRanksInlineCounted(frame: DataFrame, keyCols: Seq[String],
-      nParts: Int): (DataFrame, Long, Long, DataFrame) = {
-    val parted = frame
+    * longs), offsets + partition-local dense_rank. Returns (ranked frame,
+    * distinct-key total, the pinned range frame). The returned frame
+    * must be consumed while `parted` stays persisted in `scope` (range
+    * boundaries are sampled; the persist pins them) — the caller
+    * releases it as soon as its round's checkpoint lands. */
+  private def denseRanksInline(scope: Caches.Scope, frame: DataFrame,
+      keyCols: Seq[String], nParts: Int): (DataFrame, Long, DataFrame) = {
+    val parted = scope.persist(frame
       .repartitionByRange(nParts, keyCols.map(col): _*)
-      .withColumn("_pid", spark_partition_id())
-      .persist()
+      .withColumn("_pid", spark_partition_id()))
     val counts = parted.groupBy("_pid")
-      .agg(countDistinct(keyCols.head, keyCols.tail: _*).as("_c"),
-        count(lit(1)).as("_r"))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+      .agg(countDistinct(keyCols.head, keyCols.tail: _*).as("_c"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val offs = (0 until nParts).scanLeft(0L) { (acc, p) =>
-      acc + counts.get(p).map(_._1).getOrElse(0L)
+      acc + counts.getOrElse(p, 0L)
     }.dropRight(1)
     val offExpr = element_at(array(offs.map(lit): _*), col("_pid") + 1)
     val w = Window.partitionBy("_pid").orderBy(keyCols.map(col): _*)
@@ -104,11 +92,11 @@ object SuffixArray {
     // fixed-point check costs no extra pass over the rank frame
     (parted.withColumn("_rank",
       dense_rank().over(w).cast("long") + offExpr),
-      counts.values.map(_._1).sum, counts.values.map(_._2).sum, parted)
+      counts.values.sum, parted)
   }
 
   /** Order-consistent, tie-equal — but NOT dense — global numbering: the
-    * incremental merge's cheaper sibling of [[denseRanksInlineCounted]].
+    * incremental merge's cheaper sibling of [[denseRanksInline]].
     * rank() with per-partition ROW-count offsets skips the per-partition
     * countDistinct pass entirely (a full string-keyed hash aggregation
     * when the keys are prefix segments — pure waste in the merge loop,
@@ -118,24 +106,23 @@ object SuffixArray {
     * `extraAggs` ride the same per-partition stats job (round 1 of the
     * merge reads its old-row counts/max-rank off it — one collect, not
     * two passes over the pinned frame). Returns (ranked frame, row
-    * count, the pinned range frame, the per-pid stat rows:
+    * count, the pinned range frame — persisted in `scope`, for the
+    * caller to release — and the per-pid stat rows:
     * [_pid, count, extraAggs...]). */
-  private def rankedInlineRows(frame: DataFrame, keyCols: Seq[String],
-      nParts: Int, extraAggs: Seq[Column] = Nil,
-      persistSrc: Boolean = true)
+  private def rankedInlineRows(scope: Caches.Scope, frame: DataFrame,
+      keyCols: Seq[String], nParts: Int, extraAggs: Seq[Column] = Nil)
       : (DataFrame, Long, DataFrame, Array[org.apache.spark.sql.Row]) = {
     // the range partitioner SAMPLES its child before exchanging it, so
     // an unpersisted input evaluates twice (sample + exchange) — for the
     // merge loop that is the round's whole join/explode chain. Cache it
     // for the pair of passes, release once the exchange has landed.
-    // (`persistSrc = false` for inputs already backed by checkpoint
-    // blocks, where the cache write costs more than the re-scan.)
-    val src = if (persistSrc) frame.persist() else frame
-    val parted = src.repartitionByRange(nParts, keyCols.map(col): _*)
-      .withColumn("_pid", spark_partition_id()).persist()
+    val src = scope.persist(frame)
+    val parted = scope.persist(src
+      .repartitionByRange(nParts, keyCols.map(col): _*)
+      .withColumn("_pid", spark_partition_id()))
     val statRows = parted.groupBy("_pid")
       .agg(count(lit(1)).as("_r"), extraAggs: _*).collect()
-    if (persistSrc) src.unpersist(blocking = false)
+    scope.release(src)
     val counts = statRows.map(r => r.getInt(0) -> r.getLong(1)).toMap
     val offs = (0 until nParts).scanLeft(0L) { (acc, p) =>
       acc + counts.getOrElse(p, 0L)
@@ -166,27 +153,6 @@ object SuffixArray {
     element_at(array(tails.map(lit): _*), col("_pid") + 1)
   }
 
-  /** One eagerly-materialized checkpoint per round, releasing the
-    * previous round's blocks as soon as the new one lands. The FINAL
-    * checkpoint is never released here — the returned frame is built on
-    * it (lineage is severed, it could not recompute). Checkpoints are
-    * local or reliable per [[Checkpoints.eager]]; releasing a reliable
-    * round is a no-op on its files (see there). */
-  private final class RollingCheckpoint {
-    private var prev: Option[org.apache.spark.rdd.RDD[_]] = None
-    def apply(df: DataFrame): DataFrame = {
-      val out = Checkpoints.eager(df)
-      val rdd = out.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
-      require(rdd.isDefined,
-        "RollingCheckpoint: no LogicalRDD leaf — release tracking would leak")
-      prev.foreach(_.unpersist(blocking = false))
-      prev = rdd
-      out
-    }
-  }
-
   /** Global dense lexicographic rank of every within-document token
     * suffix: (doc, pos 1-based, suffix_rank). See object doc.
     *
@@ -201,9 +167,7 @@ object SuffixArray {
   def suffixRanks(df: DataFrame, idCol: String, textCol: String,
       nParts: Int = 32, maxRounds: Int = 64, seedK: Int = 8): DataFrame = {
     require(seedK >= 1, "seedK >= 1")
-    val pinned = ArrayBuffer.empty[DataFrame]
-    val ckpt = new RollingCheckpoint
-    try {
+    Caches.scoped { scope =>
       // group key is unhex(md5) BINARY(16), not the 32-char hex STRING
       // (round 18, guide §2.3 — shuffle fewer bytes): the key rides TWO
       // exchanges per doubling round (the per-doc window hash and the
@@ -216,8 +180,7 @@ object SuffixArray {
       val g = df.filter(col(textCol).isNotNull).select(col(idCol).as("_doc"),
         coalesce(unhex(md5(col(textCol))), lit(Array.emptyByteArray)).as("_g"),
         col(textCol).as("_t"))
-      val members = g.select("_doc", "_g").persist()
-      pinned += members
+      val members = scope.persist(g.select("_doc", "_g"))
       // min() is exact (all texts under a key are equal) and partial-
       // aggregates, so each distinct text shuffles ~once per partition
       val reps = g.groupBy(col("_g")).agg(min(col("_t")).as("_t"))
@@ -240,9 +203,8 @@ object SuffixArray {
       // keeps projection collapse from inlining split() into the slice
       // lambda (no CSE in interpreted HOFs — O(n^2) re-splits) and keeps
       // InferFiltersFromGenerate's size() filter a cheap attribute check.
-      val repsTk = reps
-        .select(col("_g"), split(col("_t"), " ").as("_tk")).persist()
-      pinned += repsTk
+      val repsTk = scope.persist(reps
+        .select(col("_g"), split(col("_t"), " ").as("_tk")))
       // DEPTH-BOUND TERMINATION (round 18): after a round with shift k the
       // ranks are dense ranks of depth-2k prefixes; once that depth covers
       // the longest representative text, every "prefix" IS the whole
@@ -276,12 +238,10 @@ object SuffixArray {
       // suffix keys are genuinely equal suffixes and tie forever.
       val seedEff = if (maxLen > 0 && maxLen <= 128) maxLen.toInt
         else seedK
-      val prefs = repsTk
+      val prefs = scope.persist(repsTk
         .select(col("_g"),
           transform(sequence(lit(1), size(col("_tk"))),
-            p => concat_ws(" ", slice(col("_tk"), p, lit(seedEff)))).as("_prefs"))
-        .persist()
-      pinned += prefs
+            p => concat_ws(" ", slice(col("_tk"), p, lit(seedEff)))).as("_prefs")))
       val suff = prefs
         .select(col("_g"), posexplode(col("_prefs")).as(Seq("_p0", "_pref")))
         .select(col("_g"), (col("_p0") + 1).as("_pos"), col("_pref"))
@@ -298,7 +258,7 @@ object SuffixArray {
       val nPartsEff = math.max(1,
         math.min(nParts.toLong, (totalPos + 65535L) / 65536L)).toInt
       // round 0: dense ranks assigned in place on the range exchange
-      val (ranked0, nPref, parted0) = denseRanksInline(suff,
+      val (ranked0, nPref, parted0) = denseRanksInline(scope, suff,
         Seq("_pref"), nPartsEff)
       // Per-round eager checkpoint kept deliberately (round 18 measured
       // the alternative): building each round on the previous round's
@@ -306,13 +266,14 @@ object SuffixArray {
       // plan in every task binary — task deserialization went 2.2 s ->
       // 22.7 s per pass at sf0.1 and the suite entry ~3x'd. The ~60 ms
       // checkpoint job per round is what keeps task closures flat.
-      var ranks = ckpt(ranked0.select(col("_g"), col("_pos"), col("_rank")))
+      // ROLLING: each round releases the previous round's checkpoint as
+      // soon as its own lands, so one round's blocks are held at a time
+      var ranks = scope.checkpoint(
+        ranked0.select(col("_g"), col("_pos"), col("_rank")))
       // round 0's checkpoint severed lineage: the range frame, the
       // prefix-array frame and the token frame are fully consumed —
       // release now instead of at loop end (rolling footprint)
-      parted0.unpersist(blocking = false)
-      prefs.unpersist(blocking = false)
-      repsTk.unpersist(blocking = false)
+      Seq(parted0, prefs, repsTk).foreach(scope.release)
       var nDistinct = nPref
       var k = seedEff.toLong
       var round = 0
@@ -335,19 +296,22 @@ object SuffixArray {
         // guards against in the merge loop. Released as soon as the
         // round's range frame lands (both its consumers ran by then).
         val wDoc = Window.partitionBy("_g").orderBy("_pos")
-        val shifted = ranks.select(col("_g"), col("_pos"),
+        val shifted = scope.persist(ranks.select(col("_g"), col("_pos"),
           col("_rank").as("_r1"),
           coalesce(lead(col("_rank"),
               k.min(Int.MaxValue.toLong).toInt).over(wDoc),
-            lit(0L)).as("_r2")).persist()
-        val (ranked, nd, parted) = denseRanksInline(shifted,
+            lit(0L)).as("_r2")))
+        val (ranked, nd, parted) = denseRanksInline(scope, shifted,
           Seq("_r1", "_r2"), nPartsEff)
         // fixed point: the (r1, r2) partition equals the previous one, and
         // both numberings are dense in the same order — so the refined
         // ranks would reproduce the EXACT same values; skip the round
         fixed = nd == nDistinct
         if (!fixed) {
-          ranks = ckpt(ranked.select(col("_g"), col("_pos"), col("_rank")))
+          val next = scope.checkpoint(
+            ranked.select(col("_g"), col("_pos"), col("_rank")))
+          scope.release(ranks)
+          ranks = next
           nDistinct = nd
         }
         // this round's checkpoint landed (or the frame was never consumed,
@@ -355,20 +319,17 @@ object SuffixArray {
         // the shifted cache (both consumers of each ran inside
         // denseRanksInline / the checkpoint job); memory stays one
         // checkpoint + one range frame + one shifted cache, rolling
-        shifted.unpersist(blocking = false)
-        parted.unpersist(blocking = false)
+        Seq(shifted, parted).foreach(scope.release)
         k *= 2
       }
       // expand the distinct-text ranks to every member document. The
-      // members frame unpersists in `finally` — persist never severs
-      // lineage, so downstream actions recompute its narrow md5 scan
-      ranks.join(members, Seq("_g"))
+      // final checkpoint escapes the scope (the returned frame is built
+      // on it; its lineage is severed); the members frame is released
+      // with the scope — persist never severs lineage, so downstream
+      // actions recompute its narrow md5 scan
+      scope.escape(ranks).join(members, Seq("_g"))
         .select(col("_doc").as(idCol), col("_pos").cast("int").as("pos"),
           col("_rank").as("suffix_rank"))
-    } finally {
-      // the final frame is a checkpoint — independent of every pinned
-      // intermediate, so their blocks release here unconditionally
-      pinned.foreach(_.unpersist(blocking = false))
     }
   }
 
@@ -664,20 +625,19 @@ object SuffixArray {
         else Nil)
       mergeReps.agg(aggs.head, aggs.tail: _*).head()
     }(scala.concurrent.ExecutionContext.global)
-    val pinned = ArrayBuffer.empty[DataFrame]
-    // frozen rounds checkpoint once each and stay live to the final
-    // ranking — AFFECTED rows only (round-1 groups containing a new
-    // row), so the held total is delta-neighborhood-sized
-    val frozenParts = ArrayBuffer.empty[DataFrame]
-    try {
+    Caches.scoped { scope =>
+      // frozen rounds checkpoint once each and stay live to the final
+      // ranking — AFFECTED rows only (round-1 groups containing a new
+      // row), so the held total is delta-neighborhood-sized
+      val frozenParts = ArrayBuffer.empty[DataFrame]
       val oldG = oldDf.select(col(idCol).as("_doc"),
         md5(col(textCol)).as("_g"), col(textCol).as("_t"))
       val newG = newDf.select(col(idCol).as("_doc"),
         md5(col(textCol)).as("_g"), col(textCol).as("_t"))
       // the returned frame reads newMembers / the dup anchors lazily —
-      // REGISTERED persist (not the loop-internal `pinned` set, which
-      // the `finally` sweeps before the caller evaluates): the frame
-      // stays cached across its two output consumers, lineage stays
+      // REGISTERED persist (not the scope, which releases before the
+      // caller evaluates): the frame stays cached across its two
+      // output consumers, lineage stays
       // recomputable, and no standalone materialization job runs
       // (round 14 — the eager-checkpoint form paid one job per frame)
       val newMembers = Caches.operatorPersist(newG.select("_doc", "_g"))
@@ -704,9 +664,8 @@ object SuffixArray {
         if (keyBytes + n * 48L <= probeBudgetBytes) broadcast(keys)
         else keys.hint("shuffle_hash")
       }
-      val newKeys = newG.groupBy(col("_g")).agg(min(col("_t")).as("_t"))
-        .persist()
-      pinned += newKeys
+      val newKeys = scope.persist(
+        newG.groupBy(col("_g")).agg(min(col("_t")).as("_t")))
       // delta-derived placements ESTIMATE their bytes from row counts
       // (here ONE count of the distinct delta texts, whose md5 keys are
       // exactly 32 chars) instead of measuring each probe frame with its
@@ -730,10 +689,8 @@ object SuffixArray {
             Seq("_g"))
           .groupBy(col("_g")).agg(min(col("_doc")).as("_odoc")))
       // fresh = delta texts the old corpus has never seen
-      val newFresh = newKeys
-        .join(oldDupDocs.select("_g"), Seq("_g"), "left_anti")
-        .persist()
-      pinned += newFresh
+      val newFresh = scope.persist(newKeys
+        .join(oldDupDocs.select("_g"), Seq("_g"), "left_anti"))
       // token arrays for the sources an ESCALATING row can probe — built
       // once, AFTER round 1, restricted to round-1 escalators (groups
       // only refine, so later rounds' escalating sources are a subset):
@@ -745,8 +702,7 @@ object SuffixArray {
       var tokTable: DataFrame = null
       def buildTokTable(escSrcs: DataFrame,
           estBytes: Option[Long]): DataFrame = {
-        val esc = escSrcs.persist()
-        pinned += esc
+        val esc = scope.persist(escSrcs)
         // probe-side placement from the checkpoint job's OBSERVED
         // escalator byte sum (an upper bound on the distinct-src key
         // bytes) — no standalone measurement job; the measured
@@ -756,23 +712,19 @@ object SuffixArray {
           case Some(b) => estProbe(b)(esc)
           case None => probeSide(esc)
         }
-        val t = oldG.select(concat(lit("d:"), col("_doc").cast("string"))
-            .as("_src"), col("_t"))
+        scope.persist(oldG.select(concat(lit("d:"),
+            col("_doc").cast("string")).as("_src"), col("_t"))
           .join(escProbe, Seq("_src"))
           .select(col("_src"), split(col("_t"), " ").as("_tk"))
           .unionAll(newFresh
             .select(concat(lit("g:"), col("_g")).as("_src"), col("_t"))
             .join(escProbe, Seq("_src"))
-            .select(col("_src"), split(col("_t"), " ").as("_tk")))
-          .persist()
-        pinned += t
-        t
+            .select(col("_src"), split(col("_t"), " ").as("_tk"))))
       }
       // fresh-text suffix rows (persist barrier before the Generate,
       // the cdc_chunks discipline)
-      val freshTk = newFresh
-        .select(col("_g"), split(col("_t"), " ").as("_tk")).persist()
-      pinned += freshTk
+      val freshTk = scope.persist(newFresh
+        .select(col("_g"), split(col("_t"), " ").as("_tk")))
       val newBase = freshTk
         .select(col("_g"), col("_tk"),
           explode(sequence(lit(1), size(col("_tk")))).as("_pos"))
@@ -899,12 +851,12 @@ object SuffixArray {
           }
         // round 1 reads its per-pid old-row counts off the ranking job's
         // own stats collect (the running-count _nor)
-        val (ranked, nRows, parted, statRows) = rankedInlineRows(rankInput,
-          rankKeys, nParts,
+        val (ranked, nRows, parted, statRows) = rankedInlineRows(scope,
+          rankInput, rankKeys, nParts,
           if (round == 0)
             Seq(sum(when(col("_or").isNotNull, 1L).otherwise(0L)).as("_c"))
           else Nil)
-        if (nRows == 0) { done = true; parted.unpersist(blocking = false) }
+        if (nRows == 0) { done = true; scope.release(parted) }
         else {
           round += 1
           // group stats as WINDOW aggregates over the range frame: a
@@ -979,7 +931,7 @@ object SuffixArray {
           // exchange and no range repartition (round 15)
           val wFirst = Window.partitionBy(col("_pid"), col("_kr"))
             .orderBy(col("_or").asc_nulls_last)
-          val landed = Checkpoints.eager(stepped
+          val landed = scope.checkpoint(stepped
             .withColumn("_esc", col("_psg") === 0 &&
               col("_n") > 1 && col("_hasNew") === 1 &&
               col("_maxLen") > col("_cov"))
@@ -1068,7 +1020,8 @@ object SuffixArray {
                   col("_doc").cast("string")).as("_src"), col("_t"))
                 .unionAll(newFresh.select(concat(lit("g:"), col("_g"))
                   .as("_src"), col("_t")))
-                .join(broadcast(escSrcDf), Seq("_src")).persist()
+                .join(broadcast(escSrcDf), Seq("_src"))
+                .transform(scope.persist)
               // octet_length, not length (round-17 advice fix): the
               // seat materializes these texts as UTF-8 BYTES on the
               // driver, so the budget must measure bytes — char length
@@ -1086,10 +1039,10 @@ object SuffixArray {
               val texts = tf.collect().iterator.map(r => r.getString(0) ->
                 r.getString(1).getBytes(
                   java.nio.charset.StandardCharsets.UTF_8)).toMap
-              tf.unpersist(blocking = false)
               localResolved = Some(resolveDeltaLocal(aRows, texts, rMax))
               done = true
-            } else tf.unpersist(blocking = false)
+            }
+            scope.release(tf)
           }
           if (!done && tokTable == null)
             tokTable = buildTokTable(
@@ -1125,7 +1078,7 @@ object SuffixArray {
                 concat_ws(" ", slice(col("_tk"),
                   (col("_pos") + col("_cov")).cast("int"),
                   segLen.cast("int"))).as("_seg"))
-          parted.unpersist(blocking = false)
+          scope.release(parted)
         }
       }
       require(done,
@@ -1158,11 +1111,9 @@ object SuffixArray {
       // earlier rounds' frozen checkpoints were re-ranked INTO the
       // terminal round's checkpoint (the passenger ride) — release all
       // but the terminal one, which backs `local` and the output below
-      frozenParts.dropRight(1).foreach { f =>
-        f.queryExecution.analyzed.collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-        }.foreach(_.unpersist(blocking = false))
-      }
+      // and so escapes the scope
+      frozenParts.dropRight(1).foreach(scope.release)
+      frozenParts.lastOption.foreach(scope.escape)
       // ---- insertion-offset expansion, shared by both seats:
       // ins(r) = #new-only classes ordered strictly before old class r
       // = max i at insertion point t <= r — a step function with one
@@ -1368,8 +1319,6 @@ object SuffixArray {
         .select(col(idCol), col("pos"), col("suffix_rank"))
         .unionAll(dupSel))
       shiftedOut.unionAll(freshOut)
-    } finally {
-      pinned.foreach(_.unpersist(blocking = false))
     }
   }
 

@@ -1638,10 +1638,8 @@ object TextAnalysis {
       .transform(Caches.operatorPersist)
     val thr = census.select("n_docs").orderBy(col("n_docs").desc)
       .limit(topK).agg(min(col("n_docs"))).first()
-    if (thr.isNullAt(0) || thr.getLong(0) <= 1L) {
-      census.unpersist(blocking = false)
-      stringPlan
-    } else {
+    if (thr.isNullAt(0) || thr.getLong(0) <= 1L) stringPlan
+    else {
       val cand = census.filter(col("n_docs") >= thr.getLong(0))
       // min(gram) collapses to ONE row per candidate before the (tiny)
       // exchange; absent a 128-bit collision every gram under a key is
@@ -1931,7 +1929,7 @@ object TextAnalysis {
     // persisted: ex feeds the document-frequency aggregate and the join
     val ex = df.select(col(idCol),
       explode(Dedup.shingles(col(textCol), k)).as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Caches.operatorPersist)
     val dfreq = ex.groupBy("g").agg(count(lit(1)).as("_df"))
     ex.join(dfreq, Seq("g"))
       .groupBy(col(idCol))
@@ -2155,7 +2153,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("tf"))
       // persisted: feeds the document-frequency aggregate AND the scoring
       // join; query-vocab-filtered, so the cached frame is tiny
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Caches.operatorPersist)
     val dft = tf.groupBy(col("term")).agg(count(lit(1)).as("dft"))
     val spark = df.sparkSession
     val qterms = spark.createDataFrame(

@@ -243,19 +243,19 @@ object Incremental {
         k, numHashes, threshold, bandRows)
       val hasState = Files.exists(Paths.get(acceptedDir)) &&
         Files.exists(Paths.get(indexDir))
-      val survivors = (if (!hasState) inBatch else {
-        val corpus = spark.read.parquet(acceptedDir)
-        val index = spark.read.parquet(indexDir)
-        val hits = Dedup.nearDupAgainstCorpus(inBatch, corpus, index,
-            idCol, textCol, k, numHashes, threshold, bandRows)
-          .select(col("id_new").as(idCol)).distinct()
-        inBatch.join(hits, Seq(idCol), "left_anti")
-      }).persist()
-      try {
+      graft.functions.Caches.scoped { scope =>
+        val survivors = scope.persist(if (!hasState) inBatch else {
+          val corpus = spark.read.parquet(acceptedDir)
+          val index = spark.read.parquet(indexDir)
+          val hits = Dedup.nearDupAgainstCorpus(inBatch, corpus, index,
+              idCol, textCol, k, numHashes, threshold, bandRows)
+            .select(col("id_new").as(idCol)).distinct()
+          inBatch.join(hits, Seq(idCol), "left_anti")
+        })
         survivors.write.mode("append").parquet(acceptedDir)
         Dedup.bandIndex(survivors, idCol, textCol, k, numHashes, bandRows)
           .write.mode("append").partitionBy("band").parquet(indexDir)
-      } finally survivors.unpersist()
+      }
   }
 
   /** Streaming rollup maintenance — the continuous form of
@@ -350,16 +350,16 @@ object Incremental {
         inPairs.select(col("id_b").as(idCol)).distinct(),
         Seq(idCol), "left_anti")
       val hasState = Files.exists(Paths.get(indexDir))
-      val survivors = (if (!hasState) inBatch else {
-        val corpus = spark.read.parquet(indexDir)
-        val hits = Similarity.semanticPairsAgainstIndex(inBatch, corpus,
-            vecCol, idCol, model, threshold)
-          .select(col("id_new").as(idCol)).distinct()
-        inBatch.join(hits, Seq(idCol), "left_anti")
-      }).persist()
-      try {
+      graft.functions.Caches.scoped { scope =>
+        val survivors = scope.persist(if (!hasState) inBatch else {
+          val corpus = spark.read.parquet(indexDir)
+          val hits = Similarity.semanticPairsAgainstIndex(inBatch, corpus,
+              vecCol, idCol, model, threshold)
+            .select(col("id_new").as(idCol)).distinct()
+          inBatch.join(hits, Seq(idCol), "left_anti")
+        })
         IVF.appendIndexed(survivors, vecCol, idCol, model, indexDir)
-      } finally survivors.unpersist()
+      }
   }
 
   /** Committed-version numbers under a state dir (the Files.list stream

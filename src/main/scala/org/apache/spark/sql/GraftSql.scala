@@ -30,6 +30,13 @@ object GraftSql {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** Entries in the session's CacheManager (`numCachedEntries` is
+    * `private[sql]`) — the leak count a cache sweep must bring back to
+    * its baseline. */
+  def cachedEntries(spark: SparkSession): Int =
+    spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
+      .numCachedEntries
+
   /** Register a SQL function on an ALREADY-RUNNING session (the
     * `SparkSessionExtensions` path in [[graft.plans.GraftExtensions]] only
     * applies at session build time). */

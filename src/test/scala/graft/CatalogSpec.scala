@@ -62,6 +62,37 @@ class CatalogSpec extends AnyFunSuite {
     assert(others.isEmpty, s"spark.graft.* keys besides the checkpoint dir: $others")
   }
 
+  test("every persist and checkpoint in the library goes through Caches") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
+    // the two files that own cache lifetimes; everywhere else a persist
+    // is Caches.operatorPersist or a Caches.Scope's (named `scope`)
+    val owners = Set("Caches.scala", "Checkpoints.scala")
+    val raw = """(\w*)\.(persist|unpersist)\(|StorageLevel|localCheckpoint""".r
+    val walk = Files.walk(root)
+    val found =
+      try walk.iterator().asScala
+        .filter(f => f.toString.endsWith(".scala") &&
+          !owners(f.getFileName.toString))
+        .flatMap { f =>
+          val src = new String(Files.readAllBytes(f),
+            java.nio.charset.StandardCharsets.UTF_8)
+          raw.findAllMatchIn(src)
+            .filterNot(m => m.group(1) == "scope" && m.group(2) == "persist")
+            .map(m => root.relativize(f).toString -> m.matched)
+        }.toList
+      finally walk.close()
+    assert(found.isEmpty,
+      s"raw cache calls outside Caches/Checkpoints: $found")
+    // the scanner does see what it forbids
+    val caches = new String(Files.readAllBytes(
+      root.resolve("graft/functions/Caches.scala")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    assert(raw.findFirstIn(caches).isDefined)
+  }
+
   test("no query carries both a static and a dynamic oracle") {
     val both = SparkEntry.oracleSql.keySet
       .intersect(SparkEntry.dynamicOracleSql.keySet)

@@ -155,7 +155,9 @@ class StatsSpec extends AnyFunSuite {
   test("sweepOperatorCaches releases operator-internal persists: no net " +
     "persistent RDDs after a consuming call + sweep") {
     graft.functions.Caches.sweepOperatorCaches() // drain earlier tests
+    def entries = org.apache.spark.sql.GraftSql.cachedEntries(spark)
     val before = spark.sparkContext.getPersistentRDDs.keySet
+    val entriesBefore = entries
     val rows = Seq(
       (10L, 1L), (10L, 2L), (11L, 1L), (11L, 2L), (12L, 1L), (12L, 2L))
     Stats.basketPairAffinity(rows.toDF("b", "i"), "b", "i",
@@ -163,9 +165,13 @@ class StatsSpec extends AnyFunSuite {
     val during = spark.sparkContext.getPersistentRDDs.keySet
     assert((during -- before).nonEmpty,
       "the operator should have left a registered persist behind")
+    assert(entries > entriesBefore,
+      "the registered persist should hold a CacheManager entry")
     assert(graft.functions.Caches.sweepOperatorCaches() >= 1)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       "sweep must release every operator-internal persist")
+    assert(entries == entriesBefore,
+      "sweep must drop the CacheManager entries of what it released")
   }
 
   test("basket miners: a degenerate mega-basket above maxBasketSize is " +
