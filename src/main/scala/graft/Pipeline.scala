@@ -1,5 +1,6 @@
 package graft
 
+import graft.observability.Control
 import graft.operators.{Filters, Scan, Transforms}
 import graft.sinks.Sinks
 import graft.sources.Tables
@@ -126,13 +127,10 @@ object Pipeline {
         Future {
           val sc = spark.sparkContext
           sc.setLocalProperty("spark.scheduler.pool", s"graft-${cfg.table}")
-          sc.setJobGroup(s"graft-extract-${cfg.table}",
-            s"extract ${cfg.table}", interruptOnCancel = true)
-          try cfg.table -> scala.util.Try(action(cfg, extract(spark, dir, cfg)))
-          finally {
-            sc.clearJobGroup()
-            sc.setLocalProperty("spark.scheduler.pool", null)
-          }
+          try cfg.table -> scala.util.Try(Control.runCancellable(spark,
+            s"graft-extract-${cfg.table}", s"extract ${cfg.table}")(
+            action(cfg, extract(spark, dir, cfg))))
+          finally sc.setLocalProperty("spark.scheduler.pool", null)
         }
       }
       Await.result(Future.sequence(futs), Duration.Inf).toMap

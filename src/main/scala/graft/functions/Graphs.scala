@@ -38,41 +38,9 @@ object Graphs {
       scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1 && dampingPct >= 0 && dampingPct <= 100)
     Caches.scoped { scope =>
-    // CO-PARTITIONED ITERATION (round-18, r17 verdict #4; guide §2.4 —
-    // share one exchange across same-keyed operations): the loop-invariant
-    // frames are persisted PRE-PARTITIONED on their join keys — edgesDeg
-    // on hash(src), ids on hash(id) — with the explicit session
-    // shuffle-partition width (the Classifier.train discipline: an
-    // AQE-coalesced width would not match and the exchanges would
-    // reappear). Each iteration's ranks frame then arrives already
-    // hash(id)-partitioned (round 1: a narrow projection of the cached
-    // ids; later rounds: the left-outer join's output keeps the left
-    // side's partitioning), so when the planner shuffles these joins
-    // (sort-merge / shuffled-hash) they plan with ZERO exchanges, leaving
-    // exactly ONE exchange per iteration — the groupBy(dst) contribution
-    // aggregate, PageRank's fundamental shuffle.
-    //
-    // SIZE-GATED (measured both ways at sf0.1): the pre-partitioning only
-    // pays in the regime where the planner actually shuffles these joins
-    // — a node table too big to broadcast. Below the session's own
-    // autoBroadcastJoinThreshold AQE broadcasts the node-sized side
-    // (1-task stages, cheapest locally) and the extra repartition+persist
-    // jobs are pure overhead (bench A/B: 2.4 s -> 3.4 s when forced), so
-    // the small regime keeps the unpartitioned plan. The gate is the
-    // planner's OWN threshold — not a local constant — so it flips
-    // exactly where the exchanges it removes would appear.
-    val nP = nodes.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val idsRaw = nodes.select(col(idCol).as("id"))
-    val n = idsRaw.count() // driver scalar: one long
+    val ids = nodes.select(col(idCol).as("id"))
+    val n = ids.count() // driver scalar: one long
     require(n > 0, "pageRank over an empty node set")
-    val bcThreshold = nodes.sparkSession.sessionState.conf
-      .autoBroadcastJoinThreshold
-    // ~32 B per built (id, rank) hash-relation row — engage only where a
-    // broadcast of the rank table would be refused
-    val coPartition = bcThreshold >= 0 && n * 32L > bcThreshold
-    val ids = if (coPartition)
-      scope.persist(idsRaw.repartition(nP, col("id")))
-    else idsRaw
     val base = scale / n
     val teleport = ((100L - dampingPct) * base) / 100L
     // pairs feeds both direction legs of the union — persist so an
@@ -84,9 +52,7 @@ object Graphs {
     // (src, dst, deg) is loop-invariant — join it ONCE outside the
     // iteration instead of re-joining deg every round (one join + one
     // aggregate per round instead of two joins + one aggregate)
-    val edgesDeg = scope.persist(if (coPartition)
-      edges.join(deg, Seq("src")).repartition(nP, col("src"))
-    else edges.join(deg, Seq("src")))
+    val edgesDeg = scope.persist(edges.join(deg, Seq("src")))
     var ranks = ids.select(col("id"), lit(base).as("rank"))
     for (i <- 1 to iterations) {
       val inSums = edgesDeg

@@ -5,6 +5,8 @@ import scala.collection.mutable
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{GraftSql, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Per-query cost record: one [[SparkListener]] + [[QueryExecutionListener]]
@@ -23,8 +25,14 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * window starts from empty counters (nothing carries from one window to
   * the next). Windows do not nest. The listener sees the whole
   * SparkContext: jobs another thread runs during a window are billed to
-  * it too, so profile sequential work. */
-final class QueryProfile private (spark: SparkSession)
+  * it too, so profile sequential work.
+  *
+  * It is the only listener graft installs: with a [[GraftMetrics]] registry
+  * attached it also feeds the reference's Prometheus surface, from finished
+  * actions and, through one private [[StreamingQueryListener]] (an abstract
+  * class, so owned rather than extended), from streaming progress. */
+final class QueryProfile private (spark: SparkSession,
+    metrics: Option[GraftMetrics])
   extends SparkListener with QueryExecutionListener {
   import QueryProfile._
 
@@ -46,10 +54,31 @@ final class QueryProfile private (spark: SparkSession)
     } finally open = null
   }
 
-  /** Detach both listeners from the session. */
+  /** Micro-batch progress into the registry: `processed_records` from
+    * numInputRows, one `processed_tasks` per batch, the batch duration
+    * into `task_processing_latency`. */
+  private val progress = metrics.map { m =>
+    new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = {
+        val p = e.progress
+        if (m.onlyQueryName.forall(_ == p.name)) {
+          m.inc("processed_records", p.numInputRows.toDouble)
+          m.inc("processed_tasks", 1.0)
+          m.observeLatency("task_processing_latency", p.batchDuration / 1000.0)
+          m.markEnd()
+        }
+      }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        m.markEnd()
+    }
+  }
+
+  /** Detach every listener from the session. */
   def close(): Unit = {
     spark.sparkContext.removeSparkListener(this)
     spark.listenerManager.unregister(this)
+    progress.foreach(spark.streams.removeListener)
   }
 
   private def live(f: Acc => Unit): Unit = {
@@ -64,21 +93,53 @@ final class QueryProfile private (spark: SparkSession)
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
     live(_.stage(e.stageInfo))
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = live(_.taskEnd(e))
+
+  /** A finished action: the observe bundle's record counters, one
+    * `processed_tasks`, its duration into a latency histogram. */
   override def onSuccess(funcName: String, qe: QueryExecution,
-      durationNs: Long): Unit = live(_.execution(qe))
+      durationNs: Long): Unit = {
+    live(_.execution(qe))
+    metrics.foreach { m =>
+      qe.observedMetrics.get(m.bundleName).foreach { row =>
+        m.inc("processed_records",
+          row.getAs[Long]("records_processed").toDouble)
+        m.inc("ignored_records",
+          row.getAs[Long]("records_ignored_watermark").toDouble)
+      }
+      m.inc("processed_tasks", 1.0)
+      m.observeLatency(
+        if (WriteFuncs.contains(funcName)) "write_latency"
+        else "task_processing_latency", durationNs / 1e9)
+      m.markEnd()
+    }
+  }
+
   override def onFailure(funcName: String, qe: QueryExecution,
-      exception: Exception): Unit = live(_.execution(qe))
+      exception: Exception): Unit = {
+    live(_.execution(qe))
+    metrics.foreach { m => m.inc("failed_tasks", 1.0); m.markEnd() }
+  }
 }
 
 object QueryProfile {
 
   /** Attach a new profile's listeners to `spark`. */
-  def install(spark: SparkSession): QueryProfile = {
-    val p = new QueryProfile(spark)
+  def install(spark: SparkSession): QueryProfile = attach(spark, None)
+
+  private[observability] def attach(spark: SparkSession,
+      metrics: Option[GraftMetrics]): QueryProfile = {
+    val p = new QueryProfile(spark, metrics)
     spark.sparkContext.addSparkListener(p)
     spark.listenerManager.register(p)
+    p.progress.foreach(spark.streams.addListener)
     p
   }
+
+  /** funcName values that are writes in the reference's sense (sink push)
+    * rather than compute — these feed `write_latency`. */
+  private val WriteFuncs =
+    Set("save", "saveAsTable", "insertInto", "parquet", "json", "csv", "text",
+      "command", "foreachBatch")
 
   /** One job: start relative to the window's open, submit→end seconds
     * (-1 if it had not ended when the window closed). */

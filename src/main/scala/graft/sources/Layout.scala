@@ -87,16 +87,6 @@ object Layout {
     nFiles
   }
 
-  /** Retention maintenance over a partitioned layout: DELETE whole
-    * partition directories whose `partCol` value sorts strictly below
-    * `cutoff` (partition values are directory names — day strings compare
-    * lexicographically in date order). This is the other half of the
-    * time-partitioned contract: expiry is O(#expired directories) of
-    * metadata work, ZERO data reads/rewrites — the reason retention policy
-    * should always align with the partition key. Returns the deleted
-    * partition values. Readers racing an expiry see standard
-    * eventual-list-consistency (same as any compaction); at 100 TB this
-    * runs in the maintenance window like [[compact]]. */
   /** Land a day-partitioned PARTIAL-aggregate rollup of an events-shaped
     * frame: per (day, group) one row of associative state — counts and
     * exact cent sums. This is incremental view maintenance for the
@@ -328,6 +318,16 @@ object Layout {
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
 
+  /** Retention maintenance over a partitioned layout: DELETE whole
+    * partition directories whose `partCol` value sorts strictly below
+    * `cutoff` (partition values are directory names — day strings compare
+    * lexicographically in date order). This is the other half of the
+    * time-partitioned contract: expiry is O(#expired directories) of
+    * metadata work, ZERO data reads/rewrites — the reason retention policy
+    * should always align with the partition key. Returns the deleted
+    * partition values. Readers racing an expiry see standard
+    * eventual-list-consistency (same as any compaction); at 100 TB this
+    * runs in the maintenance window like [[compact]]. */
   def expirePartitions(spark: SparkSession, path: String, partCol: String,
       cutoff: String): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(path)

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 
+import graft.operators.Filters
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -48,7 +49,7 @@ object Incremental {
     val wm = store.load(table).getOrElse {
       store.save(table, nowMillis); nowMillis
     }
-    df.filter(tsMillis.isNull || tsMillis < lit(wm))
+    Filters.watermark(df, tsMillis, wm)
   }
 
   /** One incremental delta window: the filtered frame plus an explicit

@@ -30,6 +30,14 @@ object GraftSql {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** How many query-execution listeners the session has and how many bus
+    * listeners its SparkContext has (`private[sql]` and `private[spark]`
+    * lists) — what a listener's `close()` must restore. */
+  def executionListenerCount(spark: SparkSession): Int =
+    spark.listenerManager.listListeners().length
+  def busListenerCount(sc: org.apache.spark.SparkContext): Int =
+    sc.listenerBus.listeners.size
+
   /** Entries in the session's CacheManager (`numCachedEntries` is
     * `private[sql]`) — the leak count a cache sweep must bring back to
     * its baseline. */

@@ -1,11 +1,31 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Catalog-shape invariants: the count the docs cite, the queries/oracle
   * key containment the driver's gate relies on, and the bench headline
   * the catalog flags. */
 class CatalogSpec extends AnyFunSuite {
+
+  private val mainRoot = Paths.get("src/main/scala")
+
+  private def source(rel: String): String =
+    new String(Files.readAllBytes(mainRoot.resolve(rel)),
+      java.nio.charset.StandardCharsets.UTF_8)
+
+  /** (path under src/main/scala, text) of every library source file. */
+  private lazy val mainSources: List[(String, String)] = {
+    assert(Files.isDirectory(mainRoot),
+      s"no source tree at ${mainRoot.toAbsolutePath}")
+    val walk = Files.walk(mainRoot)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(mainRoot.relativize(_).toString).toList.map(f => f -> source(f))
+    finally walk.close()
+  }
 
   test("catalog size matches the declared CatalogCount the docs cite") {
     assert(SparkEntry.queries.size == SparkEntry.CatalogCount,
@@ -40,22 +60,11 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("the library reads no spark.graft.* session conf key but the checkpoint dir") {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
     // any string literal naming a key, interpolated or concatenated forms
     // included ("spark.graft." + k, s"spark.graft.$k")
     val literal = "\"spark\\.graft\\.[^\"]*\"".r
-    val walk = Files.walk(root)
-    val found =
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .flatMap { f =>
-          val src = new String(Files.readAllBytes(f),
-            java.nio.charset.StandardCharsets.UTF_8)
-          literal.findAllIn(src).map(root.relativize(f).toString -> _)
-        }.toList
-      finally walk.close()
+    val found = mainSources.flatMap { case (f, src) =>
+      literal.findAllIn(src).map(f -> _) }
     val dirKey = "\"" + graft.functions.Checkpoints.DirKey + "\""
     assert(found.exists(_._2 == dirKey), s"scanner missed $dirKey: $found")
     val others = found.filterNot(_._2 == dirKey)
@@ -63,34 +72,33 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("every persist and checkpoint in the library goes through Caches") {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
     // the two files that own cache lifetimes; everywhere else a persist
     // is Caches.operatorPersist or a Caches.Scope's (named `scope`)
     val owners = Set("Caches.scala", "Checkpoints.scala")
     val raw = """(\w*)\.(persist|unpersist)\(|StorageLevel|localCheckpoint""".r
-    val walk = Files.walk(root)
-    val found =
-      try walk.iterator().asScala
-        .filter(f => f.toString.endsWith(".scala") &&
-          !owners(f.getFileName.toString))
-        .flatMap { f =>
-          val src = new String(Files.readAllBytes(f),
-            java.nio.charset.StandardCharsets.UTF_8)
-          raw.findAllMatchIn(src)
-            .filterNot(m => m.group(1) == "scope" && m.group(2) == "persist")
-            .map(m => root.relativize(f).toString -> m.matched)
-        }.toList
-      finally walk.close()
+    val found = mainSources
+      .filterNot { case (f, _) => owners(Paths.get(f).getFileName.toString) }
+      .flatMap { case (f, src) =>
+        raw.findAllMatchIn(src)
+          .filterNot(m => m.group(1) == "scope" && m.group(2) == "persist")
+          .map(f -> _.matched)
+      }
     assert(found.isEmpty,
       s"raw cache calls outside Caches/Checkpoints: $found")
     // the scanner does see what it forbids
-    val caches = new String(Files.readAllBytes(
-      root.resolve("graft/functions/Caches.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    assert(raw.findFirstIn(caches).isDefined)
+    assert(raw.findFirstIn(source("graft/functions/Caches.scala")).isDefined)
+  }
+
+  test("every listener the library registers is in graft/observability") {
+    val register =
+      """listenerManager\.register|addSparkListener|streams\.addListener""".r
+    val found = mainSources
+      .filterNot { case (f, _) => f.startsWith("graft/observability/") }
+      .flatMap { case (f, src) => register.findAllIn(src).map(f -> _) }
+    assert(found.isEmpty, s"listener registrations outside observability: $found")
+    // the scanner does see what it forbids
+    assert(register.findAllIn(
+      source("graft/observability/QueryProfile.scala")).size == 3)
   }
 
   test("no query carries both a static and a dynamic oracle") {
