@@ -17,8 +17,11 @@ import org.apache.spark.sql.functions._
   * fan out through a worker pool to up to four sinks, each applying
   * rename -> parse -> watermark/offset filter -> convert -> render
   * (`kafkaworker.py:173-190`). Here the whole flow is ONE logical plan:
-  * Catalyst fuses scan+filters+transforms into a single stage, the sinks
-  * reuse one computed frame, and the scheduler replaces the worker pool.
+  * Catalyst fuses scan+filters+transforms into a single stage and the
+  * scheduler replaces the worker pool. The frames here are lazy: each sink
+  * write is its own job over the whole plan. The delta is computed once
+  * for all sinks in [[graft.streaming.Incremental.incrementalRunCommitted]],
+  * which caches it for its action.
   *
   * Observability parity: the reference exports processed/ignored counters
   * (`metrics.py:5-28`, ignored count `kafkaworker.py:192`). `df.observe`
@@ -85,9 +88,12 @@ object Pipeline {
       ignored.as("records_ignored_watermark"))
   }
 
-  /** Sink fan-out: the same computed frame rendered to each enabled sink
-    * shape — the reference's 4-way page replication (§2.8 note) without
-    * recomputing the upstream. Returns the rendered frames keyed by sink. */
+  /** Sink fan-out: the same frame rendered to each enabled sink shape —
+    * the reference's 4-way page replication (§2.8 note). Returns LAZY
+    * rendered frames keyed by sink: writing each one recomputes `df`
+    * unless `df` is cached, as
+    * [[graft.streaming.Incremental.incrementalRunCommitted]] caches the
+    * delta it hands its action. */
   def renderSinks(
       df: DataFrame,
       kafka: Option[(String, String, Seq[String])] = None, // value/key templates, topics

@@ -457,7 +457,7 @@ object TextAnalysis {
 
   private def readTables(spark: org.apache.spark.sql.SparkSession,
       path: String, layout: Seq[String]): Seq[DataFrame] =
-    layout.map(name => spark.read.parquet(s"$path/$name"))
+    layout.map(name => graft.sources.Tables.parquet(spark, s"$path/$name"))
 
   def knBigramModelWrite(m: KnBigramModel, path: String): Unit =
     writeTables(path, KnBigramLayout, Seq(m.bigrams, m.ctx, m.pre, m.tot))

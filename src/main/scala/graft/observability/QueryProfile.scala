@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{GraftSql, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.streaming.runtime.IncrementalExecution
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -56,13 +57,20 @@ final class QueryProfile private (spark: SparkSession,
 
   /** Micro-batch progress into the registry: `processed_records` from
     * numInputRows, one `processed_tasks` per batch, the batch duration
-    * into `task_processing_latency`. */
+    * into `task_processing_latency`. A stream's end moves `end_time`, and
+    * a failed one counts a `failed_tasks`, only if it is one of the
+    * registry's streams: a run whose start or progress matched
+    * `onlyQueryName` (the terminated event carries no name). */
   private val progress = metrics.map { m =>
     new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      private val runs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+      private def ours(name: String) = m.onlyQueryName.forall(_ == name)
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (ours(e.name)) runs.add(e.runId)
       override def onQueryProgress(e: QueryProgressEvent): Unit = {
         val p = e.progress
-        if (m.onlyQueryName.forall(_ == p.name)) {
+        if (ours(p.name)) {
+          runs.add(p.runId)
           m.inc("processed_records", p.numInputRows.toDouble)
           m.inc("processed_tasks", 1.0)
           m.observeLatency("task_processing_latency", p.batchDuration / 1000.0)
@@ -70,7 +78,10 @@ final class QueryProfile private (spark: SparkSession,
         }
       }
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        m.markEnd()
+        if (runs.remove(e.runId)) {
+          if (e.exception.isDefined) m.inc("failed_tasks", 1.0)
+          m.markEnd()
+        }
     }
   }
 
@@ -95,11 +106,14 @@ final class QueryProfile private (spark: SparkSession,
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = live(_.taskEnd(e))
 
   /** A finished action: the observe bundle's record counters, one
-    * `processed_tasks`, its duration into a latency histogram. */
+    * `processed_tasks`, its duration into a latency histogram. A stream's
+    * own micro-batch execution is left to its progress event, which knows
+    * the stream's name: counting it here too would count every batch
+    * twice and let any stream move a name-scoped registry's `end_time`. */
   override def onSuccess(funcName: String, qe: QueryExecution,
       durationNs: Long): Unit = {
     live(_.execution(qe))
-    metrics.foreach { m =>
+    if (!microBatch(qe)) metrics.foreach { m =>
       qe.observedMetrics.get(m.bundleName).foreach { row =>
         m.inc("processed_records",
           row.getAs[Long]("records_processed").toDouble)
@@ -117,8 +131,12 @@ final class QueryProfile private (spark: SparkSession,
   override def onFailure(funcName: String, qe: QueryExecution,
       exception: Exception): Unit = {
     live(_.execution(qe))
-    metrics.foreach { m => m.inc("failed_tasks", 1.0); m.markEnd() }
+    if (!microBatch(qe))
+      metrics.foreach { m => m.inc("failed_tasks", 1.0); m.markEnd() }
   }
+
+  private def microBatch(qe: QueryExecution): Boolean =
+    qe.isInstanceOf[IncrementalExecution]
 }
 
 object QueryProfile {

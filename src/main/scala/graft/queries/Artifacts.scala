@@ -226,7 +226,7 @@ object Artifacts {
   }
 
   def suffixRanksFrame(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(suffixRanksPath(s, dir))
+    Tables.parquet(s, suffixRanksPath(s, dir))
 
   /** Rank-level max-neighbor-LCP stats landed next to the SA build — the
     * classic SA + LCP index pair. The DETECTOR gate (suffix_dup_spans)

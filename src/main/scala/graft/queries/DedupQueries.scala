@@ -111,7 +111,7 @@ object DedupQueries {
             .select((col("doc_id") + 10000000L).as("doc_id"),
               concat(col("text"), lit(" zzqx")).as("text")))
         graft.functions.SuffixArray.suffixRanksIncrementalFrom(
-            s.read.parquet(Artifacts.suffixMergeRepsPath(s, dir)),
+            Tables.parquet(s, Artifacts.suffixMergeRepsPath(s, dir)),
             Artifacts.suffixRanksFrame(s, dir), docs, delta, "doc_id", "text")
           .orderBy("doc_id", "pos")
       },

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.functions._
 
 /** Table access layer — the Spark-native seat of the reference's scan operator.
@@ -17,6 +18,12 @@ import org.apache.spark.sql.functions._
   * (`spark.read.format("org.apache.spark.sql.cassandra")`); at 100 TB each
   * table is many thousands of splits and nothing here materializes on the
   * driver — `table()` returns a lazy DataFrame.
+  *
+  * Reads launch no Spark job: [[parquet]] resolves the schema from one
+  * footer on the driver (`GraftParquet`) where `spark.read.parquet` would
+  * run a one-task inference job per read. Nothing is memoised — each read
+  * lists the path afresh, so a directory that gains files between reads
+  * (the incremental resume loop) is seen whole every time.
   */
 object Tables {
   val All: Seq[String] = Seq(
@@ -34,7 +41,7 @@ object Tables {
     // All normalize to session-UTC TimestampType so every downstream
     // comparison against `lit(...).cast("timestamp")` resolves identically.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = parquet(spark, s"$dir/$name.parquet")
     if (name == "events") {
       df.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
@@ -45,6 +52,14 @@ object Tables {
       }
     } else df
   }
+
+  /** `spark.read.parquet(path)` with the schema read from the path's first
+    * data file on the driver, so no inference job runs. A path the driver
+    * read cannot settle (a partitioned directory, no data file, a glob)
+    * goes to `spark.read.parquet` as is, errors included. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    GraftParquet.footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import graft.functions.Caches
 import graft.operators.Filters
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,15 +29,22 @@ import org.apache.spark.sql.types.StructType
 object Incremental {
 
   /** File-backed watermark store: one `<table>.watermark` file holding epoch
-    * millis — the Redis key `<table>-modified-timestamp-filter` analogue. */
+    * millis — the Redis key `<table>-modified-timestamp-filter` analogue.
+    * A save writes a hidden sibling temp file and renames it over the key,
+    * so a crash mid-save leaves the previous value (and at worst a stray
+    * temp file, which `load` never reads), never a truncated one. */
   final class WatermarkStore(dir: String) {
     Files.createDirectories(Paths.get(dir))
     private def file(table: String): Path = Paths.get(dir, s"$table.watermark")
     def load(table: String): Option[Long] =
       if (Files.exists(file(table))) Some(Files.readString(file(table)).trim.toLong)
       else None
-    def save(table: String, millis: Long): Unit =
-      Files.writeString(file(table), millis.toString)
+    def save(table: String, millis: Long): Unit = {
+      val tmp = Files.createTempFile(Paths.get(dir), s".$table.watermark", ".tmp")
+      Files.writeString(tmp, millis.toString)
+      Files.move(tmp, file(table),
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    }
     def clear(table: String): Unit = Files.deleteIfExists(file(table))
   }
 
@@ -75,12 +83,21 @@ object Incremental {
   }
 
   /** Run-and-commit convenience: applies `action` to the delta frame and
-    * advances the watermark only if it returns without throwing. */
+    * advances the watermark only if it returns without throwing.
+    *
+    * The delta is computed once for the whole action: `action` gets the
+    * frame persisted in a [[Caches.scoped]] block, and Spark's
+    * CacheManager matches cached data by plan, so every sink the action
+    * writes (the reference's up-to-four-way page fan-out) reads the one
+    * fill its first write makes — including a sink that re-renders from an
+    * equal, separately built frame. The cache is released when `action`
+    * returns or throws, before the watermark is committed; a frame
+    * `action` returns still works afterwards, recomputed from its lineage. */
   def incrementalRunCommitted[T](df: DataFrame, tsMillis: Column,
       store: WatermarkStore, table: String, nowMillis: Long)
       (action: DataFrame => T): T = {
     val batch = incrementalRun(df, tsMillis, store, table, nowMillis)
-    val out = action(batch.frame)
+    val out = Caches.scoped(scope => action(scope.persist(batch.frame)))
     batch.commit()
     out
   }

@@ -45,17 +45,33 @@ class MetricsSpec extends AnyFunSuite {
   /** An AvailableNow stream named `qname` over a parquet copy of the
     * events; the rows it read. */
   private def availableNow(qname: String): Long = {
+    val (start, rows) = eventsStream()
+    start(qname)
+    rows
+  }
+
+  /** A parquet copy of the events: a starter that runs an AvailableNow
+    * stream of it under a given name to its end, and its row count. The
+    * copy's batch actions all run before the stream does. */
+  private def eventsStream(): (String => Unit, Long) = {
     val srcDir = java.nio.file.Files.createTempDirectory("smetrics-src")
     val ev = Tables.events(spark, GraftTestSpark.Sf0001).select("event_id", "ts")
     ev.write.mode("overwrite").parquet(srcDir.toString)
     val schema = spark.read.parquet(srcDir.toString).schema
-    val q = spark.readStream.schema(schema).parquet(srcDir.toString)
-      .writeStream.format("noop").queryName(qname)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    ev.count()
+    val start = (qname: String) => {
+      val q = spark.readStream.schema(schema).parquet(srcDir.toString)
+        .writeStream.format("noop").queryName(qname)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(120000)
+      ()
+    }
+    (start, ev.count())
   }
+
+  private def endTime(m: GraftMetrics): Option[Double] =
+    """end_time\{[^}]*\} (\S+)""".r.findFirstMatchIn(m.prometheusText)
+      .map(_.group(1).toDouble)
 
   /** Run `body` against an installed registry, then detach it. */
   private def closing[A](m: GraftMetrics)(body: GraftMetrics => A): A =
@@ -73,6 +89,22 @@ class MetricsSpec extends AnyFunSuite {
       assert(m.value("processed_records") == rows.toDouble)
       assert(m.value("processed_tasks") >= 1.0)
       assert(m.prometheusText.contains("task_processing_latency_sum"))
+    }
+  }
+
+  test("streaming listener: another stream's end leaves end_time alone") {
+    val qname = s"smetrics-${System.nanoTime()}"
+    val (startOther, _) = eventsStream()
+    closing(GraftMetrics.install(spark, "stream-1",
+        onlyQueryName = Some(qname))) { m =>
+      availableNow(qname)
+      GraftSql.drainListenerBus(spark.sparkContext)
+      val end = endTime(m)
+      assert(end.isDefined, m.prometheusText)
+      Thread.sleep(20)
+      startOther(s"$qname-other")
+      GraftSql.drainListenerBus(spark.sparkContext)
+      assert(endTime(m) == end, m.prometheusText)
     }
   }
 

@@ -57,6 +57,86 @@ class StreamingSpec extends AnyFunSuite {
     assert(store.load("t").contains(250L))
   }
 
+  test("WatermarkStore: save/load round-trips; a leftover temp file is ignored") {
+    val dir = tmp("wm-atomic")
+    val store = new Incremental.WatermarkStore(dir.toString)
+    store.save("t", 123L)
+    store.save("t", 456L)
+    assert(store.load("t").contains(456L))
+    // what a crash between the temp write and the rename leaves behind
+    Files.writeString(dir.resolve(".t.watermark999.tmp"), "45")
+    Files.writeString(dir.resolve(".u.watermark999.tmp"), "")
+    assert(store.load("t").contains(456L))
+    assert(store.load("u").isEmpty)
+    store.save("t", 789L)
+    assert(new Incremental.WatermarkStore(dir.toString).load("t").contains(789L))
+    assert(Files.list(dir).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".tmp")) == 2)
+  }
+
+  /** A parquet copy of the test events, read back through `Tables`. */
+  private def landedEvents(): (org.apache.spark.sql.DataFrame, Long) = {
+    val dir = tmp("inc-src").resolve("t").toString
+    graft.sources.Tables.events(spark, GraftTestSpark.Sf0001)
+      .select(col("event_id"), col("event_type"), col("value"),
+        unix_millis(col("ts")).as("ts_ms"))
+      .write.parquet(dir)
+    val df = graft.sources.Tables.parquet(spark, dir)
+    (df, df.count())
+  }
+
+  /** Four differently rendered writes of one delta frame. */
+  private def fourSinks(delta: org.apache.spark.sql.DataFrame): Unit = {
+    val out = tmp("inc-sinks")
+    Seq(delta,
+      delta.select(to_json(struct(col("*"))).as("json")),
+      delta.select(concat_ws("/", col("event_type"), col("event_id")).as("key")),
+      delta.groupBy("event_type").count())
+      .zipWithIndex.foreach { case (f, i) => f.write.parquet(s"$out/s$i") }
+  }
+
+  test("incrementalRunCommitted: four sinks read the source once") {
+    import graft.observability.QueryProfile
+    val (df, n) = landedEvents()
+    val profile = QueryProfile.install(spark)
+    try {
+      val store = new Incremental.WatermarkStore(tmp("wm-fan").toString)
+      val (_, shared) = profile.window(
+        Incremental.incrementalRunCommitted(df, $"ts_ms", store, "t", Long.MaxValue)(fourSinks))
+      // the cache's own reads add one record per cached batch, not per row
+      assert(shared.inputRecords >= n && shared.inputRecords < 2 * n, shared)
+      val (_, unshared) = profile.window(
+        fourSinks(Incremental.incrementalRun(df, $"ts_ms", store, "u", Long.MaxValue).frame))
+      assert(unshared.inputRecords >= 4 * n, unshared)
+    } finally profile.close()
+  }
+
+  test("incrementalRunCommitted: the delta's cache dies with the action, " +
+      "returned or thrown; the watermark commits only on return") {
+    import org.apache.spark.sql.GraftSql
+    val (df, n) = landedEvents()
+    val store = new Incremental.WatermarkStore(tmp("wm-life").toString)
+    val base = GraftSql.cachedEntries(spark)
+    intercept[RuntimeException] {
+      Incremental.incrementalRunCommitted(df, $"ts_ms", store, "t", Long.MaxValue) { d =>
+        d.count()
+        assert(GraftSql.cachedEntries(spark) == base + 1)
+        throw new RuntimeException("sink down")
+      }
+    }
+    assert(GraftSql.cachedEntries(spark) == base)
+    assert(store.load("t").isEmpty)
+    val rows = Incremental.incrementalRunCommitted(
+        df, $"ts_ms", store, "t", Long.MaxValue) { d =>
+      assert(GraftSql.cachedEntries(spark) == base + 1)
+      assert(store.load("t").isEmpty)
+      d.count()
+    }
+    assert(rows == n)
+    assert(GraftSql.cachedEntries(spark) == base)
+    assert(store.load("t").contains(Long.MaxValue))
+  }
+
   test("flatMapGroupsWithState: custom per-user state over a stream equals batch counts") {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val srcDir = tmp("fmgs-src")

@@ -1,0 +1,106 @@
+package graft
+
+import java.nio.file.{Files, Path}
+
+import graft.functions.TextAnalysis
+import graft.observability.QueryProfile
+import graft.sources.Tables
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Reads resolve their schema on the driver: no Spark job, the schema
+  * `spark.read.parquet` infers, a live listing on every read, and Spark's
+  * own reader (and errors) wherever the driver read cannot decide. */
+class TablesSpec extends AnyFunSuite {
+  lazy val spark = GraftTestSpark.spark
+  import GraftTestSpark.Sf0001
+
+  /** `body`'s result and the number of Spark jobs it launched. */
+  private def jobs[A](body: => A): (A, Int) = {
+    val profile = QueryProfile.install(spark)
+    try {
+      val (out, r) = profile.window(body)
+      (out, r.jobs.size)
+    } finally profile.close()
+  }
+
+  private def tmp(prefix: String): Path = Files.createTempDirectory(prefix)
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("Tables.table launches no job and keeps the inferred schema, every table") {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    for (name <- Tables.All) {
+      val path = s"$Sf0001/$name.parquet"
+      val (df, n) = jobs(Tables.table(spark, Sf0001, name))
+      assert(n == 0, s"$name: $n jobs")
+      val inferred = spark.read.parquet(path).schema
+      assert(jobs(Tables.parquet(spark, path))._1.schema == inferred, name)
+      if (name == "events") {
+        assert(df.schema("ts").dataType == TimestampType)
+        assert(df.schema.fields.map(_.name).toSeq == inferred.fields.map(_.name).toSeq)
+        assert(df.schema.filterNot(_.name == "ts") == inferred.filterNot(_.name == "ts"))
+      } else assert(df.schema == inferred, name)
+    }
+  }
+
+  test("a multi-file Spark-written dir: same schema and rows, no job") {
+    val dir = tmp("tables-multi").resolve("t").toString
+    spark.range(0, 300, 1, 3).select(col("id"), (col("id") % 7).as("k"),
+        concat(lit("r"), col("id").cast("string")).as("s"))
+      .write.parquet(dir)
+    val (df, n) = jobs(Tables.parquet(spark, dir))
+    assert(n == 0)
+    val inferred = spark.read.parquet(dir)
+    assert(df.schema == inferred.schema)
+    assert(rows(df) == rows(inferred))
+  }
+
+  test("each read lists the dir afresh: files landed between reads are read") {
+    val dir = tmp("tables-live")
+    spark.range(0, 10, 1, 1).write.parquet(dir.resolve("a").toString)
+    spark.range(10, 25, 1, 1).write.parquet(dir.resolve("b").toString)
+    def part(sub: String): Path = {
+      val s = Files.list(dir.resolve(sub))
+      try s.filter(_.getFileName.toString.startsWith("part-")).findFirst().get
+      finally s.close()
+    }
+    val t = Files.createDirectories(dir.resolve("t"))
+    Files.copy(part("a"), t.resolve("page-0.parquet"))
+    assert(Tables.parquet(spark, t.toString).count() == 10)
+    Files.copy(part("b"), t.resolve("page-1.parquet"))
+    assert(Tables.parquet(spark, t.toString).count() == 25)
+  }
+
+  test("a partitioned dir takes Spark's reader and keeps its partition column") {
+    val dir = tmp("tables-part").resolve("t").toString
+    spark.range(0, 40, 1, 2).select(col("id"), (col("id") % 3).as("p"))
+      .write.partitionBy("p").parquet(dir)
+    val df = Tables.parquet(spark, dir)
+    val inferred = spark.read.parquet(dir)
+    assert(df.schema == inferred.schema)
+    assert(df.schema.fieldNames.contains("p"))
+    assert(rows(df) == rows(inferred))
+  }
+
+  test("an empty dir throws what spark.read.parquet throws") {
+    val dir = tmp("tables-empty").toString
+    val spark_ = intercept[Exception](spark.read.parquet(dir))
+    val ours = intercept[Exception](Tables.parquet(spark, dir))
+    assert(ours.getClass == spark_.getClass, ours)
+  }
+
+  test("a landed KN model reads back without a job") {
+    val train = spark.createDataFrame(Seq(
+      (1L, "the cat sat on the mat"), (2L, "the dog sat on the log")))
+      .toDF("doc_id", "text")
+    val path = tmp("tables-kn").resolve("m").toString
+    TextAnalysis.knBigramModelWrite(TextAnalysis.knBigramTrain(train, "text"), path)
+    val (m, n) = jobs(TextAnalysis.knBigramModelRead(spark, path))
+    assert(n == 0)
+    assert(m.bigrams.schema == spark.read.parquet(s"$path/bigrams").schema)
+  }
+}
