@@ -113,7 +113,7 @@ object IVF {
       topK: Int, nProbe: Int): DataFrame = {
     val probes = probeCells(model, query, nProbe)
     val qArr = array(query.map(v => lit(v)): _*)
-    spark.read.parquet(path)
+    graft.sources.Tables.parquet(spark, path)
       .filter(col("ivf_cell").isin(probes: _*))
       .select(col(idCol), Similarity.cosine(col(vecCol), qArr).as("cos"))
       .orderBy(col("cos").desc, col(idCol))

@@ -56,7 +56,7 @@ object Merge {
       val wanted = (key +: opCol +: seqCol +:
         snapshot.columns.filter(_ != key).toSeq).distinct
       applyChanges(snapshot,
-        spark.read.parquet(changesDir).select(wanted.map(col): _*),
+        graft.sources.Tables.parquet(spark, changesDir).select(wanted.map(col): _*),
         key, opCol, seqCol)
     }
   }

@@ -345,7 +345,7 @@ object Artifacts {
     * corpus. 16 bytes a row. */
   val dhashIndexPath: Artifact[String] = landed("dhash-index") { (s, dir, path) =>
     Multimodal.imageDHash(
-        s.read.parquet(pngFixturePath(s, dir)).filter(col("doc_id") % 7 =!= 0),
+        Tables.parquet(s, pngFixturePath(s, dir)).filter(col("doc_id") % 7 =!= 0),
         "doc_id", "png")
       .write.mode(SaveMode.Overwrite).parquet(path)
   }

@@ -212,7 +212,7 @@ object DedupQueries {
       // stats, position coverage, and the rebuild
       (s, dir) => graft.functions.SuffixArray.suffixSpansRemoveFromStats(
           Artifacts.suffixRanksFrame(s, dir),
-          s.read.parquet(Artifacts.suffixLcpPath(s, dir)),
+          Tables.parquet(s, Artifacts.suffixLcpPath(s, dir)),
           Tables.documents(s, dir), "doc_id", "text")
         .orderBy("doc_id"),
       Some("""WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS tk FROM documents),
@@ -544,7 +544,7 @@ object DedupQueries {
         val docs = Tables.documents(s, dir)
         val incoming = docs.filter(col("doc_id") % 7 === 0)
         val corpus = docs.filter(col("doc_id") % 7 =!= 0)
-        val index = s.read.parquet(Artifacts.bandIndexPath(s, dir))
+        val index = Tables.parquet(s, Artifacts.bandIndexPath(s, dir))
         Dedup.nearDupAgainstCorpus(incoming, corpus, index, "doc_id", "text",
             k = 3, numHashes = 16, threshold = 0.8)
           .orderBy("id_new", "id_corp")

@@ -307,7 +307,7 @@ object EmbeddingQueries {
         val q = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
           .head().getSeq[Float](1).map(_.toDouble).toSeq
         val model = Artifacts.pqModel(s, dir)
-        val encoded = s.read.parquet(Artifacts.pqRawEncodedPath(s, dir))
+        val encoded = Tables.parquet(s, Artifacts.pqRawEncodedPath(s, dir))
           .withColumnRenamed("pq_codes", "codes")
         graft.functions.PQ.searchADC(encoded, "vec_id", "codes", q, model,
           k = 10)
@@ -353,7 +353,7 @@ object EmbeddingQueries {
         val q = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
           .head().getSeq[Float](1).map(_.toDouble).toSeq
         graft.functions.PQ.searchIVFPQ(
-          s.read.parquet(Artifacts.pqRawEncodedPath(s, dir)), "vec_id",
+          Tables.parquet(s, Artifacts.pqRawEncodedPath(s, dir)), "vec_id",
           Artifacts.ivfModel(s, dir), Artifacts.pqModel(s, dir), q, topK = 10, nProbe = 2)
       },
       None,
@@ -442,7 +442,7 @@ object EmbeddingQueries {
         val q = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
           .head().getSeq[Float](1).map(_.toDouble).toSeq
         graft.functions.PQ.searchIVFPQResidual(
-          s.read.parquet(Artifacts.pqResEncodedPath(s, dir)), "vec_id",
+          Tables.parquet(s, Artifacts.pqResEncodedPath(s, dir)), "vec_id",
           Artifacts.ivfModel(s, dir), Artifacts.pqResModel(s, dir), q, topK = 10, nProbe = 2)
       },
       None,
@@ -931,7 +931,7 @@ object EmbeddingQueries {
       (s, dir) => {
         val incoming = Tables.embeddings(s, dir)
           .filter(col("vec_id") % 5 === 0)
-        val corpus = s.read.parquet(Artifacts.ivfIndexedPath(s, dir))
+        val corpus = Tables.parquet(s, Artifacts.ivfIndexedPath(s, dir))
           .filter(col("vec_id") % 5 =!= 0)
         graft.functions.Similarity.semanticPairsAgainstIndex(
             incoming, corpus, "embedding", "vec_id",

@@ -58,7 +58,7 @@ object MultimodalLayoutQueries {
         val out = Artifacts.scratchPath("compact", dir)
         graft.sources.Layout.compact(Tables.documents(s, dir), out,
           sortCols = Seq("source", "doc_id"), targetFileBytes = 4L * 1024 * 1024)
-        s.read.parquet(out).select("doc_id", "source", "n_chars").orderBy("doc_id")
+        Tables.parquet(s, out).select("doc_id", "source", "n_chars").orderBy("doc_id")
       },
       Some("SELECT doc_id, source, n_chars FROM documents ORDER BY doc_id")),
 
@@ -72,7 +72,7 @@ object MultimodalLayoutQueries {
         val out = Artifacts.scratchPath("zorder", dir)
         graft.sources.Layout.writeZOrdered(
           Tables.documents(s, dir), "n_chars", "doc_id", out, numFiles = 8)
-        s.read.parquet(out)
+        Tables.parquet(s, out)
           .select(col("doc_id"), col("n_chars"),
             graft.sources.Layout.zValue(col("n_chars"), col("doc_id")).as("zval"))
           .orderBy("doc_id")
@@ -539,7 +539,7 @@ object MultimodalLayoutQueries {
       // predict every decoded sample from the id alone and recompute
       // width/height/pixel-sum without ever seeing the bytes
       (s, dir) => Multimodal.decodeImage(
-          s.read.parquet(Artifacts.pngFixturePath(s, dir)), "doc_id", "png")
+          Tables.parquet(s, Artifacts.pngFixturePath(s, dir)), "doc_id", "png")
         .orderBy("doc_id"),
       Some("""WITH d AS (SELECT doc_id, 4 + doc_id % 5 AS w, 4 + doc_id % 7 AS h
              |           FROM documents),
@@ -559,7 +559,7 @@ object MultimodalLayoutQueries {
       // javax.sound.sampled seam; PCM is lossless, so the oracle predicts
       // every decoded sample from the id alone
       (s, dir) => Multimodal.decodeAudio(
-          s.read.parquet(Artifacts.wavFixturePath(s, dir)), "doc_id", "wav")
+          Tables.parquet(s, Artifacts.wavFixturePath(s, dir)), "doc_id", "wav")
         .orderBy("doc_id"),
       Some("""WITH d AS (SELECT doc_id, 8 + doc_id % 5 AS n FROM documents),
              |sm AS (SELECT doc_id, n,
@@ -605,7 +605,7 @@ object MultimodalLayoutQueries {
       // blocks, candidates, and hamming without seeing a byte
       (s, dir) => Multimodal.dhashNearDupPairs(
           Multimodal.imageDHash(
-            s.read.parquet(Artifacts.pngFixturePath(s, dir)), "doc_id", "png"),
+            Tables.parquet(s, Artifacts.pngFixturePath(s, dir)), "doc_id", "png"),
           "doc_id", maxHamming = 3)
         .orderBy("id_a", "id_b"),
       Some("""WITH d AS (SELECT doc_id, 4 + doc_id % 5 AS w, 4 + doc_id % 7 AS h
@@ -643,9 +643,9 @@ object MultimodalLayoutQueries {
       // candidates == all hamming <= 3 pairs by construction
       (s, dir) => Multimodal.dhashAgainstIndex(
           Multimodal.imageDHash(
-            s.read.parquet(Artifacts.pngFixturePath(s, dir))
+            Tables.parquet(s, Artifacts.pngFixturePath(s, dir))
               .filter(col("doc_id") % 7 === 0), "doc_id", "png"),
-          s.read.parquet(Artifacts.dhashIndexPath(s, dir)), "doc_id", maxHamming = 3)
+          Tables.parquet(s, Artifacts.dhashIndexPath(s, dir)), "doc_id", maxHamming = 3)
         .orderBy("id_new", "id_corp"),
       Some("""WITH d AS (SELECT doc_id, 4 + doc_id % 5 AS w, 4 + doc_id % 7 AS h
              |           FROM documents),

@@ -2,18 +2,29 @@ package graft.sinks
 
 import graft.functions.Templates
 import graft.operators.Partitioners
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import graft.sources.v2.{ManifestCodec, ManifestSink}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The four sink shapes of the reference, as DataFrame preparation +
-  * DataFrameWriter wiring.
+  * writer wiring.
   *
   * Design: each `prepare*` returns the exact column layout the corresponding
-  * Spark writer consumes, so the transform is testable (and oracle-checkable)
+  * writer consumes, so the transform is testable (and oracle-checkable)
   * without a broker/bucket/database — which is also the honest contract at
   * scale: the expensive part is the distributed render, and the write is a
   * format binding.
+  *
+  * Every file-backed write here — the S3 stand-in, the JSON-lines directory
+  * and the single JSON file — commits through the one two-phase protocol of
+  * [[graft.sources.v2.ManifestSink]] with its `lines` codec, the protocol
+  * the kafka and rds shapes write through with its `tsv` codec: task temp
+  * file, task commit message, driver rename at job commit, and a
+  * `_MANIFEST.tsv` naming exactly the committed `part-*` files. Overwrite
+  * replaces the previous write's files; a failed job adds none. No
+  * Hadoop output committer runs, so a task deserializes no Hadoop
+  * `Configuration` and builds no `JobConf`.
   *
   * Reference: kafka `/root/reference/wadlabs/hub/migration/kafkaworker.py`,
   * s3 `s3worker.py`, rds `rdsworker.py`, json `jsonworker.py` (details per
@@ -117,12 +128,16 @@ object Sinks {
       .select("s3key", "body")
   }
 
-  /** File-backed stand-in for the S3 object store: one JSON doc per record,
-    * partitioned by key prefix. True per-record-PUT parity is a
-    * `foreachPartition` + S3 client in production; a 100 TB pipeline writes
-    * multi-record objects instead, which is exactly `df.write.json(prefix)`. */
+  /** File-backed stand-in for the S3 object store, on the local
+    * filesystem (a path with a URI scheme other than `file` throws): one
+    * JSON document per record, the lines Spark's JSON file writer writes —
+    * `to_json` over all columns runs the same Jackson generator with the
+    * same defaults — committed as `part-*.txt` files by the manifest
+    * protocol. Production S3 would be a client in `foreachPartition`
+    * (per-record PUTs, `s3worker.py` parity), or multi-record objects at
+    * 100 TB. */
   def writeS3Shaped(s3Shaped: DataFrame, path: String): Unit =
-    s3Shaped.write.mode(SaveMode.Overwrite).json(path)
+    writeLines(s3Shaped.select(to_json(struct(col("*")))), path)
 
   /** RDS sink shape (`rdsworker.py:29-36,85-106`): the templated SQL INSERT
     * per record, with the raw row JSON re-attached as field `json` first
@@ -158,9 +173,11 @@ object Sinks {
     df.select(bodyTemplate.map(t => Templates.render(t, col))
       .getOrElse(to_json(struct(df.columns.map(col).toSeq: _*))).as("line"))
 
-  /** Scalable path: plain JSON-lines directory write. */
+  /** Scalable path: plain JSON-lines directory write, one line per record
+    * (the lines Spark's text file writer writes), committed by the
+    * manifest protocol. */
   def writeJsonLines(df: DataFrame, path: String): Unit =
-    prepareJsonLines(df).write.mode(SaveMode.Overwrite).text(path)
+    writeLines(prepareJsonLines(df), path)
 
   /** Reference-parity path: ONE file with header, comma-separated records,
     * footer (`jsonworker.py:33-44,90-101`). Inherently single-writer — the
@@ -196,6 +213,12 @@ object Sinks {
       sb.append(footer)
       Iterator(sb.toString)
     }
-    assembled.write.mode(SaveMode.Overwrite).text(path)
+    writeLines(assembled.toDF(), path)
   }
+
+  /** Overwrites `path` with one string column's rows as lines, through the
+    * manifest sink's two-phase commit (`codec` = `lines`). */
+  private def writeLines(lines: DataFrame, path: String): Unit =
+    lines.write.format(classOf[ManifestSink].getName).option("path", path)
+      .option("codec", ManifestCodec.Lines).mode(SaveMode.Overwrite).save()
 }

@@ -38,7 +38,7 @@ object Layout {
     * partition column, so the scan's `PartitionFilters` excludes whole
     * directories before any file IO. */
   def readDay(spark: SparkSession, path: String, day: String): DataFrame =
-    spark.read.parquet(path).filter(col("event_date") === lit(day))
+    Tables.parquet(spark, path).filter(col("event_date") === lit(day))
 
   /** Compact a frame into ~`targetFileBytes` parquet files, range-clustered
     * and sorted on `sortCols` so every output file carries tight min/max
@@ -117,7 +117,7 @@ object Layout {
   def readRollupRange(spark: SparkSession, path: String,
       fromDay: String, toDay: String,
       groupCol: String = "event_type"): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .filter(col("event_date") >= lit(fromDay) &&
         col("event_date") <= lit(toDay))
       .groupBy(groupCol)
@@ -150,7 +150,7 @@ object Layout {
   def readHllRangeEstimate(spark: SparkSession, path: String,
       fromDay: String, toDay: String,
       groupCol: String = "event_type"): DataFrame = {
-    val merged = spark.read.parquet(path)
+    val merged = Tables.parquet(spark, path)
       .filter(col("event_date") >= lit(fromDay) &&
         col("event_date") <= lit(toDay))
       .groupBy(groupCol, "bucket")
@@ -168,7 +168,7 @@ object Layout {
   def readHllRollingCurve(spark: SparkSession, path: String,
       windowDays: Int, groupCol: String = "event_type"): DataFrame = {
     require(windowDays >= 1, "windowDays must be positive")
-    val sk = spark.read.parquet(path)
+    val sk = Tables.parquet(spark, path)
       .select(col("event_date").as("day"), col(groupCol),
         col("bucket"), col("max_rho"))
     val days = sk.select(col("day").as("w_day")).distinct()
@@ -205,7 +205,7 @@ object Layout {
   def readLogHistRangeQuantiles(spark: SparkSession, path: String,
       fromDay: String, toDay: String, permilles: Seq[Int],
       groupCol: String = "event_type"): DataFrame = {
-    val merged = spark.read.parquet(path)
+    val merged = Tables.parquet(spark, path)
       .filter(col("event_date") >= lit(fromDay) &&
         col("event_date") <= lit(toDay))
       .groupBy(groupCol, "e", "sub")
@@ -220,7 +220,7 @@ object Layout {
     * assignment engine-exact. */
   def readRollupWeekly(spark: SparkSession, path: String,
       groupCol: String = "event_type"): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .withColumn("wk", expr("unix_date(event_date) div 7"))
       .groupBy("wk", groupCol)
       .agg(sum(col("n_events")).as("n_events"),

@@ -54,9 +54,13 @@ object Tables {
   }
 
   /** `spark.read.parquet(path)` with the schema read from the path's first
-    * data file on the driver, so no inference job runs. A path the driver
-    * read cannot settle (a partitioned directory, no data file, a glob)
-    * goes to `spark.read.parquet` as is, errors included. */
+    * data file on the driver, so no inference job runs. A `k=v` partitioned
+    * directory gets its data schema the same way, and the reader appends
+    * the partition columns it discovers. A path the driver read cannot
+    * settle (a mixed or non-`k=v` layout, no data file, a glob) goes to
+    * `spark.read.parquet` as is, errors included. Every single-path
+    * parquet read of the library goes through here but a schema-merging
+    * one. */
   def parquet(spark: SparkSession, path: String): DataFrame =
     GraftParquet.footerSchema(spark, path)
       .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))

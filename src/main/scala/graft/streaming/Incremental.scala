@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import graft.functions.Caches
 import graft.operators.Filters
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -225,7 +226,7 @@ object Incremental {
   def readLogHistSketchState(spark: SparkSession, path: String,
       groupCols: Seq[String]): DataFrame =
     graft.functions.Sketches.logHistMerge(
-      Seq(spark.read.parquet(path)), groupCols)
+      Seq(Tables.parquet(spark, path)), groupCols)
 
   /** Streaming NEAR-dup gate — the streaming seat of
     * [[graft.functions.Dedup.nearDupAgainstCorpus]]: each micro-batch
@@ -263,8 +264,8 @@ object Incremental {
         Files.exists(Paths.get(indexDir))
       graft.functions.Caches.scoped { scope =>
         val survivors = scope.persist(if (!hasState) inBatch else {
-          val corpus = spark.read.parquet(acceptedDir)
-          val index = spark.read.parquet(indexDir)
+          val corpus = Tables.parquet(spark, acceptedDir)
+          val index = Tables.parquet(spark, indexDir)
           val hits = Dedup.nearDupAgainstCorpus(inBatch, corpus, index,
               idCol, textCol, k, numHashes, threshold, bandRows)
             .select(col("id_new").as(idCol)).distinct()
@@ -370,7 +371,7 @@ object Incremental {
       val hasState = Files.exists(Paths.get(indexDir))
       graft.functions.Caches.scoped { scope =>
         val survivors = scope.persist(if (!hasState) inBatch else {
-          val corpus = spark.read.parquet(indexDir)
+          val corpus = Tables.parquet(spark, indexDir)
           val hits = Similarity.semanticPairsAgainstIndex(inBatch, corpus,
               vecCol, idCol, model, threshold)
             .select(col("id_new").as(idCol)).distinct()
@@ -443,22 +444,22 @@ object Incremental {
         // earlier partition
         val oldDocs =
           if (Files.exists(Paths.get(docsDir)))
-            spark.read.parquet(docsDir).filter(col("_batch") < batchId)
+            Tables.parquet(spark, docsDir).filter(col("_batch") < batchId)
               .select(col(idCol), col(textCol))
           else delta.filter(lit(false))
         val merged = prev match {
           case None => SuffixArray.suffixRanks(oldDocs.unionAll(delta),
             idCol, textCol, nParts)
           case Some(p) => SuffixArray.suffixRanksIncrementalFrom(
-            spark.read.parquet(s"$stateDir/b$p/reps"),
-            spark.read.parquet(s"$stateDir/b$p/ranks"),
+            Tables.parquet(spark, s"$stateDir/b$p/reps"),
+            Tables.parquet(spark, s"$stateDir/b$p/ranks"),
             oldDocs, delta, idCol, textCol, nParts)
         }
         merged.write.mode("overwrite").parquet(s"$stateDir/b$batchId/ranks")
         // sidecar derives from the LANDED ranks (read back — the merge
         // frame is consumed once) + the full corpus including this delta
         SuffixArray.suffixMergeReps(
-            spark.read.parquet(s"$stateDir/b$batchId/ranks"),
+            Tables.parquet(spark, s"$stateDir/b$batchId/ranks"),
             oldDocs.unionAll(delta), idCol, textCol)
           .write.mode("overwrite").parquet(s"$stateDir/b$batchId/reps")
         // docs partition lands LAST: a crash anywhere above replays into
@@ -478,7 +479,7 @@ object Incremental {
     val vs = saVersions(stateDir, v => Files.exists(
       Paths.get(stateDir, s"b$v", "ranks", "_SUCCESS")))
     require(vs.nonEmpty, s"no committed SA version under $stateDir")
-    spark.read.parquet(s"$stateDir/b${vs.max}/ranks")
+    Tables.parquet(spark, s"$stateDir/b${vs.max}/ranks")
   }
 
   /** Idempotent per-batch sink: one output dir per batchId, skipped if it

@@ -51,7 +51,7 @@ object IncrementalDemo {
     // a restart from the same checkpoint must add nothing
     val src = Files.createTempDirectory("stream-src").toString
     ev.drop("ts_ms").write.mode("overwrite").parquet(src)
-    val schema = spark.read.parquet(src).schema
+    val schema = Tables.parquet(spark, src).schema
     val outDir = Files.createTempDirectory("stream-out").toString
     val ckpt = Files.createTempDirectory("stream-ckpt").toString
     def runOnce(): Unit = {

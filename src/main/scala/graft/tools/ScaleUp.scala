@@ -34,7 +34,7 @@ object ScaleUp {
 
     def write(name: String, df: DataFrame): Unit = {
       df.write.mode(SaveMode.Overwrite).parquet(s"$out/$name.parquet")
-      println(s"SCALEUP $name -> ${spark.read.parquet(s"$out/$name.parquet").count()} rows")
+      println(s"SCALEUP $name -> ${Tables.parquet(spark, s"$out/$name.parquet").count()} rows")
     }
 
     write("lineitem", copies(Tables.lineitem(spark, src)) { (d, off) =>

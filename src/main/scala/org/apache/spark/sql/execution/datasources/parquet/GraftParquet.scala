@@ -4,7 +4,7 @@ import java.io.FileNotFoundException
 
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{classic, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
@@ -26,10 +26,13 @@ object GraftParquet {
 
   /** The schema `spark.read.parquet(path)` would infer, or None where
     * Spark's own reader must decide: schema merging on, no file at `path`
-    * (a glob included), a directory holding a subdirectory (partition
-    * discovery) or a summary file, no data file, or an unreadable footer.
-    * Nothing is cached: every call lists `path` and reads the current
-    * footer. */
+    * (a glob included), a summary file, a directory that mixes files and
+    * subdirectories or holds a subdirectory not named `k=v`, no data file,
+    * or an unreadable footer. In a layout of `k=v` partition directories
+    * this is the data schema of the first data file: the reader given it
+    * still lists the layout and appends the partition columns it
+    * discovers, as it does after inference. Nothing is cached: every call
+    * lists `path` and reads the current footer. */
   def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
     val state = spark.asInstanceOf[classic.SparkSession].sessionState
     val conf = state.conf
@@ -40,13 +43,7 @@ object GraftParquet {
     val status =
       try fs.getFileStatus(root)
       catch { case _: FileNotFoundException => return None }
-    val leaves =
-      if (status.isFile) Seq(status)
-      else fs.listStatus(root).toSeq
-        .filterNot(s => HadoopFSUtils.shouldFilterOutPathName(s.getPath.getName))
-    if (leaves.exists(s => s.isDirectory || SummaryFiles(s.getPath.getName)))
-      None
-    else leaves.minByOption(_.getPath.toString).flatMap { first =>
+    firstDataFile(fs, status).flatMap { first =>
       try ParquetFileFormat.readSchema(
         ParquetFileFormat.readParquetFootersInParallel(
           hadoopConf, Seq(first), conf.ignoreCorruptFiles),
@@ -54,4 +51,19 @@ object GraftParquet {
       catch { case NonFatal(_) => None }
     }
   }
+
+  /** `status` itself if a file; else the first data file (by path) of a
+    * flat directory, or of the first partition directory that holds one. */
+  private def firstDataFile(fs: FileSystem, status: FileStatus): Option[FileStatus] =
+    if (status.isFile) Some(status)
+    else {
+      val (dirs, files) = fs.listStatus(status.getPath).toSeq
+        .filterNot(s => HadoopFSUtils.shouldFilterOutPathName(s.getPath.getName))
+        .partition(_.isDirectory)
+      if (files.exists(s => SummaryFiles(s.getPath.getName))) None
+      else if (dirs.isEmpty) files.minByOption(_.getPath.toString)
+      else if (files.nonEmpty || dirs.exists(!_.getPath.getName.contains("="))) None
+      else dirs.sortBy(_.getPath.toString).iterator
+        .flatMap(firstDataFile(fs, _)).nextOption()
+    }
 }

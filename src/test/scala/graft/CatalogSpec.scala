@@ -101,6 +101,37 @@ class CatalogSpec extends AnyFunSuite {
       source("graft/observability/QueryProfile.scala")).size == 3)
   }
 
+  test("file-backed sinks write through the manifest protocol, not a DataFrameWriter format") {
+    // .json( / .text( / .csv( on a DataFrameWriter is Hadoop's
+    // FileFormatWriter and output committer; graft/sinks commits files
+    // through sources.v2.ManifestSink (to_json( and friends do not match)
+    val hadoopWrite = """\.(json|text|csv)\(""".r
+    val sinks = mainSources.filter(_._1.startsWith("graft/sinks/"))
+    assert(sinks.nonEmpty, "no sources under graft/sinks/")
+    val found = sinks.flatMap { case (f, src) =>
+      hadoopWrite.findAllIn(src).map(f -> _) }
+    assert(found.isEmpty, s"DataFrameWriter file formats in graft/sinks: $found")
+    // the scanner does see what it forbids
+    assert(hadoopWrite.findAllIn(
+      "df.write.mode(\"overwrite\").json(p); lines.write.text(p); d.write.csv(p)").size == 3)
+    assert(hadoopWrite.findFirstIn("to_json(struct(col(\"*\")))").isEmpty)
+  }
+
+  test("every single-path parquet read goes through Tables.parquet") {
+    // spark.read.parquet(path) runs a schema-inference job per read;
+    // Tables.parquet reads the footer on the driver. A multi-path read
+    // (`paths: _*`) has no one-path form.
+    val inferring = """read\.parquet\((?!.*: _\*\))""".r
+    val owners = Set("graft/sources/Tables.scala",
+      "org/apache/spark/sql/execution/datasources/parquet/GraftParquet.scala")
+    val found = mainSources.filterNot { case (f, _) => owners(f) }
+      .flatMap { case (f, src) => inferring.findAllIn(src).map(_ => f) }
+    assert(found.isEmpty, s"spark.read.parquet outside Tables.parquet: $found")
+    // the scanner does see what it forbids, and lets the multi-path form by
+    assert(inferring.findFirstIn(source("graft/sources/Tables.scala")).isDefined)
+    assert(inferring.findFirstIn("spark.read.parquet(dirs: _*)").isEmpty)
+  }
+
   test("no query carries both a static and a dynamic oracle") {
     val both = SparkEntry.oracleSql.keySet
       .intersect(SparkEntry.dynamicOracleSql.keySet)

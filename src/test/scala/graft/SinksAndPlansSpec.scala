@@ -5,7 +5,9 @@ import java.nio.file.{Files, Path}
 import graft.functions.TextAnalysis
 import graft.plans.RollingHash
 import graft.sinks.Sinks
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -75,6 +77,94 @@ class SinksAndPlansSpec extends AnyFunSuite {
     assert(content.trim.endsWith("]"))
     assert(content.count(_ == ',') >= 2) // separators between 3 records
     assert(content.contains(""""event_type":"view""""))
+  }
+
+  /** The multiset of lines in `dir`'s `part-*` files. */
+  private def partLines(dir: Path): Seq[String] =
+    partFiles(dir).flatMap { f =>
+      val text = Files.readString(f)
+      if (text.isEmpty) Nil else text.stripSuffix("\n").split("\n", -1).toSeq
+    }.sorted
+
+  private def partFiles(dir: Path): Seq[Path] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toList
+    finally s.close()
+  }
+
+  /** Two S3-shaped frames: empty, and 4 partitions of which 2 are empty,
+    * holding nulls, non-ASCII text and a tab, backslash, quote, newline. */
+  private def sinkFrames: Seq[(String, DataFrame)] = {
+    val schema = StructType.fromDDL("s3key STRING, body STRING")
+    val rows = Seq(Row("k1", "plain"), Row(null, "tab\there"), Row("k\\3", null),
+      Row("ключ-ü", "quote\" back\\slash\nnewline"), Row(null, null))
+    val four = spark.createDataFrame(spark.sparkContext.parallelize(Seq(0, 3), 4)
+      .flatMap(i => if (i == 0) rows.take(3) else rows.drop(3)), schema)
+    assert(four.rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq ==
+      Seq(0, 3, 0, 2))
+    Seq("empty" -> spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
+      "4 partitions" -> four)
+  }
+
+  private type Write = (DataFrame, String) => Unit
+
+  /** (writer, Spark's own writer for the same lines) per file-backed sink. */
+  private val lineWriters: Seq[(String, Write, Write)] = Seq(
+    ("writeS3Shaped", Sinks.writeS3Shaped, (d, p) => d.write.json(p)),
+    ("writeJsonLines", Sinks.writeJsonLines,
+      (d, p) => Sinks.prepareJsonLines(d).write.text(p)))
+
+  private def jobsOf(body: => Unit): Int = {
+    val profile = graft.observability.QueryProfile.install(spark)
+    try profile.window(body)._2.jobs.size finally profile.close()
+  }
+
+  test("writeS3Shaped / writeJsonLines: Spark's .json() / .text() lines, one job per write") {
+    for ((name, write, sparkWrite) <- lineWriters; (shape, frame) <- sinkFrames) {
+      val ours = Files.createTempDirectory("sink-ours")
+      val theirs = Files.createTempDirectory("sink-spark").resolve("out")
+      assert(jobsOf(write(frame, ours.toString)) == 1, s"$name $shape")
+      sparkWrite(frame, theirs.toString)
+      assert(partLines(ours) == partLines(theirs), s"$name $shape")
+      // the manifest names exactly the committed files, each holding rows
+      val manifest = Files.readAllLines(ours.resolve("_MANIFEST.tsv")).asScala
+        .filter(_.nonEmpty).map(_.split("\t")).map(a => a(0) -> a(1).toLong).toMap
+      assert(manifest.keySet == partFiles(ours).map(_.getFileName.toString).toSet,
+        s"$name $shape")
+      assert(manifest.values.forall(_ > 0) &&
+        manifest.values.sum == partLines(ours).size, s"$name $shape")
+    }
+  }
+
+  test("writeS3Shaped / writeJsonLines: overwrite leaves only the new write's files") {
+    val one = sinkFrames.last._2.limit(1)
+    for ((name, write, sparkWrite) <- lineWriters) {
+      val dir = Files.createTempDirectory("sink-over").resolve("out")
+      // a directory a Hadoop writer filled first (_SUCCESS, .crc files)
+      sparkWrite(sinkFrames.last._2, dir.toString)
+      write(sinkFrames.last._2, dir.toString)
+      write(one, dir.toString)
+      val left = Files.list(dir).iterator().asScala
+        .map(_.getFileName.toString).toSet
+      val named = Files.readAllLines(dir.resolve("_MANIFEST.tsv")).asScala
+        .filter(_.nonEmpty).map(_.split("\t")(0)).toSet
+      assert(left == named + "_MANIFEST.tsv", s"$name: $left")
+      assert(partLines(dir).size == 1, name)
+    }
+  }
+
+  test("writeS3Shaped / writeJsonLines: a task that throws leaves no part file, no manifest") {
+    val boom = udf((s: String) =>
+      if (s == "boom") throw new IllegalStateException("boom") else s)
+    val failing = Seq("a", "b", "boom").toDF("v").coalesce(1)
+      .select(boom($"v").as("s3key"), lit("x").as("body"))
+    for ((name, write, _) <- lineWriters) {
+      val dir = Files.createTempDirectory("sink-fail").resolve("out")
+      intercept[Exception](write(failing, dir.toString))
+      assert(partFiles(dir).isEmpty, name)
+      assert(!Files.exists(dir.resolve("_MANIFEST.tsv")), name)
+    }
   }
 
   test("partitionDdl: normalized LIST-partition DDL per distinct value (rdsdatabase.py:73-119)") {

@@ -88,6 +88,62 @@ class SourceV2Spec extends AnyFunSuite {
     assert(after.count() == 10L, "truncate must remove the old files")
   }
 
+  test("manifest sink: a task without rows commits no file") {
+    val path = java.nio.file.Files.createTempDirectory("graft-manifest-empty")
+    // 4 partitions [0,2) [2,5) [5,7) [7,10), the middle two filtered empty
+    val df = spark.range(0, 10, 1, 4).filter($"id" < 2 || $"id" >= 7)
+      .select($"id", lit("p").as("payload"))
+    assert(df.rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq ==
+      Seq(2, 0, 0, 3))
+    df.write.format("graft.sources.v2.ManifestSink")
+      .option("path", path.toString).mode("overwrite").save()
+    val manifest = scala.io.Source.fromFile(s"$path/_MANIFEST.tsv")
+      .getLines().map(_.split("\t")).map(a => (a(0), a(1).toLong)).toSeq
+    assert(manifest.map(_._2) == Seq(2L, 3L), manifest)
+    val parts = path.toFile.listFiles().map(_.getName).filter(_.startsWith("part-"))
+    assert(parts.toSet == manifest.map(_._1).toSet)
+  }
+
+  test("manifest sink codec 'lines': raw lines as Spark's text writer, null an empty line") {
+    val base = java.nio.file.Files.createTempDirectory("graft-manifest-lines")
+    val df = Seq(Some("a\tb\\c"), None, Some("ü \"q\""), Some("")).toDF("line")
+      .repartition(2)
+    df.write.format("graft.sources.v2.ManifestSink").option("path", s"$base/ours")
+      .option("codec", "lines").mode("overwrite").save()
+    df.write.text(s"$base/spark")
+    def lines(dir: String): Seq[String] =
+      new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+        .toSeq.flatMap { f =>
+          val t = java.nio.file.Files.readString(f.toPath)
+          if (t.isEmpty) Nil else t.stripSuffix("\n").split("\n", -1).toSeq
+        }.sorted
+    assert(lines(s"$base/ours") == lines(s"$base/spark"))
+    assert(lines(s"$base/ours") == Seq("", "", "a\tb\\c", "ü \"q\"").sorted)
+    assert(new java.io.File(s"$base/ours").listFiles().map(_.getName)
+      .filter(_.startsWith("part-")).forall(_.endsWith(".txt")))
+    // the codec takes one string column only, and names no other codec
+    intercept[IllegalArgumentException](spark.range(3).write
+      .format("graft.sources.v2.ManifestSink").option("path", s"$base/bad")
+      .option("codec", "lines").mode("overwrite").save())
+    intercept[IllegalArgumentException](df.write
+      .format("graft.sources.v2.ManifestSink").option("path", s"$base/bad")
+      .option("codec", "csv").mode("overwrite").save())
+  }
+
+  test("manifest sink: a file: URI lands locally, another scheme throws naming the path") {
+    val base = java.nio.file.Files.createTempDirectory("graft-manifest-uri")
+    spark.range(3).write.format("graft.sources.v2.ManifestSink")
+      .option("path", s"file://$base/local").mode("overwrite").save()
+    assert(java.nio.file.Files.exists(base.resolve("local/_MANIFEST.tsv")))
+    val cwd = new java.io.File(".").getCanonicalFile
+    val before = cwd.list().toSet
+    val e = intercept[IllegalArgumentException](spark.range(3).write
+      .format("graft.sources.v2.ManifestSink")
+      .option("path", "s3a://bucket/x").mode("overwrite").save())
+    assert(e.getMessage.contains("s3a://bucket/x"), e.getMessage)
+    assert(cwd.list().toSet == before, "no local dir may be made for s3a:")
+  }
+
   test("manifest sink: task abort leaves no temp file behind") {
     import graft.sources.v2.ManifestDataWriter
     import org.apache.spark.sql.types._

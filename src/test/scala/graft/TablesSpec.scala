@@ -86,6 +86,55 @@ class TablesSpec extends AnyFunSuite {
     assert(rows(df) == rows(inferred))
   }
 
+  test("a k=v partitioned layout, one level or two: no job, the inferred schema") {
+    val base = tmp("tables-kv")
+    val src = spark.range(0, 60, 1, 3).select(col("id"), (col("id") % 3).as("p"),
+      concat(lit("q"), (col("id") % 2).cast("string")).as("q"))
+    for ((name, by) <- Seq("one" -> Seq("p"), "two" -> Seq("p", "q"))) {
+      val dir = base.resolve(name).toString
+      src.write.partitionBy(by: _*).parquet(dir)
+      val (df, n) = jobs(Tables.parquet(spark, dir))
+      assert(n == 0, s"$name: $n jobs")
+      val inferred = spark.read.parquet(dir)
+      assert(df.schema == inferred.schema, name)
+      assert(rows(df) == rows(inferred), name)
+    }
+    // a subdirectory not named k=v is Spark's to judge
+    val odd = base.resolve("odd")
+    spark.range(3).write.parquet(odd.resolve("sub").toString)
+    assert(org.apache.spark.sql.execution.datasources.parquet.GraftParquet
+      .footerSchema(spark, odd.toString).isEmpty)
+  }
+
+  test("the partitioned-layout readers build their frames without a job") {
+    import graft.sources.Layout
+    val events = Tables.events(spark, Sf0001)
+    val base = tmp("tables-layout")
+    def dir(n: String) = base.resolve(n).toString
+    Layout.writePartitionedByDay(events, dir("days"))
+    Layout.writeDailyRollup(events, dir("rollup"))
+    Layout.writeDailyHllSketch(events, dir("hll"), col("user_id"))
+    Layout.writeDailyLogHistSketch(events, dir("hist"), col("value"))
+    val changes = dir("changes")
+    graft.streaming.Incremental.cdcLog(changes)(
+      spark.range(5).select(col("id"), lit("u").as("op"), col("id").as("seq")), 0L)
+    val frames: Seq[(String, () => DataFrame)] = Seq(
+      "readDay" -> (() => Layout.readDay(spark, dir("days"), "2024-01-08")),
+      "readRollupRange" -> (() =>
+        Layout.readRollupRange(spark, dir("rollup"), "2024-01-01", "2024-01-31")),
+      "readRollupWeekly" -> (() => Layout.readRollupWeekly(spark, dir("rollup"))),
+      "readHllRangeEstimate" -> (() =>
+        Layout.readHllRangeEstimate(spark, dir("hll"), "2024-01-01", "2024-01-31")),
+      "readLogHistRangeQuantiles" -> (() => Layout.readLogHistRangeQuantiles(
+        spark, dir("hist"), "2024-01-01", "2024-01-31", Seq(500))),
+      "readMergeOnRead" -> (() => graft.functions.Merge.readMergeOnRead(
+        spark.range(3).select(col("id")), changes, "id")))
+    for ((name, build) <- frames) {
+      val (_, n) = jobs(build())
+      assert(n == 0, s"$name: $n jobs")
+    }
+  }
+
   test("an empty dir throws what spark.read.parquet throws") {
     val dir = tmp("tables-empty").toString
     val spark_ = intercept[Exception](spark.read.parquet(dir))
