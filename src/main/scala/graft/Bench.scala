@@ -367,8 +367,10 @@ object Bench {
       s"""$env$fileOnly,"sf":${Json.str(sfDir)},"runs_per_query":$runs,"stat":"median"}"""
   }
 
-  /** The bench session shape — the one every tool that reports bench
-    * numbers or plans must share (ProfileQuery, PlanDump, ExplainAll). */
+  /** The bench session shape and the library's one session builder:
+    * Verify, the tools (ProfileQuery, PlanDump, ExplainAll, ScaleUp) and
+    * IncrementalDemo all build theirs here, so the oracle gate runs the
+    * plans the bench times. */
   def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

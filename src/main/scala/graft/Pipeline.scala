@@ -7,6 +7,7 @@ import graft.sources.Tables
 import graft.spec.TableSpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** The end-to-end composer: the reference's scan -> transform -> sink flow as
   * one declarative Spark job (SURVEY.md §3.1 lifecycle, §7 architecture).
@@ -38,9 +39,13 @@ object Pipeline {
       pages: Option[Int] = None,
       fetchSize: Int = 10000,
       spec: TableSpec = TableSpec.Empty,
-      /** epoch-millis high-watermark over `watermarkCol` (already-millis). */
-      watermarkMillis: Option[Long] = None,
-      watermarkCol: Option[String] = None)
+      /** `cassandra_modified_timestamp_filter`: rows whose
+        * [[WatermarkField]] is at or after these epoch millis drop. */
+      watermarkMillis: Option[Long] = None)
+
+  /** The reference's watermarked field (`worker.py:194-198`), read as
+    * epoch millis after the spec's conversions (`convertTo: timestamp`). */
+  val WatermarkField = "modified_timestamp"
 
   /** Build the extraction frame: scan with pushdown-friendly projection and
     * filters, spec-driven transforms, watermark, optional sort+page cap —
@@ -50,9 +55,13 @@ object Pipeline {
     df = Scan.projectColumns(df, cfg.columns)
     df = cfg.solrFilter.map(Filters.solr(df, _)).getOrElse(df)
     df = Transforms.applySpec(df, cfg.spec)
-    df = (cfg.watermarkMillis, cfg.watermarkCol) match {
-      case (Some(wm), Some(c)) => Filters.watermark(df, col(c), wm)
-      case _ => df
+    df = cfg.watermarkMillis.fold(df) { wm =>
+      val field = df.schema.find(_.name == WatermarkField)
+      require(field.exists(_.dataType == LongType),
+        s"cassandra_modified_timestamp_filter needs a '$WatermarkField' " +
+        s"column of epoch millis in '${cfg.table}' (convertTo: timestamp), " +
+        s"found ${field.map(_.dataType.simpleString).getOrElse("none")}")
+      Filters.watermark(df, col(WatermarkField), wm)
     }
     if (cfg.sortBy.nonEmpty) df = Scan.sortBy(df, cfg.sortBy)
     df = cfg.pages.map(p => Scan.limitPages(df, p, cfg.fetchSize)).getOrElse(df)

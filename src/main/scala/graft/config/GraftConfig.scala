@@ -39,7 +39,7 @@ final case class GraftConfig(
     sortBy: Seq[(String, Boolean)] = Nil,
     fetchSize: Int = 10000,
     pages: Option[Int] = None,
-    timestampFormat: String = "%Y-%m-%d %H:%M:%S.%f%z",
+    timestampFormat: String = graft.operators.Transforms.DefaultTimestampFormat,
     modifiedTimestampFilter: Option[Long] = None,
     stateless: Boolean = true,
     enableKafka: Boolean = false,
@@ -125,7 +125,9 @@ object GraftConfig {
   }
 
   /** Per-table overlay (`app.py:365-540`): table properties + `<TABLE>_*`
-    * env names, global values as the defaults. */
+    * env names, global values as the defaults. A timestamp conversion
+    * whose spec names no format takes the resolved `timestamp_format`
+    * (the reference's global format, `worker.py:146-148`). */
   def loadTable(table: String, global: GraftConfig,
       propertiesText: String = "",
       env: Map[String, String] = Map.empty,
@@ -134,7 +136,8 @@ object GraftConfig {
     val r = Resolver(parseProperties(propertiesText), env, cli,
       envPrefix = table.toUpperCase + "_")
     val overlaid = build(r, global).copy(table = table)
-    specJson.map(j => overlaid.copy(spec = TableSpec.parse(j))).getOrElse(overlaid)
+    val spec = specJson.map(TableSpec.parse).getOrElse(overlaid.spec)
+    overlaid.copy(spec = spec.withTimestampFormat(overlaid.timestampFormat))
   }
 
   private def build(r: Resolver, d: GraftConfig): GraftConfig = d.copy(

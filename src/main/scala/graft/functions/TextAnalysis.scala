@@ -1030,14 +1030,186 @@ object TextAnalysis {
       "weight_ppm", "avg_weight_ppm")
   }
 
+  /** The Gopher battery core (Rae et al. 2021, Tables A1 and A2) behind
+    * [[gopherRules]], [[gopherRepetition]] and [[gopherChain]]: the
+    * paper's thresholds, the censuses over a row's text `_t`, words `_w`
+    * (split on spaces, so lines ride inside words) and lines `_l`, their
+    * integer-ppm metrics (toward-zero division of non-negative counts:
+    * engine-exact) and the rule table every verdict derives from. */
+  private object Gopher {
+    // Table A1: 50..100,000 words, mean word length 3..10 chars, symbol
+    // ratio 0.1, bullet 0.9, ellipsis 0.3, alpha-word 0.8, >= 2 stopwords;
+    // Table A2: duplicate lines 30%, their characters 20%, top 2-gram 20%
+    final val MinWords = 50
+    final val MaxWords = 100000
+    final val MinMeanLenPpm = 3000000L
+    final val MaxMeanLenPpm = 10000000L
+    final val MaxSymbolPpm = 100000L
+    final val MaxBulletPpm = 900000L
+    final val MaxEllipsisPpm = 300000L
+    final val MinAlphaPpm = 800000L
+    val Stopwords: Seq[String] =
+      Seq("the", "be", "to", "of", "and", "that", "have", "with", "a")
+    final val MinStopwords = 2
+    final val MaxDupLinePpm = 300000L
+    final val MaxDupLineCharPpm = 200000L
+    final val MaxTop2gramPpm = 200000L
+
+    /** `idCol`, `keep`, then the text, its words and its lines. */
+    def source(df: DataFrame, idCol: String, textCol: String,
+        keep: Seq[Column]): DataFrame =
+      df.select(Seq(col(idCol)) ++ keep ++ Seq(col(textCol).as("_t"),
+        split(col(textCol), " ").as("_w"),
+        split(col(textCol), "\n").as("_l")): _*)
+
+    /** [[source]] (`_w` only `withWords`) with the SORTED line and
+      * word-2-gram copies the A2 folds read, persisted: interpreted HOFs
+      * have no common-subexpression elimination, so the folds must read
+      * materialized attributes, never recompute the split and sort. */
+    def sorted(df: DataFrame, idCol: String, textCol: String,
+        keep: Seq[Column], withWords: Boolean): DataFrame = {
+      val grams = when(size(col("_w")) >= 2,
+        transform(sequence(lit(1), size(col("_w")) - 1),
+          i => concat_ws(" ", element_at(col("_w"), i),
+            element_at(col("_w"), i + 1))))
+        .otherwise(array().cast("array<string>"))
+      val words = if (withWords) Seq(col("_w")) else Nil
+      Caches.operatorPersist(source(df, idCol, textCol, keep)
+        .select(Seq(col(idCol)) ++ keep ++ Seq(col("_t")) ++ words ++
+          Seq(col("_l"), array_sort(col("_l")).as("_lsrt"),
+            array_sort(grams).as("_gsrt")): _*))
+    }
+
+    def lineCount: Column = size(col("_l")).cast("long").as("_nl")
+
+    private def matching(arr: String, p: Column => Column): Column =
+      size(filter(col(arr), p)).cast("long")
+
+    /** Table A1 censuses over [[source]]. */
+    def a1Counts(stopwords: Seq[String]): Seq[Column] = {
+      val hashCnt = (length(col("_t")) - length(regexp_replace(col("_t"),
+        lit("#"), lit("")))).cast("long")
+      val ellCnt = ((length(col("_t")) - length(regexp_replace(col("_t"),
+        lit("\\.\\.\\."), lit("")))) / 3).cast("long")
+      Seq(size(col("_w")).cast("long").as("n_words"),
+        aggregate(transform(col("_w"), w => length(w).cast("long")),
+          lit(0L), (acc, x) => acc + x).as("_sl"),
+        lineCount, (hashCnt + ellCnt).as("_sy"),
+        matching("_l", _.rlike("^[-*•]")).as("_bu"),
+        matching("_l", _.rlike("(\\.\\.\\.|…)$")).as("_el"),
+        matching("_w", _.rlike("[a-zA-Z]")).as("_al"),
+        matching("_w", _.isin(stopwords: _*)).as("n_stopwords"))
+    }
+
+    /** One linear fold over a SORTED array (equal elements are adjacent
+      * runs) carrying (prev, run length, `out`); `step(acc, x, same, run)`
+      * gives the new `out`. O(len log len) per row with the sort, not the
+      * per-element `filter` census's O(len²): a jumbo document cannot
+      * become a straggler task. prev seeds NULL, so `<=>` starts a fresh
+      * run at the first element (split() never yields nulls). */
+    private def runFold(sortedArr: String, out: String)(
+        step: (Column, Column, Column, Column) => Column): Column =
+      aggregate(col(sortedArr),
+        struct(lit(null).cast("string").as("p"), lit(0L).as("r"),
+          lit(0L).as(out)),
+        (acc, x) => {
+          val same = x <=> acc.getField("p")
+          val run = when(same, acc.getField("r") + 1L).otherwise(lit(1L))
+          struct(x.as("p"), run.as("r"), step(acc, x, same, run).as(out))
+        },
+        acc => acc.getField(out))
+
+    /** Table A2 censuses over [[sorted]], besides [[lineCount]]. */
+    def a2Counts: Seq[Column] = {
+      val lineChars = aggregate(transform(col("_l"),
+        l => length(l).cast("long")), lit(0L), (a, x) => a + x)
+      val dupLines = (size(col("_l")).cast("long") -
+        size(array_distinct(col("_l")))).cast("long")
+      // a run's FIRST repeat charges both occurrences (the census counts
+      // characters inside every occurrence of a duplicated line); later
+      // repeats charge one each
+      val dupLineChars = runFold("_lsrt", "t") { (acc, x, same, _) =>
+        acc.getField("t") + when(same, when(acc.getField("r") === 1L,
+            length(x).cast("long") * 2L)
+          .otherwise(length(x).cast("long"))).otherwise(lit(0L))
+      }
+      // max over grams of count(g) * length(g): deterministic under ties,
+      // unlike "the most common gram"
+      val topCover = runFold("_gsrt", "b") { (acc, x, _, run) =>
+        greatest(acc.getField("b"), run * length(x).cast("long"))
+      }
+      Seq(lineChars.as("_lc"), dupLines.as("_dl"),
+        dupLineChars.as("_dlc"), topCover.as("_tc"),
+        length(col("_t")).cast("long").as("_n"))
+    }
+
+    private def ppm(count: String, of: String): Column =
+      expr(s"($count * 1000000) div $of")
+
+    /** [[ppm]], or 0 where the denominator is 0 (an empty text). */
+    private def ppmOrZero(count: String, of: String): Column =
+      when(col(of) > 0, ppm(count, of)).otherwise(0L)
+
+    def a1Metrics: Seq[Column] = Seq(col("n_words"),
+      ppm("_sl", "n_words").as("mean_word_len_ppm"),
+      ppm("_sy", "n_words").as("symbol_ratio_ppm"),
+      ppm("_bu", "_nl").as("bullet_line_ppm"),
+      ppm("_el", "_nl").as("ellipsis_line_ppm"),
+      ppm("_al", "n_words").as("alpha_word_ppm"),
+      col("n_stopwords"))
+
+    def a2Metrics: Seq[Column] = Seq(ppm("_dl", "_nl").as("dup_line_ppm"),
+      ppmOrZero("_dlc", "_lc").as("dup_line_char_ppm"),
+      ppmOrZero("_tc", "_n").as("top_2gram_char_ppm"))
+
+    /** A row of the rule table: `label` fails where `metric` lies below
+      * `min` or above `max`. */
+    final case class Rule(label: String, metric: String,
+        min: Option[Long], max: Option[Long]) {
+      def failed: Column =
+        (min.map(col(metric) < _) ++ max.map(col(metric) > _)).reduce(_ || _)
+      def holds: Iterable[Column] =
+        min.map(col(metric) >= _) ++ max.map(col(metric) <= _)
+    }
+
+    /** The rule table's Table A1 rows, in the paper's order. */
+    def a1Rules(minWords: Int, maxWords: Int, minMeanLenPpm: Long,
+        maxMeanLenPpm: Long, maxSymbolPpm: Long, maxBulletPpm: Long,
+        maxEllipsisPpm: Long, minAlphaPpm: Long,
+        minStopwords: Int): Seq[Rule] = Seq(
+      Rule("word_count", "n_words", Some(minWords), Some(maxWords)),
+      Rule("mean_word_len", "mean_word_len_ppm", Some(minMeanLenPpm),
+        Some(maxMeanLenPpm)),
+      Rule("symbol_ratio", "symbol_ratio_ppm", None, Some(maxSymbolPpm)),
+      Rule("bullet_lines", "bullet_line_ppm", None, Some(maxBulletPpm)),
+      Rule("ellipsis_lines", "ellipsis_line_ppm", None,
+        Some(maxEllipsisPpm)),
+      Rule("alpha_words", "alpha_word_ppm", Some(minAlphaPpm), None),
+      Rule("stopwords", "n_stopwords", Some(minStopwords), None))
+
+    /** The rule table's Table A2 rows, which follow the A1 rows. */
+    def a2Rules(maxDupLinePpm: Long, maxDupLineCharPpm: Long,
+        maxTop2gramPpm: Long): Seq[Rule] = Seq(
+      Rule("dup_lines", "dup_line_ppm", None, Some(maxDupLinePpm)),
+      Rule("dup_line_chars", "dup_line_char_ppm", None,
+        Some(maxDupLineCharPpm)),
+      Rule("top_2gram", "top_2gram_char_ppm", None, Some(maxTop2gramPpm)))
+
+    /** Every rule holds. */
+    def keep(rules: Seq[Rule]): Column = rules.flatMap(_.holds).reduce(_ && _)
+
+    /** The label of the first rule that fails, NULL when none does. */
+    def firstFailed(rules: Seq[Rule]): Column =
+      rules.tail.foldLeft(when(rules.head.failed, lit(rules.head.label))) {
+        (chain, r) => chain.when(r.failed, lit(r.label))
+      }
+  }
+
   /** The FULL Gopher rule battery (Rae et al. 2021, Table A1 — the
     * document-quality rules most production curation stacks start from),
     * as an AUDIT TABLE: every rule's metric lands next to its verdict,
     * so per-rule loss rates and threshold sweeps are one aggregation
-    * over this output ([[qualityFilterChain]] gives the composed
-    * first-failure chain; this gives the full evidence row). Metrics are
-    * exact integers (ppm ratios via toward-zero division of non-negative
-    * counts — engine-exact):
+    * over this output ([[gopherChain]] gives the first-failure chain):
     *
     *   n_words             word count in [minWords, maxWords]
     *   mean_word_len_ppm   mean characters/word in [min, max]
@@ -1047,275 +1219,92 @@ object TextAnalysis {
     *   alpha_word_ppm      words containing a letter >= min
     *   n_stopwords         occurrences from the stopword set >= min
     *
-    * Scale shape: a PURE NARROW MAP — every metric is a row-local array
-    * expression, the whole battery fuses into the scan; no explode, no
-    * join, no shuffle.
-    *
-    * Defaults are the PAPER'S thresholds (Table A1: 50..100,000 words,
-    * mean word length 3..10 chars, symbol ratio 0.1, bullet 0.9,
-    * ellipsis 0.3, alpha-word 0.8, >= 2 stopwords). Fixture-sized
-    * corpora (the gate's synthetic documents run ~tens of words) must
-    * pass scaled word bounds EXPLICITLY at the call site — the gate does
-    * — or the word-count rule rejects everything. */
+    * `gopher_keep` holds where every A1 rule of the battery core does.
+    * A PURE NARROW MAP fused into the scan: no persist, no sorted copy,
+    * no shuffle. Defaults are the paper's thresholds; fixture-sized
+    * corpora (the gate's documents run ~tens of words) must pass scaled
+    * word bounds at the call site, or the word-count rule rejects
+    * everything. */
   def gopherRules(df: DataFrame, idCol: String, textCol: String,
-      minWords: Int = 50, maxWords: Int = 100000,
-      minMeanLenPpm: Long = 3000000L, maxMeanLenPpm: Long = 10000000L,
-      maxSymbolPpm: Long = 100000L, maxBulletPpm: Long = 900000L,
-      maxEllipsisPpm: Long = 300000L, minAlphaPpm: Long = 800000L,
-      stopwords: Seq[String] =
-        Seq("the", "be", "to", "of", "and", "that", "have", "with", "a"),
-      minStopwords: Int = 2): DataFrame = {
-    val t = df.select(col(idCol), col(textCol).as("_t"),
-      split(col(textCol), " ").as("_w"), split(col(textCol), "\n").as("_l"))
-    val n = size(col("_w")).cast("long")
-    val nl = size(col("_l")).cast("long")
-    val sumLen = aggregate(transform(col("_w"), w => length(w).cast("long")),
-      lit(0L), (acc, x) => acc + x)
-    val hashCnt =
-      (length(col("_t")) - length(regexp_replace(col("_t"),
-        lit("#"), lit("")))).cast("long")
-    val ellCnt = ((length(col("_t")) - length(regexp_replace(col("_t"),
-      lit("\\.\\.\\."), lit("")))) / 3).cast("long")
-    val bulletCnt = size(filter(col("_l"),
-      l => l.rlike("^[-*•]"))).cast("long")
-    val ellLineCnt = size(filter(col("_l"),
-      l => l.rlike("(\\.\\.\\.|…)$"))).cast("long")
-    val alphaCnt = size(filter(col("_w"),
-      w => w.rlike("[a-zA-Z]"))).cast("long")
-    val stopCnt = size(filter(col("_w"),
-      w => w.isin(stopwords: _*))).cast("long")
-    t.select(col(idCol), n.as("n_words"), sumLen.as("_sl"), nl.as("_nl"),
-        (hashCnt + ellCnt).as("_sy"), bulletCnt.as("_bu"),
-        ellLineCnt.as("_el"), alphaCnt.as("_al"),
-        stopCnt.as("n_stopwords"))
-      .select(col(idCol), col("n_words"),
-        expr("(_sl * 1000000) div n_words").as("mean_word_len_ppm"),
-        expr("(_sy * 1000000) div n_words").as("symbol_ratio_ppm"),
-        expr("(_bu * 1000000) div _nl").as("bullet_line_ppm"),
-        expr("(_el * 1000000) div _nl").as("ellipsis_line_ppm"),
-        expr("(_al * 1000000) div n_words").as("alpha_word_ppm"),
-        col("n_stopwords"))
-      .withColumn("gopher_keep",
-        col("n_words") >= minWords && col("n_words") <= maxWords &&
-          col("mean_word_len_ppm") >= minMeanLenPpm &&
-          col("mean_word_len_ppm") <= maxMeanLenPpm &&
-          col("symbol_ratio_ppm") <= maxSymbolPpm &&
-          col("bullet_line_ppm") <= maxBulletPpm &&
-          col("ellipsis_line_ppm") <= maxEllipsisPpm &&
-          col("alpha_word_ppm") >= minAlphaPpm &&
-          col("n_stopwords") >= minStopwords)
+      minWords: Int = Gopher.MinWords, maxWords: Int = Gopher.MaxWords,
+      minMeanLenPpm: Long = Gopher.MinMeanLenPpm,
+      maxMeanLenPpm: Long = Gopher.MaxMeanLenPpm,
+      maxSymbolPpm: Long = Gopher.MaxSymbolPpm,
+      maxBulletPpm: Long = Gopher.MaxBulletPpm,
+      maxEllipsisPpm: Long = Gopher.MaxEllipsisPpm,
+      minAlphaPpm: Long = Gopher.MinAlphaPpm,
+      stopwords: Seq[String] = Gopher.Stopwords,
+      minStopwords: Int = Gopher.MinStopwords): DataFrame = {
+    val rules = Gopher.a1Rules(minWords, maxWords, minMeanLenPpm,
+      maxMeanLenPpm, maxSymbolPpm, maxBulletPpm, maxEllipsisPpm,
+      minAlphaPpm, minStopwords)
+    Gopher.source(df, idCol, textCol, Nil)
+      .select(col(idCol) +: Gopher.a1Counts(stopwords): _*)
+      .select(col(idCol) +: Gopher.a1Metrics: _*)
+      .withColumn("gopher_keep", Gopher.keep(rules))
   }
 
   /** The Gopher REPETITION filters (Rae et al. 2021, Table A2 — the
     * within-document half of the battery [[gopherRules]] starts): a page
     * that repeats itself is boilerplate even when every A1 rule passes.
-    * Exact integer-ppm metrics, each a row-local array expression:
     *
     *   dup_line_ppm        duplicate lines / lines (a line counts as
     *                       duplicate when its text occurs >= 2 times)
     *   dup_line_char_ppm   characters inside duplicate lines / line chars
     *   top_2gram_char_ppm  characters covered by the most-repeated word
-    *                       2-gram / text chars — max over grams of
-    *                       count(g) * length(g) (deterministic under
-    *                       ties, unlike "the most common gram")
+    *                       2-gram / text chars
     *
-    * The occurrence censuses run over a SORTED copy of each row's array
-    * (duplicates become adjacent runs), then one linear `aggregate` fold
-    * carries (prev, run-length, total) — O(len log len) per row, never
-    * the naive per-element filter's O(len²), so a single jumbo document
-    * (a 100k-word boilerplate page is routine in a web crawl) cannot
-    * become a task-level straggler; everything stays row-local, the
-    * whole battery a pure narrow map fused into the scan.
-    * Thresholds default to the paper's (30% / 20% / 20%). */
+    * `repetition_keep` holds where every A2 rule of the battery core
+    * does. One persisted narrow projection carries the sorted copies the
+    * run folds read; everything stays row-local. Thresholds default to
+    * the paper's. */
   def gopherRepetition(df: DataFrame, idCol: String, textCol: String,
-      maxDupLinePpm: Long = 300000L, maxDupLineCharPpm: Long = 200000L,
-      maxTop2gramPpm: Long = 200000L): DataFrame = {
-    // persist barrier before the fold lambdas (the cdc_chunks
-    // discipline): interpreted HOFs have NO common-subexpression
-    // elimination, so the SORTED copies land as materialized attribute
-    // columns — every fold reads an attribute, nothing recomputes the
-    // split/sort per reference
-    val grams = when(size(col("_w")) >= 2,
-      transform(sequence(lit(1), size(col("_w")) - 1),
-        i => concat_ws(" ", element_at(col("_w"), i),
-          element_at(col("_w"), i + 1))))
-      .otherwise(array().cast("array<string>"))
-    val t = Caches.operatorPersist(df.select(col(idCol),
-        col(textCol).as("_t"), split(col(textCol), " ").as("_w"),
-        split(col(textCol), "\n").as("_l"))
-      .select(col(idCol), col("_t"), col("_l"),
-        array_sort(col("_l")).as("_lsrt"),
-        array_sort(grams).as("_gsrt")))
-    val nl = size(col("_l")).cast("long")
-    val lineChars = aggregate(transform(col("_l"),
-      l => length(l).cast("long")), lit(0L), (a, x) => a + x)
-    val dupLines = (nl - size(array_distinct(col("_l")))).cast("long")
-    // duplicate-occurrence censuses over the SORTED arrays: equal
-    // elements are adjacent runs, so ONE linear fold with a
-    // (prev, run-length, total) struct accumulator replaces the naive
-    // per-element `filter` count — O(len log len) per row instead of
-    // O(len²), the round-14 jumbo-document hardening (a 100k-word page
-    // under the old form was ~10^10 row-local comparisons: a straggler
-    // task no partitioning can fix). prev seeds NULL; `<=>` makes the
-    // first element start a fresh run (split() never yields nulls).
-    val dupLineChars = aggregate(col("_lsrt"),
-      struct(lit(null).cast("string").as("p"), lit(0L).as("r"),
-        lit(0L).as("t")),
-      (acc, x) => {
-        val same = x <=> acc.getField("p")
-        val run = when(same, acc.getField("r") + 1L).otherwise(lit(1L))
-        // a run's FIRST repeat charges both occurrences (the census
-        // counts characters inside every occurrence of a duplicated
-        // line); later repeats charge one each
-        val add = when(same, when(acc.getField("r") === 1L,
-            length(x).cast("long") * 2L)
-          .otherwise(length(x).cast("long"))).otherwise(lit(0L))
-        struct(x.as("p"), run.as("r"),
-          (acc.getField("t") + add).as("t"))
-      },
-      acc => acc.getField("t"))
-    val topCover = aggregate(col("_gsrt"),
-      struct(lit(null).cast("string").as("p"), lit(0L).as("r"),
-        lit(0L).as("b")),
-      (acc, x) => {
-        val run = when(x <=> acc.getField("p"), acc.getField("r") + 1L)
-          .otherwise(lit(1L))
-        struct(x.as("p"), run.as("r"),
-          greatest(acc.getField("b"),
-            run * length(x).cast("long")).as("b"))
-      },
-      acc => acc.getField("b"))
-    t.select(col(idCol), nl.as("_nl"), lineChars.as("_lc"),
-        dupLines.as("_dl"), dupLineChars.as("_dlc"),
-        topCover.as("_tc"), length(col("_t")).cast("long").as("_n"))
-      .select(col(idCol),
-        expr("(_dl * 1000000) div _nl").as("dup_line_ppm"),
-        when(col("_lc") > 0, expr("(_dlc * 1000000) div _lc"))
-          .otherwise(0L).as("dup_line_char_ppm"),
-        when(col("_n") > 0, expr("(_tc * 1000000) div _n"))
-          .otherwise(0L).as("top_2gram_char_ppm"))
-      .withColumn("repetition_keep",
-        col("dup_line_ppm") <= maxDupLinePpm &&
-          col("dup_line_char_ppm") <= maxDupLineCharPpm &&
-          col("top_2gram_char_ppm") <= maxTop2gramPpm)
+      maxDupLinePpm: Long = Gopher.MaxDupLinePpm,
+      maxDupLineCharPpm: Long = Gopher.MaxDupLineCharPpm,
+      maxTop2gramPpm: Long = Gopher.MaxTop2gramPpm): DataFrame = {
+    val rules = Gopher.a2Rules(maxDupLinePpm, maxDupLineCharPpm,
+      maxTop2gramPpm)
+    Gopher.sorted(df, idCol, textCol, Nil, withWords = false)
+      .select(Seq(col(idCol), Gopher.lineCount) ++ Gopher.a2Counts: _*)
+      .select(col(idCol) +: Gopher.a2Metrics: _*)
+      .withColumn("repetition_keep", Gopher.keep(rules))
   }
 
   /** The composed Gopher battery — every Table A1 rule then every Table
-    * A2 repetition filter ([[gopherRules]] / [[gopherRepetition]] give
-    * the per-metric audit tables; this is the PRODUCTION verdict) — as a
-    * first-failure chain: `first_failed` names the first rule a document
-    * breaks in the paper's table order (NULL when kept), so the
-    * per-rule loss census of a 100 TB curation run is one groupBy over
-    * this output. One persisted narrow projection (text, words, lines,
-    * and the two SORTED copies the A2 run-folds read — the no-CSE
-    * interpreted-HOF discipline), then every metric is a row-local
-    * expression: no explode, no join, no shuffle. Word bounds default
-    * to the paper's (50..100,000) — fixture-scale callers pass their
-    * own. `keepCols` pass through untouched (the funnel composition
-    * rides them). */
+    * A2 repetition filter, the PRODUCTION verdict — as a first-failure
+    * chain: `first_failed` names the first rule of the battery core's
+    * table a document breaks (NULL when kept), so the per-rule loss
+    * census of a 100 TB curation run is one groupBy over this output.
+    * One persisted narrow projection ([[gopherRepetition]]'s, plus the
+    * words), then every metric is a row-local expression: no explode, no
+    * join, no shuffle. Thresholds default to the paper's; fixture-scale
+    * callers pass their own word bounds. `keepCols` pass through
+    * untouched (the funnel composition rides them). */
   def gopherChain(df: DataFrame, idCol: String, textCol: String,
-      minWords: Int = 50, maxWords: Int = 100000,
-      minMeanLenPpm: Long = 3000000L, maxMeanLenPpm: Long = 10000000L,
-      maxSymbolPpm: Long = 100000L, maxBulletPpm: Long = 900000L,
-      maxEllipsisPpm: Long = 300000L, minAlphaPpm: Long = 800000L,
-      stopwords: Seq[String] =
-        Seq("the", "be", "to", "of", "and", "that", "have", "with", "a"),
-      minStopwords: Int = 2,
-      maxDupLinePpm: Long = 300000L, maxDupLineCharPpm: Long = 200000L,
-      maxTop2gramPpm: Long = 200000L,
+      minWords: Int = Gopher.MinWords, maxWords: Int = Gopher.MaxWords,
+      minMeanLenPpm: Long = Gopher.MinMeanLenPpm,
+      maxMeanLenPpm: Long = Gopher.MaxMeanLenPpm,
+      maxSymbolPpm: Long = Gopher.MaxSymbolPpm,
+      maxBulletPpm: Long = Gopher.MaxBulletPpm,
+      maxEllipsisPpm: Long = Gopher.MaxEllipsisPpm,
+      minAlphaPpm: Long = Gopher.MinAlphaPpm,
+      stopwords: Seq[String] = Gopher.Stopwords,
+      minStopwords: Int = Gopher.MinStopwords,
+      maxDupLinePpm: Long = Gopher.MaxDupLinePpm,
+      maxDupLineCharPpm: Long = Gopher.MaxDupLineCharPpm,
+      maxTop2gramPpm: Long = Gopher.MaxTop2gramPpm,
       keepCols: Seq[String] = Nil): DataFrame = {
-    val passthru = keepCols.map(col)
-    val grams = when(size(col("_w")) >= 2,
-      transform(sequence(lit(1), size(col("_w")) - 1),
-        i => concat_ws(" ", element_at(col("_w"), i),
-          element_at(col("_w"), i + 1))))
-      .otherwise(array().cast("array<string>"))
-    val t = Caches.operatorPersist(df.select(Seq(col(idCol)) ++ passthru ++
-        Seq(col(textCol).as("_t"), split(col(textCol), " ").as("_w"),
-          split(col(textCol), "\n").as("_l")): _*)
-      .select(Seq(col(idCol)) ++ passthru ++ Seq(col("_t"), col("_w"),
-        col("_l"), array_sort(col("_l")).as("_lsrt"),
-        array_sort(grams).as("_gsrt")): _*))
-    // ---- A1 censuses (expressions mirror [[gopherRules]] verbatim)
-    val n = size(col("_w")).cast("long")
-    val nl = size(col("_l")).cast("long")
-    val sumLen = aggregate(transform(col("_w"), w => length(w).cast("long")),
-      lit(0L), (acc, x) => acc + x)
-    val hashCnt =
-      (length(col("_t")) - length(regexp_replace(col("_t"),
-        lit("#"), lit("")))).cast("long")
-    val ellCnt = ((length(col("_t")) - length(regexp_replace(col("_t"),
-      lit("\\.\\.\\."), lit("")))) / 3).cast("long")
-    val bulletCnt = size(filter(col("_l"),
-      l => l.rlike("^[-*•]"))).cast("long")
-    val ellLineCnt = size(filter(col("_l"),
-      l => l.rlike("(\\.\\.\\.|…)$"))).cast("long")
-    val alphaCnt = size(filter(col("_w"),
-      w => w.rlike("[a-zA-Z]"))).cast("long")
-    val stopCnt = size(filter(col("_w"),
-      w => w.isin(stopwords: _*))).cast("long")
-    // ---- A2 censuses (the sorted-run folds of [[gopherRepetition]])
-    val lineChars = aggregate(transform(col("_l"),
-      l => length(l).cast("long")), lit(0L), (a, x) => a + x)
-    val dupLines = (nl - size(array_distinct(col("_l")))).cast("long")
-    val dupLineChars = aggregate(col("_lsrt"),
-      struct(lit(null).cast("string").as("p"), lit(0L).as("r"),
-        lit(0L).as("t")),
-      (acc, x) => {
-        val same = x <=> acc.getField("p")
-        val run = when(same, acc.getField("r") + 1L).otherwise(lit(1L))
-        val add = when(same, when(acc.getField("r") === 1L,
-            length(x).cast("long") * 2L)
-          .otherwise(length(x).cast("long"))).otherwise(lit(0L))
-        struct(x.as("p"), run.as("r"),
-          (acc.getField("t") + add).as("t"))
-      },
-      acc => acc.getField("t"))
-    val topCover = aggregate(col("_gsrt"),
-      struct(lit(null).cast("string").as("p"), lit(0L).as("r"),
-        lit(0L).as("b")),
-      (acc, x) => {
-        val run = when(x <=> acc.getField("p"), acc.getField("r") + 1L)
-          .otherwise(lit(1L))
-        struct(x.as("p"), run.as("r"),
-          greatest(acc.getField("b"),
-            run * length(x).cast("long")).as("b"))
-      },
-      acc => acc.getField("b"))
-    t.select(Seq(col(idCol)) ++ passthru ++ Seq(n.as("n_words"),
-        sumLen.as("_sl"), nl.as("_nl"), (hashCnt + ellCnt).as("_sy"),
-        bulletCnt.as("_bu"), ellLineCnt.as("_el"), alphaCnt.as("_al"),
-        stopCnt.as("_ns"), lineChars.as("_lc"), dupLines.as("_dl"),
-        dupLineChars.as("_dlc"), topCover.as("_tc"),
-        length(col("_t")).cast("long").as("_n")): _*)
-      .select(Seq(col(idCol)) ++ passthru ++ Seq(col("n_words"),
-        expr("(_sl * 1000000) div n_words").as("_mwl"),
-        expr("(_sy * 1000000) div n_words").as("_syp"),
-        expr("(_bu * 1000000) div _nl").as("_bup"),
-        expr("(_el * 1000000) div _nl").as("_elp"),
-        expr("(_al * 1000000) div n_words").as("_alp"),
-        col("_ns"),
-        expr("(_dl * 1000000) div _nl").as("_dlp"),
-        when(col("_lc") > 0, expr("(_dlc * 1000000) div _lc"))
-          .otherwise(0L).as("_dlcp"),
-        when(col("_n") > 0, expr("(_tc * 1000000) div _n"))
-          .otherwise(0L).as("_tcp")): _*)
-      .withColumn("first_failed",
-        when(col("n_words") < minWords || col("n_words") > maxWords,
-            lit("word_count"))
-          .when(col("_mwl") < minMeanLenPpm || col("_mwl") > maxMeanLenPpm,
-            lit("mean_word_len"))
-          .when(col("_syp") > maxSymbolPpm, lit("symbol_ratio"))
-          .when(col("_bup") > maxBulletPpm, lit("bullet_lines"))
-          .when(col("_elp") > maxEllipsisPpm, lit("ellipsis_lines"))
-          .when(col("_alp") < minAlphaPpm, lit("alpha_words"))
-          .when(col("_ns") < minStopwords, lit("stopwords"))
-          .when(col("_dlp") > maxDupLinePpm, lit("dup_lines"))
-          .when(col("_dlcp") > maxDupLineCharPpm, lit("dup_line_chars"))
-          .when(col("_tcp") > maxTop2gramPpm, lit("top_2gram")))
+    val rules = Gopher.a1Rules(minWords, maxWords, minMeanLenPpm,
+      maxMeanLenPpm, maxSymbolPpm, maxBulletPpm, maxEllipsisPpm,
+      minAlphaPpm, minStopwords) ++
+      Gopher.a2Rules(maxDupLinePpm, maxDupLineCharPpm, maxTop2gramPpm)
+    val head = col(idCol) +: keepCols.map(col)
+    Gopher.sorted(df, idCol, textCol, keepCols.map(col), withWords = true)
+      .select(head ++ Gopher.a1Counts(stopwords) ++ Gopher.a2Counts: _*)
+      .select(head ++ Gopher.a1Metrics ++ Gopher.a2Metrics: _*)
+      .withColumn("first_failed", Gopher.firstFailed(rules))
       .withColumn("gopher_keep", col("first_failed").isNull)
-      .select(Seq(col(idCol)) ++ passthru ++
-        Seq(col("first_failed"), col("gopher_keep")): _*)
+      .select(head ++ Seq(col("first_failed"), col("gopher_keep")): _*)
   }
 
   /** The production filter CHAIN (the C4 / Gopher / FineWeb pattern:

@@ -1,55 +1,33 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{GraftSql, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions entry point: registers graft's native expressions
-  * as SQL functions so `spark.sql("SELECT rolling_hash(text), ...")` works
-  * anywhere — the extension seam a deployed library ships
-  * (`spark.sql.extensions=graft.plans.GraftExtensions`).
+/** The one install seam for graft's Catalyst extensions: the native
+  * expressions as SQL functions (`spark.sql("SELECT rolling_hash(text)")`),
+  * the [[TopKStrategy]] planner strategy, and the [[TopKRewrite]]
+  * optimizer rule that routes user-written window top-k onto it. A
+  * deployed library ships it as a `SparkSessionExtensions` entry point:
   *
   * {{{
   * SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
   * // or: .config("spark.sql.extensions", "graft.plans.GraftExtensions")
   * }}}
+  *
+  * A session that is already running gets the same pieces from the
+  * companion: [[GraftExtensions.register]] (functions),
+  * [[GraftExtensions.enable]] (strategy and rule) and
+  * [[GraftExtensions.enableStrategy]] (strategy only).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  import GraftExtensions._
-
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      rollingHashBuilder))
-    e.injectFunction((
-      new FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      wordShinglesBuilder))
-    e.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      simHashBuilder))
-    e.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      vecDotBuilder))
-    e.injectFunction((
-      new FunctionIdentifier("multi_substring_count"),
-      new ExpressionInfo(classOf[MultiSubstringCount].getName,
-        "multi_substring_count"),
-      multiSubstringBuilder))
-    e.injectFunction((
-      new FunctionIdentifier("winnow_select"),
-      new ExpressionInfo(classOf[WinnowSelect].getName, "winnow_select"),
-      winnowSelectBuilder))
-    // the custom-operator strategy rides the same extension entry point, so
-    // a session built with spark.sql.extensions=graft.plans.GraftExtensions
-    // plans TopKPerKey nodes without any runtime registration
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      e.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
     e.injectPlannerStrategy(_ => TopKStrategy)
-    // and the optimizer rewrite that routes USER-written window top-k
-    // (filter(row_number().over(...) <= k)) onto that operator
     e.injectOptimizerRule(_ => TopKRewrite)
   }
 }
@@ -108,13 +86,39 @@ object GraftExtensions {
       "winnow_select(array<long>, window)")
   }
 
-  /** Runtime registration on an existing session (tests, REPL). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    org.apache.spark.sql.GraftSql.registerFunction(spark, "rolling_hash", rollingHashBuilder)
-    org.apache.spark.sql.GraftSql.registerFunction(spark, "word_shingles", wordShinglesBuilder)
-    org.apache.spark.sql.GraftSql.registerFunction(spark, "simhash64", simHashBuilder)
-    org.apache.spark.sql.GraftSql.registerFunction(spark, "vec_dot", vecDotBuilder)
-    org.apache.spark.sql.GraftSql.registerFunction(spark, "multi_substring_count", multiSubstringBuilder)
-    org.apache.spark.sql.GraftSql.registerFunction(spark, "winnow_select", winnowSelectBuilder)
+  /** (SQL name, expression class, builder) of every native expression:
+    * the one table [[GraftExtensions.apply]] injects and [[register]]
+    * registers. */
+  val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("rolling_hash", classOf[RollingHash], rollingHashBuilder),
+    ("word_shingles", classOf[WordShingles], wordShinglesBuilder),
+    ("simhash64", classOf[SimHash64], simHashBuilder),
+    ("vec_dot", classOf[VecDot], vecDotBuilder),
+    ("multi_substring_count", classOf[MultiSubstringCount],
+      multiSubstringBuilder),
+    ("winnow_select", classOf[WinnowSelect], winnowSelectBuilder))
+
+  /** Register [[functions]] on a running session (tests, REPL). */
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (name, _, builder) =>
+      GraftSql.registerFunction(spark, name, builder)
+    }
+
+  /** Install [[TopKStrategy]] on a running session, idempotently. The
+    * [[TopKPerKey]] API calls this, and only this: turning on the rewrite
+    * rule too would change the plan of every later window query in the
+    * session. */
+  def enableStrategy(spark: SparkSession): Unit =
+    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ TopKStrategy
+
+  /** Install [[TopKRewrite]] and the strategy it plans onto on a running
+    * session, idempotently (the extension-less path). */
+  def enable(spark: SparkSession): Unit = {
+    enableStrategy(spark)
+    if (!spark.experimental.extraOptimizations.contains(TopKRewrite))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ TopKRewrite
   }
 }

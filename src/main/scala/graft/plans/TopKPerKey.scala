@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSql, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSql}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Descending, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -181,9 +181,7 @@ object TopKPerKey {
       orderSpec: Seq[(String, Boolean)], k: Int,
       rankName: String, partial: Boolean): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
+    GraftExtensions.enableStrategy(spark)
     val analyzed = GraftSql.analyzedPlan(df)
     def attr(name: String): Attribute = analyzed.output.find(_.name == name)
       .getOrElse(throw new IllegalArgumentException(

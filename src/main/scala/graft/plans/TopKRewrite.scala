@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, ExprId, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, PredicateHelper, RowFrame, RowNumber, SpecifiedWindowFrame, UnboundedPreceding, CurrentRow, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -27,7 +26,7 @@ import org.apache.spark.sql.types.IntegerType
   *    residual Filter ON TOP: TopKPerKey emits true row_number values
   *    1..k per key, so residual predicates see exactly the rows and
   *    ranks the window form would have produced;
-  *  - k is positive and at most `graft.topk.rewriteMaxK` (default 10⁵):
+  *  - k is positive and at most `MaxK` (10⁵):
   *    the heap holds k rows per key, so a pathological `rn <= 10⁹`
   *    must keep the sort-based plan rather than trade spillable sort
   *    memory for an unspillable heap.
@@ -40,8 +39,9 @@ import org.apache.spark.sql.types.IntegerType
   * rank attribute keeps its ExprId, so downstream references resolve
   * unchanged.
   *
-  * Registered by [[GraftExtensions]] (`spark.sql.extensions`) alongside
-  * [[TopKStrategy]]; for an existing session use [[TopKRewrite.enable]].
+  * Installed with [[TopKStrategy]] by [[GraftExtensions]]
+  * (`spark.sql.extensions`), or on a running session by
+  * [[GraftExtensions.enable]].
   */
 object TopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -68,7 +68,8 @@ object TopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
     case _ => None
   }
 
-  private def maxK: Int = Integer.getInteger("graft.topk.rewriteMaxK", 100000)
+  /** The largest k the heap takes over from the sort-based plan. */
+  private val MaxK = 100000
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case Filter(cond, Window(
@@ -78,7 +79,7 @@ object TopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
         part, ord, child, _))
         if part.nonEmpty && ord.nonEmpty && wPart == part && wOrd == ord &&
           splitConjunctivePredicates(cond)
-            .exists(c => limitFrom(c, alias.exprId).exists(k => k >= 1 && k <= maxK)) =>
+            .exists(c => limitFrom(c, alias.exprId).exists(k => k >= 1 && k <= MaxK)) =>
       val conjuncts = splitConjunctivePredicates(cond)
       val k = conjuncts.flatMap(c => limitFrom(c, alias.exprId))
         .filter(_ >= 1).min
@@ -108,16 +109,5 @@ object TopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
         limitFrom(c, alias.exprId).exists(_ >= k))
       if (residual.isEmpty) topk
       else Filter(residual.reduce(And), topk)
-  }
-
-  /** Activate on a live session (the extension-less path): registers this
-    * rule and the planner strategy it depends on, idempotently. */
-  def enable(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(TopKRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKRewrite
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
   }
 }

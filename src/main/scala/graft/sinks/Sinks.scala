@@ -1,7 +1,7 @@
 package graft.sinks
 
 import graft.functions.Templates
-import graft.operators.Partitioners
+import graft.operators.{Partitioners, Transforms}
 import graft.sources.v2.{ManifestCodec, ManifestSink}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
@@ -104,16 +104,6 @@ object Sinks {
         explode(array(topics.map(t => lit(topicPrefix + t)): _*)))
       .select("key", "value", "topic", "partition", "headers")
 
-  /** Write a Kafka-shaped frame to a real broker (zero-egress here; wiring
-    * kept for production parity with `kafkaworker.py:24-56` producer config). */
-  def writeKafka(kafkaShaped: DataFrame, bootstrapServers: String): Unit =
-    kafkaShaped
-      .select(col("key").cast("binary"), col("value").cast("binary"),
-        col("topic"), col("partition"))
-      .write.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .save()
-
   /** S3 sink shape (`s3worker.py:18-24,52-104`): per-record object key from
     * the `object_key` template (default `%(id)s`, `app.py:529`) and body =
     * rendered template or the raw row JSON; a missing `id` is injected
@@ -147,11 +137,9 @@ object Sinks {
     * partition — rather than SQL-text execution; the rendered form exists for
     * parity and testing.
     */
-  def prepareRds(df: DataFrame, insertTemplate: String): DataFrame = {
-    val withJson = df.withColumn("json",
-      to_json(struct(df.columns.map(col).toSeq: _*)))
-    withJson.select(Templates.render(insertTemplate, col).as("insert_sql"))
-  }
+  def prepareRds(df: DataFrame, insertTemplate: String): DataFrame =
+    Transforms.attachRawJson(df)
+      .select(Templates.render(insertTemplate, col).as("insert_sql"))
 
   /** Postgres LIST-partition auto-create DDL the reference emits when a new
     * partition value appears (`rdsdatabase.py:73-119`), including its

@@ -43,6 +43,12 @@ final case class TableSpec(columns: Seq[ColumnSpec]) {
   def conversions: Seq[ColumnSpec] =
     columns.filter(c => c.convertTo.isDefined && !c.remove)
       .map(c => c.copy(name = c.renameTo.getOrElse(c.name)))
+  /** `format` for every timestamp conversion that names none. */
+  def withTimestampFormat(format: String): TableSpec = TableSpec(columns.map {
+    case c if c.convertTo.contains("timestamp") && c.timestampFormat.isEmpty =>
+      c.copy(timestampFormat = Some(format))
+    case c => c
+  })
 }
 
 object TableSpec {

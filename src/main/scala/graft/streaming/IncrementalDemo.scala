@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.file.Files
 
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runnable end-to-end demo of the incremental/streaming surface:
@@ -15,13 +14,7 @@ import org.apache.spark.sql.functions._
 object IncrementalDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session("4")
 
     val ev = Tables.events(spark, sfDir).withColumn("ts_ms", unix_millis(col("ts")))
     val total = ev.count()

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Scale-up evidence generator (dev tool): synthesize an N x copy of the
@@ -22,11 +22,7 @@ object ScaleUp {
     val out = args(0)
     val n = args(1).toInt
     val src = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val M = 10000000L // above any sf0.1 key
 
     def copies(df: DataFrame)(shift: (DataFrame, Long) => DataFrame): DataFrame =

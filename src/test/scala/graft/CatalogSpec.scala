@@ -132,6 +132,40 @@ class CatalogSpec extends AnyFunSuite {
     assert(inferring.findFirstIn("spark.read.parquet(dirs: _*)").isEmpty)
   }
 
+  test("graft's Catalyst extensions install through GraftExtensions only") {
+    // the one seam: its function table serves apply and register, its
+    // enable/enableStrategy are the only runtime installs (a definition
+    // of registerFunction is not a call)
+    val install = """experimental\.extra(Strategies|Optimizations)|(?<!def )registerFunction\(""".r
+    val found = mainSources
+      .filterNot(_._1 == "graft/plans/GraftExtensions.scala")
+      .flatMap { case (f, src) => install.findAllIn(src).map(f -> _) }
+    assert(found.isEmpty, s"extension installs outside GraftExtensions: $found")
+    // the scanner does see what it forbids
+    val seen = install.findAllIn(source("graft/plans/GraftExtensions.scala"))
+      .map(_.takeWhile(_ != '(')).toSet
+    assert(seen == Set("experimental.extraStrategies",
+      "experimental.extraOptimizations", "registerFunction"), seen)
+    assert(install.findFirstIn(
+      source("org/apache/spark/sql/GraftSql.scala")).isEmpty)
+  }
+
+  test("every session the library builds is Bench.session's") {
+    val builder = """SparkSession\.builder""".r
+    def code(src: String): String = src.linesIterator.filterNot { l =>
+      val t = l.trim
+      t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+    }.mkString("\n")
+    val found = mainSources.flatMap { case (f, src) =>
+      builder.findAllIn(code(src)).map(_ => f) }
+    assert(found == List("graft/Bench.scala"),
+      s"SparkSession.builder outside Bench.session: $found")
+    // the scanner does see what it forbids, and skips comments
+    assert(builder.findAllIn(code(
+      "  val s = SparkSession.builder()\n  * SparkSession.builder()\n" +
+        "  // SparkSession.builder()")).size == 1)
+  }
+
   test("no query carries both a static and a dynamic oracle") {
     val both = SparkEntry.oracleSql.keySet
       .intersect(SparkEntry.dynamicOracleSql.keySet)

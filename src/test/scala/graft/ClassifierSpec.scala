@@ -286,6 +286,73 @@ class ClassifierSpec extends AnyFunSuite {
     assert(r.getLong(3) == top * 1000000L / text.length, r.toString)
   }
 
+  test("Gopher battery core: one row per rule fails exactly that rule in all three verdicts") {
+    import graft.functions.TextAnalysis
+    val (l1, l2, l3) = ("the river runs past old stone walls",
+      "and a quiet garden where children play",
+      "with bright kites under summer skies")
+    val base = s"$l1 $l2 $l3" // 20 words, 4 stopwords: passes every rule
+    val noStop = "river runs past old stone walls near quiet garden " +
+      "where children play bright kites under summer skies"
+    val hashed = "#river #runs #past"
+    // (doc text, the rule it fails) with 10..30-word bounds and the
+    // paper's other thresholds; the table's order is the paper's
+    val rows = Seq(
+      base -> None,
+      s"$base fresh cold water flows down green hills toward distant " +
+        "blue ocean shores" -> Some("word_count"),
+      "a to of be we us it is on at no so go do up me he an or my" ->
+        Some("mean_word_len"),
+      base.replace("river runs past", hashed) -> Some("symbol_ratio"),
+      Seq(l1, l2, l3).map("- " + _).mkString("\n") -> Some("bullet_lines"),
+      s"$l1…\n$l2…\n$l3" -> Some("ellipsis_lines"),
+      s"$base 1984 2001 3000 4500 5150 6060" -> Some("alpha_words"),
+      noStop -> Some("stopwords"),
+      s"$base\nok\nok\nok\nok" -> Some("dup_lines"),
+      Seq(l1, l2, l3, "near the tall old oak trees",
+        "near the tall old oak trees").mkString("\n") -> Some("dup_line_chars"),
+      s"$base summer skies summer skies summer skies" -> Some("top_2gram"),
+      // fails symbol_ratio AND stopwords: the chain names the earlier one
+      noStop.replace("river runs past", hashed) -> Some("symbol_ratio"))
+    val docs = rows.zipWithIndex.map { case ((t, _), i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    // (rule, metric, min, max) — the battery's table under these bounds
+    val table = Seq(("word_count", "n_words", 10L, 30L),
+      ("mean_word_len", "mean_word_len_ppm", 3000000L, 10000000L),
+      ("symbol_ratio", "symbol_ratio_ppm", Long.MinValue, 100000L),
+      ("bullet_lines", "bullet_line_ppm", Long.MinValue, 900000L),
+      ("ellipsis_lines", "ellipsis_line_ppm", Long.MinValue, 300000L),
+      ("alpha_words", "alpha_word_ppm", 800000L, Long.MaxValue),
+      ("stopwords", "n_stopwords", 2L, Long.MaxValue),
+      ("dup_lines", "dup_line_ppm", Long.MinValue, 300000L),
+      ("dup_line_chars", "dup_line_char_ppm", Long.MinValue, 200000L),
+      ("top_2gram", "top_2gram_char_ppm", Long.MinValue, 200000L))
+    val a1 = TextAnalysis.gopherRules(docs, "doc_id", "text",
+      minWords = 10, maxWords = 30).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r).toMap
+    val a2 = TextAnalysis.gopherRepetition(docs, "doc_id", "text").collect()
+      .map(r => r.getAs[Long]("doc_id") -> r).toMap
+    val chain = TextAnalysis.gopherChain(docs, "doc_id", "text",
+        minWords = 10, maxWords = 30).collect()
+      .map(r => r.getLong(0) -> (Option(r.getString(1)), r.getBoolean(2))).toMap
+    rows.zipWithIndex.foreach { case ((_, want), i) =>
+      val id = i.toLong
+      val crossed = table.filter { case (_, m, lo, hi) =>
+        val v = (if (a1(id).schema.fieldNames.contains(m)) a1(id) else a2(id))
+          .getAs[Long](m)
+        v < lo || v > hi
+      }.map(_._1)
+      assert(chain(id) == ((want, want.isEmpty)), s"row $i: ${chain(id)}")
+      assert(crossed.headOption == want, s"row $i crosses $crossed")
+      if (i < rows.size - 1) assert(crossed.size <= 1, s"row $i crosses $crossed")
+      else assert(crossed == Seq("symbol_ratio", "stopwords"), crossed)
+      val a1Fails = crossed.exists(r => table.indexWhere(_._1 == r) < 7)
+      assert(a1(id).getAs[Boolean]("gopher_keep") == !a1Fails, s"row $i")
+      assert(a2(id).getAs[Boolean]("repetition_keep") ==
+        !crossed.exists(r => table.indexWhere(_._1 == r) >= 7), s"row $i")
+    }
+  }
+
   test("prCurve: confusion counts partition the corpus at every threshold; monotone recall") {
     val docs = Tables.documents(spark, GraftTestSpark.Sf0001)
     val scored = Classifier.linearScore(docs, "doc_id", "text", dim = 64,

@@ -62,6 +62,45 @@ class ConfigSpec extends AnyFunSuite {
       p.solrFilter.contains("event_type:click") &&
       p.watermarkMillis.contains(123L))
   }
+  test("global timestamp format fills a conversion that names none; the modified_timestamp filter applies after it") {
+    val spark = GraftTestSpark.spark
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-cfg").toString
+    Seq((1L, "19/12/2019 10:29"), (2L, "20/12/2019 10:29"),
+        (3L, null), (4L, "21/12/2019 08:00"))
+      .toDF("id", "modified_timestamp")
+      .write.parquet(s"$dir/t.parquet")
+    val global = GraftConfig.loadGlobal(
+      "cassandra_timestamp_format = %d/%m/%Y %H:%M")
+    val spec = Some(
+      """{"columns": [{"name": "modified_timestamp", "convertTo": "timestamp"}]}""")
+    val cfg = GraftConfig.loadTable("t", global, specJson = spec)
+    assert(cfg.spec.columns.head.timestampFormat.contains("%d/%m/%Y %H:%M"))
+    // a format the spec names wins
+    assert(GraftConfig.loadTable("t", global, specJson = Some(
+      """{"columns": [{"name": "x", "convertTo": "timestamp",
+        | "timestamp_format": "%Y"}]}""".stripMargin))
+      .spec.columns.head.timestampFormat.contains("%Y"))
+    val dec19 = 1576751340000L // 2019-12-19T10:29:00Z
+    val day = 86400000L
+    def extract(c: GraftConfig) =
+      Pipeline.extract(spark, dir, c.toPipelineConfig)
+        .as[(Long, Option[Long])].collect().sortBy(_._1).toSeq
+    assert(extract(cfg) == Seq((1L, Some(dec19)), (2L, Some(dec19 + day)),
+      (3L, None), (4L, Some(dec19 + 2 * day - (2 * 60 + 29) * 60000L))))
+    // a row AT the filter drops, as does every later one; NULL stays
+    val filtered = GraftConfig.loadTable("t", global, specJson = spec,
+      propertiesText = s"cassandra_modified_timestamp_filter = ${dec19 + day}")
+    assert(extract(filtered) == Seq((1L, Some(dec19)), (3L, None)))
+    // without the field (or before its conversion) the key is named
+    val noField = intercept[IllegalArgumentException](Pipeline.extract(spark,
+      GraftTestSpark.Sf0001, Pipeline.Config("region", watermarkMillis = Some(1L))))
+    assert(noField.getMessage.contains("cassandra_modified_timestamp_filter"))
+    val unconverted = intercept[IllegalArgumentException](
+      Pipeline.extract(spark, dir, Pipeline.Config("t", watermarkMillis = Some(1L))))
+    assert(unconverted.getMessage.contains("found string"))
+  }
+
   test("CorpusSpec: parse round-trip and spec-run == hand-composed pipeline") {
     import graft.spec.CorpusSpec
     import graft.functions.{Dedup, Sampling, TextAnalysis}

@@ -325,7 +325,7 @@ class PipelineJoinsSpec extends AnyFunSuite {
     // isolated session: experimental rules/strategies are per-session
     // state, so the shared suite session's plans stay untouched
     val s2 = spark.newSession()
-    graft.plans.TopKRewrite.enable(s2)
+    GraftExtensions.enable(s2)
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     def topk(s: org.apache.spark.sql.SparkSession) =
@@ -349,7 +349,7 @@ class PipelineJoinsSpec extends AnyFunSuite {
   test("TopKRewrite: residual predicates survive on top (pagination), rank refs resolve") {
     import org.apache.spark.sql.expressions.Window
     val s2 = spark.newSession()
-    graft.plans.TopKRewrite.enable(s2)
+    GraftExtensions.enable(s2)
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     def page(s: org.apache.spark.sql.SparkSession) =
@@ -369,7 +369,7 @@ class PipelineJoinsSpec extends AnyFunSuite {
   test("TopKRewrite guards: rank(), huge k, and global windows are left alone") {
     import org.apache.spark.sql.expressions.Window
     val s2 = spark.newSession()
-    graft.plans.TopKRewrite.enable(s2)
+    GraftExtensions.enable(s2)
     val orders = Tables.orders(s2, GraftTestSpark.Sf0001)
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -415,6 +415,35 @@ class PipelineJoinsSpec extends AnyFunSuite {
     } yield (lid, rid)).toSet
     assert(binned == brute)
     assert(brute.nonEmpty)
+  }
+
+  test("GraftExtensions: apply injects the function table, the top-k strategy and the rewrite rule") {
+    import graft.plans.{TopKPerKey, TopKRewrite, TopKStrategy}
+    import org.apache.spark.sql.{ExtensionsProbe, SparkSessionExtensions}
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val e = new SparkSessionExtensions
+    new GraftExtensions()(e)
+    val registry = ExtensionsProbe.functions(e)
+    assert(registry.listFunction().map(_.funcName).toSet ==
+      GraftExtensions.functions.map(_._1).toSet)
+    assert(GraftExtensions.functions.size == 6)
+    assert(registry.lookupFunction(FunctionIdentifier("rolling_hash"),
+      Seq(Literal("abc"))).eval() == 96354L)
+    assert(ExtensionsProbe.strategies(e, spark) == Seq(TopKStrategy))
+    assert(ExtensionsProbe.optimizerRules(e, spark) == Seq(TopKRewrite))
+    // on a running session: the top-k API installs the strategy alone,
+    // enable adds the rule; both are idempotent
+    val s2 = spark.newSession()
+    val kv = s2.range(6).selectExpr("id % 2 AS k", "id AS v")
+    TopKPerKey.perKey(kv, Seq("k"), Seq(("v", true)), 1).collect()
+    TopKPerKey.perKeyPartial(kv, Seq("k"), Seq(("v", true)), 1).collect()
+    assert(s2.experimental.extraStrategies == Seq(TopKStrategy))
+    assert(s2.experimental.extraOptimizations.isEmpty)
+    GraftExtensions.enable(s2)
+    GraftExtensions.enable(s2)
+    assert(s2.experimental.extraStrategies == Seq(TopKStrategy))
+    assert(s2.experimental.extraOptimizations == Seq(TopKRewrite))
   }
 
   test("SQL function registration: all four native expressions usable from SQL") {
