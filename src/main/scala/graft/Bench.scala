@@ -239,15 +239,6 @@ object Bench {
     // finished sweep.
     val outPath =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_results.json")
-    def writeAtomic(path: String, content: String): Unit = {
-      val p = java.nio.file.Paths.get(path).toAbsolutePath
-      val tmp = java.nio.file.Files.createTempFile(
-        p.getParent, ".bench-partial", ".tmp")
-      java.nio.file.Files.write(tmp, content.getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, p,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
     val planned = queryList.filter(SparkEntry.queries.contains)
     val timedBuf =
       scala.collection.mutable.ArrayBuffer.empty[(String, Timed[QueryProfile.Record])]
@@ -255,8 +246,8 @@ object Bench {
     planned.zipWithIndex.foreach { case (n, i) =>
       if (i > 0 && i % 50 == 0) sentinelSeries += timeSentinel()
       timedBuf += n -> timeQuery(n)
-      try writeAtomic(outPath, partialLine(done, planned.size, sfDir, Runs,
-        compact = false) + "\n")
+      try KeyFiles.writeAtomic(java.nio.file.Paths.get(outPath),
+        partialLine(done, planned.size, sfDir, Runs, compact = false) + "\n")
       catch { case e: Throwable => System.err.println(
         s"[bench] partial flush failed: ${e.getMessage}") }
       if ((i + 1) % PartialEvery == 0 && i + 1 < planned.size)
@@ -368,7 +359,7 @@ object Bench {
   }
 
   /** The bench session shape and the library's one session builder:
-    * Verify, the tools (ProfileQuery, PlanDump, ExplainAll, ScaleUp) and
+    * Verify, the tools (ProfileQuery, PlanDump, ScaleUp) and
     * IncrementalDemo all build theirs here, so the oracle gate runs the
     * plans the bench times. */
   def session(cpus: String): SparkSession = {

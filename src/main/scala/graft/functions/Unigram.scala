@@ -136,9 +136,14 @@ object Unigram {
     * ties break to the longest piece, and the prune rule is a pure
     * count threshold. */
   def learn(df: DataFrame, textCol: String, maxPieceLen: Int = 4,
-      rounds: Int = 2, minCount: Int = 2): DataFrame = {
+      rounds: Int = 2, minCount: Int = 2): DataFrame =
+    learnFrom(Caches.operatorPersist(Bpe.wordHistogram(df, textCol)),
+      maxPieceLen, rounds, minCount)
+
+  /** [[learn]] over the persisted word histogram `wh`. */
+  private def learnFrom(wh: DataFrame, maxPieceLen: Int, rounds: Int,
+      minCount: Int): DataFrame = {
     require(maxPieceLen >= 1 && rounds >= 1 && minCount >= 1)
-    val wh = Caches.operatorPersist(Bpe.wordHistogram(df, textCol))
     val seed = Caches.operatorPersist(gramCensus(wh, maxPieceLen))
     // the full single-character inventory — never pruned (coverage)
     val chars = seed.filter(length(col("piece")) === 1)
@@ -215,9 +220,14 @@ object Unigram {
     * Same scale shape as [[learn]]: one corpus-sized shuffle, every
     * round type-level over distinct words. */
   def learnSoft(df: DataFrame, textCol: String, maxPieceLen: Int = 4,
-      rounds: Int = 2, minCount: Int = 2): DataFrame = {
+      rounds: Int = 2, minCount: Int = 2): DataFrame =
+    learnSoftFrom(Caches.operatorPersist(Bpe.wordHistogram(df, textCol)),
+      maxPieceLen, rounds, minCount)
+
+  /** [[learnSoft]] over the persisted word histogram `wh`. */
+  private def learnSoftFrom(wh: DataFrame, maxPieceLen: Int, rounds: Int,
+      minCount: Int): DataFrame = {
     require(maxPieceLen >= 1 && rounds >= 1 && minCount >= 1)
-    val wh = Caches.operatorPersist(Bpe.wordHistogram(df, textCol))
     val seed = Caches.operatorPersist(gramCensus(wh, maxPieceLen))
     val chars = seed.filter(length(col("piece")) === 1)
       .select(col("piece"))
@@ -248,7 +258,7 @@ object Unigram {
       rounds: Int = 2, minCount: Int = 2): DataFrame = {
     val wh = Caches.operatorPersist(Bpe.wordHistogram(df, textCol))
     val learned = Caches.operatorPersist(
-      learn(df, textCol, maxPieceLen, rounds, minCount))
+      learnFrom(wh, maxPieceLen, rounds, minCount))
     segmentWith(wh,
       learned.select(col("piece"), col("score_micronats").as("s")),
       maxPieceLen)
@@ -265,7 +275,7 @@ object Unigram {
       rounds: Int = 2, minCount: Int = 2): DataFrame = {
     val wh = Caches.operatorPersist(Bpe.wordHistogram(df, textCol))
     val learned = Caches.operatorPersist(
-      learnSoft(df, textCol, maxPieceLen, rounds, minCount))
+      learnSoftFrom(wh, maxPieceLen, rounds, minCount))
     segmentWith(wh,
       learned.select(col("piece"), col("score_micronats").as("s")),
       maxPieceLen)

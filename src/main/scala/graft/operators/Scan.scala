@@ -122,7 +122,9 @@ object Scan {
       lastRecordOffset: Map[Long, Long] = Map.empty)
 
   /** File-backed page-state store (the Redis done-page hash analogue; at
-    * scale a DFS path — one tiny key per table, never data). */
+    * scale a DFS path — one tiny key per table, never data). A save is
+    * [[graft.KeyFiles.writeAtomic]], so a crash mid-save can never leave
+    * a cut page list that marks the wrong page done. */
   final class PageStateStore(dir: String) {
     import java.nio.file.{Files, Path, Paths}
     Files.createDirectories(Paths.get(dir))
@@ -131,7 +133,8 @@ object Scan {
       val pages = state.donePages.toSeq.sorted.mkString(",")
       val offs = state.lastRecordOffset.toSeq.sorted
         .map { case (p, o) => s"$p:$o" }.mkString(",")
-      Files.writeString(file(table), s"${state.fetchSize}\n$pages\n$offs\n")
+      graft.KeyFiles.writeAtomic(file(table),
+        s"${state.fetchSize}\n$pages\n$offs\n")
     }
     def load(table: String): Option[PageState] =
       if (!Files.exists(file(table))) None

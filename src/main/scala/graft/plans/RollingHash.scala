@@ -30,8 +30,31 @@ case class RollingHash(
 
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
+  override def nullSafeEval(input: Any): Any =
+    RollingHash.compute(input.asInstanceOf[UTF8String], base, mod)
+
+  /** Static-invoke codegen (the [[WordShingles]] pattern): both eval paths
+    * run the one fold in [[RollingHash.compute]]; base and mod are
+    * plan-time constants inlined into the generated call. */
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.plans.RollingHash$$.MODULE$$.compute($c, ${base}L, ${mod}L);")
+
+  override protected def withNewChildInternal(newChild: Expression): RollingHash =
+    copy(child = newChild)
+}
+
+object RollingHash {
+  def apply(c: Column): Column =
+    GraftSql.column(RollingHash(GraftSql.expression(c)))
+
+  def withParams(c: Column, base: Long, mod: Long): Column =
+    GraftSql.column(RollingHash(GraftSql.expression(c), base, mod))
+
+  /** fold(acc = 0; acc = (acc * base + codepoint) % mod) over the code
+    * points of `input`; called from both eval paths. */
+  def compute(input: UTF8String, base: Long, mod: Long): Long = {
+    val s = input.toString
     var acc = 0L
     var i = 0
     while (i < s.length) {
@@ -41,33 +64,4 @@ case class RollingHash(
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.freshName("rhStr")
-      val i = ctx.freshName("rhIdx")
-      val cp = ctx.freshName("rhCp")
-      val acc = ctx.freshName("rhAcc")
-      s"""
-         |String $s = $c.toString();
-         |long $acc = 0L;
-         |int $i = 0;
-         |while ($i < $s.length()) {
-         |  int $cp = $s.codePointAt($i);
-         |  $i += java.lang.Character.charCount($cp);
-         |  $acc = ($acc * ${base}L + $cp) % ${mod}L;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHash =
-    copy(child = newChild)
-}
-
-object RollingHash {
-  def apply(c: Column): Column =
-    GraftSql.column(RollingHash(GraftSql.expression(c)))
-  def withParams(c: Column, base: Long, mod: Long): Column =
-    GraftSql.column(RollingHash(GraftSql.expression(c), base, mod))
 }

@@ -35,6 +35,133 @@ object DedupQueries {
        |sigs AS (SELECT doc_id, CAST($sign + $packed AS BIGINT) AS simhash FROM sums)""".stripMargin
   }
 
+  /** DuckDB CTEs of the md5-family MinHash signatures
+    * ([[graft.functions.Dedup.minhashSignaturesMd5]]) over a relation `sh`
+    * (doc_id, sh): `h` (doc_id, h), each shingle's 31-bit hash, and `sig`
+    * (doc_id, hash_idx, sig), one row per document and hash function. */
+  private def minhashSigSql(numHashes: Int): String = {
+    val perIdx = Dedup.minhashCoeffs(numHashes).zipWithIndex.map { case ((a, b), i) =>
+      s"SELECT doc_id, $i AS hash_idx, min(($a * h + $b) % 2147483647) AS sig FROM h GROUP BY doc_id"
+    }.mkString("\n  UNION ALL ")
+    s"""h AS MATERIALIZED (
+       |  SELECT doc_id, (${md5SliceSql("sh")} % 2147483647) AS h FROM sh),
+       |sig AS (SELECT doc_id, hash_idx, sig FROM (
+       |  $perIdx))""".stripMargin
+  }
+
+  /** Oracle of the exact-Jaccard pair operators: each [[shinglePairsSql]]
+    * pair that `pairWhere` keeps at Jaccard >= 0.8, with its Jaccard. */
+  private def jaccardPairsSql(pairWhere: String, idA: String,
+      idB: String): String =
+    s"""WITH ${shinglePairsSql(pairWhere, idA, idB)}
+       |SELECT $idA, $idB,
+       |       $JaccardSql AS jaccard
+       |${jaccardAtLeastSql(0.8, idA, idB)}
+       |ORDER BY $idA, $idB""".stripMargin
+
+  /** Oracle of [[graft.functions.Entity.similarNamePairs]] (k = 3): the
+    * complete char-3-gram inverted-index join between the customers that
+    * `custWhere` keeps (name expression `custName`) and every supplier
+    * (`suppName`), at Jaccard >= `threshold`. */
+  private def charGramJaccardSql(custName: String, suppName: String,
+      custWhere: String, threshold: Double): String = {
+    def grams(name: String) =
+      s"""unnest(list_distinct(list_transform(
+         |      generate_series(1, len($name) - 2),
+         |      i -> $name[i:i+2]))) AS g""".stripMargin
+    s"""WITH ag AS (SELECT c_custkey AS id_a,
+       |    ${grams(custName)}
+       |  FROM customer WHERE $custWhere),
+       |bg AS (SELECT s_suppkey AS id_b,
+       |    ${grams(suppName)}
+       |  FROM supplier),
+       |na AS (SELECT id_a, count(*) AS n FROM ag GROUP BY id_a),
+       |nb AS (SELECT id_b, count(*) AS n FROM bg GROUP BY id_b),
+       |j AS (SELECT id_a, id_b, count(*) AS n_shared
+       |      FROM ag JOIN bg USING (g) GROUP BY id_a, id_b)
+       |SELECT id_a, id_b, n_shared,
+       |  CAST(n_shared AS DOUBLE) / (na.n + nb.n - n_shared) AS jaccard
+       |FROM j JOIN na USING (id_a) JOIN nb USING (id_b)
+       |WHERE CAST(n_shared AS DOUBLE) / (na.n + nb.n - n_shared) >= $threshold
+       |ORDER BY id_a, id_b""".stripMargin
+  }
+
+  /** DuckDB replay of [[graft.functions.TextAnalysis.winnowFingerprints]]'
+    * windows (k = 3, w = 4): `t` token lists of the documents with at
+    * least 3 tokens, `h` (doc_id, hs) their 3-gram md5-slice hashes and
+    * `wj` (doc_id, hs, j), one row per window. */
+  private val winnowWindowsSql: String = {
+    val gramHash = md5SliceSql("tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]")
+    s"""t AS (SELECT doc_id, string_split(text, ' ') AS tk
+       |           FROM documents WHERE len(string_split(text, ' ')) >= 3),
+       |h AS (SELECT doc_id,
+       |        list_transform(generate_series(1, len(tk) - 2),
+       |          i -> $gramHash) AS hs
+       |      FROM t),
+       |wj AS (SELECT doc_id, hs,
+       |         unnest(generate_series(1, greatest(len(hs) - 3, 1))) AS j
+       |       FROM h)""".stripMargin
+  }
+
+  /** Index of a [[winnowWindowsSql]] window's leftmost minimum hash. */
+  private val WinnowArgminSql =
+    """list_reduce(generate_series(j, least(j + 3, len(hs))),
+      |            (a, b) -> CASE WHEN hs[b] < hs[a] THEN b ELSE a END)""".stripMargin
+
+  /** [[winnowWindowsSql]] plus `sel` (doc_id, fp), each document's
+    * distinct fingerprints, and `pr` (id_a, id_b, n_shared_fps), the
+    * document pairs sharing at least two of them. */
+  private val winnowPairsSql: String =
+    s"""$winnowWindowsSql,
+       |sel AS (SELECT DISTINCT doc_id, hs[$WinnowArgminSql] AS fp
+       |        FROM wj),
+       |pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       |         CAST(count(*) AS BIGINT) AS n_shared_fps
+       |       FROM sel a JOIN sel b ON a.fp = b.fp AND a.doc_id < b.doc_id
+       |       GROUP BY 1, 2 HAVING count(*) >= 2)""".stripMargin
+
+  /** Oracle of [[graft.functions.SuffixArray.suffixRanks]] over the
+    * relation `docs` (doc_id, text): one dense_rank over the materialized
+    * suffix strings, exact because token-sequence order equals
+    * space-joined string order. */
+  private def suffixRanksSql(docs: String): String =
+    s"""t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM $docs),
+       |s AS (SELECT doc_id, i AS pos,
+       |        array_to_string(tk[CAST(i AS INT):CAST(len(tk) AS INT)], ' ') AS suf
+       |      FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk))) AS i FROM t))
+       |SELECT doc_id, CAST(pos AS INT) AS pos,
+       |  CAST(dense_rank() OVER (ORDER BY suf) AS BIGINT) AS suffix_rank
+       |FROM s ORDER BY doc_id, pos""".stripMargin
+
+  /** DuckDB replay of the suffix-array duplicated-run detector
+    * ([[graft.functions.SuffixArray.suffixDupSpansFrom]]): `t` (doc_id,
+    * text, tk), `s`/`r` every token suffix with its dense rank `rk`,
+    * `reps` one representative per rank, `nx` the neighbour-rank LCP and
+    * `stats` (rk, maxl), each rank's longest duplicated run (cap 30). */
+  private val suffixLcpStatsSql: String =
+    """t AS (SELECT doc_id, text, string_split(text, ' ') AS tk FROM documents),
+      |s AS (SELECT doc_id, i AS pos, len(tk) AS n,
+      |        array_to_string(tk[CAST(i AS INT):CAST(len(tk) AS INT)], ' ') AS suf,
+      |        tk[CAST(i AS INT):CAST(least(i + 29, len(tk)) AS INT)] AS pref
+      |      FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk))) AS i FROM t)),
+      |r AS (SELECT doc_id, pos, n - pos + 1 AS slen, pref,
+      |        CAST(dense_rank() OVER (ORDER BY suf) AS BIGINT) AS rk
+      |      FROM s),
+      |reps AS (SELECT rk, nm, pref, slen FROM (
+      |    SELECT rk, pref, slen,
+      |      row_number() OVER (PARTITION BY rk ORDER BY doc_id, pos) AS rn,
+      |      count(*) OVER (PARTITION BY rk) AS nm
+      |    FROM r) WHERE rn = 1),
+      |nx AS (SELECT a.rk,
+      |         len(list_filter(generate_series(1, least(len(a.pref), len(b.pref))),
+      |           i -> a.pref[1:CAST(i AS INT)] = b.pref[1:CAST(i AS INT)])) AS lcpn
+      |       FROM reps a JOIN reps b ON b.rk = a.rk + 1),
+      |stats AS (SELECT reps.rk,
+      |            greatest(coalesce(nx.lcpn, 0), coalesce(pv.lcpn, 0),
+      |              CASE WHEN reps.nm > 1 THEN least(reps.slen, 30) ELSE 0 END) AS maxl
+      |          FROM reps LEFT JOIN nx ON nx.rk = reps.rk
+      |          LEFT JOIN nx pv ON pv.rk = reps.rk - 1)""".stripMargin
+
   def defs: Seq[QueryDef] = Seq(
 
     QueryDef.headline("dedup_minhash_sigs",
@@ -48,21 +175,9 @@ object DedupQueries {
       (s, dir) => Dedup.minhashSignaturesMd5(Tables.documents(s, dir),
           "doc_id", "text", k = 3, numHashes = 8)
         .orderBy("doc_id", "hash_idx"),
-      Some {
-        val coeffs = Dedup.minhashCoeffs(8)
-        val h32 = """list_reduce(list_transform(
-          |      regexp_extract_all(substr(md5(s), 25, 8), '.'),
-          |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a,b) -> a*16 + b)"""
-          .stripMargin
-        val perIdx = coeffs.zipWithIndex.map { case ((a, b), i) =>
-          s"SELECT doc_id, $i AS hash_idx, min(($a * h + $b) % 2147483647) AS sig FROM h GROUP BY doc_id"
-        }.mkString("\n  UNION ALL ")
-        s"""WITH sh AS (SELECT doc_id, unnest($ShinglesSql) AS s FROM documents),
-           |h AS (SELECT doc_id, ($h32 % 2147483647) AS h FROM sh)
-           |SELECT doc_id, hash_idx, sig FROM (
-           |  $perIdx)
-           |ORDER BY doc_id, hash_idx""".stripMargin
-      }),
+      Some(s"""WITH sh AS (SELECT doc_id, unnest($ShinglesSql) AS sh FROM documents),
+              |${minhashSigSql(8)}
+              |SELECT doc_id, hash_idx, sig FROM sig ORDER BY doc_id, hash_idx""".stripMargin)),
 
     QueryDef.headline("doc_fingerprint",
       (s, dir) => Tables.documents(s, dir)
@@ -86,13 +201,7 @@ object DedupQueries {
       (s, dir) => graft.functions.SuffixArray.suffixRanks(
           Tables.documents(s, dir), "doc_id", "text")
         .orderBy("doc_id", "pos"),
-      Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-             |s AS (SELECT doc_id, i AS pos,
-             |        array_to_string(tk[CAST(i AS INT):CAST(len(tk) AS INT)], ' ') AS suf
-             |      FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk))) AS i FROM t))
-             |SELECT doc_id, CAST(pos AS INT) AS pos,
-             |  CAST(dense_rank() OVER (ORDER BY suf) AS BIGINT) AS suffix_rank
-             |FROM s ORDER BY doc_id, pos""".stripMargin)),
+      Some(s"WITH ${suffixRanksSql("documents")}")),
 
     QueryDef.headline("suffix_ranks_incremental",
       // INCREMENTAL SA maintenance (round-11 verdict #5): a synthetic
@@ -115,17 +224,11 @@ object DedupQueries {
             Artifacts.suffixRanksFrame(s, dir), docs, delta, "doc_id", "text")
           .orderBy("doc_id", "pos")
       },
-      Some("""WITH u AS (
-             |  SELECT doc_id, text FROM documents
-             |  UNION ALL SELECT doc_id + 10000000, text FROM documents WHERE doc_id % 14 = 3
-             |  UNION ALL SELECT doc_id + 10000000, text || ' zzqx' FROM documents WHERE doc_id % 14 = 10),
-             |t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM u),
-             |s AS (SELECT doc_id, i AS pos,
-             |        array_to_string(tk[CAST(i AS INT):CAST(len(tk) AS INT)], ' ') AS suf
-             |      FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk))) AS i FROM t))
-             |SELECT doc_id, CAST(pos AS INT) AS pos,
-             |  CAST(dense_rank() OVER (ORDER BY suf) AS BIGINT) AS suffix_rank
-             |FROM s ORDER BY doc_id, pos""".stripMargin)),
+      Some(s"""WITH u AS (
+              |  SELECT doc_id, text FROM documents
+              |  UNION ALL SELECT doc_id + 10000000, text FROM documents WHERE doc_id % 14 = 3
+              |  UNION ALL SELECT doc_id + 10000000, text || ' zzqx' FROM documents WHERE doc_id % 14 = 10),
+              |${suffixRanksSql("u")}""".stripMargin)),
 
     QueryDef.headline("suffix_repeats",
       // adjacent-rank LCP census over the suffix array: the repeated-
@@ -170,33 +273,12 @@ object DedupQueries {
           Artifacts.suffixRanksFrame(s, dir), Tables.documents(s, dir),
           "doc_id", "text")
         .orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-             |s AS (SELECT doc_id, i AS pos, len(tk) AS n,
-             |        array_to_string(tk[CAST(i AS INT):CAST(len(tk) AS INT)], ' ') AS suf,
-             |        tk[CAST(i AS INT):CAST(least(i + 29, len(tk)) AS INT)] AS pref
-             |      FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk))) AS i FROM t)),
-             |r AS (SELECT doc_id, pos, n - pos + 1 AS slen, pref,
-             |        CAST(dense_rank() OVER (ORDER BY suf) AS BIGINT) AS rk
-             |      FROM s),
-             |reps AS (SELECT rk, nm, pref, slen FROM (
-             |    SELECT rk, pref, slen,
-             |      row_number() OVER (PARTITION BY rk ORDER BY doc_id, pos) AS rn,
-             |      count(*) OVER (PARTITION BY rk) AS nm
-             |    FROM r) WHERE rn = 1),
-             |nx AS (SELECT a.rk,
-             |         len(list_filter(generate_series(1, least(len(a.pref), len(b.pref))),
-             |           i -> a.pref[1:CAST(i AS INT)] = b.pref[1:CAST(i AS INT)])) AS lcpn
-             |       FROM reps a JOIN reps b ON b.rk = a.rk + 1),
-             |stats AS (SELECT reps.rk,
-             |            greatest(coalesce(nx.lcpn, 0), coalesce(pv.lcpn, 0),
-             |              CASE WHEN reps.nm > 1 THEN least(reps.slen, 30) ELSE 0 END) AS maxl
-             |          FROM reps LEFT JOIN nx ON nx.rk = reps.rk
-             |          LEFT JOIN nx pv ON pv.rk = reps.rk - 1),
-             |j AS (SELECT r.doc_id, stats.maxl FROM r JOIN stats ON stats.rk = r.rk)
-             |SELECT doc_id,
-             |  CAST(sum(CASE WHEN maxl >= 8 THEN 1 ELSE 0 END) AS INT) AS n_dup_starts,
-             |  CAST(max(maxl) AS INT) AS max_lcp_tokens
-             |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH $suffixLcpStatsSql,
+              |j AS (SELECT r.doc_id, stats.maxl FROM r JOIN stats ON stats.rk = r.rk)
+              |SELECT doc_id,
+              |  CAST(sum(CASE WHEN maxl >= 8 THEN 1 ELSE 0 END) AS INT) AS n_dup_starts,
+              |  CAST(max(maxl) AS INT) AS max_lcp_tokens
+              |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
     QueryDef.headline("suffix_spans_remove",
       // the REMOVAL half of Lee et al.'s exact-substring dedup at SA
@@ -215,41 +297,20 @@ object DedupQueries {
           Tables.parquet(s, Artifacts.suffixLcpPath(s, dir)),
           Tables.documents(s, dir), "doc_id", "text")
         .orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS tk FROM documents),
-             |s AS (SELECT doc_id, i AS pos, len(tk) AS n,
-             |        array_to_string(tk[CAST(i AS INT):CAST(len(tk) AS INT)], ' ') AS suf,
-             |        tk[CAST(i AS INT):CAST(least(i + 29, len(tk)) AS INT)] AS pref
-             |      FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk))) AS i FROM t)),
-             |r AS (SELECT doc_id, pos, n - pos + 1 AS slen, pref,
-             |        CAST(dense_rank() OVER (ORDER BY suf) AS BIGINT) AS rk
-             |      FROM s),
-             |reps AS (SELECT rk, nm, pref, slen FROM (
-             |    SELECT rk, pref, slen,
-             |      row_number() OVER (PARTITION BY rk ORDER BY doc_id, pos) AS rn,
-             |      count(*) OVER (PARTITION BY rk) AS nm
-             |    FROM r) WHERE rn = 1),
-             |nx AS (SELECT a.rk,
-             |         len(list_filter(generate_series(1, least(len(a.pref), len(b.pref))),
-             |           i -> a.pref[1:CAST(i AS INT)] = b.pref[1:CAST(i AS INT)])) AS lcpn
-             |       FROM reps a JOIN reps b ON b.rk = a.rk + 1),
-             |stats AS (SELECT reps.rk,
-             |            greatest(coalesce(nx.lcpn, 0), coalesce(pv.lcpn, 0),
-             |              CASE WHEN reps.nm > 1 THEN least(reps.slen, 30) ELSE 0 END) AS maxl
-             |          FROM reps LEFT JOIN nx ON nx.rk = reps.rk
-             |          LEFT JOIN nx pv ON pv.rk = reps.rk - 1),
-             |st AS (SELECT r.doc_id, r.pos, stats.maxl
-             |       FROM r JOIN stats ON stats.rk = r.rk WHERE stats.maxl >= 8),
-             |cov AS (SELECT DISTINCT doc_id, j FROM
-             |         (SELECT doc_id, unnest(generate_series(pos, pos + maxl - 1)) AS j
-             |          FROM st)),
-             |covs AS (SELECT doc_id, list(j) AS cov, count(*) AS n_rem
-             |         FROM cov GROUP BY doc_id)
-             |SELECT t.doc_id,
-             |  CASE WHEN c.doc_id IS NULL THEN t.text
-             |       ELSE coalesce(array_to_string(list_filter(t.tk,
-             |              (x, i) -> NOT list_contains(c.cov, i)), ' '), '') END AS clean_text,
-             |  CAST(coalesce(c.n_rem, 0) AS INT) AS n_removed
-             |FROM t LEFT JOIN covs c USING (doc_id) ORDER BY t.doc_id""".stripMargin)),
+      Some(s"""WITH $suffixLcpStatsSql,
+              |st AS (SELECT r.doc_id, r.pos, stats.maxl
+              |       FROM r JOIN stats ON stats.rk = r.rk WHERE stats.maxl >= 8),
+              |cov AS (SELECT DISTINCT doc_id, j FROM
+              |         (SELECT doc_id, unnest(generate_series(pos, pos + maxl - 1)) AS j
+              |          FROM st)),
+              |covs AS (SELECT doc_id, list(j) AS cov, count(*) AS n_rem
+              |         FROM cov GROUP BY doc_id)
+              |SELECT t.doc_id,
+              |  CASE WHEN c.doc_id IS NULL THEN t.text
+              |       ELSE coalesce(array_to_string(list_filter(t.tk,
+              |              (x, i) -> NOT list_contains(c.cov, i)), ' '), '') END AS clean_text,
+              |  CAST(coalesce(c.n_rem, 0) AS INT) AS n_removed
+              |FROM t LEFT JOIN covs c USING (doc_id) ORDER BY t.doc_id""".stripMargin)),
 
     QueryDef.headline("cdc_chunks",
       // content-defined chunking (Rabin/FastCDC at word granularity):
@@ -291,24 +352,11 @@ object DedupQueries {
       (s, dir) => TextAnalysis.winnowFingerprints(Tables.documents(s, dir),
           "doc_id", "text", k = 3, w = 4)
         .orderBy("doc_id", "pos"),
-      Some {
-        val gramHash = md5SliceSql("tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]")
-        s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk
-           |           FROM documents WHERE len(string_split(text, ' ')) >= 3),
-           |h AS (SELECT doc_id,
-           |        list_transform(generate_series(1, len(tk) - 2),
-           |          i -> $gramHash) AS hs
-           |      FROM t),
-           |wj AS (SELECT doc_id, hs,
-           |         unnest(generate_series(1, greatest(len(hs) - 3, 1))) AS j
-           |       FROM h),
-           |sel AS (SELECT doc_id, hs,
-           |          list_reduce(generate_series(j, least(j + 3, len(hs))),
-           |            (a, b) -> CASE WHEN hs[b] < hs[a] THEN b ELSE a END) AS pos
-           |        FROM wj)
-           |SELECT DISTINCT doc_id, CAST(pos AS INT) AS pos, hs[pos] AS fp
-           |FROM sel ORDER BY doc_id, pos""".stripMargin
-      }),
+      Some(s"""WITH $winnowWindowsSql,
+              |sel AS (SELECT doc_id, hs, $WinnowArgminSql AS pos
+              |        FROM wj)
+              |SELECT DISTINCT doc_id, CAST(pos AS INT) AS pos, hs[pos] AS fp
+              |FROM sel ORDER BY doc_id, pos""".stripMargin)),
 
     QueryDef.headline("winnow_overlap_pairs",
       // local-overlap candidates from the winnowing index: doc pairs
@@ -320,27 +368,9 @@ object DedupQueries {
       (s, dir) => TextAnalysis.winnowOverlapPairs(Tables.documents(s, dir),
           "doc_id", "text", k = 3, w = 4, minShared = 2L)
         .orderBy("id_a", "id_b"),
-      Some {
-        val gramHash = md5SliceSql("tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]")
-        s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk
-           |           FROM documents WHERE len(string_split(text, ' ')) >= 3),
-           |h AS (SELECT doc_id,
-           |        list_transform(generate_series(1, len(tk) - 2),
-           |          i -> $gramHash) AS hs
-           |      FROM t),
-           |wj AS (SELECT doc_id, hs,
-           |         unnest(generate_series(1, greatest(len(hs) - 3, 1))) AS j
-           |       FROM h),
-           |sel AS (SELECT DISTINCT doc_id,
-           |          hs[list_reduce(generate_series(j, least(j + 3, len(hs))),
-           |            (a, b) -> CASE WHEN hs[b] < hs[a] THEN b ELSE a END)] AS fp
-           |        FROM wj)
-           |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           |  count(*) AS n_shared_fps
-           |FROM sel a JOIN sel b ON a.fp = b.fp AND a.doc_id < b.doc_id
-           |GROUP BY 1, 2 HAVING count(*) >= 2
-           |ORDER BY id_a, id_b""".stripMargin
-      }),
+      Some(s"""WITH $winnowPairsSql
+              |SELECT id_a, id_b, n_shared_fps FROM pr
+              |ORDER BY id_a, id_b""".stripMargin)),
 
     QueryDef.headline("dedup_edit_verify",
       // edit-distance verification of the winnowing candidates: the MOSS
@@ -353,32 +383,13 @@ object DedupQueries {
       (s, dir) => TextAnalysis.editVerifiedPairs(Tables.documents(s, dir),
           "doc_id", "text", k = 3, w = 4, minShared = 2L, prefixLen = 80)
         .orderBy("id_a", "id_b"),
-      Some {
-        val gramHash = md5SliceSql("tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]")
-        s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk
-           |           FROM documents WHERE len(string_split(text, ' ')) >= 3),
-           |h AS (SELECT doc_id,
-           |        list_transform(generate_series(1, len(tk) - 2),
-           |          i -> $gramHash) AS hs
-           |      FROM t),
-           |wj AS (SELECT doc_id, hs,
-           |         unnest(generate_series(1, greatest(len(hs) - 3, 1))) AS j
-           |       FROM h),
-           |sel AS (SELECT DISTINCT doc_id,
-           |          hs[list_reduce(generate_series(j, least(j + 3, len(hs))),
-           |            (a, b) -> CASE WHEN hs[b] < hs[a] THEN b ELSE a END)] AS fp
-           |        FROM wj),
-           |pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           |         CAST(count(*) AS BIGINT) AS n_shared_fps
-           |       FROM sel a JOIN sel b ON a.fp = b.fp AND a.doc_id < b.doc_id
-           |       GROUP BY 1, 2 HAVING count(*) >= 2)
-           |SELECT pr.id_a, pr.id_b, pr.n_shared_fps,
-           |  CAST(levenshtein(substr(da.text, 1, 80), substr(db.text, 1, 80)) AS BIGINT) AS edit_dist
-           |FROM pr
-           |JOIN documents da ON da.doc_id = pr.id_a
-           |JOIN documents db ON db.doc_id = pr.id_b
-           |ORDER BY id_a, id_b""".stripMargin
-      }),
+      Some(s"""WITH $winnowPairsSql
+              |SELECT pr.id_a, pr.id_b, pr.n_shared_fps,
+              |  CAST(levenshtein(substr(da.text, 1, 80), substr(db.text, 1, 80)) AS BIGINT) AS edit_dist
+              |FROM pr
+              |JOIN documents da ON da.doc_id = pr.id_a
+              |JOIN documents db ON db.doc_id = pr.id_b
+              |ORDER BY id_a, id_b""".stripMargin)),
 
     QueryDef.headline("dedup_spans",
       // corpus-wide duplicated-span census (the exact-substring primitive
@@ -436,24 +447,8 @@ object DedupQueries {
           Tables.supplier(s, dir), "s_suppkey", "s_name",
           k = 3, threshold = 0.27)
         .orderBy("id_a", "id_b"),
-      Some("""WITH ag AS (SELECT c_custkey AS id_a,
-             |    unnest(list_distinct(list_transform(
-             |      generate_series(1, len(lower(c_name)) - 2),
-             |      i -> lower(c_name)[i:i+2]))) AS g
-             |  FROM customer WHERE c_custkey % 10 = 0),
-             |bg AS (SELECT s_suppkey AS id_b,
-             |    unnest(list_distinct(list_transform(
-             |      generate_series(1, len(lower(s_name)) - 2),
-             |      i -> lower(s_name)[i:i+2]))) AS g FROM supplier),
-             |na AS (SELECT id_a, count(*) AS n FROM ag GROUP BY id_a),
-             |nb AS (SELECT id_b, count(*) AS n FROM bg GROUP BY id_b),
-             |j AS (SELECT id_a, id_b, count(*) AS n_shared
-             |      FROM ag JOIN bg USING (g) GROUP BY id_a, id_b)
-             |SELECT id_a, id_b, n_shared,
-             |  CAST(n_shared AS DOUBLE) / (na.n + nb.n - n_shared) AS jaccard
-             |FROM j JOIN na USING (id_a) JOIN nb USING (id_b)
-             |WHERE CAST(n_shared AS DOUBLE) / (na.n + nb.n - n_shared) >= 0.27
-             |ORDER BY id_a, id_b""".stripMargin)),
+      Some(charGramJaccardSql("lower(c_name)", "lower(s_name)",
+        "c_custkey % 10 = 0", 0.27))),
 
     QueryDef.headline("entity_match_keys",
       // the production regime of the same operator: normalized (digit)
@@ -469,25 +464,8 @@ object DedupQueries {
           "s_suppkey", "skey",
           k = 3, threshold = 0.8)
         .orderBy("id_a", "id_b"),
-      Some("""WITH ag AS (SELECT c_custkey AS id_a,
-             |    unnest(list_distinct(list_transform(
-             |      generate_series(1, len(regexp_replace(c_name, '[^0-9]', '', 'g')) - 2),
-             |      i -> regexp_replace(c_name, '[^0-9]', '', 'g')[i:i+2]))) AS g
-             |  FROM customer),
-             |bg AS (SELECT s_suppkey AS id_b,
-             |    unnest(list_distinct(list_transform(
-             |      generate_series(1, len(regexp_replace(s_name, '[^0-9]', '', 'g')) - 2),
-             |      i -> regexp_replace(s_name, '[^0-9]', '', 'g')[i:i+2]))) AS g
-             |  FROM supplier),
-             |na AS (SELECT id_a, count(*) AS n FROM ag GROUP BY id_a),
-             |nb AS (SELECT id_b, count(*) AS n FROM bg GROUP BY id_b),
-             |j AS (SELECT id_a, id_b, count(*) AS n_shared
-             |      FROM ag JOIN bg USING (g) GROUP BY id_a, id_b)
-             |SELECT id_a, id_b, n_shared,
-             |  CAST(n_shared AS DOUBLE) / (na.n + nb.n - n_shared) AS jaccard
-             |FROM j JOIN na USING (id_a) JOIN nb USING (id_b)
-             |WHERE CAST(n_shared AS DOUBLE) / (na.n + nb.n - n_shared) >= 0.8
-             |ORDER BY id_a, id_b""".stripMargin)),
+      Some(charGramJaccardSql("regexp_replace(c_name, '[^0-9]', '', 'g')",
+        "regexp_replace(s_name, '[^0-9]', '', 'g')", "TRUE", 0.8))),
 
     QueryDef.headline("dedup_exact",
       (s, dir) => Dedup.exactGroups(Tables.documents(s, dir), "text", "doc_id")
@@ -549,22 +527,8 @@ object DedupQueries {
             k = 3, numHashes = 16, threshold = 0.8)
           .orderBy("id_new", "id_corp")
       },
-      Some(s"""WITH sh AS (
-              |  SELECT doc_id, unnest($ShinglesSql) AS sh
-              |  FROM documents),
-              |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              |pairs AS (
-              |  SELECT a.doc_id AS id_new, b.doc_id AS id_corp, count(*) AS inter
-              |  FROM sh a JOIN sh b USING (sh)
-              |  WHERE a.doc_id % 7 = 0 AND b.doc_id % 7 != 0
-              |  GROUP BY 1, 2)
-              |SELECT id_new, id_corp,
-              |       CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
-              |FROM pairs
-              |JOIN sizes sa ON sa.doc_id = id_new
-              |JOIN sizes sb ON sb.doc_id = id_corp
-              |WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8
-              |ORDER BY id_new, id_corp""".stripMargin)),
+      Some(jaccardPairsSql("a.doc_id % 7 = 0 AND b.doc_id % 7 != 0",
+        "id_new", "id_corp"))),
 
     QueryDef("corpus_stats",
       // curation dashboard: per (lang, source) doc/char/token/unique-text
@@ -608,17 +572,13 @@ object DedupQueries {
         .orderBy("grp_a", "grp_b"),
       Some {
         val coeffs = Dedup.minhashCoeffs(16)
-        val h32 = """list_reduce(list_transform(
-          |      regexp_extract_all(substr(md5(s), 25, 8), '.'),
-          |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a,b) -> a*16 + b)"""
-          .stripMargin
         val minCols = coeffs.zipWithIndex.map { case ((a, b), i) =>
           s"min(($a * h + $b) % 2147483647) AS m$i"
         }.mkString(",\n       ")
         val agree = (0 until 16)
           .map(i => s"CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END").mkString(" + ")
         s"""WITH sh AS (SELECT source AS grp, unnest($ShinglesSql) AS s FROM documents),
-           |h AS (SELECT grp, ($h32 % 2147483647) AS h FROM sh),
+           |h AS (SELECT grp, (${md5SliceSql("s")} % 2147483647) AS h FROM sh),
            |sig AS (SELECT grp,
            |       $minCols
            |       FROM h GROUP BY grp)
@@ -668,21 +628,7 @@ object DedupQueries {
       (s, dir) => Dedup.minhashDedupPairs(Tables.documents(s, dir),
           "doc_id", "text", k = 3, numHashes = 16, threshold = 0.8)
         .orderBy("id_a", "id_b"),
-      Some(s"""WITH sh AS (
-              |  SELECT doc_id, unnest($ShinglesSql) AS sh
-              |  FROM documents),
-              |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              |pairs AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-              |  FROM sh a JOIN sh b USING (sh) WHERE a.doc_id < b.doc_id
-              |  GROUP BY 1, 2)
-              |SELECT id_a, id_b,
-              |       CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
-              |FROM pairs
-              |JOIN sizes sa ON sa.doc_id = id_a
-              |JOIN sizes sb ON sb.doc_id = id_b
-              |WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8
-              |ORDER BY id_a, id_b""".stripMargin)),
+      Some(jaccardPairsSql("a.doc_id < b.doc_id", "id_a", "id_b"))),
 
     QueryDef("dedup_pair_provenance",
       // where do near-dups come from — the same source or across sources?
@@ -701,19 +647,7 @@ object DedupQueries {
           .agg(count(lit(1)).as("n_pairs"))
           .orderBy("same_source")
       },
-      Some(s"""WITH sh AS (
-              |  SELECT doc_id, unnest($ShinglesSql) AS sh
-              |  FROM documents),
-              |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              |jp AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-              |  FROM sh a JOIN sh b USING (sh) WHERE a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |good AS (
-              |  SELECT id_a, id_b FROM jp
-              |  JOIN sizes sa ON sa.doc_id = id_a
-              |  JOIN sizes sb ON sb.doc_id = id_b
-              |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8)
+      Some(s"""WITH ${nearDupPairsSql(0.8)}
               |SELECT (da.source = db.source) AS same_source, count(*) AS n_pairs
               |FROM good
               |JOIN documents da ON da.doc_id = id_a
@@ -728,21 +662,9 @@ object DedupQueries {
           "doc_id", "text", k = 3, numHashes = 16, threshold = 0.8)
         .select("doc_id", "lang", "source", "n_chars")
         .orderBy("doc_id"),
-      Some(s"""WITH sh AS (
-              |  SELECT doc_id, unnest($ShinglesSql) AS sh
-              |  FROM documents),
-              |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              |pairs AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-              |  FROM sh a JOIN sh b USING (sh) WHERE a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |dropped AS (
-              |  SELECT DISTINCT id_b FROM pairs
-              |  JOIN sizes sa ON sa.doc_id = id_a
-              |  JOIN sizes sb ON sb.doc_id = id_b
-              |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8)
+      Some(s"""WITH ${nearDupPairsSql(0.8)}
               |SELECT doc_id, lang, source, n_chars FROM documents
-              |WHERE doc_id NOT IN (SELECT id_b FROM dropped)
+              |WHERE doc_id NOT IN (SELECT id_b FROM good)
               |ORDER BY doc_id""".stripMargin)),
 
     QueryDef("dedup_clusters",
@@ -757,27 +679,9 @@ object DedupQueries {
           .select(col("id").as("doc_id"), col("cluster_id"))
           .orderBy("doc_id")
       },
-      Some(s"""WITH RECURSIVE sh AS (
-              |  SELECT doc_id, unnest($ShinglesSql) AS sh
-              |  FROM documents),
-              |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              |jp AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-              |  FROM sh a JOIN sh b USING (sh) WHERE a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |good AS (
-              |  SELECT id_a, id_b FROM jp
-              |  JOIN sizes sa ON sa.doc_id = id_a
-              |  JOIN sizes sb ON sb.doc_id = id_b
-              |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
-              |edges AS (SELECT id_a AS src, id_b AS dst FROM good
-              |          UNION ALL SELECT id_b, id_a FROM good),
-              |reach(id, lbl) AS (
-              |  SELECT doc_id, doc_id FROM documents
-              |  UNION
-              |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id)
-              |SELECT id AS doc_id, min(lbl) AS cluster_id
-              |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH RECURSIVE ${nearDupPairsSql(0.8)},
+              |${componentsSql("documents", "doc_id")}
+              |SELECT id AS doc_id, cluster_id FROM clus ORDER BY doc_id""".stripMargin)),
 
     QueryDef("dedup_keep_best",
       // quality-aware survivor selection: per near-dup cluster keep the
@@ -793,46 +697,16 @@ object DedupQueries {
         Dedup.keepBestPerCluster(q, "doc_id", "q", clusters)
           .orderBy("cluster_id")
       },
-      Some {
-        val en = TextAnalysis.Langs.head._2.map("'" + _ + "'").mkString(",")
-        s"""WITH RECURSIVE sh AS (
-           |  SELECT doc_id, unnest($ShinglesSql) AS sh FROM documents),
-           |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-           |jp AS (
-           |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-           |  FROM sh a JOIN sh b USING (sh) WHERE a.doc_id < b.doc_id
-           |  GROUP BY 1, 2),
-           |good AS (
-           |  SELECT id_a, id_b FROM jp
-           |  JOIN sizes sa ON sa.doc_id = id_a
-           |  JOIN sizes sb ON sb.doc_id = id_b
-           |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
-           |edges AS (SELECT id_a AS src, id_b AS dst FROM good
-           |          UNION ALL SELECT id_b, id_a FROM good),
-           |reach(id, lbl) AS (
-           |  SELECT doc_id, doc_id FROM documents
-           |  UNION
-           |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id),
-           |clus AS (SELECT id, min(lbl) AS cluster_id FROM reach GROUP BY id),
-           |m AS (SELECT doc_id,
-           |        len(string_split(text,' ')) AS n_tokens,
-           |        len(list_distinct(string_split(text,' '))) AS n_uniq_tokens,
-           |        len(list_intersect(string_split(text,' '), [$en])) AS n_stop,
-           |        length(text) AS n_chars
-           |      FROM documents),
-           |q AS (SELECT doc_id,
-           |        (CAST(n_uniq_tokens AS DOUBLE) / n_tokens) * 0.5
-           |        + (CAST(n_stop AS DOUBLE) / n_uniq_tokens) * 0.2
-           |        + least((CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens) / 10.0, 1.0) * 0.3 AS score
-           |      FROM m),
-           |r AS (SELECT c.cluster_id, c.id,
-           |        row_number() OVER (PARTITION BY c.cluster_id
-           |          ORDER BY q.score DESC, c.id ASC) AS rn,
-           |        count(*) OVER (PARTITION BY c.cluster_id) AS n_members
-           |      FROM clus c JOIN q ON q.doc_id = c.id)
-           |SELECT cluster_id, id AS keep_id, n_members
-           |FROM r WHERE rn = 1 ORDER BY cluster_id""".stripMargin
-      }),
+      Some(s"""WITH RECURSIVE ${nearDupPairsSql(0.8)},
+              |${componentsSql("documents", "doc_id")},
+              |$QualityScoreSql,
+              |r AS (SELECT c.cluster_id, c.id,
+              |        row_number() OVER (PARTITION BY c.cluster_id
+              |          ORDER BY qs.quality_score DESC, c.id ASC) AS rn,
+              |        count(*) OVER (PARTITION BY c.cluster_id) AS n_members
+              |      FROM clus c JOIN qs ON qs.doc_id = c.id)
+              |SELECT cluster_id, id AS keep_id, n_members
+              |FROM r WHERE rn = 1 ORDER BY cluster_id""".stripMargin)),
 
     QueryDef("corpus_diff",
       // snapshot reconciliation by content hash: old = ids % 7 != 0, new =
@@ -901,26 +775,8 @@ object DedupQueries {
           .select(col("sz").as("cluster_size"), col("n_clusters"))
           .orderBy("cluster_size")
       },
-      Some(s"""WITH RECURSIVE sh AS (
-              |  SELECT doc_id, unnest($ShinglesSql) AS sh
-              |  FROM documents),
-              |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              |jp AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-              |  FROM sh a JOIN sh b USING (sh) WHERE a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |good AS (
-              |  SELECT id_a, id_b FROM jp
-              |  JOIN sizes sa ON sa.doc_id = id_a
-              |  JOIN sizes sb ON sb.doc_id = id_b
-              |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
-              |edges AS (SELECT id_a AS src, id_b AS dst FROM good
-              |          UNION ALL SELECT id_b, id_a FROM good),
-              |reach(id, lbl) AS (
-              |  SELECT doc_id, doc_id FROM documents
-              |  UNION
-              |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id),
-              |clus AS (SELECT id, min(lbl) AS cluster_id FROM reach GROUP BY id),
+      Some(s"""WITH RECURSIVE ${nearDupPairsSql(0.8)},
+              |${componentsSql("documents", "doc_id")},
               |cs AS (SELECT cluster_id, count(*) AS sz FROM clus GROUP BY cluster_id)
               |SELECT sz AS cluster_size, count(*) AS n_clusters
               |FROM cs GROUP BY sz ORDER BY cluster_size""".stripMargin)),
@@ -937,19 +793,7 @@ object DedupQueries {
         Graphs.pageRank(docs, "doc_id", pairs, iterations = 3)
           .orderBy("doc_id")
       },
-      Some(s"""WITH sh AS (
-              |  SELECT doc_id, unnest($ShinglesSql) AS sh
-              |  FROM documents),
-              |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              |jp AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-              |  FROM sh a JOIN sh b USING (sh) WHERE a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |good AS (
-              |  SELECT id_a, id_b FROM jp
-              |  JOIN sizes sa ON sa.doc_id = id_a
-              |  JOIN sizes sb ON sb.doc_id = id_b
-              |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
+      Some(s"""WITH ${nearDupPairsSql(0.8)},
               |${Graphs.pageRankOracleSql("documents", "doc_id", "good", iterations = 3)}
               |SELECT id AS doc_id, CAST(rank AS BIGINT) AS rank_nano FROM r3 ORDER BY doc_id""".stripMargin)),
 
@@ -998,57 +842,33 @@ object DedupQueries {
       (s, dir) => Dedup.lshRecallReport(Tables.documents(s, dir),
           "doc_id", "text", k = 3, numHashes = 8, bandRows = 2,
           threshold = 0.8),
-      Some {
-        val coeffs = Dedup.minhashCoeffs(8)
-        val h32 = """list_reduce(list_transform(
-          |      regexp_extract_all(substr(md5(s), 25, 8), '.'),
-          |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a,b) -> a*16 + b)"""
-          .stripMargin
-        val perIdx = coeffs.zipWithIndex.map { case ((a, b), i) =>
-          s"SELECT doc_id, $i AS hash_idx, min(($a * h + $b) % 2147483647) AS sig FROM h GROUP BY doc_id"
-        }.mkString("\n  UNION ALL ")
-        s"""WITH sh AS MATERIALIZED (
-           |  SELECT doc_id, unnest($ShinglesSql) AS sh FROM documents),
-           |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-           |ip AS (
-           |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-           |  FROM sh a JOIN sh b USING (sh) WHERE a.doc_id < b.doc_id
-           |  GROUP BY 1, 2),
-           |ex AS MATERIALIZED (
-           |  SELECT id_a, id_b FROM ip
-           |  JOIN sizes sa ON sa.doc_id = id_a
-           |  JOIN sizes sb ON sb.doc_id = id_b
-           |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
-           |h AS MATERIALIZED (
-           |  SELECT doc_id, ($h32 % 2147483647) AS h
-           |  FROM (SELECT doc_id, sh AS s FROM sh)),
-           |sig AS (SELECT doc_id, hash_idx, sig FROM (
-           |  $perIdx)),
-           |band AS MATERIALIZED (
-           |  SELECT doc_id, hash_idx // 2 AS band,
-           |    max(CASE WHEN hash_idx % 2 = 0 THEN sig END) AS s0,
-           |    max(CASE WHEN hash_idx % 2 = 1 THEN sig END) AS s1
-           |  FROM sig GROUP BY doc_id, hash_idx // 2),
-           |cand AS MATERIALIZED (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM band a JOIN band b
-           |    ON a.band = b.band AND a.s0 = b.s0 AND a.s1 = b.s1
-           |  WHERE a.doc_id < b.doc_id),
-           |tp AS (SELECT c.id_a, c.id_b FROM cand c
-           |       JOIN ex ON ex.id_a = c.id_a AND ex.id_b = c.id_b),
-           |cnt AS (SELECT
-           |  (SELECT CAST(count(*) AS BIGINT) FROM ex) AS n_exact,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM cand) AS n_candidates,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM tp) AS n_true_pos)
-           |SELECT n_exact, n_candidates, n_true_pos,
-           |  CAST(CASE WHEN n_exact = 0 THEN 0
-           |       ELSE n_true_pos * 1000 // n_exact END AS BIGINT)
-           |    AS recall_permille,
-           |  CAST(CASE WHEN n_candidates = 0 THEN 0
-           |       ELSE n_true_pos * 1000 // n_candidates END AS BIGINT)
-           |    AS precision_permille
-           |FROM cnt""".stripMargin
-      }),
+      Some(s"""WITH ${nearDupPairsSql(0.8)},
+              |ex AS MATERIALIZED (SELECT id_a, id_b FROM good),
+              |${minhashSigSql(8)},
+              |band AS MATERIALIZED (
+              |  SELECT doc_id, hash_idx // 2 AS band,
+              |    max(CASE WHEN hash_idx % 2 = 0 THEN sig END) AS s0,
+              |    max(CASE WHEN hash_idx % 2 = 1 THEN sig END) AS s1
+              |  FROM sig GROUP BY doc_id, hash_idx // 2),
+              |cand AS MATERIALIZED (
+              |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+              |  FROM band a JOIN band b
+              |    ON a.band = b.band AND a.s0 = b.s0 AND a.s1 = b.s1
+              |  WHERE a.doc_id < b.doc_id),
+              |tp AS (SELECT c.id_a, c.id_b FROM cand c
+              |       JOIN ex ON ex.id_a = c.id_a AND ex.id_b = c.id_b),
+              |cnt AS (SELECT
+              |  (SELECT CAST(count(*) AS BIGINT) FROM ex) AS n_exact,
+              |  (SELECT CAST(count(*) AS BIGINT) FROM cand) AS n_candidates,
+              |  (SELECT CAST(count(*) AS BIGINT) FROM tp) AS n_true_pos)
+              |SELECT n_exact, n_candidates, n_true_pos,
+              |  CAST(CASE WHEN n_exact = 0 THEN 0
+              |       ELSE n_true_pos * 1000 // n_exact END AS BIGINT)
+              |    AS recall_permille,
+              |  CAST(CASE WHEN n_candidates = 0 THEN 0
+              |       ELSE n_true_pos * 1000 // n_candidates END AS BIGINT)
+              |    AS precision_permille
+              |FROM cnt""".stripMargin)),
 
     QueryDef.headline("dedup_soft_weights",
       // loss-free dedup: every copy keeps weight 1/cluster_size ppm so a

@@ -14,6 +14,12 @@ object EmbeddingQueries {
   private def dotSql(a: String, b: String): String =
     s"list_reduce(list_transform(generate_series(1, len($a)), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x,y) -> x+y)"
 
+  /** DuckDB cosine of two lists in [[graft.functions.Similarity.cosine]]'s
+    * order of operations: the [[dotSql]] fold over the product of the two
+    * norms. */
+  private def cosSql(a: String, b: String): String =
+    s"${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))"
+
   /** DuckDB CTEs recomputing hyperplane-LSH buckets over `embeddings` with
     * the SAME plane literals the Spark plan uses (exact binary fractions —
     * multiples of 1/1024 — so the decimal literals round-trip exactly).
@@ -104,23 +110,122 @@ object EmbeddingQueries {
        |    FROM dists) WHERE rn = 1)""".stripMargin
   }
 
+  /** `qp` (cell): the `nProbe` [[ivfAssignedCteSql]] cells nearest the
+    * query `q` (qv), lower cell on ties. */
+  private def probedCellsSql(nProbe: Int): String = {
+    val qcDist = "list_reduce(list_transform(generate_series(1, len(qv)), " +
+      "i -> (CAST(qv[i] AS DOUBLE) - c.c[i]) * (CAST(qv[i] AS DOUBLE) - c.c[i])), (x,y) -> x + y)"
+    s"qp AS (SELECT c.cell FROM cents c CROSS JOIN q ORDER BY $qcDist, c.cell LIMIT $nProbe)"
+  }
+
+  /** DuckDB replay of [[graft.functions.PQ.searchADC]]'s scoring:
+    * [[pqCodesCteSql]], the query `q` (qv, vector 0), its per-subspace
+    * distance tables `t<s>` quantized to integer nano-units, and `scored`
+    * (vec_id, adc_dist_nano), every vector's sum of table lookups. */
+  private def pqAdcSql(model: graft.functions.PQ.Model): String = {
+    val dsub = model.dsub
+    val terms = (0 until model.m).map { s0 =>
+      val qs = s"qv[${s0 * dsub + 1}:${(s0 + 1) * dsub}]"
+      s"""t$s0 AS (SELECT p.code, CAST(floor(1e9 * list_reduce(
+         |    list_transform(generate_series(1, $dsub),
+         |      i -> (CAST($qs[i] AS DOUBLE) - p.c[i]) * (CAST($qs[i] AS DOUBLE) - p.c[i])),
+         |    (x,y) -> x+y) + 0.5) AS BIGINT) AS tn
+         |  FROM pq$s0 p CROSS JOIN q)""".stripMargin
+    }.mkString(",\n")
+    val ts = (0 until model.m)
+      .map(s0 => s"SELECT $s0 AS s, code, tn FROM t$s0")
+      .mkString("\n  UNION ALL ")
+    s"""${pqCodesCteSql(model)},
+       |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+       |$terms,
+       |ts AS (
+       |  $ts),
+       |cx AS (SELECT vec_id, unnest(list_transform(
+       |    generate_series(1, len(codes)),
+       |    i -> {'s': i - 1, 'code': codes[i]})) AS u FROM codes),
+       |scored AS (
+       |  SELECT vec_id, sum(tn) AS adc_dist_nano
+       |  FROM cx JOIN ts ON ts.s = cx.u['s'] AND ts.code = cx.u['code']
+       |  GROUP BY vec_id)""".stripMargin
+  }
+
   /** DuckDB oracle for IVF probe search, given the trained centroids as
     * exact double literals: recomputes cell assignment (argmin with
     * lower-cell tie-break), the probed cell ranking, and cosine top-k —
     * everything downstream of training, independently. */
   private def ivfOracleSql(model: graft.functions.IVF.Model,
       topK: Int, nProbe: Int): String = {
-    val qcDist = "list_reduce(list_transform(generate_series(1, len(qv)), " +
-      "i -> (CAST(qv[i] AS DOUBLE) - c.c[i]) * (CAST(qv[i] AS DOUBLE) - c.c[i])), (x,y) -> x + y)"
     s"""WITH ${ivfAssignedCteSql(model)},
        |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-       |qp AS (SELECT c.cell FROM cents c CROSS JOIN q ORDER BY $qcDist, c.cell LIMIT $nProbe)
+       |${probedCellsSql(nProbe)}
        |SELECT a.vec_id,
-       |  ${dotSql("a.embedding", "qv")} /
-       |  (sqrt(${dotSql("a.embedding", "a.embedding")}) * sqrt(${dotSql("qv", "qv")})) AS cos
+       |  ${cosSql("a.embedding", "qv")} AS cos
        |FROM assigned a CROSS JOIN q
        |WHERE a.cell IN (SELECT cell FROM qp)
        |ORDER BY cos DESC, vec_id LIMIT $topK""".stripMargin
+  }
+
+  /** DuckDB replay of [[graft.functions.Similarity.quantizeInt8]] over
+    * every embedding: `sc` each vector's max |v|, `qv` (vec_id, embedding,
+    * scale, q) its int8 codes, and `qq` (qs, qvec), the query vector
+    * vec_id = 0. */
+  private val int8QuantizedSql: String =
+    """sc AS (
+      |  SELECT vec_id, embedding,
+      |         list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS ma
+      |  FROM embeddings),
+      |qv AS (
+      |  SELECT vec_id, embedding,
+      |         CASE WHEN ma > 0 THEN 127.0 / ma ELSE 0.0 END AS scale,
+      |         list_transform(embedding,
+      |           v -> floor(CAST(v AS DOUBLE) * (CASE WHEN ma > 0 THEN 127.0 / ma ELSE 0.0 END) + 0.5)) AS q
+      |  FROM sc),
+      |qq AS (SELECT scale AS qs, q AS qvec FROM qv WHERE vec_id = 0)""".stripMargin
+
+  /** [[graft.functions.Similarity.dotQuantized]] of a [[int8QuantizedSql]]
+    * row `v` against the query `qq`. */
+  private val Int8DotSql: String =
+    s"""CASE WHEN v.scale > 0 AND qq.qs > 0
+       |       THEN ${dotSql("v.q", "qq.qvec")} / (v.scale * qq.qs)
+       |       ELSE 0.0 END""".stripMargin
+
+  /** [[ivfAssignedCteSql]] plus `n` (vec_id, embedding, cell, nrm): every
+    * vector's IVF cell and L2 norm. */
+  private def cellNormsSql(model: graft.functions.IVF.Model): String =
+    s"""${ivfAssignedCteSql(model)},
+       |n AS (SELECT vec_id, embedding, cell,
+       |        sqrt(${dotSql("embedding", "embedding")}) AS nrm
+       |      FROM assigned)""".stripMargin
+
+  /** The SemDeDup graph ([[graft.functions.Similarity.semanticDedup]]):
+    * [[cellNormsSql]], `good` (id_a, id_b) — the within-cell pairs at
+    * cosine >= 0.4 — and their [[componentsSql]] `clus`, opening with
+    * WITH RECURSIVE. */
+  private def semanticClustersSql(model: graft.functions.IVF.Model): String =
+    s"""WITH RECURSIVE ${cellNormsSql(model)},
+       |good AS (
+       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
+       |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id < b.vec_id
+       |  WHERE ${dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= 0.4),
+       |${componentsSql("embeddings", "vec_id")}""".stripMargin
+
+  /** `cg` (c0, c1, ...): the trained PCA components as list literals —
+    * QUOTED strings, the [[ivfAssignedCteSql]] round-trip trick: bare
+    * numeric list literals unify through DECIMAL and lose the last ulp;
+    * varchar -> double parses correctly rounded. */
+  private def pcaComponentsSql(m: graft.functions.PCA.Model): String =
+    m.components.zipWithIndex.map { case (c, j) =>
+      val arr = c.map(x => "'" + fmtD(x) + "'").mkString("[", ", ", "]")
+      s"CAST($arr AS DOUBLE[]) AS c$j"
+    }.mkString("cg AS (SELECT ", ", ", ")")
+
+  /** The centered coordinate of `embedding` on component j: its dot with
+    * c<j> less the component's mean offset, both folded as
+    * [[graft.functions.PCA.project]] folds them. */
+  private def pcaCenteredSql(m: graft.functions.PCA.Model, j: Int): String = {
+    val off = m.components(j).zip(m.mean).map { case (a, b) => a * b }
+      .reduceLeft(_ + _)
+    s"${dotSql("embedding", s"c$j")} - CAST('${fmtD(off)}' AS DOUBLE)"
   }
 
   def defs: Seq[QueryDef] = Seq(
@@ -134,8 +239,7 @@ object EmbeddingQueries {
       },
       Some(s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
               |SELECT vec_id,
-              |  ${dotSql("embedding", "qv")} /
-              |  (sqrt(${dotSql("embedding", "embedding")}) * sqrt(${dotSql("qv", "qv")})) AS cos
+              |  ${cosSql("embedding", "qv")} AS cos
               |FROM embeddings CROSS JOIN q
               |ORDER BY cos DESC, vec_id LIMIT 20""".stripMargin)),
 
@@ -153,8 +257,7 @@ object EmbeddingQueries {
       Some(s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
               |cand AS MATERIALIZED (
               |  SELECT vec_id, embedding AS v,
-              |    ${dotSql("embedding", "qv")} /
-              |    (sqrt(${dotSql("embedding", "embedding")}) * sqrt(${dotSql("qv", "qv")})) AS rel
+              |    ${cosSql("embedding", "qv")} AS rel
               |  FROM embeddings CROSS JOIN q
               |  ORDER BY rel DESC, vec_id LIMIT 1000),
               |${Similarity.mmrOracleSql("cand", k = 10, lambda = 0.5)}""".stripMargin)),
@@ -173,21 +276,8 @@ object EmbeddingQueries {
           .orderBy(col("qdot").desc, col("vec_id"))
           .limit(20)
       },
-      Some(s"""WITH sc AS (
-              |  SELECT vec_id, embedding,
-              |         list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS ma
-              |  FROM embeddings),
-              |qv AS (
-              |  SELECT vec_id,
-              |         CASE WHEN ma > 0 THEN 127.0 / ma ELSE 0.0 END AS scale,
-              |         list_transform(embedding,
-              |           v -> floor(CAST(v AS DOUBLE) * (CASE WHEN ma > 0 THEN 127.0 / ma ELSE 0.0 END) + 0.5)) AS q
-              |  FROM sc),
-              |qq AS (SELECT scale AS qs, q AS qvec FROM qv WHERE vec_id = 0)
-              |SELECT v.vec_id,
-              |  CASE WHEN v.scale > 0 AND qq.qs > 0
-              |       THEN ${dotSql("v.q", "qq.qvec")} / (v.scale * qq.qs)
-              |       ELSE 0.0 END AS qdot
+      Some(s"""WITH $int8QuantizedSql
+              |SELECT v.vec_id, $Int8DotSql AS qdot
               |FROM qv v CROSS JOIN qq
               |ORDER BY qdot DESC, vec_id LIMIT 20""".stripMargin)),
 
@@ -205,11 +295,9 @@ object EmbeddingQueries {
       },
       Some(s"""WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 300)
               |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-              |  ${dotSql("a.embedding", "b.embedding")} /
-              |  (sqrt(${dotSql("a.embedding", "a.embedding")}) * sqrt(${dotSql("b.embedding", "b.embedding")})) AS cos
+              |  ${cosSql("a.embedding", "b.embedding")} AS cos
               |FROM e a JOIN e b ON a.vec_id < b.vec_id
-              |WHERE ${dotSql("a.embedding", "b.embedding")} /
-              |  (sqrt(${dotSql("a.embedding", "a.embedding")}) * sqrt(${dotSql("b.embedding", "b.embedding")})) >= 0.4
+              |WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.4
               |ORDER BY id_a, id_b""".stripMargin)),
 
     QueryDef("ann_lsh_topk",
@@ -225,8 +313,7 @@ object EmbeddingQueries {
               |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
               |qb AS (SELECT bucket AS qbucket FROM bkt WHERE vec_id = 0)
               |SELECT b.vec_id,
-              |  ${dotSql("b.embedding", "qv")} /
-              |  (sqrt(${dotSql("b.embedding", "b.embedding")}) * sqrt(${dotSql("qv", "qv")})) AS cos
+              |  ${cosSql("b.embedding", "qv")} AS cos
               |FROM bkt b CROSS JOIN q CROSS JOIN qb
               |WHERE b.bucket = qb.qbucket
               |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin)),
@@ -313,36 +400,10 @@ object EmbeddingQueries {
           k = 10)
       },
       None,
-      dynOracle = Some { (s, dir) =>
-        val model = Artifacts.pqModel(s, dir)
-        val dsub = model.dsub
-        def qSlice(s0: Int) = s"qv[${s0 * dsub + 1}:${(s0 + 1) * dsub}]"
-        val terms = (0 until model.m).map { s0 =>
-          val qs = qSlice(s0)
-          s"""t$s0 AS (SELECT p.code, CAST(floor(1e9 * list_reduce(
-             |    list_transform(generate_series(1, $dsub),
-             |      i -> (CAST($qs[i] AS DOUBLE) - p.c[i]) * (CAST($qs[i] AS DOUBLE) - p.c[i])),
-             |    (x,y) -> x+y) + 0.5) AS BIGINT) AS tn
-             |  FROM pq$s0 p CROSS JOIN q)""".stripMargin
-        }.mkString(",\n")
-        val ts = (0 until model.m)
-          .map(s0 => s"SELECT $s0 AS s, code, tn FROM t$s0")
-          .mkString("\n  UNION ALL ")
-        s"""WITH ${pqCodesCteSql(model)},
-           |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-           |$terms,
-           |ts AS (
-           |  $ts),
-           |cx AS (SELECT vec_id, unnest(list_transform(
-           |    generate_series(1, len(codes)),
-           |    i -> {'s': i - 1, 'code': codes[i]})) AS u FROM codes),
-           |scored AS (
-           |  SELECT vec_id, sum(tn) AS adc_dist_nano
-           |  FROM cx JOIN ts ON ts.s = cx.u['s'] AND ts.code = cx.u['code']
-           |  GROUP BY vec_id)
+      dynOracle = Some((s, dir) =>
+        s"""WITH ${pqAdcSql(Artifacts.pqModel(s, dir))}
            |SELECT vec_id, CAST(adc_dist_nano AS BIGINT) AS adc_dist_nano
-           |FROM scored ORDER BY adc_dist_nano, vec_id LIMIT 10""".stripMargin
-      }),
+           |FROM scored ORDER BY adc_dist_nano, vec_id LIMIT 10""".stripMargin)),
 
     QueryDef.headline("ann_ivfpq_topk",
       // the full two-level FAISS layout: coarse cells prune (partition
@@ -357,43 +418,14 @@ object EmbeddingQueries {
           Artifacts.ivfModel(s, dir), Artifacts.pqModel(s, dir), q, topK = 10, nProbe = 2)
       },
       None,
-      dynOracle = Some { (s, dir) =>
-        val model = Artifacts.pqModel(s, dir)
-        val dsub = model.dsub
-        def qSlice(s0: Int) = s"qv[${s0 * dsub + 1}:${(s0 + 1) * dsub}]"
-        val terms = (0 until model.m).map { s0 =>
-          val qs = qSlice(s0)
-          s"""t$s0 AS (SELECT p.code, CAST(floor(1e9 * list_reduce(
-             |    list_transform(generate_series(1, $dsub),
-             |      i -> (CAST($qs[i] AS DOUBLE) - p.c[i]) * (CAST($qs[i] AS DOUBLE) - p.c[i])),
-             |    (x,y) -> x+y) + 0.5) AS BIGINT) AS tn
-             |  FROM pq$s0 p CROSS JOIN q)""".stripMargin
-        }.mkString(",\n")
-        val ts = (0 until model.m)
-          .map(s0 => s"SELECT $s0 AS s, code, tn FROM t$s0")
-          .mkString("\n  UNION ALL ")
-        val qcDist = "list_reduce(list_transform(generate_series(1, len(qv)), " +
-          "i -> (CAST(qv[i] AS DOUBLE) - c.c[i]) * (CAST(qv[i] AS DOUBLE) - c.c[i])), (x,y) -> x + y)"
+      dynOracle = Some((s, dir) =>
         s"""WITH ${ivfAssignedCteSql(Artifacts.ivfModel(s, dir))},
-           |${pqCodesCteSql(model)},
-           |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-           |qp AS (SELECT c.cell FROM cents c CROSS JOIN q
-           |       ORDER BY $qcDist, c.cell LIMIT 2),
-           |$terms,
-           |ts AS (
-           |  $ts),
-           |cx AS (SELECT vec_id, unnest(list_transform(
-           |    generate_series(1, len(codes)),
-           |    i -> {'s': i - 1, 'code': codes[i]})) AS u FROM codes),
-           |scored AS (
-           |  SELECT vec_id, sum(tn) AS adc_dist_nano
-           |  FROM cx JOIN ts ON ts.s = cx.u['s'] AND ts.code = cx.u['code']
-           |  GROUP BY vec_id)
+           |${pqAdcSql(Artifacts.pqModel(s, dir))},
+           |${probedCellsSql(2)}
            |SELECT sc.vec_id, CAST(adc_dist_nano AS BIGINT) AS adc_dist_nano
            |FROM scored sc JOIN assigned a ON a.vec_id = sc.vec_id
            |WHERE a.cell IN (SELECT cell FROM qp)
-           |ORDER BY adc_dist_nano, sc.vec_id LIMIT 10""".stripMargin
-      }),
+           |ORDER BY adc_dist_nano, sc.vec_id LIMIT 10""".stripMargin)),
 
     QueryDef.headline("embedding_label_centroids",
       // per-class centroid state: per (label, dim) the count and the
@@ -416,13 +448,9 @@ object EmbeddingQueries {
       (s, dir) => graft.functions.TextAnalysis.hashEmbedSparse(
           Tables.documents(s, dir), "doc_id", "text", dim = 16)
         .orderBy("doc_id", "dim"),
-      Some("""WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+      Some(s"""WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
              |  FROM documents),
-             |h AS (SELECT doc_id,
-             |    list_reduce(list_transform(
-             |      regexp_extract_all(substr(md5(tok), 25, 8), '.'),
-             |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-             |      (a,b) -> a*16 + b) AS hv
+             |h AS (SELECT doc_id, ${md5SliceSql("tok")} AS hv
              |  FROM t),
              |w AS (SELECT doc_id, CAST((hv // 2) % 16 AS INT) AS dim,
              |    CASE WHEN hv % 2 = 1 THEN 1 ELSE -1 END AS s
@@ -510,15 +538,13 @@ object EmbeddingQueries {
               |qb AS (SELECT bucket AS qbucket FROM bkt WHERE vec_id = 0),
               |ann AS (
               |  SELECT b.vec_id,
-              |    ${dotSql("b.embedding", "qv")} /
-              |    (sqrt(${dotSql("b.embedding", "b.embedding")}) * sqrt(${dotSql("qv", "qv")})) AS cos
+              |    ${cosSql("b.embedding", "qv")} AS cos
               |  FROM bkt b CROSS JOIN q CROSS JOIN qb
               |  WHERE b.bucket = qb.qbucket
               |  ORDER BY cos DESC, vec_id LIMIT 10),
               |brute AS (
               |  SELECT e.vec_id,
-              |    ${dotSql("e.embedding", "qv")} /
-              |    (sqrt(${dotSql("e.embedding", "e.embedding")}) * sqrt(${dotSql("qv", "qv")})) AS cos
+              |    ${cosSql("e.embedding", "qv")} AS cos
               |  FROM embeddings e CROSS JOIN q
               |  ORDER BY cos DESC, vec_id LIMIT 10)
               |SELECT CAST(count(*) AS DOUBLE) / 10.0 AS recall_at_10
@@ -540,8 +566,7 @@ object EmbeddingQueries {
               |           FROM embeddings WHERE vec_id < 6),
               |sc AS (
               |  SELECT q.qid, e.vec_id AS neg_id,
-              |    ${dotSql("e.embedding", "q.qv")} /
-              |    (sqrt(${dotSql("e.embedding", "e.embedding")}) * sqrt(${dotSql("q.qv", "q.qv")})) AS cos
+              |    ${cosSql("e.embedding", "q.qv")} AS cos
               |  FROM embeddings e JOIN q ON e.label <> q.ql),
               |r AS (SELECT *, CAST(row_number() OVER (
               |        PARTITION BY qid ORDER BY cos DESC, neg_id) AS INT) AS rnk
@@ -565,8 +590,7 @@ object EmbeddingQueries {
       Some(s"""WITH b AS (SELECT embedding AS bv FROM embeddings WHERE vec_id < 40),
               |c AS (
               |  SELECT vec_id,
-              |    max(${dotSql("embedding", "bv")} /
-              |      (sqrt(${dotSql("embedding", "embedding")}) * sqrt(${dotSql("bv", "bv")}))) AS max_bench_cos
+              |    max(${cosSql("embedding", "bv")}) AS max_bench_cos
               |  FROM embeddings CROSS JOIN b WHERE vec_id >= 40
               |  GROUP BY vec_id)
               |SELECT vec_id, max_bench_cos, max_bench_cos >= 0.35 AS contaminated
@@ -631,15 +655,13 @@ object EmbeddingQueries {
            |qp AS (SELECT p AS qv FROM pr WHERE vec_id = 0),
            |top AS (
            |  SELECT pr.vec_id,
-           |    ${dotSql("pr.p", "qp.qv")} /
-           |    (sqrt(${dotSql("pr.p", "pr.p")}) * sqrt(${dotSql("qp.qv", "qp.qv")})) AS cos
+           |    ${cosSql("pr.p", "qp.qv")} AS cos
            |  FROM pr CROSS JOIN qp
            |  ORDER BY cos DESC, vec_id LIMIT 20),
            |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
            |brute AS (
            |  SELECT e.vec_id,
-           |    ${dotSql("e.embedding", "q.qv")} /
-           |    (sqrt(${dotSql("e.embedding", "e.embedding")}) * sqrt(${dotSql("q.qv", "q.qv")})) AS cos
+           |    ${cosSql("e.embedding", "q.qv")} AS cos
            |  FROM embeddings e CROSS JOIN q
            |  ORDER BY cos DESC, vec_id LIMIT 20)
            |SELECT CAST(count(*) AS DOUBLE) / 20.0 AS recall_at_20
@@ -662,8 +684,7 @@ object EmbeddingQueries {
               |b AS (SELECT vec_id AS id_b, embedding AS vb
               |      FROM embeddings WHERE label = 1),
               |p AS (SELECT id_a, id_b,
-              |        CAST(floor(${dotSql("va", "vb")} /
-              |          (sqrt(${dotSql("va", "va")}) * sqrt(${dotSql("vb", "vb")}))
+              |        CAST(floor(${cosSql("va", "vb")}
               |          * 1000000 + 0.5) AS BIGINT) AS c
               |      FROM a CROSS JOIN b),
               |da AS (SELECT id_a, CAST(sum(c) AS BIGINT) AS den_a
@@ -697,28 +718,15 @@ object EmbeddingQueries {
         Similarity.rerankTopK(e, "embedding", "vec_id", q,
           k = 10, candidates = 50)
       },
-      Some(s"""WITH sc AS (
-              |  SELECT vec_id, embedding,
-              |         list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS ma
-              |  FROM embeddings),
-              |qv AS (
-              |  SELECT vec_id, embedding,
-              |         CASE WHEN ma > 0 THEN 127.0 / ma ELSE 0.0 END AS scale,
-              |         list_transform(embedding,
-              |           v -> floor(CAST(v AS DOUBLE) * (CASE WHEN ma > 0 THEN 127.0 / ma ELSE 0.0 END) + 0.5)) AS q
-              |  FROM sc),
-              |qq AS (SELECT scale AS qs, q AS qvec FROM qv WHERE vec_id = 0),
+      Some(s"""WITH $int8QuantizedSql,
               |s1 AS (
               |  SELECT v.vec_id, v.embedding
               |  FROM qv v CROSS JOIN qq
-              |  ORDER BY CASE WHEN v.scale > 0 AND qq.qs > 0
-              |                THEN ${dotSql("v.q", "qq.qvec")} / (v.scale * qq.qs)
-              |                ELSE 0.0 END DESC, v.vec_id
+              |  ORDER BY $Int8DotSql DESC, v.vec_id
               |  LIMIT 50),
               |q2 AS (SELECT embedding AS fq FROM embeddings WHERE vec_id = 0)
               |SELECT s1.vec_id,
-              |  ${dotSql("s1.embedding", "fq")} /
-              |  (sqrt(${dotSql("s1.embedding", "s1.embedding")}) * sqrt(${dotSql("fq", "fq")})) AS cos
+              |  ${cosSql("s1.embedding", "fq")} AS cos
               |FROM s1 CROSS JOIN q2
               |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin)),
 
@@ -747,9 +755,7 @@ object EmbeddingQueries {
         val per = Seq(8, 16, 32, 64).map { d =>
           s"""SELECT $d AS dim, CAST(count(*) AS DOUBLE) / 10.0 AS recall_at_10
              |FROM (SELECT e.vec_id,
-             |        ${dotSql(s"(e.embedding[1:$d])", s"(q.qv[1:$d])")} /
-             |        (sqrt(${dotSql(s"(e.embedding[1:$d])", s"(e.embedding[1:$d])")}) *
-             |         sqrt(${dotSql(s"(q.qv[1:$d])", s"(q.qv[1:$d])")})) AS cos
+             |        ${cosSql(s"(e.embedding[1:$d])", s"(q.qv[1:$d])")} AS cos
              |      FROM embeddings e CROSS JOIN q
              |      ORDER BY cos DESC, vec_id LIMIT 10) t
              |JOIN brute USING (vec_id)""".stripMargin
@@ -757,8 +763,7 @@ object EmbeddingQueries {
         s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
            |brute AS (
            |  SELECT e.vec_id,
-           |    ${dotSql("e.embedding", "q.qv")} /
-           |    (sqrt(${dotSql("e.embedding", "e.embedding")}) * sqrt(${dotSql("q.qv", "q.qv")})) AS cos
+           |    ${cosSql("e.embedding", "q.qv")} AS cos
            |  FROM embeddings e CROSS JOIN q
            |  ORDER BY cos DESC, vec_id LIMIT 10)
            |SELECT * FROM ($per) ORDER BY dim""".stripMargin
@@ -777,19 +782,9 @@ object EmbeddingQueries {
       None,
       dynOracle = Some((s, dir) => {
         val m = Artifacts.pcaModel(s, dir)
-        // components as QUOTED strings — the ivfAssignedCteSql round-trip
-        // trick: bare numeric list literals unify through DECIMAL and lose
-        // the last ulp; varchar -> double parses correctly rounded
-        val lists = m.components.zipWithIndex.map { case (c, j) =>
-          val arr = c.map(x => "'" + fmtD(x) + "'").mkString("[", ", ", "]")
-          s"CAST($arr AS DOUBLE[]) AS c$j"
-        }.mkString(", ")
-        val projs = m.components.zipWithIndex.map { case (c, j) =>
-          val off = c.zip(m.mean).map { case (a, b) => a * b }
-            .reduceLeft(_ + _)
-          s"${dotSql("embedding", s"c$j")} - CAST('${fmtD(off)}' AS DOUBLE) AS p$j"
-        }.mkString(",\n  ")
-        s"""WITH cg AS (SELECT $lists)
+        val projs = m.components.indices
+          .map(j => s"${pcaCenteredSql(m, j)} AS p$j").mkString(",\n  ")
+        s"""WITH ${pcaComponentsSql(m)}
            |SELECT vec_id,
            |  $projs
            |FROM embeddings CROSS JOIN cg ORDER BY vec_id""".stripMargin
@@ -806,18 +801,11 @@ object EmbeddingQueries {
       None,
       dynOracle = Some((s, dir) => {
         val m = Artifacts.pcaModel(s, dir)
-        val lists = m.components.zipWithIndex.map { case (c, j) =>
-          val arr = c.map(x => "'" + fmtD(x) + "'").mkString("[", ", ", "]")
-          s"CAST($arr AS DOUBLE[]) AS c$j"
-        }.mkString(", ")
-        val projs = m.components.zip(m.variances).zipWithIndex.map {
-          case ((c, v), j) =>
-            val off = c.zip(m.mean).map { case (a, b) => a * b }
-              .reduceLeft(_ + _)
-            s"(${dotSql("embedding", s"c$j")} - CAST('${fmtD(off)}' AS DOUBLE))" +
-              s" / CAST('${fmtD(math.sqrt(v))}' AS DOUBLE) AS w$j"
+        val projs = m.variances.zipWithIndex.map { case (v, j) =>
+          s"(${pcaCenteredSql(m, j)})" +
+            s" / CAST('${fmtD(math.sqrt(v))}' AS DOUBLE) AS w$j"
         }.mkString(",\n  ")
-        s"""WITH cg AS (SELECT $lists)
+        s"""WITH ${pcaComponentsSql(m)}
            |SELECT vec_id,
            |  $projs
            |FROM embeddings CROSS JOIN cg ORDER BY vec_id""".stripMargin
@@ -849,22 +837,9 @@ object EmbeddingQueries {
         .orderBy("vec_id"),
       None,
       dynOracle = Some((s, dir) =>
-        s"""WITH RECURSIVE ${ivfAssignedCteSql(Artifacts.ivfModel(s, dir))},
-           |n AS (SELECT vec_id, embedding, cell,
-           |        sqrt(${dotSql("embedding", "embedding")}) AS nrm
-           |      FROM assigned),
-           |good AS (
-           |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-           |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id < b.vec_id
-           |  WHERE ${dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= 0.4),
-           |edges AS (SELECT id_a AS src, id_b AS dst FROM good
-           |          UNION ALL SELECT id_b, id_a FROM good),
-           |reach(id, lbl) AS (
-           |  SELECT vec_id, vec_id FROM embeddings
-           |  UNION
-           |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id)
-           |SELECT id AS vec_id, min(lbl) AS cluster_id, (id = min(lbl)) AS keep
-           |FROM reach GROUP BY id ORDER BY vec_id""".stripMargin)),
+        s"""${semanticClustersSql(Artifacts.ivfModel(s, dir))}
+           |SELECT id AS vec_id, cluster_id, (id = cluster_id) AS keep
+           |FROM clus ORDER BY vec_id""".stripMargin)),
 
     QueryDef.headline("embedding_outliers",
       // per-vector prototypicality: assigned cell + squared-L2 distance to
@@ -893,21 +868,7 @@ object EmbeddingQueries {
         .orderBy("cluster_id"),
       None,
       dynOracle = Some((s, dir) =>
-        s"""WITH RECURSIVE ${ivfAssignedCteSql(Artifacts.ivfModel(s, dir))},
-           |n AS (SELECT vec_id, embedding, cell,
-           |        sqrt(${dotSql("embedding", "embedding")}) AS nrm
-           |      FROM assigned),
-           |good AS (
-           |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-           |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id < b.vec_id
-           |  WHERE ${dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= 0.4),
-           |edges AS (SELECT id_a AS src, id_b AS dst FROM good
-           |          UNION ALL SELECT id_b, id_a FROM good),
-           |reach(id, lbl) AS (
-           |  SELECT vec_id, vec_id FROM embeddings
-           |  UNION
-           |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id),
-           |clus AS (SELECT id, min(lbl) AS cluster_id FROM reach GROUP BY id),
+        s"""${semanticClustersSql(Artifacts.ivfModel(s, dir))},
            |dist AS (SELECT vec_id, dist FROM (
            |    SELECT vec_id, dist,
            |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, cell) AS rn
@@ -940,10 +901,7 @@ object EmbeddingQueries {
       },
       None,
       dynOracle = Some((s, dir) =>
-        s"""WITH ${ivfAssignedCteSql(Artifacts.ivfModel(s, dir))},
-           |n AS (SELECT vec_id, embedding, cell,
-           |        sqrt(${dotSql("embedding", "embedding")}) AS nrm
-           |      FROM assigned),
+        s"""WITH ${cellNormsSql(Artifacts.ivfModel(s, dir))},
            |inc AS (SELECT * FROM n WHERE vec_id % 5 = 0),
            |base AS (SELECT * FROM n WHERE vec_id % 5 != 0)
            |SELECT id_new, id_corpus, cos FROM (
@@ -999,8 +957,7 @@ object EmbeddingQueries {
            |  WHERE rnk <= 50),
            |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
            |cs AS (SELECT vec_id,
-           |    ${dotSql("embedding", "qv")} /
-           |    (sqrt(${dotSql("embedding", "embedding")}) * sqrt(${dotSql("qv", "qv")})) AS cos
+           |    ${cosSql("embedding", "qv")} AS cos
            |  FROM embeddings CROSS JOIN q),
            |dense AS (SELECT doc_id, rnk FROM (
            |    SELECT vec_id AS doc_id,
@@ -1036,9 +993,7 @@ object EmbeddingQueries {
               |           FROM embeddings WHERE vec_id < 32),
               |sc AS (
               |  SELECT q.qid, q.ql, e.vec_id AS cid, e.label AS cl,
-              |    ${dotSql("e.embedding", "q.qv")} /
-              |    (sqrt(${dotSql("e.embedding", "e.embedding")})
-              |     * sqrt(${dotSql("q.qv", "q.qv")})) AS cos
+              |    ${cosSql("e.embedding", "q.qv")} AS cos
               |  FROM embeddings e JOIN q ON e.vec_id <> q.qid),
               |r AS (SELECT *, row_number() OVER (
               |        PARTITION BY qid ORDER BY cos DESC, cid) AS rnk

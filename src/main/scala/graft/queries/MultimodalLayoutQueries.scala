@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.functions.Multimodal
 import graft.sources.Tables
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multimodal decoding (images, audio, frames, perceptual-hash dedup)
@@ -9,6 +10,105 @@ import org.apache.spark.sql.functions._
   * and pushdown, z-order and bucketed lookup layouts, CDC and SCD2
   * merges, rollup maintenance and compaction planning. */
 object MultimodalLayoutQueries {
+
+  /** The SCD2 gates' base dimension: every customer's segment, open
+    * since 0. */
+  private def scd2Base(c: DataFrame): DataFrame =
+    c.select(col("c_custkey").as("id"), col("c_mktsegment").as("segment"),
+      lit(0L).as("valid_from"), lit(null).cast("long").as("valid_to"))
+
+  /** The SCD2 gates' change batch: every 7th customer moves to segment
+    * MOVED-(key % 3) at `ts`. */
+  private def scd2Moved(c: DataFrame, ts: Long): DataFrame =
+    c.filter(col("c_custkey") % 7 === 0)
+      .select(col("c_custkey").as("id"),
+        concat(lit("MOVED-"), (col("c_custkey") % 3).cast("string"))
+          .as("segment"), lit(ts).as("ts"))
+
+  /** DuckDB rendering of [[scd2Base]] as the CTE `base`. */
+  private val Scd2BaseSql =
+    """base AS (SELECT c_custkey AS id, c_mktsegment AS segment,
+      |         CAST(0 AS BIGINT) AS valid_from,
+      |         CAST(NULL AS BIGINT) AS valid_to
+      |       FROM customer)""".stripMargin
+
+  /** DuckDB rendering of [[scd2Moved]]. */
+  private def scd2MovedSql(ts: Long): String =
+    s"""SELECT c_custkey AS id,
+       |    'MOVED-' || CAST(c_custkey % 3 AS VARCHAR) AS segment,
+       |    CAST($ts AS BIGINT) AS ts
+       |  FROM customer WHERE c_custkey % 7 = 0""".stripMargin
+
+  /** The snapshot-merge gates' change set over `documents`, as two CDC
+    * batches: batch 0 deletes doc_id % 10 = 0 and updates % 10 = 1;
+    * batch 1 inserts a copy of % 10 = 2 and deletes % 10 = 3, a delete a
+    * later seq shadows with an update. */
+  private def cdcBatches(d: DataFrame): (DataFrame, DataFrame) = {
+    val b0 = d.filter(col("doc_id") % 10 === 0)
+      .select(col("doc_id"), lit("d").as("op"), lit(1L).as("seq"),
+        col("lang"), col("source"), col("n_chars"))
+      .unionAll(d.filter(col("doc_id") % 10 === 1)
+        .select(col("doc_id"), lit("u").as("op"), lit(1L).as("seq"),
+          lit("xx").as("lang"), col("source"),
+          (col("n_chars") + 1000).as("n_chars")))
+    val b1 = d.filter(col("doc_id") % 10 === 2)
+      .select((col("doc_id") + 1000000L).as("doc_id"), lit("u").as("op"),
+        lit(1L).as("seq"), col("lang"), lit("ins").as("source"),
+        col("n_chars"))
+      .unionAll(d.filter(col("doc_id") % 10 === 3)
+        .select(col("doc_id"), lit("d").as("op"), lit(1L).as("seq"),
+          col("lang"), col("source"), col("n_chars")))
+      .unionAll(d.filter(col("doc_id") % 10 === 3)
+        .select(col("doc_id"), lit("u").as("op"), lit(2L).as("seq"),
+          col("lang"), col("source"), (col("n_chars") + 5).as("n_chars")))
+    (b0, b1)
+  }
+
+  /** The snapshot-merge gates' oracle: [[cdcBatches]]' latest change per
+    * key applied to the snapshot. */
+  private val SnapshotMergeSql =
+    """WITH snap AS (SELECT doc_id, lang, source, n_chars FROM documents),
+      |ch AS (
+      |  SELECT doc_id, 'd' AS op, 1 AS seq, lang, source, n_chars
+      |  FROM documents WHERE doc_id % 10 = 0
+      |  UNION ALL SELECT doc_id, 'u', 1, 'xx', source, n_chars + 1000
+      |  FROM documents WHERE doc_id % 10 = 1
+      |  UNION ALL SELECT doc_id + 1000000, 'u', 1, lang, 'ins', n_chars
+      |  FROM documents WHERE doc_id % 10 = 2
+      |  UNION ALL SELECT doc_id, 'd', 1, lang, source, n_chars
+      |  FROM documents WHERE doc_id % 10 = 3
+      |  UNION ALL SELECT doc_id, 'u', 2, lang, source, n_chars + 5
+      |  FROM documents WHERE doc_id % 10 = 3),
+      |latest AS (SELECT * FROM (
+      |  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY seq DESC) AS rn
+      |  FROM ch) WHERE rn = 1)
+      |SELECT COALESCE(l.doc_id, s.doc_id) AS doc_id,
+      |  CASE WHEN l.op IS NOT NULL THEN l.lang ELSE s.lang END AS lang,
+      |  CASE WHEN l.op IS NOT NULL THEN l.source ELSE s.source END AS source,
+      |  CASE WHEN l.op IS NOT NULL THEN l.n_chars ELSE s.n_chars END AS n_chars
+      |FROM snap s FULL OUTER JOIN latest l ON s.doc_id = l.doc_id
+      |WHERE l.op IS NULL OR l.op <> 'd'
+      |ORDER BY doc_id""".stripMargin
+
+  /** DuckDB replay of [[graft.functions.Multimodal.imageDHash]] over the
+    * PNG fixture, predicted from doc_id without decoding: `d` each image's
+    * size, `g`/`bits` the 56 row-wise gradient bits of its 8x8 grid and
+    * `hs` (doc_id, dhash). */
+  private val DHashSql =
+    """d AS (SELECT doc_id, 4 + doc_id % 5 AS w, 4 + doc_id % 7 AS h
+      |           FROM documents),
+      |g AS (SELECT doc_id, w, h,
+      |        unnest(generate_series(0, 55)) AS b FROM d),
+      |bits AS (SELECT doc_id,
+      |    CASE WHEN
+      |      (doc_id*31 + (((b % 7) + 1) * w // 8) * 7
+      |        + ((b // 7) * h // 8) * 13) % 256
+      |      > (doc_id*31 + ((b % 7) * w // 8) * 7
+      |        + ((b // 7) * h // 8) * 13) % 256
+      |    THEN CAST(1 AS BIGINT) << b ELSE CAST(0 AS BIGINT) END AS bit
+      |  FROM g),
+      |hs AS (SELECT doc_id, CAST(sum(bit) AS BIGINT) AS dhash
+      |       FROM bits GROUP BY 1)""".stripMargin
 
   def defs: Seq[QueryDef] = Seq(
 
@@ -117,32 +217,20 @@ object MultimodalLayoutQueries {
       // oracle reconstructs every branch
       (s, dir) => {
         val c = Tables.customer(s, dir)
-        val base = c.select(col("c_custkey").as("id"),
-          col("c_mktsegment").as("segment"),
-          lit(0L).as("valid_from"), lit(null).cast("long").as("valid_to"))
-        val changes = c.filter(col("c_custkey") % 7 === 0)
-          .select(col("c_custkey").as("id"),
-            concat(lit("MOVED-"), (col("c_custkey") % 3).cast("string"))
-              .as("segment"), lit(1000L).as("ts"))
+        val changes = scd2Moved(c, 1000L)
           .unionAll(c.filter(col("c_custkey") % 7 === 3)
             .select(col("c_custkey").as("id"),
               col("c_mktsegment").as("segment"), lit(1000L).as("ts")))
           .unionAll(c.filter(col("c_custkey") % 97 === 0)
             .select((col("c_custkey") + 1000000L).as("id"),
               lit("NEWSEG").as("segment"), lit(1000L).as("ts")))
-        graft.functions.Scd.scd2Merge(base, changes, "id",
+        graft.functions.Scd.scd2Merge(scd2Base(c), changes, "id",
             Seq("segment"), "ts")
           .orderBy("id", "valid_from")
       },
-      Some("""WITH base AS (SELECT c_custkey AS id, c_mktsegment AS segment,
-             |         CAST(0 AS BIGINT) AS valid_from,
-             |         CAST(NULL AS BIGINT) AS valid_to
-             |       FROM customer),
+      Some(s"""WITH $Scd2BaseSql,
              |ch AS (
-             |  SELECT c_custkey AS id,
-             |    'MOVED-' || CAST(c_custkey % 3 AS VARCHAR) AS segment,
-             |    CAST(1000 AS BIGINT) AS ts
-             |  FROM customer WHERE c_custkey % 7 = 0
+             |  ${scd2MovedSql(1000)}
              |  UNION ALL SELECT c_custkey, c_mktsegment, 1000
              |  FROM customer WHERE c_custkey % 7 = 3
              |  UNION ALL SELECT c_custkey + 1000000, 'NEWSEG', 1000
@@ -176,15 +264,8 @@ object MultimodalLayoutQueries {
       // rebuilds the SCD2 table and the temporal resolution end-to-end
       (s, dir) => {
         val c = Tables.customer(s, dir)
-        val base = c.select(col("c_custkey").as("id"),
-          col("c_mktsegment").as("segment"),
-          lit(0L).as("valid_from"), lit(null).cast("long").as("valid_to"))
-        val changes = c.filter(col("c_custkey") % 7 === 0)
-          .select(col("c_custkey").as("id"),
-            concat(lit("MOVED-"), (col("c_custkey") % 3).cast("string"))
-              .as("segment"), lit(10000L).as("ts"))
-        val dim = graft.functions.Scd.scd2Merge(base, changes, "id",
-          Seq("segment"), "ts")
+        val dim = graft.functions.Scd.scd2Merge(scd2Base(c),
+          scd2Moved(c, 10000L), "id", Seq("segment"), "ts")
         val o = Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_custkey"),
             datediff(col("o_orderdate"), lit("1970-01-01").cast("date"))
@@ -198,14 +279,8 @@ object MultimodalLayoutQueries {
             max(col("o_orderkey")).as("max_okey"))
           .orderBy("segment")
       },
-      Some("""WITH base AS (SELECT c_custkey AS id, c_mktsegment AS segment,
-             |         CAST(0 AS BIGINT) AS valid_from,
-             |         CAST(NULL AS BIGINT) AS valid_to
-             |       FROM customer),
-             |ch AS (SELECT c_custkey AS id,
-             |         'MOVED-' || CAST(c_custkey % 3 AS VARCHAR) AS segment,
-             |         CAST(10000 AS BIGINT) AS ts
-             |       FROM customer WHERE c_custkey % 7 = 0),
+      Some(s"""WITH $Scd2BaseSql,
+             |ch AS (${scd2MovedSql(10000)}),
              |closed AS (SELECT b.id, b.segment, b.valid_from, ch.ts AS valid_to
              |           FROM base b JOIN ch USING (id)
              |           WHERE ch.segment <> b.segment),
@@ -235,49 +310,11 @@ object MultimodalLayoutQueries {
       (s, dir) => {
         val snap = Tables.documents(s, dir)
           .select("doc_id", "lang", "source", "n_chars")
-        val d = Tables.documents(s, dir)
-        val ch = d.filter(col("doc_id") % 10 === 0)
-          .select(col("doc_id"), lit("d").as("op"), lit(1L).as("seq"),
-            col("lang"), col("source"), col("n_chars"))
-          .unionAll(d.filter(col("doc_id") % 10 === 1)
-            .select(col("doc_id"), lit("u").as("op"), lit(1L).as("seq"),
-              lit("xx").as("lang"), col("source"),
-              (col("n_chars") + 1000).as("n_chars")))
-          .unionAll(d.filter(col("doc_id") % 10 === 2)
-            .select((col("doc_id") + 1000000L).as("doc_id"), lit("u").as("op"),
-              lit(1L).as("seq"), col("lang"), lit("ins").as("source"),
-              col("n_chars")))
-          .unionAll(d.filter(col("doc_id") % 10 === 3)
-            .select(col("doc_id"), lit("d").as("op"), lit(1L).as("seq"),
-              col("lang"), col("source"), col("n_chars")))
-          .unionAll(d.filter(col("doc_id") % 10 === 3)
-            .select(col("doc_id"), lit("u").as("op"), lit(2L).as("seq"),
-              col("lang"), col("source"), (col("n_chars") + 5).as("n_chars")))
-        graft.functions.Merge.applyChanges(snap, ch, "doc_id")
+        val (b0, b1) = cdcBatches(Tables.documents(s, dir))
+        graft.functions.Merge.applyChanges(snap, b0.unionAll(b1), "doc_id")
           .orderBy("doc_id")
       },
-      Some("""WITH snap AS (SELECT doc_id, lang, source, n_chars FROM documents),
-             |ch AS (
-             |  SELECT doc_id, 'd' AS op, 1 AS seq, lang, source, n_chars
-             |  FROM documents WHERE doc_id % 10 = 0
-             |  UNION ALL SELECT doc_id, 'u', 1, 'xx', source, n_chars + 1000
-             |  FROM documents WHERE doc_id % 10 = 1
-             |  UNION ALL SELECT doc_id + 1000000, 'u', 1, lang, 'ins', n_chars
-             |  FROM documents WHERE doc_id % 10 = 2
-             |  UNION ALL SELECT doc_id, 'd', 1, lang, source, n_chars
-             |  FROM documents WHERE doc_id % 10 = 3
-             |  UNION ALL SELECT doc_id, 'u', 2, lang, source, n_chars + 5
-             |  FROM documents WHERE doc_id % 10 = 3),
-             |latest AS (SELECT * FROM (
-             |  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY seq DESC) AS rn
-             |  FROM ch) WHERE rn = 1)
-             |SELECT COALESCE(l.doc_id, s.doc_id) AS doc_id,
-             |  CASE WHEN l.op IS NOT NULL THEN l.lang ELSE s.lang END AS lang,
-             |  CASE WHEN l.op IS NOT NULL THEN l.source ELSE s.source END AS source,
-             |  CASE WHEN l.op IS NOT NULL THEN l.n_chars ELSE s.n_chars END AS n_chars
-             |FROM snap s FULL OUTER JOIN latest l ON s.doc_id = l.doc_id
-             |WHERE l.op IS NULL OR l.op <> 'd'
-             |ORDER BY doc_id""".stripMargin)),
+      Some(SnapshotMergeSql)),
 
     QueryDef.headline("snapshot_merge_mor",
       // merge-on-read: the SAME change set as snapshot_merge, landed as an
@@ -288,52 +325,13 @@ object MultimodalLayoutQueries {
         val out = Artifacts.scratchPath("cdclog", dir)
         val snap = Tables.documents(s, dir)
           .select("doc_id", "lang", "source", "n_chars")
-        val d = Tables.documents(s, dir)
-        // batch 0: deletes + updates; batch 1: inserts + shadowed delete
-        val b0 = d.filter(col("doc_id") % 10 === 0)
-          .select(col("doc_id"), lit("d").as("op"), lit(1L).as("seq"),
-            col("lang"), col("source"), col("n_chars"))
-          .unionAll(d.filter(col("doc_id") % 10 === 1)
-            .select(col("doc_id"), lit("u").as("op"), lit(1L).as("seq"),
-              lit("xx").as("lang"), col("source"),
-              (col("n_chars") + 1000).as("n_chars")))
-        val b1 = d.filter(col("doc_id") % 10 === 2)
-          .select((col("doc_id") + 1000000L).as("doc_id"), lit("u").as("op"),
-            lit(1L).as("seq"), col("lang"), lit("ins").as("source"),
-            col("n_chars"))
-          .unionAll(d.filter(col("doc_id") % 10 === 3)
-            .select(col("doc_id"), lit("d").as("op"), lit(1L).as("seq"),
-              col("lang"), col("source"), col("n_chars")))
-          .unionAll(d.filter(col("doc_id") % 10 === 3)
-            .select(col("doc_id"), lit("u").as("op"), lit(2L).as("seq"),
-              col("lang"), col("source"), (col("n_chars") + 5).as("n_chars")))
+        val (b0, b1) = cdcBatches(Tables.documents(s, dir))
         val log = graft.streaming.Incremental.cdcLog(out)
         log(b0, 0L); log(b1, 1L)
         graft.functions.Merge.readMergeOnRead(snap, out, "doc_id")
           .orderBy("doc_id")
       },
-      Some("""WITH snap AS (SELECT doc_id, lang, source, n_chars FROM documents),
-             |ch AS (
-             |  SELECT doc_id, 'd' AS op, 1 AS seq, lang, source, n_chars
-             |  FROM documents WHERE doc_id % 10 = 0
-             |  UNION ALL SELECT doc_id, 'u', 1, 'xx', source, n_chars + 1000
-             |  FROM documents WHERE doc_id % 10 = 1
-             |  UNION ALL SELECT doc_id + 1000000, 'u', 1, lang, 'ins', n_chars
-             |  FROM documents WHERE doc_id % 10 = 2
-             |  UNION ALL SELECT doc_id, 'd', 1, lang, source, n_chars
-             |  FROM documents WHERE doc_id % 10 = 3
-             |  UNION ALL SELECT doc_id, 'u', 2, lang, source, n_chars + 5
-             |  FROM documents WHERE doc_id % 10 = 3),
-             |latest AS (SELECT * FROM (
-             |  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY seq DESC) AS rn
-             |  FROM ch) WHERE rn = 1)
-             |SELECT COALESCE(l.doc_id, s.doc_id) AS doc_id,
-             |  CASE WHEN l.op IS NOT NULL THEN l.lang ELSE s.lang END AS lang,
-             |  CASE WHEN l.op IS NOT NULL THEN l.source ELSE s.source END AS source,
-             |  CASE WHEN l.op IS NOT NULL THEN l.n_chars ELSE s.n_chars END AS n_chars
-             |FROM snap s FULL OUTER JOIN latest l ON s.doc_id = l.doc_id
-             |WHERE l.op IS NULL OR l.op <> 'd'
-             |ORDER BY doc_id""".stripMargin)),
+      Some(SnapshotMergeSql)),
 
     QueryDef.headline("agg_incremental_rollup",
       // incremental view maintenance: land per-(day, type) PARTIAL
@@ -608,20 +606,7 @@ object MultimodalLayoutQueries {
             Tables.parquet(s, Artifacts.pngFixturePath(s, dir)), "doc_id", "png"),
           "doc_id", maxHamming = 3)
         .orderBy("id_a", "id_b"),
-      Some("""WITH d AS (SELECT doc_id, 4 + doc_id % 5 AS w, 4 + doc_id % 7 AS h
-             |           FROM documents),
-             |g AS (SELECT doc_id, w, h,
-             |        unnest(generate_series(0, 55)) AS b FROM d),
-             |bits AS (SELECT doc_id,
-             |    CASE WHEN
-             |      (doc_id*31 + (((b % 7) + 1) * w // 8) * 7
-             |        + ((b // 7) * h // 8) * 13) % 256
-             |      > (doc_id*31 + ((b % 7) * w // 8) * 7
-             |        + ((b // 7) * h // 8) * 13) % 256
-             |    THEN CAST(1 AS BIGINT) << b ELSE CAST(0 AS BIGINT) END AS bit
-             |  FROM g),
-             |hs AS (SELECT doc_id, CAST(sum(bit) AS BIGINT) AS dhash
-             |       FROM bits GROUP BY 1),
+      Some(s"""WITH $DHashSql,
              |blk AS (SELECT doc_id, dhash,
              |          unnest(generate_series(0, 3)) AS t FROM hs),
              |b2 AS (SELECT doc_id, dhash, t,
@@ -647,20 +632,7 @@ object MultimodalLayoutQueries {
               .filter(col("doc_id") % 7 === 0), "doc_id", "png"),
           Tables.parquet(s, Artifacts.dhashIndexPath(s, dir)), "doc_id", maxHamming = 3)
         .orderBy("id_new", "id_corp"),
-      Some("""WITH d AS (SELECT doc_id, 4 + doc_id % 5 AS w, 4 + doc_id % 7 AS h
-             |           FROM documents),
-             |g AS (SELECT doc_id, w, h,
-             |        unnest(generate_series(0, 55)) AS b FROM d),
-             |bits AS (SELECT doc_id,
-             |    CASE WHEN
-             |      (doc_id*31 + (((b % 7) + 1) * w // 8) * 7
-             |        + ((b // 7) * h // 8) * 13) % 256
-             |      > (doc_id*31 + ((b % 7) * w // 8) * 7
-             |        + ((b // 7) * h // 8) * 13) % 256
-             |    THEN CAST(1 AS BIGINT) << b ELSE CAST(0 AS BIGINT) END AS bit
-             |  FROM g),
-             |hs AS (SELECT doc_id, CAST(sum(bit) AS BIGINT) AS dhash
-             |       FROM bits GROUP BY 1)
+      Some(s"""WITH $DHashSql
              |SELECT a.doc_id AS id_new, b.doc_id AS id_corp,
              |  CAST(bit_count(xor(a.dhash, b.dhash)) AS INT) AS hamming
              |FROM hs a JOIN hs b

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.functions.{TextAnalysis, TextClean}
 import graft.sources.Tables
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import OracleSql._
 
@@ -60,15 +61,29 @@ object QualityQueries {
       |       i -> array_to_string((string_split(text,' '))[i:i+4], ' '))
       |  ELSE [text] END)""".stripMargin
 
-  /** DuckDB CTE chain recomputing the FULL Gopher battery verdict
-    * ([[graft.functions.TextAnalysis.gopherChain]]): every Table A1
-    * census, every Table A2 repetition census, the exact integer ppm
-    * ratios, and the first-failure precedence in the paper's table
-    * order. Yields `gv` (doc_id, first_failed). Word bounds are the
-    * caller's; every other threshold is the paper's. (Regexes avoid
-    * backslashes — `[.]` == `\.` — because this is an interpolated
-    * Scala string.) */
-  private def gopherBatterySql(minWords: Int, maxWords: Int): String =
+  /** The decontamination gates' census: `e` (doc_id, gram), every
+    * document's distinct word-5-grams, and `bench` (gram), those of the
+    * benchmark slice doc_id % 20 = 0. */
+  private val benchGramsSql: String =
+    s"""sh AS (SELECT doc_id, $Shingles5Sql AS shl FROM documents),
+       |e AS (SELECT doc_id, unnest(shl) AS gram FROM sh),
+       |bench AS (SELECT DISTINCT gram FROM e WHERE doc_id % 20 = 0)""".stripMargin
+
+  /** Oracle of the decontamination report ([[graft.functions.Decontam
+    * .overlaps]] and its Bloom-prefiltered twin): each corpus document's
+    * count of benchmark grams. */
+  private val decontamReportSql: String =
+    s"""WITH $benchGramsSql
+       |SELECT e.doc_id, count(*) AS n_shared_grams
+       |FROM e JOIN bench USING (gram)
+       |WHERE e.doc_id % 20 != 0
+       |GROUP BY e.doc_id ORDER BY doc_id""".stripMargin
+
+  /** The Gopher battery's censuses: `gt` (doc_id, text, w, l), `gm` the
+    * Table A1 and A2 counts, and `gmm` (doc_id, n_words, mwl, syp, bup,
+    * elp, alp, ns, dlp, dlcp, tcp), the exact integer ppm ratios every
+    * rule compares. */
+  private val gopherCensusSql: String =
     s"""gt AS (SELECT doc_id, text, string_split(text, ' ') AS w,
        |         string_split(text, chr(10)) AS l FROM documents),
        |gm AS (SELECT doc_id,
@@ -121,7 +136,33 @@ object QualityQueries {
        |                x -> CAST(len(list_filter(g, y -> y = x)) AS BIGINT)
        |                     * length(x))), 0) * 1000000) // n
        |              ELSE 0 END AS BIGINT) AS tcp
-       |       FROM gm),
+       |       FROM gm)""".stripMargin
+
+  /** DuckDB mirror of [[graft.functions.TextAnalysis.gopherFlags]]: `gf`,
+    * [[QualityScoreSql]]'s `qs` plus the four rule flags. */
+  private val gopherFlagsSql: String =
+    s"""$QualityScoreSql,
+       |gf AS (
+       |  SELECT *,
+       |    (n_tokens >= 8 AND n_tokens <= 100000) AS ok_length,
+       |    (CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens >= 2.0
+       |     AND CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens <= 12.0) AS ok_mean_len,
+       |    (CASE WHEN n_tokens - 2 <= 0 THEN 0.0
+       |          ELSE 1.0 - CAST(len($ShinglesSql) AS DOUBLE) / (n_tokens - 2) END
+       |       <= 0.5) AS ok_repetition,
+       |    (CAST(n_stop AS DOUBLE) / n_uniq_tokens >= 0.02) AS ok_stopwords
+       |  FROM qs)""".stripMargin
+
+  /** DuckDB CTE chain recomputing the FULL Gopher battery verdict
+    * ([[graft.functions.TextAnalysis.gopherChain]]): every Table A1
+    * census, every Table A2 repetition census, the exact integer ppm
+    * ratios, and the first-failure precedence in the paper's table
+    * order. Yields `gv` (doc_id, first_failed). Word bounds are the
+    * caller's; every other threshold is the paper's. (Regexes avoid
+    * backslashes — `[.]` == `\.` — because this is an interpolated
+    * Scala string.) */
+  private def gopherBatterySql(minWords: Int, maxWords: Int): String =
+    s"""$gopherCensusSql,
        |gv AS (SELECT doc_id,
        |        CASE WHEN n_words < $minWords OR n_words > $maxWords
        |               THEN 'word_count'
@@ -209,6 +250,60 @@ object QualityQueries {
     (head +: steps).mkString(",\n")
   }
 
+  /** The C4 gates' fixture re-paging of the one-line documents: 8-word
+    * lines, every 4th left unterminated. */
+  private def c4Paged: Column = {
+    val words = split(col("text"), " ")
+    val nc = expr("(size(split(text, ' ')) + 7) div 8").cast("int")
+    array_join(transform(sequence(lit(0), nc - 1),
+      i => concat(array_join(slice(words, i * 8 + 1, lit(8)), " "),
+        when(i % 4 =!= 3, lit(".")).otherwise(lit("")))), "\n")
+  }
+
+  /** The boilerplate header quality_c4_chain puts on every third page. */
+  private val C4Header = Seq("one.", "two.", "three.", "four.")
+    .map(sfx => s"shared boilerplate header line $sfx")
+
+  /** [[C4Header]] on every third page, as a DuckDB text expression. */
+  private val C4HeaderSql =
+    s"CASE WHEN doc_id % 3 = 0 THEN ${
+      C4Header.map(l => s"'$l' || chr(10)").mkString(" || ")} ELSE '' END"
+
+  /** DuckDB replay of [[c4Paged]] under the text expression `prefix` and
+    * of [[graft.functions.TextClean.c4Clean]]'s line pass: `w`/`pg` the
+    * paging, `t`/`k` each page's lines and the kept ones (terminal
+    * punctuation, >= 5 words, no 'vector'), and `c` (doc_id, n_lines,
+    * n_lines_kept, text_clean, has_lorem_ipsum, has_brace). */
+  private def c4LinesSql(prefix: String): String =
+    s"""w AS (SELECT doc_id, string_split(text, ' ') AS w,
+       |            CAST((len(string_split(text, ' ')) + 7) // 8
+       |              AS INT) AS nc FROM documents),
+       |pg AS (SELECT doc_id, $prefix ||
+       |         array_to_string(list_transform(
+       |           generate_series(0, nc - 1),
+       |           i -> array_to_string(w[i*8+1 : i*8+8], ' ') ||
+       |                CASE WHEN i % 4 <> 3 THEN '.' ELSE '' END),
+       |           chr(10)) AS text
+       |       FROM w),
+       |t AS (SELECT doc_id, text,
+       |        string_split(text, chr(10)) AS l FROM pg),
+       |k AS (SELECT doc_id, text, l,
+       |        list_filter(l, x ->
+       |          right(trim(x), 1) IN ('.', '!', '?', '"')
+       |          AND len(list_filter(string_split(x, ' '),
+       |                y -> length(y) > 0)) >= 5
+       |          AND NOT contains(lower(x), 'vector')) AS kl
+       |      FROM t),
+       |c AS (SELECT doc_id, CAST(len(l) AS BIGINT) AS n_lines,
+       |        CAST(len(kl) AS BIGINT) AS n_lines_kept,
+       |        -- array_to_string([]) is NULL in DuckDB, '' in Spark
+       |        coalesce(array_to_string(kl, chr(10)), '')
+       |          AS text_clean,
+       |        contains(lower(text), 'lorem ipsum')
+       |          AS has_lorem_ipsum,
+       |        contains(text, '{') AS has_brace
+       |      FROM k)""".stripMargin
+
   def defs: Seq[QueryDef] = Seq(
 
     QueryDef.headline("text_quality_gopher",
@@ -219,30 +314,10 @@ object QualityQueries {
         .select("doc_id", "ok_length", "ok_mean_len", "ok_repetition",
           "ok_stopwords", "keep")
         .orderBy("doc_id"),
-      Some {
-        val en = TextAnalysis.Langs.head._2.map("'" + _ + "'").mkString(",")
-        s"""WITH m AS (
-           |  SELECT doc_id,
-           |    len(string_split(text,' ')) AS n_tokens,
-           |    len(list_distinct(string_split(text,' '))) AS n_uniq,
-           |    len(list_intersect(string_split(text,' '), [$en])) AS n_stop,
-           |    length(text) AS n_chars,
-           |    CASE WHEN len(string_split(text,' ')) - 2 <= 0 THEN 0.0
-           |         ELSE 1.0 - CAST(len($ShinglesSql) AS DOUBLE)
-           |                / (len(string_split(text,' ')) - 2) END AS rep3
-           |  FROM documents),
-           |f AS (
-           |  SELECT doc_id,
-           |    (n_tokens >= 8 AND n_tokens <= 100000) AS ok_length,
-           |    (CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens >= 2.0
-           |     AND CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens <= 12.0) AS ok_mean_len,
-           |    (rep3 <= 0.5) AS ok_repetition,
-           |    (CAST(n_stop AS DOUBLE) / n_uniq >= 0.02) AS ok_stopwords
-           |  FROM m)
-           |SELECT doc_id, ok_length, ok_mean_len, ok_repetition, ok_stopwords,
-           |       (ok_length AND ok_mean_len AND ok_repetition AND ok_stopwords) AS keep
-           |FROM f ORDER BY doc_id""".stripMargin
-      }),
+      Some(s"""WITH $gopherFlagsSql
+              |SELECT doc_id, ok_length, ok_mean_len, ok_repetition, ok_stopwords,
+              |       (ok_length AND ok_mean_len AND ok_repetition AND ok_stopwords) AS keep
+              |FROM gf ORDER BY doc_id""".stripMargin)),
 
     QueryDef.headline("quality_by_source",
       // per-source curation dashboard: doc counts, quality-score sums in
@@ -252,34 +327,12 @@ object QualityQueries {
       (s, dir) => TextAnalysis.qualityByGroup(Tables.documents(s, dir),
           "source")
         .orderBy("source"),
-      Some {
-        val en = TextAnalysis.Langs.head._2.map("'" + _ + "'").mkString(",")
-        s"""WITH m AS (
-           |  SELECT doc_id, source,
-           |    len(string_split(text,' ')) AS n_tokens,
-           |    len(list_distinct(string_split(text,' '))) AS n_uniq,
-           |    len(list_intersect(string_split(text,' '), [$en])) AS n_stop,
-           |    length(text) AS n_chars,
-           |    CASE WHEN len(string_split(text,' ')) - 2 <= 0 THEN 0.0
-           |         ELSE 1.0 - CAST(len($ShinglesSql) AS DOUBLE)
-           |                / (len(string_split(text,' ')) - 2) END AS rep3
-           |  FROM documents),
-           |q AS (
-           |  SELECT doc_id, source,
-           |    (CAST(n_uniq AS DOUBLE) / n_tokens) * 0.5
-           |      + (CAST(n_stop AS DOUBLE) / n_uniq) * 0.2
-           |      + least((CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens) / 10.0, 1.0) * 0.3 AS q,
-           |    ((n_tokens >= 8 AND n_tokens <= 100000)
-           |     AND (CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens >= 2.0
-           |          AND CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens <= 12.0)
-           |     AND (rep3 <= 0.5)
-           |     AND (CAST(n_stop AS DOUBLE) / n_uniq >= 0.02)) AS keep
-           |  FROM m)
-           |SELECT source, count(*) AS n_docs,
-           |  CAST(sum(CAST(floor(q * 1000000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS q_nanos_sum,
-           |  CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_gopher_pass
-           |FROM q GROUP BY source ORDER BY source""".stripMargin
-      }),
+      Some(s"""WITH $gopherFlagsSql
+              |SELECT source, count(*) AS n_docs,
+              |  CAST(sum(CAST(floor(quality_score * 1000000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS q_nanos_sum,
+              |  CAST(sum(CASE WHEN ok_length AND ok_mean_len AND ok_repetition AND ok_stopwords
+              |    THEN 1 ELSE 0 END) AS BIGINT) AS n_gopher_pass
+              |FROM gf GROUP BY source ORDER BY source""".stripMargin)),
 
     QueryDef("corpus_pipeline",
       // the whole spec-driven corpus prep in one declared pipeline:
@@ -306,9 +359,7 @@ object QualityQueries {
            |k AS (SELECT doc_id, lang, ntext FROM d WHERE rn = 1),
            |smp AS (
            |  SELECT doc_id, ntext FROM k
-           |  WHERE list_reduce(list_transform(
-           |      regexp_extract_all(substr(md5(CAST(doc_id AS VARCHAR)), 25, 8), '.'),
-           |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a,b) -> a*16 + b)
+           |  WHERE $DocHashSql
            |    < CASE WHEN lang = 'en' THEN ${th(0.5)} ELSE ${th(0.25)} END),
            |t AS (SELECT doc_id, string_split(ntext, ' ') AS t,
            |             len(string_split(ntext, ' ')) AS n FROM smp),
@@ -610,48 +661,19 @@ object QualityQueries {
       (s, dir) => TextAnalysis.gopherRules(Tables.documents(s, dir),
           "doc_id", "text", minWords = 20, maxWords = 90)
         .orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS w,
-             |            string_split(text, chr(10)) AS l FROM documents),
-             |m AS (SELECT doc_id,
-             |        CAST(len(w) AS BIGINT) AS n_words,
-             |        CAST(list_reduce(list_transform(w,
-             |            x -> CAST(length(x) AS BIGINT)),
-             |          (a, b) -> a + b) AS BIGINT) AS sl,
-             |        CAST(len(l) AS BIGINT) AS nl,
-             |        CAST(length(text) - length(replace(text, '#', ''))
-             |            AS BIGINT)
-             |          + CAST((length(text)
-             |            - length(replace(text, '...', ''))) // 3
-             |            AS BIGINT) AS sy,
-             |        CAST(len(list_filter(l,
-             |          x -> regexp_matches(x, '^[-*•]'))) AS BIGINT) AS bu,
-             |        CAST(len(list_filter(l,
-             |          x -> regexp_matches(x, '(\.\.\.|…)$'))) AS BIGINT) AS el,
-             |        CAST(len(list_filter(w,
-             |          x -> regexp_matches(x, '[a-zA-Z]'))) AS BIGINT) AS al,
-             |        CAST(len(list_filter(w,
-             |          x -> x IN ('the','be','to','of','and','that','have',
-             |                     'with','a'))) AS BIGINT) AS ns
-             |      FROM t),
-             |mm AS (SELECT doc_id, n_words,
-             |         CAST((sl * 1000000) // n_words AS BIGINT) AS mean_word_len_ppm,
-             |         CAST((sy * 1000000) // n_words AS BIGINT) AS symbol_ratio_ppm,
-             |         CAST((bu * 1000000) // nl AS BIGINT) AS bullet_line_ppm,
-             |         CAST((el * 1000000) // nl AS BIGINT) AS ellipsis_line_ppm,
-             |         CAST((al * 1000000) // n_words AS BIGINT) AS alpha_word_ppm,
-             |         ns AS n_stopwords
-             |       FROM m)
-             |SELECT doc_id, n_words, mean_word_len_ppm, symbol_ratio_ppm,
-             |  bullet_line_ppm, ellipsis_line_ppm, alpha_word_ppm,
-             |  n_stopwords,
-             |  (n_words BETWEEN 20 AND 90
-             |   AND mean_word_len_ppm BETWEEN 3000000 AND 10000000
-             |   AND symbol_ratio_ppm <= 100000
-             |   AND bullet_line_ppm <= 900000
-             |   AND ellipsis_line_ppm <= 300000
-             |   AND alpha_word_ppm >= 800000
-             |   AND n_stopwords >= 2) AS gopher_keep
-             |FROM mm ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH $gopherCensusSql
+              |SELECT doc_id, n_words, mwl AS mean_word_len_ppm,
+              |  syp AS symbol_ratio_ppm, bup AS bullet_line_ppm,
+              |  elp AS ellipsis_line_ppm, alp AS alpha_word_ppm,
+              |  ns AS n_stopwords,
+              |  (n_words BETWEEN 20 AND 90
+              |   AND mwl BETWEEN 3000000 AND 10000000
+              |   AND syp <= 100000
+              |   AND bup <= 900000
+              |   AND elp <= 300000
+              |   AND alp >= 800000
+              |   AND ns >= 2) AS gopher_keep
+              |FROM gmm ORDER BY doc_id""".stripMargin)),
 
     QueryDef.headline("quality_gopher_repetition",
       // the Gopher REPETITION half (Rae et al. 2021 Table A2):
@@ -662,42 +684,11 @@ object QualityQueries {
       (s, dir) => TextAnalysis.gopherRepetition(Tables.documents(s, dir),
           "doc_id", "text")
         .orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS w,
-             |            string_split(text, chr(10)) AS l FROM documents),
-             |m AS (SELECT doc_id,
-             |        CAST(len(l) AS BIGINT) AS nl,
-             |        CAST(list_reduce(list_transform(l,
-             |            x -> CAST(length(x) AS BIGINT)),
-             |          (a, b) -> a + b) AS BIGINT) AS lc,
-             |        CAST(len(l) - len(list_distinct(l)) AS BIGINT) AS dl,
-             |        CAST(list_reduce(list_transform(l,
-             |            x -> CASE WHEN len(list_filter(l, y -> y = x)) >= 2
-             |                 THEN CAST(length(x) AS BIGINT) ELSE 0 END),
-             |          (a, b) -> a + b) AS BIGINT) AS dlc,
-             |        CASE WHEN len(w) >= 2 THEN
-             |          list_transform(generate_series(1,
-             |            CAST(len(w) - 1 AS INT)),
-             |            i -> w[i] || ' ' || w[i + 1])
-             |        ELSE [] END AS g,
-             |        CAST(length(text) AS BIGINT) AS n
-             |      FROM t),
-             |mm AS (SELECT doc_id, nl, lc, dl, dlc, n,
-             |         CAST(coalesce(list_max(list_transform(g,
-             |           x -> CAST(len(list_filter(g, y -> y = x)) AS BIGINT)
-             |                * length(x))), 0) AS BIGINT) AS tc
-             |       FROM m),
-             |f AS (SELECT doc_id,
-             |        CAST((dl * 1000000) // nl AS BIGINT) AS dup_line_ppm,
-             |        CAST(CASE WHEN lc > 0 THEN (dlc * 1000000) // lc
-             |             ELSE 0 END AS BIGINT) AS dup_line_char_ppm,
-             |        CAST(CASE WHEN n > 0 THEN (tc * 1000000) // n
-             |             ELSE 0 END AS BIGINT) AS top_2gram_char_ppm
-             |      FROM mm)
-             |SELECT doc_id, dup_line_ppm, dup_line_char_ppm,
-             |  top_2gram_char_ppm,
-             |  (dup_line_ppm <= 300000 AND dup_line_char_ppm <= 200000
-             |   AND top_2gram_char_ppm <= 200000) AS repetition_keep
-             |FROM f ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH $gopherCensusSql
+              |SELECT doc_id, dlp AS dup_line_ppm, dlcp AS dup_line_char_ppm,
+              |  tcp AS top_2gram_char_ppm,
+              |  (dlp <= 300000 AND dlcp <= 200000 AND tcp <= 200000) AS repetition_keep
+              |FROM gmm ORDER BY doc_id""".stripMargin)),
 
     QueryDef.headline("quality_c4_rules",
       // C4's LINE-LEVEL cleaning pass (Raffel et al. 2020 §2.2 — the
@@ -711,45 +702,11 @@ object QualityQueries {
       // and exercises the line-substring rule on a real corpus word
       // ('vector') — the operator itself takes any text. Oracle replays
       // the paging and every census
-      (s, dir) => {
-        val words = split(col("text"), " ")
-        val nc = expr("(size(split(text, ' ')) + 7) div 8").cast("int")
-        val paged = array_join(transform(sequence(lit(0), nc - 1),
-          i => concat(array_join(slice(words, i * 8 + 1, lit(8)), " "),
-            when(i % 4 =!= 3, lit(".")).otherwise(lit("")))), "\n")
-        graft.functions.TextClean.c4Clean(
-            Tables.documents(s, dir).withColumn("text", paged),
-            "doc_id", "text", dropLineSubstrings = Seq("vector"))
-          .orderBy("doc_id")
-      },
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w,
-             |            CAST((len(string_split(text, ' ')) + 7) // 8
-             |              AS INT) AS nc FROM documents),
-             |pg AS (SELECT doc_id,
-             |         array_to_string(list_transform(
-             |           generate_series(0, nc - 1),
-             |           i -> array_to_string(w[i*8+1 : i*8+8], ' ')
-             |                || CASE WHEN i % 4 <> 3 THEN '.'
-             |                   ELSE '' END), chr(10)) AS text
-             |       FROM w),
-             |t AS (SELECT doc_id, text,
-             |        string_split(text, chr(10)) AS l FROM pg),
-             |k AS (SELECT doc_id, text, l,
-             |        list_filter(l, x ->
-             |          right(trim(x), 1) IN ('.', '!', '?', '"')
-             |          AND len(list_filter(string_split(x, ' '),
-             |                y -> length(y) > 0)) >= 5
-             |          AND NOT contains(lower(x), 'vector')) AS kl
-             |      FROM t),
-             |c AS (SELECT doc_id, CAST(len(l) AS BIGINT) AS n_lines,
-             |        CAST(len(kl) AS BIGINT) AS n_lines_kept,
-             |        -- array_to_string([]) is NULL in DuckDB, '' in Spark
-             |        coalesce(array_to_string(kl, chr(10)), '')
-             |          AS text_clean,
-             |        contains(lower(text), 'lorem ipsum')
-             |          AS has_lorem_ipsum,
-             |        contains(text, '{') AS has_brace
-             |      FROM k)
+      (s, dir) => graft.functions.TextClean.c4Clean(
+          Tables.documents(s, dir).withColumn("text", c4Paged),
+          "doc_id", "text", dropLineSubstrings = Seq("vector"))
+        .orderBy("doc_id"),
+      Some(s"""WITH ${c4LinesSql("''")}
              |SELECT doc_id, n_lines, n_lines_kept, text_clean,
              |  CAST(length(text_clean) - length(regexp_replace(
              |    text_clean, '[.!?]', '', 'g')) AS BIGINT) AS n_sentences,
@@ -772,54 +729,16 @@ object QualityQueries {
       // every other header. Oracle replays the paging, every census,
       // rule precedence, the md5-keyed span census, and the rebuild
       (s, dir) => {
-        val words = split(col("text"), " ")
-        val nc = expr("(size(split(text, ' ')) + 7) div 8").cast("int")
-        val paged = array_join(transform(sequence(lit(0), nc - 1),
-          i => concat(array_join(slice(words, i * 8 + 1, lit(8)), " "),
-            when(i % 4 =!= 3, lit(".")).otherwise(lit("")))), "\n")
-        val header = Seq("one.", "two.", "three.", "four.")
-          .map(sfx => s"shared boilerplate header line $sfx")
-          .mkString("\n")
         val text2 = when(pmod(col("doc_id"), lit(3)) === 0,
-          concat(lit(header + "\n"), paged)).otherwise(paged)
+          concat(lit(C4Header.map(_ + "\n").mkString), c4Paged))
+          .otherwise(c4Paged)
         graft.functions.TextClean.c4Chain(
             Tables.documents(s, dir).withColumn("text", text2),
             "doc_id", "text", blocklist = Seq("dup", "spill"),
             dropLineSubstrings = Seq("vector"))
           .orderBy("doc_id")
       },
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w,
-             |            CAST((len(string_split(text, ' ')) + 7) // 8
-             |              AS INT) AS nc FROM documents),
-             |pg AS (SELECT doc_id,
-             |         CASE WHEN doc_id % 3 = 0 THEN
-             |           'shared boilerplate header line one.' || chr(10) ||
-             |           'shared boilerplate header line two.' || chr(10) ||
-             |           'shared boilerplate header line three.' || chr(10) ||
-             |           'shared boilerplate header line four.' || chr(10)
-             |         ELSE '' END ||
-             |         array_to_string(list_transform(
-             |           generate_series(0, nc - 1),
-             |           i -> array_to_string(w[i*8+1 : i*8+8], ' ')
-             |                || CASE WHEN i % 4 <> 3 THEN '.'
-             |                   ELSE '' END), chr(10)) AS text
-             |       FROM w),
-             |t AS (SELECT doc_id, text,
-             |        string_split(text, chr(10)) AS l FROM pg),
-             |k AS (SELECT doc_id, text, l,
-             |        list_filter(l, x ->
-             |          right(trim(x), 1) IN ('.', '!', '?', '"')
-             |          AND len(list_filter(string_split(x, ' '),
-             |                y -> length(y) > 0)) >= 5
-             |          AND NOT contains(lower(x), 'vector')) AS kl
-             |      FROM t),
-             |c AS (SELECT doc_id, CAST(len(l) AS BIGINT) AS n_lines,
-             |        CAST(len(kl) AS BIGINT) AS n_lines_kept,
-             |        coalesce(array_to_string(kl, chr(10)), '')
-             |          AS text_clean,
-             |        contains(lower(text), 'lorem ipsum') AS lor,
-             |        contains(text, '{') AS brc
-             |      FROM k),
+      Some(s"""WITH ${c4LinesSql(C4HeaderSql)},
              |v AS (SELECT doc_id, n_lines, n_lines_kept,
              |        CAST(length(text_clean) - length(regexp_replace(
              |          text_clean, '[.!?]', '', 'g')) AS BIGINT)
@@ -827,11 +746,11 @@ object QualityQueries {
              |        CAST(len(list_filter(string_split(text_clean, ' '),
              |          t -> t IN ('dup', 'spill'))) AS INT)
              |          AS n_blocklist_hits,
-             |        text_clean, lor, brc FROM c),
+             |        text_clean, has_lorem_ipsum, has_brace FROM c),
              |v2 AS (SELECT *,
              |         CASE WHEN n_sentences < 3 THEN 'too_few_sentences'
-             |              WHEN lor THEN 'lorem_ipsum'
-             |              WHEN brc THEN 'brace'
+             |              WHEN has_lorem_ipsum THEN 'lorem_ipsum'
+             |              WHEN has_brace THEN 'brace'
              |              WHEN n_blocklist_hits > 0 THEN 'badwords'
              |         END AS first_failed
              |       FROM v),
@@ -957,13 +876,7 @@ object QualityQueries {
             bench, "doc_id", "text", k = 5)
           .orderBy("doc_id")
       },
-      Some(s"""WITH sh AS (SELECT doc_id, $Shingles5Sql AS shl FROM documents),
-              |e AS (SELECT doc_id, unnest(shl) AS gram FROM sh),
-              |bench AS (SELECT DISTINCT gram FROM e WHERE doc_id % 20 = 0)
-              |SELECT e.doc_id, count(*) AS n_shared_grams
-              |FROM e JOIN bench USING (gram)
-              |WHERE e.doc_id % 20 != 0
-              |GROUP BY e.doc_id ORDER BY doc_id""".stripMargin)),
+      Some(decontamReportSql)),
 
     QueryDef.headline("decontam_chargrams",
       // char-level decontamination (the GPT-3/PaLM appendix check,
@@ -1001,9 +914,7 @@ object QualityQueries {
           .select("doc_id", "lang", "source", "n_chars")
           .orderBy("doc_id")
       },
-      Some(s"""WITH sh AS (SELECT doc_id, $Shingles5Sql AS shl FROM documents),
-              |e AS (SELECT doc_id, unnest(shl) AS gram FROM sh),
-              |bench AS (SELECT DISTINCT gram FROM e WHERE doc_id % 20 = 0),
+      Some(s"""WITH $benchGramsSql,
               |hit AS (SELECT DISTINCT e.doc_id FROM e JOIN bench USING (gram)
               |        WHERE e.doc_id % 20 != 0)
               |SELECT doc_id, lang, source, n_chars FROM documents
@@ -1025,13 +936,7 @@ object QualityQueries {
             bench, "doc_id", "text", k = 5)
           .orderBy("doc_id")
       },
-      Some(s"""WITH sh AS (SELECT doc_id, $Shingles5Sql AS shl FROM documents),
-              |e AS (SELECT doc_id, unnest(shl) AS gram FROM sh),
-              |bench AS (SELECT DISTINCT gram FROM e WHERE doc_id % 20 = 0)
-              |SELECT e.doc_id, count(*) AS n_shared_grams
-              |FROM e JOIN bench USING (gram)
-              |WHERE e.doc_id % 20 != 0
-              |GROUP BY e.doc_id ORDER BY doc_id""".stripMargin)),
+      Some(decontamReportSql)),
 
     QueryDef("decontaminate_bench_report",
       // the eval-integrity view: per benchmark doc, how many corpus docs

@@ -259,12 +259,11 @@ object ReferenceQueries {
           partitionWeights = Some("0:3,1:1"))
         .drop("headers")
         .orderBy("topic", "key", "value"),
-      Some("""WITH r AS (
+      Some(s"""WITH r AS (
              |  SELECT CAST(user_id AS VARCHAR) AS key,
              |         '{"id": ' || CAST(event_id AS VARCHAR) || ', "type": "' || event_type || '"}' AS value,
              |         CAST(([0,0,0,1])[CAST(
-             |           list_reduce(list_transform(regexp_extract_all(substr(md5(CAST(user_id AS VARCHAR)), 25, 8), '.'),
-             |             c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a,b) -> a*16 + b) % 4 + 1
+             |           ${OracleSql.md5SliceSql("CAST(user_id AS VARCHAR)")} % 4 + 1
              |         AS INT)] AS INT) AS partition
              |  FROM events)
              |SELECT key, value, t.topic, partition

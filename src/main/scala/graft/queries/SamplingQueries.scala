@@ -10,6 +10,68 @@ import OracleSql._
   * and split assignment with its leakage audits. */
 object SamplingQueries {
 
+  /** The DoReMi oracles' shared head: [[knBigramScoreSql]] over every
+    * document, then `bd` (lang, nt, nll), each language's transition count
+    * and summed NLL in micronats under the landed LM. */
+  private val doremiNllSql: String =
+    s"""${knBigramScoreSql("lang", "TRUE")},
+       |bd AS (SELECT lang, CAST(count(*) AS BIGINT) AS nt,
+       |         CAST(sum(-m) AS BIGINT) AS nll
+       |       FROM sc GROUP BY 1)""".stripMargin
+
+  /** DuckDB replay of [[graft.functions.Sampling.unimaxBudgets]]: a
+    * recursive CTE walking the languages smallest-first, each granted
+    * min(corpus x `epochs`, remaining / languages left) of `budget`. */
+  private def unimaxOracleSql(budget: Long, epochs: Int): String =
+    s"""WITH RECURSIVE c AS (
+       |  SELECT lang, CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
+       |  FROM documents GROUP BY 1),
+       |o AS (SELECT lang, n_tokens,
+       |        CAST(row_number() OVER (ORDER BY n_tokens, lang) AS BIGINT) AS rn,
+       |        CAST(count(*) OVER () AS BIGINT) AS n
+       |      FROM c),
+       |a(rn, lang, n_tokens, b, rem, n) AS (
+       |  SELECT rn, lang, n_tokens,
+       |    least(n_tokens * $epochs, $budget // n) AS b,
+       |    $budget - least(n_tokens * $epochs, $budget // n) AS rem, n
+       |  FROM o WHERE rn = 1
+       |  UNION ALL
+       |  SELECT o.rn, o.lang, o.n_tokens,
+       |    least(o.n_tokens * $epochs, a.rem // (a.n - a.rn)) AS b,
+       |    a.rem - least(o.n_tokens * $epochs, a.rem // (a.n - a.rn)), a.n
+       |  FROM a JOIN o ON o.rn = a.rn + 1)
+       |SELECT lang, n_tokens, CAST(b AS BIGINT) AS budget_tokens,
+       |  CASE WHEN n_tokens = 0 THEN 0
+       |       ELSE CAST((1000000 * CAST(b AS HUGEINT)) // n_tokens AS BIGINT)
+       |  END AS epochs_micro
+       |FROM a ORDER BY lang""".stripMargin
+
+  /** DuckDB replay of [[graft.functions.Sampling.temperatureRates]] at
+    * T = 0.5 over the stratum counts `c` (lang, cnt): `tot`, `s` the sqrt
+    * weights, `m` the largest achievable sample and `th` (lang, th), each
+    * stratum's 32-bit md5-slice keep threshold. */
+  private val temperatureThresholdsSql: String =
+    """tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM c),
+      |s AS (SELECT lang, cnt, sqrt(CAST(cnt AS DOUBLE) / t) AS w
+      |      FROM c CROSS JOIN tot),
+      |m AS (SELECT min(CAST(cnt AS DOUBLE) / w) AS n FROM s),
+      |th AS (SELECT lang,
+      |         CAST(floor(least(1.0, w * (SELECT n FROM m) / CAST(cnt AS DOUBLE))
+      |              * 4294967296.0 + 0.5) AS BIGINT) AS th
+      |       FROM s)""".stripMargin
+
+  /** The 80/10/10 train/val/test split of the split gates. */
+  private val Splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
+
+  /** DuckDB rendering of [[graft.functions.Sampling.splitAssign]] over
+    * [[Splits]] for the 32-bit md5 slice `h`. */
+  private def splitCaseSql(h: String): String = {
+    val th = graft.functions.Sampling.splitThresholds(Splits)
+    s"""CASE WHEN $h < ${th(0)._2} THEN 'train'
+       |       WHEN $h < ${th(1)._2} THEN 'val'
+       |       ELSE 'test' END""".stripMargin
+  }
+
   /** DuckDB replay of [[graft.functions.TextAnalysis
     * .doremiWeightTrajectory]]: the landed-LM per-domain NLL aggregate,
     * then `steps` UNROLLED EG iterations — weighted-mean excess, clipped
@@ -19,38 +81,7 @@ object SamplingQueries {
     * lesson). Final SELECT joins every w{i} for the trajectory average. */
   private def doremiTrajectoryOracleSql(steps: Int): String = {
     val head =
-      s"""d AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
-         |trA AS (SELECT lang, toks[i] AS prev, toks[i + 1] AS cur
-         |        FROM (SELECT lang, toks,
-         |                unnest(generate_series(1, len(toks) - 1)) AS i
-         |              FROM d WHERE len(toks) >= 2)),
-         |trT AS (SELECT toks[i] AS prev, toks[i + 1] AS cur
-         |        FROM (SELECT toks,
-         |                unnest(generate_series(1, len(toks) - 1)) AS i
-         |              FROM d WHERE doc_id % 2 = 0 AND len(toks) >= 2)),
-         |bc AS MATERIALIZED (SELECT prev, cur, count(*) AS bc FROM trT GROUP BY 1, 2),
-         |ctx AS (SELECT prev, sum(bc) AS cc, count(*) AS fol FROM bc GROUP BY 1),
-         |pre AS (SELECT cur, count(*) AS pre FROM bc GROUP BY 1),
-         |tot AS (SELECT CAST(count(*) AS HUGEINT) AS nb,
-         |               CAST(count(DISTINCT cur) AS HUGEINT) AS vc FROM bc),
-         |sc AS (SELECT lang,
-         |         CASE WHEN coalesce(ctx.cc, 0) > 0 THEN
-         |           CAST(floor(ln(
-         |             CAST(greatest(4 * CAST(coalesce(bc.bc, 0) AS HUGEINT) - 3, 0) * (nb + vc + 1)
-         |                  + 3 * CAST(coalesce(ctx.fol, 0) AS HUGEINT)
-         |                    * (CAST(coalesce(pre.pre, 0) AS HUGEINT) + 1) AS DOUBLE)
-         |             / CAST(4 * CAST(ctx.cc AS HUGEINT) * (nb + vc + 1) AS DOUBLE))
-         |               * 1000000 + 0.5) AS BIGINT)
-         |         ELSE
-         |           CAST(floor(ln((CAST(coalesce(pre.pre, 0) AS DOUBLE) + 1.0)
-         |             / CAST(nb + vc + 1 AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)
-         |         END AS m
-         |       FROM trA LEFT JOIN bc USING (prev, cur)
-         |       LEFT JOIN ctx USING (prev) LEFT JOIN pre USING (cur)
-         |       CROSS JOIN tot),
-         |bd AS (SELECT lang, CAST(count(*) AS BIGINT) AS nt,
-         |         CAST(sum(-m) AS BIGINT) AS nll
-         |       FROM sc GROUP BY 1),
+      s"""$doremiNllSql,
          |av AS (SELECT lang, nt, CAST(nll // nt AS HUGEINT) AS v FROM bd),
          |nd AS (SELECT CAST(count(*) AS HUGEINT) AS nd FROM av),
          |w0 AS MATERIALIZED (SELECT lang, nt, v,
@@ -106,28 +137,7 @@ object SamplingQueries {
           Tables.documents(s, dir), "lang", "text",
           totalBudget = 25000L, maxEpochs = 1)
         .orderBy("lang"),
-      Some("""WITH RECURSIVE c AS (
-             |  SELECT lang, CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-             |  FROM documents GROUP BY 1),
-             |o AS (SELECT lang, n_tokens,
-             |        CAST(row_number() OVER (ORDER BY n_tokens, lang) AS BIGINT) AS rn,
-             |        CAST(count(*) OVER () AS BIGINT) AS n
-             |      FROM c),
-             |a(rn, lang, n_tokens, b, rem, n) AS (
-             |  SELECT rn, lang, n_tokens,
-             |    least(n_tokens * 1, 25000 // n) AS b,
-             |    25000 - least(n_tokens * 1, 25000 // n) AS rem, n
-             |  FROM o WHERE rn = 1
-             |  UNION ALL
-             |  SELECT o.rn, o.lang, o.n_tokens,
-             |    least(o.n_tokens * 1, a.rem // (a.n - a.rn)) AS b,
-             |    a.rem - least(o.n_tokens * 1, a.rem // (a.n - a.rn)), a.n
-             |  FROM a JOIN o ON o.rn = a.rn + 1)
-             |SELECT lang, n_tokens, CAST(b AS BIGINT) AS budget_tokens,
-             |  CASE WHEN n_tokens = 0 THEN 0
-             |       ELSE CAST((1000000 * CAST(b AS HUGEINT)) // n_tokens AS BIGINT)
-             |  END AS epochs_micro
-             |FROM a ORDER BY lang""".stripMargin)),
+      Some(unimaxOracleSql(budget = 25000, epochs = 1))),
 
     QueryDef.headline("mixture_unimax_epochs",
       // the round-11 verdict #6 gate: UniMax where the EPOCH CAP binds —
@@ -141,28 +151,7 @@ object SamplingQueries {
           Tables.documents(s, dir), "lang", "text",
           totalBudget = 40000L, maxEpochs = 2)
         .orderBy("lang"),
-      Some("""WITH RECURSIVE c AS (
-             |  SELECT lang, CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-             |  FROM documents GROUP BY 1),
-             |o AS (SELECT lang, n_tokens,
-             |        CAST(row_number() OVER (ORDER BY n_tokens, lang) AS BIGINT) AS rn,
-             |        CAST(count(*) OVER () AS BIGINT) AS n
-             |      FROM c),
-             |a(rn, lang, n_tokens, b, rem, n) AS (
-             |  SELECT rn, lang, n_tokens,
-             |    least(n_tokens * 2, 40000 // n) AS b,
-             |    40000 - least(n_tokens * 2, 40000 // n) AS rem, n
-             |  FROM o WHERE rn = 1
-             |  UNION ALL
-             |  SELECT o.rn, o.lang, o.n_tokens,
-             |    least(o.n_tokens * 2, a.rem // (a.n - a.rn)) AS b,
-             |    a.rem - least(o.n_tokens * 2, a.rem // (a.n - a.rn)), a.n
-             |  FROM a JOIN o ON o.rn = a.rn + 1)
-             |SELECT lang, n_tokens, CAST(b AS BIGINT) AS budget_tokens,
-             |  CASE WHEN n_tokens = 0 THEN 0
-             |       ELSE CAST((1000000 * CAST(b AS HUGEINT)) // n_tokens AS BIGINT)
-             |  END AS epochs_micro
-             |FROM a ORDER BY lang""".stripMargin)),
+      Some(unimaxOracleSql(budget = 40000, epochs = 2))),
 
     QueryDef.headline("mixture_doremi_weights",
       // DoReMi-style domain reweighting (Xie et al. 2023): one
@@ -175,53 +164,22 @@ object SamplingQueries {
           TextAnalysis.knBigramModelRead(s, Artifacts.knModelPath(s, dir)),
           Tables.documents(s, dir), "lang", "text")
         .orderBy("lang"),
-      Some("""WITH d AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
-             |trA AS (SELECT lang, toks[i] AS prev, toks[i + 1] AS cur
-             |        FROM (SELECT lang, toks,
-             |                unnest(generate_series(1, len(toks) - 1)) AS i
-             |              FROM d WHERE len(toks) >= 2)),
-             |trT AS (SELECT toks[i] AS prev, toks[i + 1] AS cur
-             |        FROM (SELECT toks,
-             |                unnest(generate_series(1, len(toks) - 1)) AS i
-             |              FROM d WHERE doc_id % 2 = 0 AND len(toks) >= 2)),
-             |bc AS (SELECT prev, cur, count(*) AS bc FROM trT GROUP BY 1, 2),
-             |ctx AS (SELECT prev, sum(bc) AS cc, count(*) AS fol FROM bc GROUP BY 1),
-             |pre AS (SELECT cur, count(*) AS pre FROM bc GROUP BY 1),
-             |tot AS (SELECT CAST(count(*) AS HUGEINT) AS nb,
-             |               CAST(count(DISTINCT cur) AS HUGEINT) AS vc FROM bc),
-             |sc AS (SELECT lang,
-             |         CASE WHEN coalesce(ctx.cc, 0) > 0 THEN
-             |           CAST(floor(ln(
-             |             CAST(greatest(4 * CAST(coalesce(bc.bc, 0) AS HUGEINT) - 3, 0) * (nb + vc + 1)
-             |                  + 3 * CAST(coalesce(ctx.fol, 0) AS HUGEINT)
-             |                    * (CAST(coalesce(pre.pre, 0) AS HUGEINT) + 1) AS DOUBLE)
-             |             / CAST(4 * CAST(ctx.cc AS HUGEINT) * (nb + vc + 1) AS DOUBLE))
-             |               * 1000000 + 0.5) AS BIGINT)
-             |         ELSE
-             |           CAST(floor(ln((CAST(coalesce(pre.pre, 0) AS DOUBLE) + 1.0)
-             |             / CAST(nb + vc + 1 AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)
-             |         END AS m
-             |       FROM trA LEFT JOIN bc USING (prev, cur)
-             |       LEFT JOIN ctx USING (prev) LEFT JOIN pre USING (cur)
-             |       CROSS JOIN tot),
-             |bd AS (SELECT lang, CAST(count(*) AS BIGINT) AS nt,
-             |         CAST(sum(-m) AS BIGINT) AS nll
-             |       FROM sc GROUP BY 1),
-             |tt AS (SELECT CAST(sum(nll) AS HUGEINT) AS tn,
-             |              CAST(sum(nt) AS HUGEINT) AS tc FROM bd),
-             |ex AS (SELECT lang, nt, CAST(nll // nt AS BIGINT) AS avg_nll,
-             |         CAST(nll // nt AS BIGINT)
-             |           - CAST(tn // tc AS BIGINT) AS excess
-             |       FROM bd CROSS JOIN tt),
-             |ee AS (SELECT lang, nt, avg_nll, excess,
-             |         CAST(floor(exp(CAST(least(excess, 13800000) AS DOUBLE)
-             |           / 1000000.0) * 1000000 + 0.5) AS BIGINT) AS e
-             |       FROM ex),
-             |z AS (SELECT CAST(sum(e) AS HUGEINT) AS z FROM ee)
-             |SELECT lang, nt AS n_transitions, avg_nll AS avg_nll_micronats,
-             |  CAST(excess AS BIGINT) AS excess_micronats,
-             |  CAST((CAST(e AS HUGEINT) * 1000000) // z AS BIGINT) AS weight_ppm
-             |FROM ee CROSS JOIN z ORDER BY lang""".stripMargin)),
+      Some(s"""WITH $doremiNllSql,
+              |tt AS (SELECT CAST(sum(nll) AS HUGEINT) AS tn,
+              |              CAST(sum(nt) AS HUGEINT) AS tc FROM bd),
+              |ex AS (SELECT lang, nt, CAST(nll // nt AS BIGINT) AS avg_nll,
+              |         CAST(nll // nt AS BIGINT)
+              |           - CAST(tn // tc AS BIGINT) AS excess
+              |       FROM bd CROSS JOIN tt),
+              |ee AS (SELECT lang, nt, avg_nll, excess,
+              |         CAST(floor(exp(CAST(least(excess, 13800000) AS DOUBLE)
+              |           / 1000000.0) * 1000000 + 0.5) AS BIGINT) AS e
+              |       FROM ex),
+              |z AS (SELECT CAST(sum(e) AS HUGEINT) AS z FROM ee)
+              |SELECT lang, nt AS n_transitions, avg_nll AS avg_nll_micronats,
+              |  CAST(excess AS BIGINT) AS excess_micronats,
+              |  CAST((CAST(e AS HUGEINT) * 1000000) // z AS BIGINT) AS weight_ppm
+              |FROM ee CROSS JOIN z ORDER BY lang""".stripMargin)),
 
     QueryDef.headline("mixture_doremi_trajectory",
       // the DoReMi fixed-point loop (Xie et al. 2023): 5 EG steps with
@@ -253,9 +211,7 @@ object SamplingQueries {
           s"WHEN lang = '$l' THEN ${th(r)}"
         }.mkString(" ")
         s"""SELECT doc_id, lang FROM documents
-           |WHERE list_reduce(list_transform(
-           |    regexp_extract_all(substr(md5(CAST(doc_id AS VARCHAR)), 25, 8), '.'),
-           |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a,b) -> a*16 + b)
+           |WHERE $DocHashSql
            |  < CASE $cases ELSE ${th(StratDefault)} END
            |ORDER BY doc_id""".stripMargin
       }),
@@ -273,9 +229,7 @@ object SamplingQueries {
       Some {
         def th(f: Double): Long = math.round(f * 4294967296.0)
         s"""WITH h AS (SELECT doc_id, source,
-           |    list_reduce(list_transform(
-           |      regexp_extract_all(substr(md5(CAST(doc_id AS VARCHAR) || '#ep'), 25, 8), '.'),
-           |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a,b) -> a*16 + b) AS hv
+           |    ${md5SliceSql("CAST(doc_id AS VARCHAR) || '#ep'")} AS hv
            |  FROM documents),
            |c AS (SELECT source,
            |    (CASE WHEN source = 'src0' THEN 2 WHEN source = 'src1' THEN 0 ELSE 1 END)
@@ -297,16 +251,14 @@ object SamplingQueries {
           Tables.documents(s, dir), "doc_id", "lang", k = 5)
         .select("lang", "sample_rank", "doc_id")
         .orderBy("lang", "sample_rank"),
-      Some("""WITH r AS (
-             |  SELECT lang, doc_id,
-             |         row_number() OVER (PARTITION BY lang ORDER BY
-             |           list_reduce(list_transform(
-             |             regexp_extract_all(substr(md5(CAST(doc_id AS VARCHAR)), 25, 8), '.'),
-             |             c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a,b) -> a*16 + b) ASC,
-             |           doc_id ASC) AS sample_rank
-             |  FROM documents)
-             |SELECT lang, sample_rank, doc_id FROM r
-             |WHERE sample_rank <= 5 ORDER BY lang, sample_rank""".stripMargin)),
+      Some(s"""WITH r AS (
+              |  SELECT lang, doc_id,
+              |         row_number() OVER (PARTITION BY lang ORDER BY
+              |           $DocHashSql ASC,
+              |           doc_id ASC) AS sample_rank
+              |  FROM documents)
+              |SELECT lang, sample_rank, doc_id FROM r
+              |WHERE sample_rank <= 5 ORDER BY lang, sample_rank""".stripMargin)),
 
     QueryDef("corpus_shuffle",
       // deterministic corpus shuffle for training-order randomization:
@@ -351,21 +303,10 @@ object SamplingQueries {
       (s, dir) => Tables.documents(s, dir)
         .select(col("doc_id"),
           graft.functions.Sampling.splitAssign(col("doc_id"),
-            Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)).as("split"))
+            Splits).as("split"))
         .orderBy("doc_id"),
-      Some {
-        val th = graft.functions.Sampling.splitThresholds(
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        s"""SELECT doc_id,
-           |  CASE WHEN h < ${th(0)._2} THEN 'train'
-           |       WHEN h < ${th(1)._2} THEN 'val'
-           |       ELSE 'test' END AS split
-           |FROM (SELECT doc_id, list_reduce(list_transform(
-           |    regexp_extract_all(substr(md5(CAST(doc_id AS VARCHAR)), 25, 8), '.'),
-           |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a,b) -> a*16 + b) AS h
-           |  FROM documents)
-           |ORDER BY doc_id""".stripMargin
-      }),
+      Some(s"""SELECT doc_id, ${splitCaseSql(DocHashSql)} AS split
+              |FROM documents ORDER BY doc_id""".stripMargin)),
 
     QueryDef.headline("split_leakage_safe",
       // group-k-fold for near-dups: split assignment hashes the near-dup
@@ -377,43 +318,14 @@ object SamplingQueries {
         val docs = Tables.documents(s, dir)
         val pairs = Dedup.minhashDedupPairs(docs, "doc_id", "text",
           k = 3, numHashes = 16, threshold = 0.8)
-        Dedup.leakageSafeSplit(docs, "doc_id", pairs,
-            Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+        Dedup.leakageSafeSplit(docs, "doc_id", pairs, Splits)
           .orderBy("doc_id")
       },
-      Some {
-        val th = graft.functions.Sampling.splitThresholds(
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        s"""WITH RECURSIVE sh AS (
-           |  SELECT doc_id, unnest($ShinglesSql) AS sh
-           |  FROM documents),
-           |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-           |jp AS (
-           |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-           |  FROM sh a JOIN sh b USING (sh) WHERE a.doc_id < b.doc_id
-           |  GROUP BY 1, 2),
-           |good AS (
-           |  SELECT id_a, id_b FROM jp
-           |  JOIN sizes sa ON sa.doc_id = id_a
-           |  JOIN sizes sb ON sb.doc_id = id_b
-           |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
-           |edges AS (SELECT id_a AS src, id_b AS dst FROM good
-           |          UNION ALL SELECT id_b, id_a FROM good),
-           |reach(id, lbl) AS (
-           |  SELECT doc_id, doc_id FROM documents
-           |  UNION
-           |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id),
-           |clus AS (SELECT id AS doc_id, min(lbl) AS cluster_id
-           |         FROM reach GROUP BY id)
-           |SELECT doc_id, cluster_id,
-           |  CASE WHEN h < ${th(0)._2} THEN 'train'
-           |       WHEN h < ${th(1)._2} THEN 'val'
-           |       ELSE 'test' END AS split
-           |FROM (SELECT doc_id, cluster_id,
-           |        ${md5SliceSql("CAST(cluster_id AS VARCHAR)")} AS h
-           |      FROM clus)
-           |ORDER BY doc_id""".stripMargin
-      }),
+      Some(s"""WITH RECURSIVE ${nearDupPairsSql(0.8)},
+              |${componentsSql("documents", "doc_id")}
+              |SELECT id AS doc_id, cluster_id,
+              |  ${splitCaseSql(md5SliceSql("CAST(cluster_id AS VARCHAR)"))} AS split
+              |FROM clus ORDER BY doc_id""".stripMargin)),
 
     QueryDef.headline("split_contamination_audit",
       // the audit that motivates split_leakage_safe: count near-dup pairs
@@ -425,7 +337,7 @@ object SamplingQueries {
         val docs = Tables.documents(s, dir)
         val pairs = Dedup.minhashDedupPairs(docs, "doc_id", "text",
           k = 3, numHashes = 16, threshold = 0.8)
-        val splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
+        val splits = Splits
         val sp = docs.select(col("doc_id"),
           graft.functions.Sampling.splitAssign(col("doc_id"), splits)
             .as("split"))
@@ -439,33 +351,15 @@ object SamplingQueries {
           .agg(count(lit(1)).as("n_pairs"))
           .orderBy("split_lo", "split_hi")
       },
-      Some {
-        val th = graft.functions.Sampling.splitThresholds(
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        s"""WITH sh AS (
-           |  SELECT doc_id, unnest($ShinglesSql) AS sh FROM documents),
-           |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-           |jp AS (
-           |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-           |  FROM sh a JOIN sh b USING (sh) WHERE a.doc_id < b.doc_id
-           |  GROUP BY 1, 2),
-           |good AS (
-           |  SELECT id_a, id_b FROM jp
-           |  JOIN sizes sa ON sa.doc_id = id_a
-           |  JOIN sizes sb ON sb.doc_id = id_b
-           |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
-           |sp AS (SELECT doc_id,
-           |    CASE WHEN $DocHashSql < ${th(0)._2} THEN 'train'
-           |         WHEN $DocHashSql < ${th(1)._2} THEN 'val'
-           |         ELSE 'test' END AS split
-           |  FROM documents)
-           |SELECT least(a.split, b.split) AS split_lo,
-           |  greatest(a.split, b.split) AS split_hi,
-           |  count(*) AS n_pairs
-           |FROM good JOIN sp a ON a.doc_id = good.id_a
-           |JOIN sp b ON b.doc_id = good.id_b
-           |GROUP BY 1, 2 ORDER BY split_lo, split_hi""".stripMargin
-      }),
+      Some(s"""WITH ${nearDupPairsSql(0.8)},
+              |sp AS (SELECT doc_id, ${splitCaseSql(DocHashSql)} AS split
+              |  FROM documents)
+              |SELECT least(a.split, b.split) AS split_lo,
+              |  greatest(a.split, b.split) AS split_hi,
+              |  count(*) AS n_pairs
+              |FROM good JOIN sp a ON a.doc_id = good.id_a
+              |JOIN sp b ON b.doc_id = good.id_b
+              |GROUP BY 1, 2 ORDER BY split_lo, split_hi""".stripMargin)),
 
     QueryDef("corpus_mix",
       // domain-mixing rebalance: target lang mixture en/es/de/fr =
@@ -488,10 +382,7 @@ object SamplingQueries {
            |                              * 4294967296.0 + 0.5) AS BIGINT) AS th
            |      FROM j)
            |SELECT d.doc_id, d.lang FROM documents d JOIN t ON d.lang = t.lang
-           |WHERE list_reduce(list_transform(
-           |    regexp_extract_all(substr(md5(CAST(d.doc_id AS VARCHAR)), 25, 8), '.'),
-           |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a,b) -> a*16 + b)
-           |  < t.th
+           |WHERE ${md5SliceSql("CAST(d.doc_id AS VARCHAR)")} < t.th
            |ORDER BY doc_id""".stripMargin
       }),
 
@@ -516,14 +407,7 @@ object SamplingQueries {
               |                                   ORDER BY doc_id) AS rn FROM f),
               |k AS (SELECT doc_id, lang FROM d WHERE rn = 1),
               |c AS (SELECT lang, CAST(count(*) AS BIGINT) AS cnt FROM k GROUP BY lang),
-              |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM c),
-              |s AS (SELECT lang, cnt, sqrt(CAST(cnt AS DOUBLE) / t) AS w
-              |      FROM c CROSS JOIN tot),
-              |m AS (SELECT min(CAST(cnt AS DOUBLE) / w) AS n FROM s),
-              |th AS (SELECT lang,
-              |         CAST(floor(least(1.0, w * (SELECT n FROM m) / CAST(cnt AS DOUBLE))
-              |              * 4294967296.0 + 0.5) AS BIGINT) AS th
-              |       FROM s)
+              |$temperatureThresholdsSql
               |SELECT k.doc_id, k.lang FROM k JOIN th USING (lang)
               |WHERE $DocHashSql < th.th
               |ORDER BY doc_id""".stripMargin)),
@@ -543,14 +427,7 @@ object SamplingQueries {
         .orderBy("doc_id"),
       Some(s"""WITH c AS (SELECT lang, CAST(count(*) AS BIGINT) AS cnt
               |           FROM documents GROUP BY lang),
-              |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM c),
-              |s AS (SELECT lang, cnt, sqrt(CAST(cnt AS DOUBLE) / t) AS w
-              |      FROM c CROSS JOIN tot),
-              |m AS (SELECT min(CAST(cnt AS DOUBLE) / w) AS n FROM s),
-              |th AS (SELECT lang,
-              |         CAST(floor(least(1.0, w * (SELECT n FROM m) / CAST(cnt AS DOUBLE))
-              |              * 4294967296.0 + 0.5) AS BIGINT) AS th
-              |       FROM s)
+              |$temperatureThresholdsSql
               |SELECT d.doc_id, d.lang FROM documents d JOIN th USING (lang)
               |WHERE $DocHashSql < th.th
               |ORDER BY doc_id""".stripMargin)),
@@ -567,26 +444,10 @@ object SamplingQueries {
           .select("doc_id", "q")
           .orderBy("doc_id")
       },
-      Some {
-        val en = TextAnalysis.Langs.head._2.map("'" + _ + "'").mkString(",")
-        s"""WITH m AS (
-           |  SELECT doc_id,
-           |    len(string_split(text,' ')) AS n_tokens,
-           |    len(list_distinct(string_split(text,' '))) AS n_uniq_tokens,
-           |    len(list_intersect(string_split(text,' '), [$en])) AS n_stop,
-           |    length(text) AS n_chars
-           |  FROM documents),
-           |q AS (
-           |  SELECT doc_id,
-           |    (CAST(n_uniq_tokens AS DOUBLE) / n_tokens) * 0.5
-           |      + (CAST(n_stop AS DOUBLE) / n_uniq_tokens) * 0.2
-           |      + least((CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens) / 10.0, 1.0) * 0.3
-           |      AS q
-           |  FROM m)
-           |SELECT doc_id, q FROM q
-           |WHERE $DocHashSql < CAST(floor(q * 4294967296.0 + 0.5) AS BIGINT)
-           |ORDER BY doc_id""".stripMargin
-      }),
+      Some(s"""WITH $QualityScoreSql
+              |SELECT doc_id, quality_score AS q FROM qs
+              |WHERE $DocHashSql < CAST(floor(quality_score * 4294967296.0 + 0.5) AS BIGINT)
+              |ORDER BY doc_id""".stripMargin)),
 
     QueryDef.headline("dsir_select",
       // DSIR importance resampling (Xie et al. 2023): raw docs scored by
@@ -602,7 +463,7 @@ object SamplingQueries {
             dim = 64)
           .orderBy("doc_id")
       },
-      Some("""WITH tk AS (SELECT doc_id, lang, string_split(text, ' ') AS t
+      Some(s"""WITH tk AS (SELECT doc_id, lang, string_split(text, ' ') AS t
              |            FROM documents),
              |bg AS (SELECT doc_id, lang, t,
              |         unnest(generate_series(1, len(t) - 1)) AS i FROM tk),
@@ -611,10 +472,7 @@ object SamplingQueries {
              |  UNION ALL
              |  SELECT doc_id, lang, t[i] || ' ' || t[i + 1] AS f FROM bg),
              |hb AS (SELECT doc_id, lang,
-             |    CAST(list_reduce(list_transform(
-             |      regexp_extract_all(substr(md5(f), 25, 8), '.'),
-             |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-             |      (a, b) -> a * 16 + b) % 64 AS INT) AS b
+             |    CAST(${md5SliceSql("f")} % 64 AS INT) AS b
              |  FROM f),
              |tc AS (SELECT b, count(*) AS c FROM hb WHERE lang = 'en'
              |       GROUP BY 1),

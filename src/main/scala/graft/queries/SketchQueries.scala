@@ -11,6 +11,24 @@ import OracleSql._
   * statistics. */
 object SketchQueries {
 
+  /** DuckDB rendering of the log-bucketed quantile sketch's bucket of a
+    * BIGINT `v` ([[graft.functions.Sketches.QsSub]] sub-buckets per
+    * power of two): the exponent `e` (-1 below 1) and sub-bucket `sub`. */
+  private val QsBucketSql: String =
+    s"""CASE WHEN v >= 1 THEN length(bin(v)) - 1 ELSE -1 END AS e,
+       |    CASE WHEN v >= 1 THEN
+       |      ((v - (CAST(1 AS BIGINT) << (length(bin(v)) - 1)))
+       |        * ${Sketches.QsSub})
+       |        // (CAST(1 AS BIGINT) << (length(bin(v)) - 1))
+       |    ELSE 0 END AS sub""".stripMargin
+
+  /** The lower bound of the sketch bucket (e, sub) of [[QsBucketSql]]. */
+  private val QsLowerBoundSql: String =
+    s"""CASE WHEN e >= 0 THEN
+       |      ((${Sketches.QsSub} + sub) * (CAST(1 AS BIGINT) << e))
+       |        // ${Sketches.QsSub}
+       |    ELSE 0 END""".stripMargin
+
   def defs: Seq[QueryDef] = Seq(
 
     QueryDef.headline("grouped_percentiles_scalable",
@@ -509,21 +527,12 @@ object SketchQueries {
         val qlist = (1 until 8).map(i => i * 1000 / 8).mkString(", ")
         s"""WITH v0 AS (SELECT event_id,
            |    CAST(round(value * 100) AS BIGINT) AS v FROM events),
-           |b AS (SELECT v,
-           |    CASE WHEN v >= 1 THEN length(bin(v)) - 1 ELSE -1 END AS e,
-           |    CASE WHEN v >= 1 THEN
-           |      ((v - (CAST(1 AS BIGINT) << (length(bin(v)) - 1)))
-           |        * ${Sketches.QsSub})
-           |        // (CAST(1 AS BIGINT) << (length(bin(v)) - 1))
-           |    ELSE 0 END AS sub
+           |b AS (SELECT v, $QsBucketSql
            |  FROM v0),
            |sk AS (SELECT e, sub, count(*) AS cnt FROM b GROUP BY 1, 2),
            |c AS (SELECT e, sub, cnt,
            |    sum(cnt) OVER (ORDER BY e, sub) AS cum,
-           |    CASE WHEN e >= 0 THEN
-           |      ((${Sketches.QsSub} + sub) * (CAST(1 AS BIGINT) << e))
-           |        // ${Sketches.QsSub}
-           |    ELSE 0 END AS lb
+           |    $QsLowerBoundSql AS lb
            |  FROM sk),
            |n AS (SELECT sum(cnt) AS n_rows FROM sk),
            |t AS (SELECT q.q_permille,
@@ -1082,23 +1091,14 @@ object SketchQueries {
              |       JOIN r ON r.event_type = n.event_type
              |         AND r.cum >= ceil(n.n * (f.q_permille / 1000.0))
              |       GROUP BY 1, 2),
-             |b AS (SELECT event_type, v,
-             |    CASE WHEN v >= 1 THEN length(bin(v)) - 1 ELSE -1 END AS e,
-             |    CASE WHEN v >= 1 THEN
-             |      ((v - (CAST(1 AS BIGINT) << (length(bin(v)) - 1)))
-             |        * ${Sketches.QsSub})
-             |        // (CAST(1 AS BIGINT) << (length(bin(v)) - 1))
-             |    ELSE 0 END AS sub
+             |b AS (SELECT event_type, v, $QsBucketSql
              |  FROM ev),
              |sk AS (SELECT event_type, e, sub, count(*) AS cnt
              |       FROM b GROUP BY 1, 2, 3),
              |c AS (SELECT event_type, e, sub, cnt,
              |    sum(cnt) OVER (PARTITION BY event_type ORDER BY e, sub)
              |      AS cum,
-             |    CASE WHEN e >= 0 THEN
-             |      ((${Sketches.QsSub} + sub) * (CAST(1 AS BIGINT) << e))
-             |        // ${Sketches.QsSub}
-             |    ELSE 0 END AS lb
+             |    $QsLowerBoundSql AS lb
              |  FROM sk),
              |t AS (SELECT n.event_type, f.q_permille,
              |    (n.n * f.q_permille + 999) // 1000 AS rnk

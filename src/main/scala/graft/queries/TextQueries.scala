@@ -11,21 +11,73 @@ import OracleSql._
   * and sequence packing. */
 object TextQueries {
 
+  /** The unigram tokenizer's seed census over `documents`: `wh` (word,
+    * freq), `v0` (piece, cnt) — every 1-4-char piece with its
+    * frequency-weighted count — and `grams` (word, piece), each word's
+    * distinct pieces. */
+  private val pieceCensusSql: String =
+    """wh AS MATERIALIZED (
+      |  SELECT word, CAST(count(*) AS BIGINT) AS freq
+      |  FROM (SELECT unnest(string_split(text, ' ')) AS word
+      |        FROM documents)
+      |  WHERE word <> '' GROUP BY word),
+      |v0 AS MATERIALIZED (
+      |  SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
+      |    SELECT freq,
+      |      substr(word, CAST(i AS INT), CAST(l AS INT)) AS piece
+      |    FROM wh, unnest(generate_series(1, length(word))) AS t1(i),
+      |         unnest(generate_series(1, 4)) AS t2(l)
+      |    WHERE i + l - 1 <= length(word))
+      |  GROUP BY piece),
+      |grams AS MATERIALIZED (
+      |  SELECT DISTINCT word,
+      |    substr(word, CAST(i AS INT), CAST(l AS INT)) AS piece
+      |  FROM wh, unnest(generate_series(1, length(word))) AS t1(i),
+      |       unnest(generate_series(1, 4)) AS t2(l)
+      |  WHERE i + l - 1 <= length(word))""".stripMargin
+
+  /** The learners' head: [[pieceCensusSql]] and `ch`, the single-char
+    * pieces the prune never drops. */
+  private val unigramHeadSql: String =
+    s"""WITH RECURSIVE
+       |$pieceCensusSql,
+       |ch AS MATERIALIZED (SELECT piece FROM v0 WHERE length(piece) = 1)""".stripMargin
+
+  /** `t$r` and `sc$r` (piece, s): the micronat log-probability of every
+    * piece of the vocabulary `v$r`. */
+  private def pieceScoresSql(r: Int): String =
+    s"""t$r AS (SELECT CAST(sum(cnt) AS DOUBLE) AS t FROM v$r),
+       |sc$r AS MATERIALIZED (
+       |  SELECT piece,
+       |    CAST(floor(ln(CAST(cnt AS DOUBLE) / t) * 1e6 + 0.5)
+       |      AS BIGINT) AS s
+       |  FROM v$r, t$r)""".stripMargin
+
+  /** `wm$r` (word, m): each word's piece -> score map under `sc$r`. */
+  private def wordMapSql(r: Int): String =
+    s"""wm$r AS MATERIALIZED (
+       |  SELECT word, map_from_entries(list({'k': piece, 'v': s})) AS m
+       |  FROM grams JOIN sc$r USING (piece) GROUP BY word)""".stripMargin
+
+  /** The segment census under the vocabulary of round `r`: every word's
+    * frequency and its best segmentation from [[unigramDecodeBlock]]. */
+  private def segmentCensusSql(r: Int): String =
+    s"""
+       |SELECT w.word, h.freq, CAST(len(k.ps) AS INT) AS n_pieces,
+       |  w.score_micronats, array_to_string(k.ps, ' ') AS segmented
+       |FROM fin$r w JOIN wh h ON w.word = h.word
+       |JOIN (SELECT word, ps FROM wk$r WHERE pos = 0) k
+       |  ON w.word = k.word
+       |ORDER BY w.word""".stripMargin
+
   /** The hard-Viterbi decode block over a vocabulary CTE v$r — shared
     * by the hard learner's oracle (every round + the segment census)
     * and the soft learner's segment census (decode under the
     * soft-learned vocabulary is plain Viterbi, the engine's
     * [[graft.functions.Unigram.segmentSoft]]). */
   private def unigramDecodeBlock(r: Int): String =
-    s"""t$r AS (SELECT CAST(sum(cnt) AS DOUBLE) AS t FROM v$r),
-         |sc$r AS MATERIALIZED (
-         |  SELECT piece,
-         |    CAST(floor(ln(CAST(cnt AS DOUBLE) / t) * 1e6 + 0.5)
-         |      AS BIGINT) AS s
-         |  FROM v$r, t$r),
-         |wm$r AS MATERIALIZED (
-         |  SELECT word, map_from_entries(list({'k': piece, 'v': s})) AS m
-         |  FROM grams JOIN sc$r USING (piece) GROUP BY word),
+    s"""${pieceScoresSql(r)},
+         |${wordMapSql(r)},
          |st$r AS (
          |  SELECT word, m, 0 AS i, [CAST(0 AS BIGINT)] AS best,
          |         CAST([] AS INT[]) AS ptr
@@ -71,7 +123,6 @@ object TextQueries {
     * BPE/pagerank inlining lesson). */
   private def unigramLearnOracleSql(rounds: Int, minCount: Int,
       segment: Boolean): String = {
-    def decodeBlock(r: Int): String = unigramDecodeBlock(r)
     def pruneBlock(r: Int): String =
       s"""c${r + 1} AS MATERIALIZED (
          |  SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
@@ -87,39 +138,11 @@ object TextQueries {
          |  UNION ALL
          |  SELECT piece, cnt FROM c${r + 1}
          |  WHERE length(piece) > 1 AND cnt >= $minCount)""".stripMargin
-    val head =
-      s"""WITH RECURSIVE
-         |wh AS MATERIALIZED (
-         |  SELECT word, CAST(count(*) AS BIGINT) AS freq
-         |  FROM (SELECT unnest(string_split(text, ' ')) AS word
-         |        FROM documents)
-         |  WHERE word <> '' GROUP BY word),
-         |v0 AS MATERIALIZED (
-         |  SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-         |    SELECT freq,
-         |      substr(word, CAST(i AS INT), CAST(l AS INT)) AS piece
-         |    FROM wh, unnest(generate_series(1, length(word))) AS t1(i),
-         |         unnest(generate_series(1, 4)) AS t2(l)
-         |    WHERE i + l - 1 <= length(word))
-         |  GROUP BY piece),
-         |ch AS MATERIALIZED (SELECT piece FROM v0 WHERE length(piece) = 1),
-         |grams AS MATERIALIZED (
-         |  SELECT DISTINCT word,
-         |    substr(word, CAST(i AS INT), CAST(l AS INT)) AS piece
-         |  FROM wh, unnest(generate_series(1, length(word))) AS t1(i),
-         |       unnest(generate_series(1, 4)) AS t2(l)
-         |  WHERE i + l - 1 <= length(word))""".stripMargin
     val roundsSql = (0 until rounds)
-      .map(r => decodeBlock(r) + ",\n" + pruneBlock(r))
-    val finalScores =
-      s"""t$rounds AS (SELECT CAST(sum(cnt) AS DOUBLE) AS t FROM v$rounds),
-         |sc$rounds AS MATERIALIZED (
-         |  SELECT piece,
-         |    CAST(floor(ln(CAST(cnt AS DOUBLE) / t) * 1e6 + 0.5)
-         |      AS BIGINT) AS s
-         |  FROM v$rounds, t$rounds)""".stripMargin
+      .map(r => unigramDecodeBlock(r) + ",\n" + pruneBlock(r))
     if (!segment)
-      (Seq(head) ++ roundsSql ++ Seq(finalScores)).mkString(",\n") +
+      (Seq(unigramHeadSql) ++ roundsSql ++ Seq(pieceScoresSql(rounds)))
+        .mkString(",\n") +
         s"""
            |SELECT v$rounds.piece, v$rounds.cnt,
            |  sc$rounds.s AS score_micronats,
@@ -127,15 +150,8 @@ object TextQueries {
            |FROM v$rounds JOIN sc$rounds USING (piece)
            |ORDER BY piece""".stripMargin
     else
-      (Seq(head) ++ roundsSql ++ Seq(decodeBlock(rounds)))
-        .mkString(",\n") +
-        s"""
-           |SELECT w.word, h.freq, CAST(len(k.ps) AS INT) AS n_pieces,
-           |  w.score_micronats, array_to_string(k.ps, ' ') AS segmented
-           |FROM fin$rounds w JOIN wh h ON w.word = h.word
-           |JOIN (SELECT word, ps FROM wk$rounds WHERE pos = 0) k
-           |  ON w.word = k.word
-           |ORDER BY w.word""".stripMargin
+      (Seq(unigramHeadSql) ++ roundsSql ++ Seq(unigramDecodeBlock(rounds)))
+        .mkString(",\n") + segmentCensusSql(rounds)
   }
 
   /** Oracle for [[graft.functions.Unigram.learnSoft]] — the SOFT-EM
@@ -180,15 +196,8 @@ object TextQueries {
            |                      CAST(l AS INT))][1]
            |                  + b[j + 2 - l] END),
            |        x -> x IS NOT NULL)""".stripMargin
-      s"""t$r AS (SELECT CAST(sum(cnt) AS DOUBLE) AS t FROM v$r),
-         |sc$r AS MATERIALIZED (
-         |  SELECT piece,
-         |    CAST(floor(ln(CAST(cnt AS DOUBLE) / t) * 1e6 + 0.5)
-         |      AS BIGINT) AS s
-         |  FROM v$r, t$r),
-         |wm$r AS MATERIALIZED (
-         |  SELECT word, map_from_entries(list({'k': piece, 'v': s})) AS m
-         |  FROM grams JOIN sc$r USING (piece) GROUP BY word),
+      s"""${pieceScoresSql(r)},
+         |${wordMapSql(r)},
          |fw$r AS (
          |  SELECT word, m, 0 AS i, [CAST(0 AS BIGINT)] AS a FROM wm$r
          |  UNION ALL
@@ -227,37 +236,9 @@ object TextQueries {
          |  SELECT piece, cnt FROM c${r + 1}
          |  WHERE length(piece) > 1 AND cnt >= $floorC)""".stripMargin
     }
-    val head =
-      s"""WITH RECURSIVE
-         |wh AS MATERIALIZED (
-         |  SELECT word, CAST(count(*) AS BIGINT) AS freq
-         |  FROM (SELECT unnest(string_split(text, ' ')) AS word
-         |        FROM documents)
-         |  WHERE word <> '' GROUP BY word),
-         |v0 AS MATERIALIZED (
-         |  SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-         |    SELECT freq,
-         |      substr(word, CAST(i AS INT), CAST(l AS INT)) AS piece
-         |    FROM wh, unnest(generate_series(1, length(word))) AS t1(i),
-         |         unnest(generate_series(1, 4)) AS t2(l)
-         |    WHERE i + l - 1 <= length(word))
-         |  GROUP BY piece),
-         |ch AS MATERIALIZED (SELECT piece FROM v0 WHERE length(piece) = 1),
-         |grams AS MATERIALIZED (
-         |  SELECT DISTINCT word,
-         |    substr(word, CAST(i AS INT), CAST(l AS INT)) AS piece
-         |  FROM wh, unnest(generate_series(1, length(word))) AS t1(i),
-         |       unnest(generate_series(1, 4)) AS t2(l)
-         |  WHERE i + l - 1 <= length(word))""".stripMargin
-    val finalScores =
-      s"""t$rounds AS (SELECT CAST(sum(cnt) AS DOUBLE) AS t FROM v$rounds),
-         |sc$rounds AS MATERIALIZED (
-         |  SELECT piece,
-         |    CAST(floor(ln(CAST(cnt AS DOUBLE) / t) * 1e6 + 0.5)
-         |      AS BIGINT) AS s
-         |  FROM v$rounds, t$rounds)""".stripMargin
     if (!segment)
-      (Seq(head) ++ (0 until rounds).map(softBlock) ++ Seq(finalScores))
+      (Seq(unigramHeadSql) ++ (0 until rounds).map(softBlock) ++
+        Seq(pieceScoresSql(rounds)))
         .mkString(",\n") +
         s"""
            |SELECT v$rounds.piece, v$rounds.cnt AS cnt_micro,
@@ -269,15 +250,9 @@ object TextQueries {
       // segment census under the soft-learned vocabulary: the soft
       // rounds land v$rounds, then the decode is plain hard Viterbi
       // over its minted scores — the shared decode block
-      (Seq(head) ++ (0 until rounds).map(softBlock) ++
+      (Seq(unigramHeadSql) ++ (0 until rounds).map(softBlock) ++
         Seq(unigramDecodeBlock(rounds))).mkString(",\n") +
-        s"""
-           |SELECT w.word, h.freq, CAST(len(k.ps) AS INT) AS n_pieces,
-           |  w.score_micronats, array_to_string(k.ps, ' ') AS segmented
-           |FROM fin$rounds w JOIN wh h ON w.word = h.word
-           |JOIN (SELECT word, ps FROM wk$rounds WHERE pos = 0) k
-           |  ON w.word = k.word
-           |ORDER BY w.word""".stripMargin
+        segmentCensusSql(rounds)
   }
 
   /** DuckDB replay of [[graft.functions.Unigram.sampleSegments]] —
@@ -292,25 +267,7 @@ object TextQueries {
   private def unigramSampleOracleSql(nSamples: Int, alphaPpm: Long,
       seed: String): String =
     s"""WITH RECURSIVE
-       |wh AS MATERIALIZED (
-       |  SELECT word, CAST(count(*) AS BIGINT) AS freq
-       |  FROM (SELECT unnest(string_split(text, ' ')) AS word
-       |        FROM documents)
-       |  WHERE word <> '' GROUP BY word),
-       |v0 AS MATERIALIZED (
-       |  SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-       |    SELECT freq,
-       |      substr(word, CAST(i AS INT), CAST(l AS INT)) AS piece
-       |    FROM wh, unnest(generate_series(1, length(word))) AS t1(i),
-       |         unnest(generate_series(1, 4)) AS t2(l)
-       |    WHERE i + l - 1 <= length(word))
-       |  GROUP BY piece),
-       |grams AS MATERIALIZED (
-       |  SELECT DISTINCT word,
-       |    substr(word, CAST(i AS INT), CAST(l AS INT)) AS piece
-       |  FROM wh, unnest(generate_series(1, length(word))) AS t1(i),
-       |       unnest(generate_series(1, 4)) AS t2(l)
-       |  WHERE i + l - 1 <= length(word)),
+       |$pieceCensusSql,
        |t0 AS (SELECT CAST(sum(cnt) AS DOUBLE) AS t FROM v0),
        |ssc AS MATERIALIZED (
        |  SELECT piece, CAST(floor(CAST(
@@ -384,6 +341,54 @@ object TextQueries {
        |JOIN wh h USING (word)
        |ORDER BY word, sample_id""".stripMargin
 
+  /** DuckDB replay of the corpus unigram LM
+    * ([[graft.functions.TextAnalysis.perplexity]]: add-one smoothing,
+    * micronat-quantized per token): `tok`/`cnt`/`tot` the census, `sc`
+    * (doc_id, m) each token's log-probability and `agg` (doc_id,
+    * n_tokens, lp) their per-document sum. */
+  private val unigramLmSql: String =
+    """tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
+      |            FROM documents),
+      |cnt AS (SELECT t, count(*) AS c FROM tok GROUP BY t),
+      |tot AS (SELECT CAST(sum(c) AS BIGINT) AS n_total, count(*) AS v FROM cnt),
+      |sc AS (SELECT doc_id,
+      |         CAST(floor(ln(CAST(c + 1 AS DOUBLE) / (n_total + v))
+      |              * 1000000 + 0.5) AS BIGINT) AS m
+      |       FROM tok JOIN cnt USING (t) CROSS JOIN tot),
+      |agg AS (SELECT doc_id, count(*) AS n_tokens, sum(m) AS lp
+      |        FROM sc GROUP BY doc_id)""".stripMargin
+
+  /** The self-trained transition scorers' census: `t` token lists, `tr`
+    * (doc_id, prev, cur) every document's transitions and `bc` (prev,
+    * cur, bc) the corpus bigram counts. */
+  private val selfTransitionsSql: String =
+    """t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+      |tr AS (SELECT doc_id, toks[i] AS prev, toks[i + 1] AS cur
+      |       FROM (SELECT doc_id, toks,
+      |               unnest(generate_series(1, len(toks) - 1)) AS i
+      |             FROM t WHERE len(toks) >= 2)),
+      |bc AS (SELECT prev, cur, count(*) AS bc FROM tr GROUP BY 1, 2)""".stripMargin
+
+  /** The self-trained transition scorers' per-document buckets
+    * ([[graft.functions.TextAnalysis.perplexityBigram]] and the KN pair):
+    * their `sc` (doc_id, m) summed per document — 0 for documents without a
+    * transition — and bucketed against the corpus-mean cutoffs (head at
+    * <= 1.00x, middle at <= 1.02x) in exact integer arithmetic. */
+  private val transitionBucketsSql: String =
+    """agg0 AS (SELECT doc_id, count(*) AS nt, sum(m) AS lp
+      |         FROM sc GROUP BY doc_id),
+      |agg AS (SELECT d.doc_id, coalesce(nt, 0) AS nt, coalesce(lp, 0) AS lp
+      |        FROM documents d LEFT JOIN agg0 ON agg0.doc_id = d.doc_id),
+      |cut AS (SELECT CAST((100 * sum(-lp)) // (100 * sum(nt)) AS BIGINT) AS hc,
+      |               CAST((102 * sum(-lp)) // (100 * sum(nt)) AS BIGINT) AS tc
+      |        FROM agg)
+      |SELECT doc_id, CAST(nt AS INT) AS n_transitions,
+      |  CAST(lp AS BIGINT) AS logprob_micronats,
+      |  CASE WHEN -lp <= nt * hc THEN 'head'
+      |       WHEN -lp <= nt * tc THEN 'middle'
+      |       ELSE 'tail' END AS ppl_bucket
+      |FROM agg CROSS JOIN cut ORDER BY doc_id""".stripMargin
+
   def defs: Seq[QueryDef] = Seq(
 
     QueryDef.headline("text_lang_id",
@@ -417,25 +422,14 @@ object TextQueries {
         .select("doc_id", "n_tokens", "n_uniq_tokens", "type_token_ratio",
           "stopword_ratio", "mean_token_len", "quality_score")
         .orderBy("doc_id"),
-      Some {
-        val en = TextAnalysis.Langs.head._2.map("'" + _ + "'").mkString(",")
-        s"""WITH m AS (
-           |  SELECT doc_id,
-           |    len(string_split(text,' ')) AS n_tokens,
-           |    len(list_distinct(string_split(text,' '))) AS n_uniq_tokens,
-           |    len(list_intersect(string_split(text,' '), [$en])) AS n_stop,
-           |    length(text) AS n_chars
-           |  FROM documents)
-           |SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
-           |  CAST(n_uniq_tokens AS INT) AS n_uniq_tokens,
-           |  CAST(n_uniq_tokens AS DOUBLE) / n_tokens AS type_token_ratio,
-           |  CAST(n_stop AS DOUBLE) / n_uniq_tokens AS stopword_ratio,
-           |  CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens AS mean_token_len,
-           |  (CAST(n_uniq_tokens AS DOUBLE) / n_tokens) * 0.5
-           |    + (CAST(n_stop AS DOUBLE) / n_uniq_tokens) * 0.2
-           |    + least((CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens) / 10.0, 1.0) * 0.3 AS quality_score
-           |FROM m ORDER BY doc_id""".stripMargin
-      }),
+      Some(s"""WITH $QualityScoreSql
+              |SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
+              |  CAST(n_uniq_tokens AS INT) AS n_uniq_tokens,
+              |  CAST(n_uniq_tokens AS DOUBLE) / n_tokens AS type_token_ratio,
+              |  CAST(n_stop AS DOUBLE) / n_uniq_tokens AS stopword_ratio,
+              |  CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens AS mean_token_len,
+              |  quality_score
+              |FROM qs ORDER BY doc_id""".stripMargin)),
 
     QueryDef.headline("text_perplexity",
       // CCNet-style corpus-LM scoring: add-one-smoothed unigram
@@ -448,16 +442,7 @@ object TextQueries {
       (s, dir) => TextAnalysis.perplexity(Tables.documents(s, dir),
           "doc_id", "text")
         .orderBy("doc_id"),
-      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-             |            FROM documents),
-             |cnt AS (SELECT t, count(*) AS c FROM tok GROUP BY t),
-             |tot AS (SELECT CAST(sum(c) AS BIGINT) AS n_total, count(*) AS v FROM cnt),
-             |sc AS (SELECT doc_id,
-             |         CAST(floor(ln(CAST(c + 1 AS DOUBLE) / (n_total + v))
-             |              * 1000000 + 0.5) AS BIGINT) AS m
-             |       FROM tok JOIN cnt USING (t) CROSS JOIN tot),
-             |agg AS (SELECT doc_id, count(*) AS n_tokens, sum(m) AS lp
-             |        FROM sc GROUP BY doc_id),
+      Some(s"""WITH $unigramLmSql,
              |cut AS (SELECT CAST((100 * sum(-lp)) // (100 * sum(n_tokens)) AS BIGINT) AS hc,
              |               CAST((102 * sum(-lp)) // (100 * sum(n_tokens)) AS BIGINT) AS tc
              |        FROM agg)
@@ -476,12 +461,7 @@ object TextQueries {
       (s, dir) => TextAnalysis.perplexityBigram(Tables.documents(s, dir),
           "doc_id", "text")
         .orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-             |tr AS (SELECT doc_id, toks[i] AS prev, toks[i + 1] AS cur
-             |       FROM (SELECT doc_id, toks,
-             |               unnest(generate_series(1, len(toks) - 1)) AS i
-             |             FROM t WHERE len(toks) >= 2)),
-             |bc AS (SELECT prev, cur, count(*) AS bc FROM tr GROUP BY 1, 2),
+      Some(s"""WITH $selfTransitionsSql,
              |cc AS (SELECT prev, count(*) AS cc FROM tr GROUP BY 1),
              |voc AS (SELECT count(DISTINCT tk) AS v
              |        FROM (SELECT unnest(toks) AS tk FROM t)),
@@ -490,19 +470,7 @@ object TextQueries {
              |              * 1000000 + 0.5) AS BIGINT) AS m
              |       FROM tr JOIN bc USING (prev, cur) JOIN cc USING (prev)
              |       CROSS JOIN voc),
-             |agg0 AS (SELECT doc_id, count(*) AS nt, sum(m) AS lp
-             |         FROM sc GROUP BY doc_id),
-             |agg AS (SELECT d.doc_id, coalesce(nt, 0) AS nt, coalesce(lp, 0) AS lp
-             |        FROM documents d LEFT JOIN agg0 ON agg0.doc_id = d.doc_id),
-             |cut AS (SELECT CAST((100 * sum(-lp)) // (100 * sum(nt)) AS BIGINT) AS hc,
-             |               CAST((102 * sum(-lp)) // (100 * sum(nt)) AS BIGINT) AS tc
-             |        FROM agg)
-             |SELECT doc_id, CAST(nt AS INT) AS n_transitions,
-             |  CAST(lp AS BIGINT) AS logprob_micronats,
-             |  CASE WHEN -lp <= nt * hc THEN 'head'
-             |       WHEN -lp <= nt * tc THEN 'middle'
-             |       ELSE 'tail' END AS ppl_bucket
-             |FROM agg CROSS JOIN cut ORDER BY doc_id""".stripMargin)),
+             |$transitionBucketsSql""".stripMargin)),
 
     QueryDef.headline("text_perplexity_kn",
       // interpolated Kneser-Ney bigram scoring — the continuation-count
@@ -514,12 +482,7 @@ object TextQueries {
       (s, dir) => TextAnalysis.perplexityKneserNey(
           Tables.documents(s, dir), "doc_id", "text")
         .orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-             |tr AS (SELECT doc_id, toks[i] AS prev, toks[i + 1] AS cur
-             |       FROM (SELECT doc_id, toks,
-             |               unnest(generate_series(1, len(toks) - 1)) AS i
-             |             FROM t WHERE len(toks) >= 2)),
-             |bc AS (SELECT prev, cur, count(*) AS bc FROM tr GROUP BY 1, 2),
+      Some(s"""WITH $selfTransitionsSql,
              |ctx AS (SELECT prev, sum(bc) AS cc, count(*) AS fol FROM bc GROUP BY 1),
              |pre AS (SELECT cur, count(*) AS pre FROM bc GROUP BY 1),
              |nb AS (SELECT CAST(count(*) AS HUGEINT) AS nb FROM bc),
@@ -531,19 +494,7 @@ object TextQueries {
              |              * 1000000 + 0.5) AS BIGINT) AS m
              |       FROM tr JOIN bc USING (prev, cur) JOIN ctx USING (prev)
              |       JOIN pre USING (cur) CROSS JOIN nb),
-             |agg0 AS (SELECT doc_id, count(*) AS nt, sum(m) AS lp
-             |         FROM sc GROUP BY doc_id),
-             |agg AS (SELECT d.doc_id, coalesce(nt, 0) AS nt, coalesce(lp, 0) AS lp
-             |        FROM documents d LEFT JOIN agg0 ON agg0.doc_id = d.doc_id),
-             |cut AS (SELECT CAST((100 * sum(-lp)) // (100 * sum(nt)) AS BIGINT) AS hc,
-             |               CAST((102 * sum(-lp)) // (100 * sum(nt)) AS BIGINT) AS tc
-             |        FROM agg)
-             |SELECT doc_id, CAST(nt AS INT) AS n_transitions,
-             |  CAST(lp AS BIGINT) AS logprob_micronats,
-             |  CASE WHEN -lp <= nt * hc THEN 'head'
-             |       WHEN -lp <= nt * tc THEN 'middle'
-             |       ELSE 'tail' END AS ppl_bucket
-             |FROM agg CROSS JOIN cut ORDER BY doc_id""".stripMargin)),
+             |$transitionBucketsSql""".stripMargin)),
 
     QueryDef.headline("text_perplexity_kn3",
       // interpolated TRIGRAM Kneser-Ney (Chen & Goodman recursion, D=3/4
@@ -555,7 +506,7 @@ object TextQueries {
       (s, dir) => TextAnalysis.perplexityKneserNey3(
           Tables.documents(s, dir), "doc_id", "text")
         .orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+      Some(s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
              |tr AS (SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2, toks[i + 2] AS w3
              |       FROM (SELECT doc_id, toks,
              |               unnest(generate_series(1, len(toks) - 2)) AS i
@@ -577,19 +528,7 @@ object TextQueries {
              |       FROM tr JOIN tcn USING (w1, w2, w3) JOIN ctx2 USING (w1, w2)
              |       JOIN cont USING (w2, w3) JOIN mid USING (w2)
              |       JOIN pre USING (w3) CROSS JOIN nbp),
-             |agg0 AS (SELECT doc_id, count(*) AS nt, sum(m) AS lp
-             |         FROM sc GROUP BY doc_id),
-             |agg AS (SELECT d.doc_id, coalesce(nt, 0) AS nt, coalesce(lp, 0) AS lp
-             |        FROM documents d LEFT JOIN agg0 ON agg0.doc_id = d.doc_id),
-             |cut AS (SELECT CAST((100 * sum(-lp)) // (100 * sum(nt)) AS BIGINT) AS hc,
-             |               CAST((102 * sum(-lp)) // (100 * sum(nt)) AS BIGINT) AS tc
-             |        FROM agg)
-             |SELECT doc_id, CAST(nt AS INT) AS n_transitions,
-             |  CAST(lp AS BIGINT) AS logprob_micronats,
-             |  CASE WHEN -lp <= nt * hc THEN 'head'
-             |       WHEN -lp <= nt * tc THEN 'middle'
-             |       ELSE 'tail' END AS ppl_bucket
-             |FROM agg CROSS JOIN cut ORDER BY doc_id""".stripMargin)),
+             |$transitionBucketsSql""".stripMargin)),
 
     QueryDef.headline("text_perplexity_pretrained",
       // the TRAIN/APPLY split every other perplexity gate deliberately
@@ -612,35 +551,7 @@ object TextQueries {
             "doc_id", "text")
           .orderBy("doc_id")
       },
-      Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-             |trA AS (SELECT doc_id, toks[i] AS prev, toks[i + 1] AS cur
-             |        FROM (SELECT doc_id, toks,
-             |                unnest(generate_series(1, len(toks) - 1)) AS i
-             |              FROM d WHERE doc_id % 2 = 1 AND len(toks) >= 2)),
-             |trT AS (SELECT toks[i] AS prev, toks[i + 1] AS cur
-             |        FROM (SELECT toks,
-             |                unnest(generate_series(1, len(toks) - 1)) AS i
-             |              FROM d WHERE doc_id % 2 = 0 AND len(toks) >= 2)),
-             |bc AS (SELECT prev, cur, count(*) AS bc FROM trT GROUP BY 1, 2),
-             |ctx AS (SELECT prev, sum(bc) AS cc, count(*) AS fol FROM bc GROUP BY 1),
-             |pre AS (SELECT cur, count(*) AS pre FROM bc GROUP BY 1),
-             |tot AS (SELECT CAST(count(*) AS HUGEINT) AS nb,
-             |               CAST(count(DISTINCT cur) AS HUGEINT) AS vc FROM bc),
-             |sc AS (SELECT doc_id, coalesce(bc.bc, 0) AS bcv,
-             |         CASE WHEN coalesce(ctx.cc, 0) > 0 THEN
-             |           CAST(floor(ln(
-             |             CAST(greatest(4 * CAST(coalesce(bc.bc, 0) AS HUGEINT) - 3, 0) * (nb + vc + 1)
-             |                  + 3 * CAST(coalesce(ctx.fol, 0) AS HUGEINT)
-             |                    * (CAST(coalesce(pre.pre, 0) AS HUGEINT) + 1) AS DOUBLE)
-             |             / CAST(4 * CAST(ctx.cc AS HUGEINT) * (nb + vc + 1) AS DOUBLE))
-             |               * 1000000 + 0.5) AS BIGINT)
-             |         ELSE
-             |           CAST(floor(ln((CAST(coalesce(pre.pre, 0) AS DOUBLE) + 1.0)
-             |             / CAST(nb + vc + 1 AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)
-             |         END AS m
-             |       FROM trA LEFT JOIN bc USING (prev, cur)
-             |       LEFT JOIN ctx USING (prev) LEFT JOIN pre USING (cur)
-             |       CROSS JOIN tot),
+      Some(s"""WITH ${knBigramScoreSql("doc_id", "doc_id % 2 = 1")},
              |agg0 AS (SELECT doc_id, count(*) AS nt,
              |           sum(CASE WHEN bcv = 0 THEN 1 ELSE 0 END) AS nu,
              |           sum(m) AS lp
@@ -818,16 +729,7 @@ object TextQueries {
         .orderBy("doc_id"),
       Some {
         val (f1, f2) = (fmtD(1.0 / 3), fmtD(2.0 / 3))
-        s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-           |            FROM documents),
-           |cnt AS (SELECT t, count(*) AS c FROM tok GROUP BY t),
-           |tot AS (SELECT CAST(sum(c) AS BIGINT) AS n_total, count(*) AS v FROM cnt),
-           |sc AS (SELECT doc_id,
-           |         CAST(floor(ln(CAST(c + 1 AS DOUBLE) / (n_total + v))
-           |              * 1000000 + 0.5) AS BIGINT) AS m
-           |       FROM tok JOIN cnt USING (t) CROSS JOIN tot),
-           |agg AS (SELECT doc_id, count(*) AS n_tokens, sum(m) AS lp
-           |        FROM sc GROUP BY doc_id),
+        s"""WITH $unigramLmSql,
            |s AS (SELECT d.doc_id, d.lang,
            |        CAST((-lp) // n_tokens AS BIGINT) AS surprisal_micronats
            |      FROM agg JOIN documents d USING (doc_id)),
@@ -879,35 +781,7 @@ object TextQueries {
             "doc_id", "text", kPct = 20)
           .orderBy("doc_id")
       },
-      Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-             |trA AS (SELECT doc_id, i, toks[i] AS prev, toks[i + 1] AS cur
-             |        FROM (SELECT doc_id, toks,
-             |                unnest(generate_series(1, len(toks) - 1)) AS i
-             |              FROM d WHERE doc_id % 2 = 1 AND len(toks) >= 2)),
-             |trT AS (SELECT toks[i] AS prev, toks[i + 1] AS cur
-             |        FROM (SELECT toks,
-             |                unnest(generate_series(1, len(toks) - 1)) AS i
-             |              FROM d WHERE doc_id % 2 = 0 AND len(toks) >= 2)),
-             |bc AS (SELECT prev, cur, count(*) AS bc FROM trT GROUP BY 1, 2),
-             |ctx AS (SELECT prev, sum(bc) AS cc, count(*) AS fol FROM bc GROUP BY 1),
-             |pre AS (SELECT cur, count(*) AS pre FROM bc GROUP BY 1),
-             |tot AS (SELECT CAST(count(*) AS HUGEINT) AS nb,
-             |               CAST(count(DISTINCT cur) AS HUGEINT) AS vc FROM bc),
-             |sc AS (SELECT doc_id, i,
-             |         CASE WHEN coalesce(ctx.cc, 0) > 0 THEN
-             |           CAST(floor(ln(
-             |             CAST(greatest(4 * CAST(coalesce(bc.bc, 0) AS HUGEINT) - 3, 0) * (nb + vc + 1)
-             |                  + 3 * CAST(coalesce(ctx.fol, 0) AS HUGEINT)
-             |                    * (CAST(coalesce(pre.pre, 0) AS HUGEINT) + 1) AS DOUBLE)
-             |             / CAST(4 * CAST(ctx.cc AS HUGEINT) * (nb + vc + 1) AS DOUBLE))
-             |               * 1000000 + 0.5) AS BIGINT)
-             |         ELSE
-             |           CAST(floor(ln((CAST(coalesce(pre.pre, 0) AS DOUBLE) + 1.0)
-             |             / CAST(nb + vc + 1 AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)
-             |         END AS m
-             |       FROM trA LEFT JOIN bc USING (prev, cur)
-             |       LEFT JOIN ctx USING (prev) LEFT JOIN pre USING (cur)
-             |       CROSS JOIN tot),
+      Some(s"""WITH ${knBigramScoreSql("doc_id, i", "doc_id % 2 = 1")},
              |r AS (SELECT doc_id, m,
              |        row_number() OVER (PARTITION BY doc_id ORDER BY m, i) AS rn,
              |        count(*) OVER (PARTITION BY doc_id) AS n
@@ -1132,11 +1006,9 @@ object TextQueries {
       (s, dir) => graft.functions.Packing.concatBlocks(
           Tables.documents(s, dir), "doc_id", "text", blockWidth = 64)
         .orderBy("doc_id"),
-      Some("""WITH d AS (
+      Some(s"""WITH d AS (
              |  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
-             |         list_reduce(list_transform(
-             |           regexp_extract_all(substr(md5('pack42#' || CAST(doc_id AS VARCHAR)), 25, 8), '.'),
-             |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a,b) -> a*16 + b) AS h
+             |         ${md5SliceSql("'pack42#' || CAST(doc_id AS VARCHAR)")} AS h
              |  FROM documents),
              |o AS (
              |  SELECT doc_id, n,
@@ -1382,38 +1254,14 @@ object TextQueries {
       (s, dir) => graft.functions.Unigram.viterbiSegment(
           Tables.documents(s, dir), "text")
         .orderBy("word"),
-      Some("""WITH RECURSIVE
-             |wh AS MATERIALIZED (
-             |  SELECT word, CAST(count(*) AS BIGINT) AS freq
-             |  FROM (SELECT unnest(string_split(text, ' ')) AS word
-             |        FROM documents)
-             |  WHERE word <> '' GROUP BY word),
-             |g AS MATERIALIZED (
-             |  SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-             |    SELECT freq,
-             |      substr(word, CAST(i AS INT), CAST(l AS INT)) AS piece
-             |    FROM wh, unnest(generate_series(1, length(word))) AS t1(i),
-             |         unnest(generate_series(1, 4)) AS t2(l)
-             |    WHERE i + l - 1 <= length(word))
-             |  GROUP BY piece),
-             |tt AS (SELECT CAST(sum(cnt) AS DOUBLE) AS t FROM g),
-             |sc AS MATERIALIZED (
-             |  SELECT piece,
-             |    CAST(floor(ln(CAST(cnt AS DOUBLE) / t) * 1e6 + 0.5)
-             |      AS BIGINT) AS s
-             |  FROM g, tt),
-             |wm AS MATERIALIZED (
-             |  SELECT word, map_from_entries(list({'k': piece, 'v': s})) AS m
-             |  FROM (SELECT DISTINCT word,
-             |          substr(word, CAST(i AS INT), CAST(l AS INT)) AS piece
-             |        FROM wh, unnest(generate_series(1, length(word))) AS t1(i),
-             |             unnest(generate_series(1, 4)) AS t2(l)
-             |        WHERE i + l - 1 <= length(word))
-             |  JOIN sc USING (piece) GROUP BY word),
+      Some(s"""WITH RECURSIVE
+             |$pieceCensusSql,
+             |${pieceScoresSql(0)},
+             |${wordMapSql(0)},
              |st AS (
              |  SELECT word, m, 0 AS i, [CAST(0 AS BIGINT)] AS best,
              |         CAST([] AS INT[]) AS ptr
-             |  FROM wm
+             |  FROM wm0
              |  UNION ALL
              |  SELECT word, m, i + 1,
              |         list_append(best, cand[1]),
@@ -1572,30 +1420,14 @@ object TextQueries {
           .select("doc_id", "quality_score", "n_tokens", "cum_tokens")
           .orderBy("doc_id")
       },
-      Some {
-        val en = TextAnalysis.Langs.head._2.map("'" + _ + "'").mkString(",")
-        s"""WITH q AS (
-           |  SELECT doc_id,
-           |    len(string_split(text,' ')) AS n_tokens,
-           |    len(list_distinct(string_split(text,' '))) AS n_uniq_tokens,
-           |    len(list_intersect(string_split(text,' '), [$en])) AS n_stop,
-           |    length(text) AS n_chars
-           |  FROM documents),
-           |m AS (
-           |  SELECT doc_id, n_tokens,
-           |    (CAST(n_uniq_tokens AS DOUBLE) / n_tokens) * 0.5
-           |      + (CAST(n_stop AS DOUBLE) / n_uniq_tokens) * 0.2
-           |      + least((CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens) / 10.0, 1.0) * 0.3
-           |      AS quality_score
-           |  FROM q),
-           |r AS (
-           |  SELECT doc_id, quality_score, n_tokens,
-           |    CAST(sum(n_tokens) OVER (ORDER BY quality_score DESC, doc_id
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-           |  FROM m)
-           |SELECT doc_id, quality_score, CAST(n_tokens AS INT) AS n_tokens, cum_tokens
-           |FROM r WHERE cum_tokens <= 10000 ORDER BY doc_id""".stripMargin
-      }),
+      Some(s"""WITH $QualityScoreSql,
+              |r AS (
+              |  SELECT doc_id, quality_score, n_tokens,
+              |    CAST(sum(n_tokens) OVER (ORDER BY quality_score DESC, doc_id
+              |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
+              |  FROM qs)
+              |SELECT doc_id, quality_score, CAST(n_tokens AS INT) AS n_tokens, cum_tokens
+              |FROM r WHERE cum_tokens <= 10000 ORDER BY doc_id""".stripMargin)),
 
     QueryDef.headline("token_budget_per_lang",
       // the mixture builder's real contract — best-first selection under
@@ -1612,34 +1444,18 @@ object TextQueries {
           .select("doc_id", "lang", "quality_score", "n_tokens", "cum_tokens")
           .orderBy("doc_id")
       },
-      Some {
-        val en = TextAnalysis.Langs.head._2.map("'" + _ + "'").mkString(",")
-        s"""WITH q AS (
-           |  SELECT doc_id, lang,
-           |    len(string_split(text,' ')) AS n_tokens,
-           |    len(list_distinct(string_split(text,' '))) AS n_uniq_tokens,
-           |    len(list_intersect(string_split(text,' '), [$en])) AS n_stop,
-           |    length(text) AS n_chars
-           |  FROM documents),
-           |m AS (
-           |  SELECT doc_id, lang, n_tokens,
-           |    (CAST(n_uniq_tokens AS DOUBLE) / n_tokens) * 0.5
-           |      + (CAST(n_stop AS DOUBLE) / n_uniq_tokens) * 0.2
-           |      + least((CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens) / 10.0, 1.0) * 0.3
-           |      AS quality_score
-           |  FROM q),
-           |r AS (
-           |  SELECT doc_id, lang, quality_score, n_tokens,
-           |    CAST(sum(n_tokens) OVER (PARTITION BY lang
-           |      ORDER BY quality_score DESC, doc_id
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-           |  FROM m)
-           |SELECT doc_id, lang, quality_score, CAST(n_tokens AS INT) AS n_tokens, cum_tokens
-           |FROM r WHERE cum_tokens <= CASE lang WHEN 'en' THEN 4000
-           |                                     WHEN 'zh' THEN 2500
-           |                                     ELSE 1500 END
-           |ORDER BY doc_id""".stripMargin
-      }),
+      Some(s"""WITH $QualityScoreSql,
+              |r AS (
+              |  SELECT doc_id, lang, quality_score, n_tokens,
+              |    CAST(sum(n_tokens) OVER (PARTITION BY lang
+              |      ORDER BY quality_score DESC, doc_id
+              |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
+              |  FROM qs)
+              |SELECT doc_id, lang, quality_score, CAST(n_tokens AS INT) AS n_tokens, cum_tokens
+              |FROM r WHERE cum_tokens <= CASE lang WHEN 'en' THEN 4000
+              |                                     WHEN 'zh' THEN 2500
+              |                                     ELSE 1500 END
+              |ORDER BY doc_id""".stripMargin)),
 
     QueryDef.headline("phrase_search_positional",
       // exact phrase search as an inverted-index join: each term's

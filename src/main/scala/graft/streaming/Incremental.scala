@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import graft.functions.Caches
 import graft.operators.Filters
@@ -31,21 +31,16 @@ object Incremental {
 
   /** File-backed watermark store: one `<table>.watermark` file holding epoch
     * millis — the Redis key `<table>-modified-timestamp-filter` analogue.
-    * A save writes a hidden sibling temp file and renames it over the key,
-    * so a crash mid-save leaves the previous value (and at worst a stray
-    * temp file, which `load` never reads), never a truncated one. */
+    * A save is [[graft.KeyFiles.writeAtomic]]: a crash mid-save leaves
+    * the previous value, never a truncated one. */
   final class WatermarkStore(dir: String) {
     Files.createDirectories(Paths.get(dir))
     private def file(table: String): Path = Paths.get(dir, s"$table.watermark")
     def load(table: String): Option[Long] =
       if (Files.exists(file(table))) Some(Files.readString(file(table)).trim.toLong)
       else None
-    def save(table: String, millis: Long): Unit = {
-      val tmp = Files.createTempFile(Paths.get(dir), s".$table.watermark", ".tmp")
-      Files.writeString(tmp, millis.toString)
-      Files.move(tmp, file(table),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
+    def save(table: String, millis: Long): Unit =
+      graft.KeyFiles.writeAtomic(file(table), millis.toString)
     def clear(table: String): Unit = Files.deleteIfExists(file(table))
   }
 

@@ -114,4 +114,44 @@ class CachesSpec extends AnyFunSuite {
     left.foreach(id => spark.sparkContext.getPersistentRDDs(id)
       .unpersist(blocking = false))
   }
+
+  /** The messages the CacheManager logs on this thread while `body` runs. */
+  private def cacheManagerLog(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val thread = Thread.currentThread.getName
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    val app = new AbstractAppender("cachesspec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getThreadName == thread)
+          seen.synchronized { seen += e.getMessage.getFormattedMessage }
+    }
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.CacheManager").asInstanceOf[Logger]
+    app.start()
+    logger.addAppender(app)
+    try body finally { logger.removeAppender(app); app.stop() }
+    seen.synchronized(seen.toList)
+  }
+
+  test("the unigram segment censuses persist the word histogram once") {
+    val words = Seq("cachesspec aba ab aba cab", "cachesspec dddd aba ab")
+      .toDF("text")
+    // the capture sees a second persist of one plan
+    val control = cacheManagerLog(Caches.sweepingNew(spark) {
+      Caches.operatorPersist(words.select($"text"))
+      Caches.operatorPersist(words.select($"text"))
+    })
+    assert(control.count(_.contains("already cached")) == 1, control)
+    Seq[(String, () => DataFrame)](
+      "learnSegment" -> (() => Unigram.learnSegment(words, "text")),
+      "segmentSoft" -> (() => Unigram.segmentSoft(words, "text"))
+    ).foreach { case (name, op) =>
+      val log = cacheManagerLog(Caches.sweepingNew(spark)(op().collect()))
+      assert(!log.exists(_.contains("already cached")), s"$name: $log")
+    }
+  }
 }

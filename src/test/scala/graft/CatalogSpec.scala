@@ -166,6 +166,59 @@ class CatalogSpec extends AnyFunSuite {
         "  // SparkSession.builder()")).size == 1)
   }
 
+  test("the oracle text perfbench's corpus_dedup check slices keeps its shape") {
+    // the check cuts the funnel at its last final-SELECT marker and reads
+    // `<stages> SELECT doc_id FROM s4 WHERE surv_c`, keeps `id_b` of the
+    // dedup_minhash rows, and wraps suffix_spans_remove cut at its last
+    // ORDER BY
+    val funnel = SparkEntry.oracleSql("recipe_pretrain_funnel")
+    val cut = funnel.lastIndexOf("SELECT source, count(*) AS n_raw")
+    assert(cut > 0, "the funnel's final SELECT marker is gone")
+    val stages = funnel.take(cut)
+    val s4 = stages.indexOf("\ns4 AS (")
+    assert(stages.startsWith("WITH ") && s4 > 0 &&
+      stages.indexOf("AS surv_c", s4) > s4, stages.takeRight(600))
+    val minhash = SparkEntry.oracleSql("dedup_minhash")
+    val last = minhash.lastIndexOf("\nSELECT ")
+    assert(last > 0 && minhash.drop(last).matches(
+      "(?s)\nSELECT id_a, id_b,\\s+[^\\n]* AS jaccard\\n.*"), minhash.drop(last))
+    val spans = SparkEntry.oracleSql("suffix_spans_remove")
+    val orderBy = spans.lastIndexOf("ORDER BY")
+    val tail = spans.drop(orderBy)
+    assert(orderBy > 0 && !tail.exists("()".contains(_)) &&
+      !tail.contains("SELECT"), tail)
+    assert(Seq("clean_text", "n_removed").forall(c =>
+      spans.take(orderBy).contains(s"AS $c")))
+  }
+
+  test("each shared oracle fragment is written once under graft/queries") {
+    // a line of each model's one fragment: a second copy of the model
+    // would repeat it
+    val markers = Seq(
+      "sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)",
+      "reach(id, lbl) AS (",
+      "trT AS (SELECT toks[i] AS prev, toks[i + 1] AS cur",
+      "wh AS MATERIALIZED (",
+      "len(list_distinct(string_split(text,' '))) AS n_uniq_tokens",
+      "regexp_extract_all(substr(md5(",
+      "tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]",
+      "list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS ma",
+      "x -> x IN ('the','be','to','of','and','that','have',",
+      "reps AS (SELECT rk, nm, pref, slen FROM (",
+      "a(rn, lang, n_tokens, b, rem, n) AS (",
+      "* sqrt(${dotSql(",
+      "concat(lit(\"MOVED-\")",
+      "lit(0L).as(\"valid_from\")")
+    val queries = mainSources.filter(_._1.startsWith("graft/queries/"))
+    def count(m: String, texts: Seq[String]): Int =
+      texts.map(java.util.regex.Pattern.quote(m).r.findAllIn(_).size).sum
+    val wrong = markers.map(m => m -> count(m, queries.map(_._2)))
+      .filter(_._2 != 1)
+    assert(wrong.isEmpty, s"fragments not written exactly once: $wrong")
+    // the scan does see a second copy
+    assert(count(markers.head, Seq(markers.head + "\n" + markers.head)) == 2)
+  }
+
   test("no query carries both a static and a dynamic oracle") {
     val both = SparkEntry.oracleSql.keySet
       .intersect(SparkEntry.dynamicOracleSql.keySet)

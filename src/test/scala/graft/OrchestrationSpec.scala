@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 import graft.operators.Scan
 import org.apache.spark.sql.functions._
@@ -48,6 +49,30 @@ class OrchestrationSpec extends AnyFunSuite {
     assert(Scan.resumeWithState(rows.toDF(), "k", 8, loaded).count() == 100)
     store.clear("events")
     assert(store.load("events").isEmpty)
+  }
+
+  test("PageStateStore: a save over an existing key leaves only the key file") {
+    val dir = Files.createTempDirectory("graft-pages-atomic")
+    val store = new Scan.PageStateStore(dir.toString)
+    store.save("events", Scan.PageState(7, Set(0L, 1L)))
+    val state = Scan.PageState(7, Set(0L, 1L, 123L), Map(124L -> 5L))
+    store.save("events", state)
+    assert(store.load("events").contains(state))
+    assert(Files.list(dir).iterator().asScala.map(_.getFileName.toString)
+      .toList == List("events.pages"))
+  }
+
+  test("PageStateStore: load ignores a stray temp sibling") {
+    val dir = Files.createTempDirectory("graft-pages-stray")
+    val store = new Scan.PageStateStore(dir.toString)
+    val state = Scan.PageState(7, Set(0L, 123L))
+    store.save("events", state)
+    // what a crash between the temp write and the rename leaves behind:
+    // a cut page list (123 -> 12) that must never be read as the state
+    Files.writeString(dir.resolve(".events.pages999.tmp"), "7\n0,12")
+    Files.writeString(dir.resolve(".orders.pages999.tmp"), "")
+    assert(store.load("events").contains(state))
+    assert(store.load("orders").isEmpty)
   }
 
   test("runAll extracts N tables concurrently with per-table isolation") {
